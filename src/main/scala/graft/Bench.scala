@@ -115,6 +115,15 @@ object Bench {
     "m04_audio_fp" -> "decode-vs-formula",
     "m05_video_fp_dedup" -> "decode-vs-formula")
 
+  /** Entries each flag list keeps in the compact line (the rest are
+    * counted, and listed in full in the full line). */
+  val FlagCap = 5
+
+  /** One flag list as JSON: `"name":<first cap entries>,"name_n":<count>`. */
+  private def flagList(name: String, entries: Iterable[String], cap: Int,
+      brackets: String = "[]"): String =
+    s""""$name":${entries.take(cap).mkString(brackets.take(1), ",", brackets.drop(1))},"${name}_n":${entries.size}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -369,9 +378,13 @@ object Bench {
         math.round(exec.values.sum / duckTotal * 100.0) / 100.0 else -1
       val classPart = twinClasses.collect { case (k, c) if ratios.toMap.contains(k) =>
         s"${Verify.jq(k)}:${Verify.jq(c)}" }
-      val flags = s""""over2x":${over2x.map(Verify.jq).mkString("[", ",", "]")},"gap_flagged":${gapFlagged.mkString("{", ",", "}")},"class_flagged":${classFlagged.mkString("{", ",", "}")},"twin_class":${classPart.mkString("{", ",", "}")},"floor_adjudicated":${floorAdj.mkString("{", ",", "}")}"""
+      def flags(cap: Int) = Seq(flagList("over2x", over2x.map(Verify.jq), cap),
+        flagList("gap_flagged", gapFlagged, cap, "{}"),
+        flagList("class_flagged", classFlagged, cap, "{}"),
+        flagList("twin_class", classPart, cap, "{}"),
+        flagList("floor_adjudicated", floorAdj, cap, "{}")).mkString(",")
       val head = s""","duck_total":$duckTotal,"ratio_total":${if (duckTotal > 0) math.round(total / duckTotal * 100.0) / 100.0 else -1},"exec_ratio":$execRatio"""
-      (s"""$head,"ratios":${jmap(ratios.toMap)},$flags""", s"$head,$flags")
+      (s"""$head,"ratios":${jmap(ratios.toMap)},${flags(Int.MaxValue)}""", s"$head,${flags(FlagCap)}")
     }
     // floor_est: the per-query harness constant the battery pays n times —
     // calibrated IN-RUN as the minimum warm exec across queries (the
@@ -386,8 +399,7 @@ object Bench {
     val totalWithTrain = math.round((total + trainTotal) * 1000.0) / 1000.0
     val warmupTotal = math.round(warmup.values.sum * 1000.0) / 1000.0
     val totalWithWarmup = math.round((total + warmupTotal) * 1000.0) / 1000.0
-    val cacheResetPart = cacheReset.map(Verify.jq).mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","construct_total":${construct.values.sum},"exec_total":${exec.values.sum},"train_total":$trainTotal,"value_with_train":$totalWithTrain,"warmup_total":$warmupTotal,"value_with_warmup":$totalWithWarmup,"exec_reps":$execReps,"floor_est":$floorEst,"floor_wave":$floorWave,"cache_reset":$cacheResetPart,"queries":$qs,"construct":${jmap(construct)},"exec":${jmap(exec)},"exec_all":$ea,"warmup":${jmap(warmup)},"stages":$ss,"train":${jmap(train)},"rows":$rs,"errors":$errs$ratioPart,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","construct_total":${construct.values.sum},"exec_total":${exec.values.sum},"train_total":$trainTotal,"value_with_train":$totalWithTrain,"warmup_total":$warmupTotal,"value_with_warmup":$totalWithWarmup,"exec_reps":$execReps,"floor_est":$floorEst,"floor_wave":$floorWave,${flagList("cache_reset", cacheReset.map(Verify.jq), Int.MaxValue)},"queries":$qs,"construct":${jmap(construct)},"exec":${jmap(exec)},"exec_all":$ea,"warmup":${jmap(warmup)},"stages":$ss,"train":${jmap(train)},"rows":$rs,"errors":$errs$ratioPart,"sf":"$sfDir"}"""
     println(line)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
     try java.nio.file.Files.write(
@@ -400,8 +412,9 @@ object Bench {
     // per-query maps (those live in the full line and $outPath). All 16
     // prior rounds' PERF artifacts carried `parsed: null` because only
     // the tail of the full line survived; this line is the parseable
-    // record. Keep it under ~1.5 KB: flags are empty on a healthy run.
-    val compactLine = s"""{"metric":"total","value":$total,"unit":"sec","construct_total":${construct.values.sum},"exec_total":${exec.values.sum},"train_total":$trainTotal,"value_with_train":$totalWithTrain,"warmup_total":$warmupTotal,"value_with_warmup":$totalWithWarmup,"exec_reps":$execReps,"floor_est":$floorEst,"floor_wave":$floorWave,"n_queries":${results.size},"n_errors":${errors.size},"cache_reset":$cacheResetPart$ratioCompact,"sf":"$sfDir","compact":true,"full":${Verify.jq(outPath)}}"""
+    // record. Each flag list is capped at its first FlagCap entries plus
+    // a `<name>_n` count, so an unhealthy run cannot overflow the tail.
+    val compactLine = s"""{"metric":"total","value":$total,"unit":"sec","construct_total":${construct.values.sum},"exec_total":${exec.values.sum},"train_total":$trainTotal,"value_with_train":$totalWithTrain,"warmup_total":$warmupTotal,"value_with_warmup":$totalWithWarmup,"exec_reps":$execReps,"floor_est":$floorEst,"floor_wave":$floorWave,"n_queries":${results.size},"n_errors":${errors.size},${flagList("cache_reset", cacheReset.map(Verify.jq), FlagCap)}$ratioCompact,"sf":"$sfDir","compact":true,"full":${Verify.jq(outPath)}}"""
     println(compactLine)
     spark.stop()
   }

@@ -328,9 +328,14 @@ object CurationPipeline {
       // terminal action (the parquet write) — a long-lived pipeline
       // session must not pin one corpus-sized entry per run (ADVICE r16);
       // the stage is read back from disk, so nothing downstream re-runs
-      // the persisted subtree
-      val (df, release) = Docs.ccnetBucketsDfWithRelease(docs)
-      try stage("01_ppl", df) finally release()
+      // the persisted subtree. Built INSIDE the by-name thunk: a resumed
+      // run neither constructs d44's plan nor registers its persist.
+      var release = () => ()
+      try stage("01_ppl", {
+        val (df, r) = Docs.ccnetBucketsDfWithRelease(docs)
+        release = r
+        df
+      }) finally release()
     }
 
     // stage 1: repetition/length gates (+ optional stop-fraction and

@@ -1,6 +1,7 @@
 package graft.mimic
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.ColFns
 
@@ -113,24 +114,29 @@ object Cohort {
   }
 
   /** partition_by_readmit (cohort.py:268-323): visit labeled 1 iff ANY
-    * later visit of the same subject has 0 < admit − disch ≤ gap days; the
-    * subject's last visit is always 0. The reference's O(n²) row loop is a
-    * per-subject self semi-join here — exact same predicate, set-based,
-    * and robust to overlapping stays (SURVEY W1).
+    * visit of the same subject has disch < admit <= disch + gap days —
+    * strict at disch, inclusive at disch + gap, overlapping stays count.
+    *
+    * One partition-by-subject RANGE-frame window, no join: each visit
+    * becomes two rows on a microsecond key (UTC session), its admit
+    * instant and its discharge probe, and the frame (probe, probe + gap]
+    * counts the admits inside it (the integer key makes "strictly
+    * after" exactly 1 µs FOLLOWING). Only probe rows come back, so the
+    * output is the input plus `label`. A null subject or disch labels
+    * 0; a null admit is never counted as a readmission.
     */
   def readmissionLabel(df: DataFrame, roles: Roles, gapDays: Int): DataFrame = {
-    val a = df
-    val b = df.select(
-      col(roles.group).as("_b_group"), col(roles.admit).as("_b_admit"))
-    val pos = a.join(b,
-        col(roles.group) === col("_b_group") &&
-          col("_b_admit") > col(roles.disch) &&
-          col("_b_admit") <= col(roles.disch) + expr(s"INTERVAL $gapDays DAYS"),
-        "left_semi")
-      .select(col(roles.visit)).withColumn("_pos", lit(1))
-    a.join(pos, Seq(roles.visit), "left")
-      .withColumn("label", coalesce(col("_pos"), lit(0)))
-      .drop("_pos")
+    def micros(c: String) = unix_micros(col(c).cast("timestamp"))
+    val w = Window.partitionBy(col(roles.group)).orderBy(col("_k"))
+      .rangeBetween(1L, gapDays * 86400L * 1000000L)
+    // _p = 0: the admit instant; _p = 1: the discharge probe
+    df.select(col("*"),
+        posexplode(array(micros(roles.admit), micros(roles.disch))).as(Seq("_p", "_k")))
+      .withColumn("_n", count(when(col("_p") === 0, lit(1))).over(w))
+      .filter(col("_p") === 1)
+      .select(df.columns.map(col) :+
+        when(col(roles.group).isNotNull && col("_k").isNotNull && col("_n") > 0, 1)
+          .otherwise(0).as("label"): _*)
   }
 
   /** partition_by_los (cohort.py:240-265): label 1 iff los > threshold;

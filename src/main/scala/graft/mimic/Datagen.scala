@@ -137,19 +137,31 @@ object Datagen {
     *
     * `keys` must include every column the downstream window partitions
     * by (meds: stay_id/itemid/orderid) — gridding on a key SUBSET would
-    * inject filler rows into a separate NULL-key partition that ffill
-    * never reaches. FULL OUTER join, not left: the reference CONCATS
-    * missing indices onto the observed frame, so observed buckets beyond
-    * range(los) (non-divisible bucket sizes) are KEPT, and losBuckets<=0
-    * (bucket > include_time) degenerates to the observed rows alone.
+    * put filler rows in a partition that ffill never reaches. The input
+    * holds one row per (keys, t), as the bucketing aggregations emit.
+    *
+    * One shuffle, no join: ONE groupBy(keys) folds each key's buckets
+    * into a t → values map, then an explode over range(losBuckets) ∪ the
+    * observed t's looks every slot up (missing slots read nulls). The
+    * output stays hash-partitioned by `keys`, so the impute and
+    * med-signal windows over the same keys add no exchange. Like the
+    * reference's concat of missing indices onto the observed frame,
+    * observed buckets beyond range(los) (non-divisible bucket sizes) are
+    * KEPT, and losBuckets<=0 (bucket > include_time) degenerates to the
+    * observed rows alone. A row with a null t belongs to no bucket and
+    * is dropped (it can never be a map key).
     */
   def denseGrid(bucketed: DataFrame, losBuckets: Int,
       keys: Seq[String] = Seq("stay_id", "itemid")): DataFrame = {
     if (losBuckets <= 0) return bucketed
-    val pairs = bucketed.select(keys.map(col): _*).distinct()
-    val grid = pairs.select(keys.map(col) :+
-      explode(sequence(lit(0L), lit(losBuckets - 1L))).as("t"): _*)
-    grid.join(bucketed, keys :+ "t", "full_outer")
+    val vals = bucketed.columns.toSeq.filterNot((keys :+ "t").contains)
+    bucketed.groupBy(keys.map(col): _*)
+      .agg(map_from_entries(collect_list(when(col("t").isNotNull,
+        struct(col("t").cast("long"), struct(vals.map(col): _*))))).as("_m"))
+      .select(keys.map(col) :+ col("_m") :+ explode(array_union(
+        sequence(lit(0L), lit(losBuckets - 1L)), map_keys(col("_m")))).as("t"): _*)
+      .withColumn("_v", element_at(col("_m"), col("t")))
+      .select(keys.map(col) ++ (col("t") +: vals.map(v => col("_v").getField(v).as(v))): _*)
   }
 
   /** W2 impute chain on the dense grid: ffill → bfill → per-(stay,itemid)

@@ -147,19 +147,20 @@ object Features {
 
   /** generate_summary_icu per-modality summary
     * (feature_preproc_icu.py:285-391): mean-of-per-stay-counts, optional
-    * zero-value missing count, total count — the reference's three
-    * groupbys + right-join chain folded into two aggregations on the same
-    * grouping key (SURVEY A1-A3/J8). `missingWhen` e.g. col("amount")===0.
+    * zero-value missing count, total count. One scan, no join: the
+    * reference's three groupbys + right join collapse into one
+    * per-(stay, code) aggregation rolled up per code, since the per-code
+    * totals are sums of the per-stay partials (SURVEY A1-A3/J8). Both
+    * levels aggregate partially before their exchange, so a hot code
+    * ships partial counts, never its raw rows. `missingWhen` e.g.
+    * col("amount")===0.
     */
   def summary(df: DataFrame, codeCol: String, missingWhen: Option[Column]): DataFrame = {
-    val perStay = df.groupBy(col("stay_id"), col(codeCol))
-      .agg(count(lit(1)).as("cnt"))
-    val freq = perStay.groupBy(col(codeCol))
-      .agg(avg(col("cnt")).as("mean_frequency"))
-    val totAggs = count(lit(1)).as("total_count") +:
-      missingWhen.map(c => sum(when(c, 1L).otherwise(0L)).as("missing_count")).toSeq
-    val tot = df.groupBy(col(codeCol)).agg(totAggs.head, totAggs.tail: _*)
-    freq.join(tot, Seq(codeCol), "right").na.fill(0)
+    val miss = missingWhen.map(c => sum(when(c, 1L).otherwise(0L)).as("miss")).toSeq
+    val aggs = Seq(avg(col("cnt")).as("mean_frequency"), sum(col("cnt")).as("total_count")) ++
+      miss.map(_ => sum(col("miss")).as("missing_count"))
+    df.groupBy(col("stay_id"), col(codeCol)).agg(count(lit(1)).as("cnt"), miss: _*)
+      .groupBy(col(codeCol)).agg(aggs.head, aggs.tail: _*)
   }
 
   /** features_selection_icu (feature_preproc_icu.py:394-529): semi-join

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.mimic.Features
 import graft.queries.Registry.t
 
 /** Relational operator battery over the driver's TPC-H-ish tables.
@@ -208,29 +209,22 @@ object Relational {
     // A1+A2+A3+J8 folded into one pass: the per-item summary stats shape.
     Q("q22_summary_stats",
       (s, dir) => {
-        // One scan, two chained aggregations, no join: the per-partkey
-        // totals are recoverable from the per-(partkey, orderkey) level
-        // (sum of pair counts = total rows; sum of pair zero-tax = total
-        // zero-tax), so the second lineitem pass and the freq-tot join
-        // of the naive 3-branch formulation are pure waste — measured
-        // ~2x at sf0.1, and at 100 TB it halves the scan volume.
-        // The explicit repartition on l_partkey makes BOTH aggregation
-        // levels run co-located after ONE exchange (hash(partkey)
-        // satisfies the (partkey, orderkey) clustering too), and spreads
-        // the per-pair hash build across cores — the testdata parquet is
-        // a single row group, so without it the whole 600k-group partial
-        // aggregation runs inside the one scan task. Measured 2x at
-        // sf0.1; at cluster scale it is the same single-shuffle plan.
+        // Adapter over Features.summary (one scan, two chained
+        // aggregations, no join): part → code, order → stay, zero tax →
+        // the missing predicate. The explicit repartition on l_partkey
+        // makes BOTH aggregation levels run co-located after ONE
+        // exchange (hash(partkey) satisfies the (orderkey, partkey)
+        // clustering too) and spreads the per-pair hash build across
+        // cores — the testdata parquet is a single row group, so without
+        // it the whole 600k-group partial aggregation runs inside the
+        // one scan task. It stays here, not in the library: on raw
+        // MIMIC events a hot itemid would land in one task before any
+        // map-side combine.
         val li = t(s, dir, "lineitem")
-        li.select(col("l_partkey"), col("l_orderkey"), col("l_tax"))
+          .select(col("l_partkey"), col("l_orderkey").as("stay_id"), col("l_tax"))
           .repartition(col("l_partkey"))
-          .groupBy(col("l_partkey"), col("l_orderkey"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(when(col("l_tax") === 0, 1L).otherwise(0L)).as("zt"))
-          .groupBy(col("l_partkey"))
-          .agg(avg(col("cnt")).as("mean_frequency"),
-            sum(col("cnt")).as("total_count"),
-            sum(col("zt")).as("zero_tax_count"))
+        Features.summary(li, "l_partkey", Some(col("l_tax") === 0))
+          .withColumnRenamed("missing_count", "zero_tax_count")
       },
       Some("""WITH per_order AS (
              |  SELECT l_partkey, l_orderkey, COUNT(*) AS cnt
@@ -608,27 +602,17 @@ object Relational {
 
     // A7: exact per-group percentile clip (outlier_removal.py semantics).
     Q("q12_percentile_clip",
-      (s, dir) => {
-        // Size-adaptive exact percentiles (ColFns.percentilesByKeyAdaptive):
-        // broadcast-class inputs take the single-exchange window-rank
-        // sort, larger inputs the histogram shape (spec-proven
-        // bit-identical, so the dispatch can't change results): pass 1 is
-        // one map-side-combinable counting agg, then only the target
-        // buckets' slivers ever sort — no per-key single-task full sort
-        // (the window-rank shape serializes a hot event_type's whole
-        // group into one task at 100 TB), and no `percentile` aggregate
-        // (buffers every group value in one in-memory map). The probe
-        // side stays exchange-free: bounds come back as a broadcast.
-        // The left join + least/greatest null-skipping keeps all-null
-        // groups behaving like the aggregate's null bounds (clip = id).
-        val ev = t(s, dir, "events")
-          .select(col("event_id"), col("event_type"), col("value"))
-        val pct = graft.functions.ColFns.percentilesByKeyAdaptive(
-          ev, "event_type", "value", Seq("p05" -> 0.05, "p95" -> 0.95))
-        ev.join(broadcast(pct), Seq("event_type"), "left")
-          .select(col("event_id"), col("event_type"),
-            round(least(greatest(col("value"), col("p05")), col("p95")), 6).as("clipped"))
-      },
+      // Adapter over Features.outlierImputation(impute = true): size-
+      // adaptive exact percentiles (ColFns.percentilesByKeyAdaptive —
+      // window-rank sort below the broadcast class, histogram shape
+      // above it, spec-proven bit-identical), bounds broadcast back so
+      // the probe side stays exchange-free, value clipped to [p05, p95].
+      // All-null groups get null bounds and least/greatest pass the
+      // value through (clip = id).
+      (s, dir) => Features.outlierImputation(
+          t(s, dir, "events").select(col("event_id"), col("event_type"), col("value")),
+          "event_type", "value", cutOff = 95, leftThresh = 5, impute = true)
+        .select(col("event_id"), col("event_type"), round(col("value"), 6).as("clipped")),
       Some("""WITH pct AS (
              |  SELECT event_type,
              |    quantile_cont(value, 0.05) AS p05,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.ColFns._
+import graft.mimic.{Datagen, Features}
 import graft.queries.Registry.t
 
 /** Time-series operator battery over `events` / `orders`+`lineitem` —
@@ -53,39 +54,22 @@ object Temporal {
     // left-joined, missing buckets zero-filled.
     Q("q10_dense_grid",
       (s, dir) => {
-        // ONE events scan, NO join: the former shape scanned events a
-        // second time for the user grid (distinct), then shuffled both
-        // sides into a (user, day) join — three exchanges and a double
-        // scan to zero-fill ≤30 slots per user. Here the daily counts
-        // collapse to a per-user day→cnt map (collect_list is map-side
-        // combinable; ≤ a few dozen entries per user, bounded by the
-        // grid span — no skew risk at any corpus size), and the dense
-        // grid is an explode + map lookup. Days outside the grid sit
-        // unused in the map, exactly like the join's unmatched rows.
-        // A NULL user_id keeps the join's null-key semantics (null never
-        // matches null → all-zero row): the when() below zeroes it even
-        // though the map carries its real counts. Measured 3.7x → under
-        // 2x at sf1; at 100 TB it halves the scan volume and drops two
-        // exchanges.
-        val ev = t(s, dir, "events")
-        val daily = ev
-          .withColumn("day", floorDiv(unix_micros(col("ts")) - epoch2024, 86400L * 1000000L))
-          .groupBy(col("user_id"), col("day")).agg(count(lit(1)).as("cnt"))
-        // A null ts → null day group: the join never matched it, so the
-        // map must not carry it — but its USER must keep its grid rows
-        // (the old grid was distinct users regardless of ts). collect_list
-        // skips nulls, so guarding BOTH arrays on the same day-null
-        // condition drops the entry while keeping the group (and keeps
-        // the key/value arrays aligned — an unguarded cnt would survive
-        // its skipped key and break MapData).
-        daily.groupBy(col("user_id"))
-          .agg(map_from_arrays(
-            collect_list(when(col("day").isNotNull, col("day"))),
-            collect_list(when(col("day").isNotNull, col("cnt")))).as("m"))
-          .select(col("user_id"), explode(sequence(lit(0L), lit(29L))).as("day"), col("m"))
-          .select(col("user_id"), col("day"),
-            when(col("user_id").isNotNull,
-              coalesce(element_at(col("m"), col("day")), lit(0L)))
+        // Adapter over Datagen.denseGrid (one groupBy into a day→cnt map,
+        // explode + map lookup — no second scan, no join): (user, day)
+        // counts are the bucketed frame, user_id the key. Days outside
+        // 0..29 are nulled BEFORE the count, so they collapse into one
+        // null-t row per user that denseGrid drops while the user keeps
+        // its grid rows — as the oracle's DISTINCT-user grid does (a
+        // null-ts event likewise contributes no day). A NULL user_id
+        // keeps the join's null-key semantics (null never matches null →
+        // all-zero row): the when() zeroes it.
+        val day = floorDiv(unix_micros(col("ts")) - epoch2024, 86400L * 1000000L)
+        val daily = t(s, dir, "events")
+          .select(col("user_id"), when(day.between(0L, 29L), day).as("t"))
+          .groupBy(col("user_id"), col("t")).agg(count(lit(1)).as("cnt"))
+        Datagen.denseGrid(daily, 30, keys = Seq("user_id"))
+          .select(col("user_id"), col("t").as("day"),
+            when(col("user_id").isNotNull, coalesce(col("cnt"), lit(0L)))
               .otherwise(lit(0L)).as("cnt"))
       },
       Some("""WITH daily AS (
@@ -156,7 +140,10 @@ object Temporal {
     // exchanges (probe semi-join + orderkey join-back; measured 6.7×
     // its twin at sf0.1) — and at 100 TB a per-customer sorted window
     // scan beats re-shuffling the orders table twice for the same
-    // existence test.
+    // existence test. Not an adapter over Cohort.readmissionLabel: the
+    // library must handle stays of any length, so each visit enters its
+    // window twice (admit + discharge probe) — measured ~1.5× this
+    // one-row day-key shape at sf0.1, which fixed 3-day stays allow.
     Q("q08_readmission_label",
       (s, dir) => {
         val w = Window.partitionBy(col("o_custkey"))
@@ -270,20 +257,14 @@ object Temporal {
     // A7 removal variant: DROP rows outside the per-group percentile band
     // (outlier_removal.py:24-37 imputing=False path; q12 is the clip twin).
     Q("q34_outlier_drop",
-      (s, dir) => {
-        // Size-adaptive exact percentiles — see q12 (same 100 TB
-        // rationale: above the broadcast class, one counting pass +
-        // sliver sorts, probe side exchange-free). A null bound (all-null group) nulls the
-        // comparison and drops the row, exactly as the aggregate's
-        // null bounds did.
-        val ev = t(s, dir, "events")
-          .select(col("event_id"), col("event_type"), col("value"))
-        val pct = graft.functions.ColFns.percentilesByKeyAdaptive(
-          ev, "event_type", "value", Seq("p05" -> 0.05, "p95" -> 0.95))
-        ev.join(broadcast(pct), Seq("event_type"), "left")
-          .filter(col("value") >= col("p05") && col("value") <= col("p95"))
-          .select(col("event_id"), col("event_type"), col("value"))
-      },
+      // Adapter over Features.outlierImputation(impute = false): the
+      // size-adaptive exact percentiles of q12, bounds broadcast back,
+      // rows outside [p05, p95] dropped (a null bound — all-null group —
+      // nulls the comparison and drops the row).
+      (s, dir) => Features.outlierImputation(
+          t(s, dir, "events").select(col("event_id"), col("event_type"), col("value")),
+          "event_type", "value", cutOff = 95, leftThresh = 5, impute = false)
+        .select(col("event_id"), col("event_type"), col("value")),
       // The oracle spells out linear interpolation (lo + frac*(hi-lo))
       // instead of quantile_cont: DuckDB's quantile_cont computes
       // (1-f)*lo + f*hi, which carries float dirt even when lo == hi

@@ -2,6 +2,7 @@ package graft
 
 import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import graft.queries.Registry
 
 /** Scale-property regression guards: these assertions pin the PLAN, not
@@ -421,5 +422,41 @@ class PlanPropertiesSpec extends SparkSpec {
     assert(p.contains("PushedFilters") && p.contains("lang"),
       s"lang filter not pushed to the documents scan:\n${p.take(800)}")
     assert(!p.contains("CartesianProduct"), "e22 gained a cartesian")
+  }
+
+  // The MIMIC library bodies that took the battery's join-free shapes
+  // (q10 and q22 adapt denseGrid and summary; readmissionLabel has no
+  // battery adapter), pinned directly on parquet inputs.
+  private def parquetOf(df: DataFrame): DataFrame = {
+    val p = java.nio.file.Files.createTempDirectory("graft-plan").toString + "/t"
+    df.write.parquet(p)
+    spark.read.parquet(p)
+  }
+  private def joinsOf(df: DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.nodeName }
+
+  test("Cohort.readmissionLabel: one per-subject range window, NO join") {
+    val df = graft.mimic.Cohort.readmissionLabel(
+      parquetOf(graft.mimic.Fixtures.icustays(spark)), graft.mimic.Cohort.icuRoles, 30)
+    assert(joinsOf(df).isEmpty, s"readmission labeling joins:\n${df.queryExecution.sparkPlan}")
+  }
+
+  test("Datagen.denseGrid: one keyed groupBy + explode, NO join") {
+    import spark.implicits._
+    val b = parquetOf(Seq((11L, 700L, 0L, 1.0), (11L, 700L, 2L, 3.0))
+      .toDF("stay_id", "itemid", "t", "valuenum"))
+    val df = graft.mimic.Datagen.denseGrid(b, losBuckets = 4)
+    assert(joinsOf(df).isEmpty, s"dense grid joins:\n${df.queryExecution.sparkPlan}")
+  }
+
+  test("Features.summary: scans its input ONCE, NO join") {
+    import spark.implicits._
+    val ev = parquetOf(Seq((11L, 600L, 0.0), (11L, 600L, 2.0), (12L, 601L, 4.0))
+      .toDF("stay_id", "itemid", "amount"))
+    val df = graft.mimic.Features.summary(ev, "itemid", Some(col("amount") === 0))
+    val plan = df.queryExecution.sparkPlan
+    assert(plan.collectLeaves().size === 1, s"summary scans its input twice:\n$plan")
+    assert(joinsOf(df).isEmpty, s"summary joins:\n$plan")
   }
 }

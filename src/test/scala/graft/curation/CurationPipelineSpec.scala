@@ -173,6 +173,22 @@ class CurationPipelineSpec extends SparkSpec {
     assert(!new java.io.File(s"$outBad/01_ppl").exists())
   }
 
+  test("resume: a completed 01_ppl builds no d44 plan, so registers no cache entry") {
+    val out = Files.createTempDirectory("graft-curation-ppl-resume").toString
+    val docs = Registry.t(spark, sfDir, "documents")
+    val cfg = CurationPipeline.Config(keepPplBuckets = Some(Set("head", "middle")))
+    val counts = CurationPipeline.run(spark, docs, out, cfg = cfg, customGate = langGate)
+    val marker = new java.io.File(s"$out/01_ppl/_SUCCESS").lastModified()
+    // poisoned raw input without `lang`: building d44's scored frame —
+    // the plan its persist registers — fails analysis, so the resumed
+    // run succeeds only if the 01_ppl thunk never runs
+    val resumed = CurationPipeline.run(spark, docs.drop("lang"), out,
+      cfg = cfg.copy(resume = true), customGate = langGate)
+    assert(resumed === counts)
+    assert(new java.io.File(s"$out/01_ppl/_SUCCESS").lastModified() === marker,
+      "01_ppl was rewritten on resume")
+  }
+
   test("gopher + hashed-score gates: stage 1 equals the d37/d38 oracle cuts") {
     val docs = Registry.t(spark, sfDir, "documents")
     val keep37 = Registry.queries("d37_gopher_rules")(spark, sfDir)
