@@ -13,8 +13,7 @@ import graft.functions.VectorExprs.cosineFast
   *   - e06: the dumped top-3 rows for a seeded sample of query vectors
   *     must EXACTLY equal brute force restricted to the query's bucket
   *     (the bucketed-KNN contract), plus a recall floor vs unrestricted
-  *     brute-force truth — promoted from the RecallProbe diagnostic to
-  *     a pass/fail.
+  *     brute-force truth, as a pass/fail.
   *   - d12 / e10: the dumped (id, rep) clustering must equal the
   *     fixpoint of relational min-label propagation over the same edge
   *     list — an O(diameter)-round formulation sharing NO code with the
@@ -98,7 +97,7 @@ object ScaleCheck {
     {
       val e = queries.Registry.t(spark, sfDir, "embeddings")
         .withColumn("bkt", functions.PlaneBucketExpr.planeBucketCode(col("embedding")))
-      // seeded deterministic sample (same rule as RecallProbe)
+      // seeded deterministic sample: hash-ordered, reproducible across runs
       val ids = e.select(col("vec_id")).orderBy(xxhash64(col("vec_id")))
         .limit(sampleN).collect().map(_.getLong(0))
       val q = e.filter(col("vec_id").isin(ids: _*))

@@ -412,10 +412,7 @@ object CurationPipeline {
         .groupBy(col("_h"))
         .agg(min(struct(col("source"), col("doc_id"))).as("k"))
         .select(col("k.doc_id").as("doc_id"))
-      else gated
-        .select(md5(col("text").cast("binary")).as("_h"), col("doc_id"))
-        .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
+      else Docs.exactKeepIds(gated)
     val exact = stage("02_exact", gated.join(keepIds, Seq("doc_id"), "left_semi"))
 
     // stage 3: benchmark decontamination — one stage dir, four engines
@@ -429,14 +426,14 @@ object CurationPipeline {
         cfg.decontam match {
           case BloomGrams(fpp) =>
             val bloom = Docs.benchBloomBytes(
-              gram5(base.filter(isBench(col("doc_id"))))
+              Docs.gram5(base.filter(isBench(col("doc_id"))))
                 .select(col("gram")).distinct(),
               fpp = fpp)
             Docs.decontamFilterDf(targets, bloom)
           case ExactGrams =>
-            val benchGrams = gram5(base.filter(isBench(col("doc_id"))))
+            val benchGrams = Docs.gram5(base.filter(isBench(col("doc_id"))))
               .select(col("gram")).distinct()
-            val contamIds = gram5(targets)
+            val contamIds = Docs.gram5(targets)
               .join(broadcast(benchGrams), Seq("gram"))
               .select(col("doc_id")).distinct()
             targets.join(contamIds, Seq("doc_id"), "left_anti")
@@ -569,15 +566,4 @@ object CurationPipeline {
     }
     counts.toSeq
   }
-
-  /** Distinct-position word 5-grams via index explode (the safe
-    * generator shape — BENCH_NOTES explode discipline). */
-  private def gram5(df: DataFrame): DataFrame = df
-    .select(col("doc_id"), col("ws"),
-      explode(when(size(col("ws")) >= 5,
-        sequence(lit(1), size(col("ws")) - 4))).as("i"))
-    .select(col("doc_id"), concat_ws(" ",
-      element_at(col("ws"), col("i")), element_at(col("ws"), col("i") + 1),
-      element_at(col("ws"), col("i") + 2), element_at(col("ws"), col("i") + 3),
-      element_at(col("ws"), col("i") + 4)).as("gram"))
 }

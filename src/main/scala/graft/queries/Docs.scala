@@ -456,6 +456,28 @@ object Docs {
           .as("milli_bits_per_bigram"))
   }
 
+  /** Exact-dedup keep-ids of a gated (doc_id, text, ...) frame: the
+    * min doc_id per md5(text), as one `doc_id` column. Only (md5,
+    * doc_id) fingerprints cross the hash exchange, never text. */
+  private[graft] def exactKeepIds(gated: org.apache.spark.sql.DataFrame):
+      org.apache.spark.sql.DataFrame = gated
+    .select(md5(col("text").cast("binary")).as("_h"), col("doc_id"))
+    .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
+    .select(col("doc_id"))
+
+  /** Distinct-position word 5-grams (doc_id, gram) of a (doc_id, ws)
+    * frame, via index explode (the safe generator shape — BENCH_NOTES
+    * explode discipline). Docs with fewer than 5 words emit no row. */
+  private[graft] def gram5(df: org.apache.spark.sql.DataFrame):
+      org.apache.spark.sql.DataFrame = df
+    .select(col("doc_id"), col("ws"),
+      explode(when(size(col("ws")) >= 5,
+        sequence(lit(1), size(col("ws")) - 4))).as("i"))
+    .select(col("doc_id"), concat_ws(" ",
+      element_at(col("ws"), col("i")), element_at(col("ws"), col("i") + 1),
+      element_at(col("ws"), col("i") + 2), element_at(col("ws"), col("i") + 3),
+      element_at(col("ws"), col("i") + 4)).as("gram"))
+
   /** Stages 1-3 of d13 plus the near-dup SIGNATURE pass, ending in the
     * narrow per-document dedup index `(doc_id, n_tokens, mh)`: language
     * gate → min-length + repetition gate → exact dedup (fingerprint-only
@@ -486,23 +508,10 @@ object Docs {
     // not the corpus — and the join-back reuses the doc_id
     // partitioning the corpus already has (plan-guarded in
     // PlanPropertiesSpec).
-    val keepIds = gated
-      .select(md5(col("text").cast("binary")).as("_h"), col("doc_id"))
-      .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-    val exact = gated.join(keepIds, Seq("doc_id"), "left_semi")
+    val exact = gated.join(exactKeepIds(gated), Seq("doc_id"), "left_semi")
     // stage 3: benchmark decontamination (d15's semantics in-line):
     // drop held-out benchmark docs and any survivor sharing a 5-gram
-    // with them. Index-explode shape (BENCH_NOTES explode
-    // discipline); benchmark gram set broadcast.
-    def gram5(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("doc_id"), col("ws"),
-        explode(when(size(col("ws")) >= 5,
-          sequence(lit(1), size(col("ws")) - 4))).as("i"))
-      .select(col("doc_id"), concat_ws(" ",
-        element_at(col("ws"), col("i")), element_at(col("ws"), col("i") + 1),
-        element_at(col("ws"), col("i") + 2), element_at(col("ws"), col("i") + 3),
-        element_at(col("ws"), col("i") + 4)).as("gram"))
+    // with them. Benchmark gram set broadcast.
     val benchGrams = gram5(base.filter(col("doc_id") % 20 === 0))
       .select(col("gram")).distinct()
     val contamIds = gram5(exact.filter(col("doc_id") % 20 =!= 0))

@@ -32,27 +32,18 @@ object Registry {
   // AS LONG AS the underlying files are not rewritten: the cached plan
   // pins its file-listing snapshot. Callers that rewrite parquet under
   // a cached dir mid-session must call `invalidate(dir)` (or
-  // `invalidate()` for everything). Entries whose session has stopped
-  // are purged opportunistically on each lookup, so a long-lived JVM
-  // cycling many sessions does not grow the map unboundedly.
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  // `invalidate()` for everything).
+  private val tableCache = new graft.SessionCache[(String, String), DataFrame](_ => ())
 
   /** Drop every cached table under `dir` (all sessions). Call after
     * rewriting the parquet files in that directory. */
-  def invalidate(dir: String): Unit =
-    tableCache.keySet.removeIf(k => k._2 == dir)
+  def invalidate(dir: String): Unit = tableCache.invalidate(_._1 == dir)
 
   /** Drop the whole catalog cache. */
   def invalidate(): Unit = tableCache.clear()
 
-  private def purgeStopped(): Unit =
-    tableCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-
-  def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    purgeStopped()
-    tableCache.computeIfAbsent((s, dir, name), _ => tUncached(s, dir, name))
-  }
+  def t(s: SparkSession, dir: String, name: String): DataFrame =
+    tableCache.getOrBuild(s, (dir, name))(tUncached(s, dir, name))
 
   private def tUncached(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {

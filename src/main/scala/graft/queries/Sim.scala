@@ -230,7 +230,7 @@ object Sim {
     * as ONE 8L-plane pass, bit-sliced — planes are independent by
     * construction), candidates = union over families of same-bucket
     * pairs, then exact-cosine rank. Measured recall@3 at sf0.1 (300
-    * query sample vs brute-force truth, RecallProbe): 0.07/0.11/0.18/
+    * query sample vs brute-force truth): 0.07/0.11/0.18/
     * 0.23 for L=1/2/4/7 — families correlate through the shared
     * embedding, so gains are sub-independent but monotone. Work stays
     * linear in L (one explode + one (family, code) shuffle), never
@@ -600,26 +600,60 @@ object Sim {
       .select(col("label"), col("vec_id"), col("cos_sim"))
   }
 
-  /** Session-scoped trained-index cache for the PLAIN PQ chain: the
-    * codebook literal + the corpus code table (the PQ index a
-    * production deployment stores and serves). Same key/invalidation
-    * discipline as [[residualModel]]: [[invalidateIndexCaches]] clears
-    * BOTH caches and releases their checkpoint blocks. */
-  private val pqModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
+  // ---------- session-scoped trained indexes ----------
+  // A production index trains once and serves many queries; it does not
+  // retrain per lookup. Each trained artifact below is cached per
+  // (session, canonicalized corpus plan), so two references to the same
+  // corpus share one training pass (structural plan equality makes a
+  // collision impossible). Entries pin the training-time data snapshot:
+  // rewriting corpus files mid-session requires [[invalidateIndexCaches]],
+  // which drops every kind at once and releases its checkpoint blocks.
+  private type Plan = org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  private type DfPair = (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)
 
-  /** Session-scoped SEMANTIC-DEDUP cluster index (e10): the connected-
+  /** PLAIN PQ (e15): codebook literal + checkpointed corpus code table. */
+  private val pqModelCache = new graft.SessionCache[Plan, DfPair](m => releaseCheckpoint(m._2))
+
+  /** SEMANTIC-DEDUP cluster index (e10): the checkpointed connected-
     * components (id, rep) table over the bucketed-cosine edge graph.
     * Like d13's narrow dedup index and the PQ code tables, this is a
     * trained artifact — at 100 TB it builds once per corpus snapshot
     * (edge generation + the CC loop, the expensive eager part) and
     * every consumer (dedup keep-lists, cluster stats, the e10 gate's
-    * rep join) serves from the checkpointed narrow leaf. Same
-    * key/invalidation discipline as the PQ caches. */
-  private val semDedupCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    org.apache.spark.sql.DataFrame]()
+    * rep join) serves from the checkpointed narrow leaf. */
+  private val semDedupCache =
+    new graft.SessionCache[Plan, org.apache.spark.sql.DataFrame](releaseCheckpoint)
+
+  /** 4-bit PQ (e20) and OPQ (e21, keyed by the ROTATED frame's plan, so
+    * both indexes of one corpus coexist): codebook literal + packed,
+    * checkpointed code table. */
+  private val pq4ModelCache = new graft.SessionCache[Plan, DfPair](m => releaseCheckpoint(m._2))
+
+  /** RESIDUAL PQ (e19): coarse codebook literal, residual codebook
+    * literal, checkpointed per-vector (cell, sub, code) code table. */
+  private val residualModelCache = new graft.SessionCache[Plan,
+    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
+    m => releaseCheckpoint(m._3))
+
+  private val indexCaches: Seq[graft.SessionCache[Plan, _]] =
+    Seq(pqModelCache, semDedupCache, pq4ModelCache, residualModelCache)
+
+  /** `cache`'s entry for corpus `e` in `e`'s session, built on a miss. */
+  private def trained[V](cache: graft.SessionCache[Plan, V],
+      e: org.apache.spark.sql.DataFrame)(build: => V): V =
+    cache.getOrBuild(e.sparkSession, e.queryExecution.analyzed.canonicalized)(build)
+
+  /** Drop every cached trained index (all kinds, all sessions) and
+    * release its checkpoint blocks — the documented step after
+    * rewriting corpus files mid-session. */
+  def invalidateIndexCaches(): Unit = indexCaches.foreach(_.clear())
+
+  /** Live trained-index entries across all kinds. */
+  private[graft] def indexCacheSize: Int = indexCaches.map(_.size).sum
+
+  /** Total seconds spent training indexes in this JVM — Bench's `train`
+    * is its growth across a query's first build. */
+  private[graft] def indexBuildSeconds: Double = indexCaches.map(_.buildSeconds).sum
 
   /** Train (or fetch) the semantic-dedup cluster index for corpus `e0`:
     * hyperplane-bucketed cosine edges (pair-bounded, never all-pairs) →
@@ -629,44 +663,40 @@ object Sim {
     * corpus, exactly as serving a PQ lookup must not retrain the
     * codebook. */
   private[graft] def semDedupIndex(e0: org.apache.spark.sql.DataFrame):
-      org.apache.spark.sql.DataFrame = {
-    semDedupCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    semDedupCache.computeIfAbsent(
-      (e0.sparkSession, e0.queryExecution.analyzed.canonicalized), _ => {
-        // per-row norms before the self-join — see knnJoinFast
-        val e = e0.withColumn("bkt",
-          graft.functions.PlaneBucketExpr.planeBucketCode(col("embedding")))
-          .withColumn("nrm", vecNorm(col("embedding")))
-        val a = e.select(col("bkt"), col("vec_id").as("u"),
-          col("embedding").as("ea"), col("nrm").as("na"))
-        val b = e.select(col("bkt"), col("vec_id").as("v"),
-          col("embedding").as("eb"), col("nrm").as("nb"))
-        val edges = a.join(b, Seq("bkt"))
-          .filter(col("u") < col("v"))
-          .filter(round(vecDot(col("ea"), col("eb")) / (col("na") * col("nb")), 4) >= 0.2)
-          .select(col("u"), col("v"))
-        // components() returns a localCheckpoint-backed frame (both the
-        // local-fast-path and distributed-loop branches) — cacheable
-        // as-is, released by releaseCheckpoint on invalidation
-        graft.operators.ConnectedComponents.components(edges, dedupeEdges = false)
-      })
-  }
+      org.apache.spark.sql.DataFrame =
+    trained(semDedupCache, e0) {
+      // per-row norms before the self-join — see knnJoinFast
+      val e = e0.withColumn("bkt",
+        graft.functions.PlaneBucketExpr.planeBucketCode(col("embedding")))
+        .withColumn("nrm", vecNorm(col("embedding")))
+      val a = e.select(col("bkt"), col("vec_id").as("u"),
+        col("embedding").as("ea"), col("nrm").as("na"))
+      val b = e.select(col("bkt"), col("vec_id").as("v"),
+        col("embedding").as("eb"), col("nrm").as("nb"))
+      val edges = a.join(b, Seq("bkt"))
+        .filter(col("u") < col("v"))
+        .filter(round(vecDot(col("ea"), col("eb")) / (col("na") * col("nb")), 4) >= 0.2)
+        .select(col("u"), col("v"))
+      // components() returns a localCheckpoint-backed frame (both the
+      // local-fast-path and distributed-loop branches) — cacheable
+      // as-is, released by releaseCheckpoint on invalidation
+      graft.operators.ConnectedComponents.components(edges, dedupeEdges = false)
+    }
 
   /** Release the checkpoint RDD blocks behind a localCheckpoint'ed
-    * DataFrame when its cache entry is dropped in a LIVE session —
-    * otherwise a session that retrains the same corpus repeatedly
-    * accumulates orphaned MEMORY_AND_DISK blocks until the
-    * ContextCleaner's GC-driven sweep gets to them. The checkpointed
-    * RDD sits behind the LogicalRDD leaf the checkpoint returned;
-    * stopped sessions are skipped (their block manager is gone). */
+    * DataFrame in a live session (a cache entry being dropped, or a
+    * training intermediate) — otherwise a session that retrains the
+    * same corpus repeatedly accumulates orphaned MEMORY_AND_DISK blocks
+    * until the ContextCleaner's GC-driven sweep gets to them. The
+    * checkpointed RDD sits behind the LogicalRDD leaf the checkpoint
+    * returned. */
   private def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     try {
-      if (!df.sparkSession.sparkContext.isStopped)
-        df.queryExecution.analyzed.collectLeaves().foreach {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(blocking = false)
-          case _ => ()
-        }
+      df.queryExecution.analyzed.collectLeaves().foreach {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          lr.rdd.unpersist(blocking = false)
+        case _ => ()
+      }
     } catch {
       // best-effort release: a block manager mid-shutdown may throw and
       // that must not fail invalidation — but ONLY non-fatal errors are
@@ -677,18 +707,15 @@ object Sim {
     }
 
   private def pqModel(e: org.apache.spark.sql.DataFrame):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    pqModelCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    pqModelCache.computeIfAbsent(
-      (e.sparkSession, e.queryExecution.analyzed.canonicalized), _ => {
-        val cent = localModel(pqCodebookDf(e))
-        // the code table is THE index: corpus-sized but 3 narrow longs
-        // per (vector, subspace); checkpointed so queries consume a
-        // leaf instead of re-running the K-way distance fan-out
-        val codes = pqCodesDf(pqD2Df(e, cent)).localCheckpoint()
-        (cent, codes)
-      })
-  }
+      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+    trained(pqModelCache, e) {
+      val cent = localModel(pqCodebookDf(e))
+      // the code table is THE index: corpus-sized but 3 narrow longs
+      // per (vector, subspace); checkpointed so queries consume a
+      // leaf instead of re-running the K-way distance fan-out
+      val codes = pqCodesDf(pqD2Df(e, cent)).localCheckpoint()
+      (cent, codes)
+    }
 
   /** e15's ADC candidate chain as a shared body (gate + e18 report):
     * global micro-unit PQ codebooks, integer subspace distances, argmin
@@ -738,26 +765,18 @@ object Sim {
     * keeps (4 packed bytes + mask for 64 dims vs e15's 8 code bytes).
     * Scale shape: one vec_id spread feeds train + encode, every
     * aggregation downstream is keyed on a vec_id prefix, codebooks and
-    * the query distance table are 16×dims broadcasts. */
-  private val pq4ModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
-
-  /** Session-scoped (see [[pqModel]] — same key/invalidation
-    * discipline, cleared by [[invalidateIndexCaches]]): the 4-bit
-    * index trains once per (session, corpus plan) and serves many
-    * lookups; the packed code table is checkpointed so a serve
-    * consumes a leaf. Bench surfaces the one-off training cost in its
-    * `train` field via the cache-hit signature. */
+    * the query distance table are 16×dims broadcasts.
+    *
+    * Session-scoped ([[pq4ModelCache]]): the index trains once per
+    * (session, corpus plan) and serves many lookups; the packed code
+    * table is checkpointed so a serve consumes a leaf. Bench reports
+    * the one-off training cost in its `train` field. */
   private[graft] def pq4Model(e: org.apache.spark.sql.DataFrame):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    pq4ModelCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    pq4ModelCache.computeIfAbsent(
-      (e.sparkSession, e.queryExecution.analyzed.canonicalized), _ => {
-        val (cw, packed) = pq4Train(e)
-        (cw, packed.localCheckpoint())
-      })
-  }
+      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+    trained(pq4ModelCache, e) {
+      val (cw, packed) = pq4Train(e)
+      (cw, packed.localCheckpoint())
+    }
 
   private def pq4Train(e: org.apache.spark.sql.DataFrame):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
@@ -919,12 +938,10 @@ object Sim {
   private[graft] def opq4Model(e: org.apache.spark.sql.DataFrame):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val rf = opq4Frame(e)
-    pq4ModelCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    pq4ModelCache.computeIfAbsent(
-      (rf.sparkSession, rf.queryExecution.analyzed.canonicalized), _ => {
-        val (cw, packed) = pq4TrainOn(opq4Subs(rf), rf)
-        (cw, packed.localCheckpoint())
-      })
+    trained(pq4ModelCache, rf) {
+      val (cw, packed) = pq4TrainOn(opq4Subs(rf), rf)
+      (cw, packed.localCheckpoint())
+    }
   }
 
   /** e21's ADC candidates: the e20 serve body over the rotated index,
@@ -963,6 +980,67 @@ object Sim {
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(df.collect(): _*), df.schema)
 
+  /** Train (or fetch) the residual-PQ model triple for corpus `e`:
+    * (coarse codebook literal, residual codebook literal, checkpointed
+    * per-vector (cell, sub, code) CODE TABLE). The code table is part
+    * of the stored index — a deployment encodes the corpus once at
+    * build time and serves lookups against the codes; recomputing the
+    * residual encode per query (the pre-round-12 shape) made every
+    * e19 serve re-run the corpus explode + two joins + a K-way argmin
+    * (~0.9 s/lookup at sf0.1 vs ~0.4 for plain PQ, whose codes were
+    * already cached). See [[pqResidualAdcCandidates]] for the shapes. */
+  private def residualModel(e: org.apache.spark.sql.DataFrame):
+      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+    trained(residualModelCache, e) {
+      // the codebook literal (see localModel): cent feeds three
+      // branches and rcm two — as live subtrees they made driver
+      // planning the dominant per-action cost
+      val cent = localModel(pqCodebookDf(e))
+      val d2 = pqD2Df(e, cent)
+      // coarse cell per vector: argmin over the summed subspace
+      // distances (= the full-vector integer distance), ties →
+      // smaller label. localCheckpoint (the ConnectedComponents
+      // pattern): the cell map feeds BOTH the residual computation
+      // and the final candidate join — as a live subtree each
+      // reference re-plans and re-runs the d2 aggregation;
+      // checkpointed, it is computed once and the optimizer sees a
+      // leaf. Corpus-sized but narrow (two longs per vector).
+      val cells = d2.groupBy(col("vec_id"), col("label"))
+        .agg(sum(col("d2")).as("cd2"))
+        .groupBy(col("vec_id"))
+        .agg(min(struct(col("cd2"), col("label"))).as("best"))
+        .select(col("vec_id"), col("best").getField("label").as("cell"))
+        .localCheckpoint()
+      val mt = e.repartition(col("vec_id"))
+        .select(col("vec_id"), col("label").as("vlabel"),
+          posexplode(col("embedding")).as(Seq("pos", "vf")))
+        .filter(col("vf").isNotNull)
+        .select(col("vec_id"), col("vlabel"), col("pos"),
+          expr("pos DIV 8").as("sub"), microQ(col("vf")).as("m"))
+      val resT = mt.join(cells, Seq("vec_id"))
+        .join(broadcast(cent.select(col("label").as("cell"), col("pos"), col("cm"))),
+          Seq("cell", "pos"))
+        .select(col("vec_id"), col("vlabel"), col("cell"), col("pos"), col("sub"),
+          (col("m") - col("cm")).as("rm"))
+      // residual codebooks, trained per (label, pos) over the residuals
+      val rcm = localModel(resT.groupBy(col("vlabel"), col("pos"))
+        .agg(sum(col("rm")).as("sr"), count(lit(1)).as("n"))
+        .select(col("vlabel").as("label"), col("pos"),
+          halfAwayDiv(col("sr"), col("n")).as("rcm")))
+      // corpus ENCODE at train time: residual subspace distances vs
+      // rcm → argmin codes, tagged with the owner's cell — the code
+      // table the index stores (3 narrow longs + cell per (vector,
+      // subspace)), checkpointed so a serve consumes a leaf
+      val rd2 = resT.join(broadcast(rcm), Seq("pos"))
+        .groupBy(col("vec_id"), col("sub"), col("label"))
+        .agg(sum((col("rm") - col("rcm")) * (col("rm") - col("rcm"))).as("d2"))
+      val codes = pqCodesDf(rd2).join(cells, Seq("vec_id")).localCheckpoint()
+      // cells only feeds training; its blocks are dead once codes is
+      // materialized
+      releaseCheckpoint(cells)
+      (cent, rcm, codes)
+    }
+
   /** e19's RESIDUAL-encoded ADC candidates — the standard production
     * refinement over e15's plain PQ: each vector is coarse-assigned to
     * its nearest codebook cell (exact-integer argmin over the full
@@ -981,125 +1059,6 @@ object Sim {
     * gate scores all cells (oracle coverage); the production path
     * composes the same chain under an nprobe cell filter exactly as
     * [[ivfPqSearch]] does for plain PQ. */
-  /** Session-scoped trained-index cache for the residual-PQ chain: the
-    * coarse codebook, the per-vector cell map, and the residual
-    * codebooks are a trained MODEL — a production index trains once
-    * and serves many queries, it does not retrain per lookup. Keyed by
-    * (session, canonicalized input plan) so two references to the same
-    * corpus share one training pass; structural plan equality makes a
-    * collision impossible. Same caveats as Registry's table catalog:
-    * entries pin the training-time data snapshot (rewriting the
-    * corpus files mid-session requires [[invalidateResidualModels]]),
-    * and stopped sessions are purged opportunistically. */
-  private val residualModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
-
-  /** Drop every cached trained index — the plain-PQ, residual-PQ,
-    * 4-bit-PQ, and semantic-dedup cluster caches, all sessions —
-    * releasing their checkpointed RDD blocks. This is the documented invalidation step after
-    * rewriting corpus files mid-session: clearing only one cache
-    * would leave the other serving a stale codebook/code table. */
-  def invalidateIndexCaches(): Unit = {
-    // atomic per-entry drain (remove-then-release), not iterate+clear():
-    // an entry inserted concurrently between a values() walk and clear()
-    // would be dropped without its checkpoint blocks ever being freed.
-    // remove() hands each value to exactly one releaser; entries that
-    // land after the iterator passes simply survive this invalidation
-    // (the caller re-invokes if it must win that race). NOTE the
-    // documented contract (see the cache scaladocs): invalidation must
-    // not race IN-FLIGHT serves — unpersisting a localCheckpoint'ed RDD
-    // under a running job can fail that job non-recoverably, because
-    // the truncated lineage cannot be recomputed.
-    def drain[K, V](m: java.util.concurrent.ConcurrentHashMap[K, V])(release: V => Unit): Unit = {
-      val it = m.keySet().iterator()
-      while (it.hasNext) {
-        val v = m.remove(it.next())
-        if (v != null) release(v)
-      }
-    }
-    drain(pqModelCache) { case (_, codes) => releaseCheckpoint(codes) }
-    drain(residualModelCache) { case (_, _, cells) => releaseCheckpoint(cells) }
-    drain(pq4ModelCache) { case (_, packed) => releaseCheckpoint(packed) }
-    drain(semDedupCache)(releaseCheckpoint)
-  }
-
-  /** Total live trained-index cache entries across the three model
-    * caches — the EXPLICIT cache-populating signal Bench uses to report
-    * one-off training cost (a size delta around a query's first build),
-    * replacing the former timing-signature heuristic. */
-  private[graft] def indexCacheSize: Int =
-    pqModelCache.size + residualModelCache.size + pq4ModelCache.size +
-      semDedupCache.size
-
-  /** Former name of [[invalidateIndexCaches]]; kept as an alias so the
-    * documented invalidation API keeps working. */
-  def invalidateResidualModels(): Unit = invalidateIndexCaches()
-
-  /** Train (or fetch) the residual-PQ model triple for corpus `e`:
-    * (coarse codebook literal, residual codebook literal, checkpointed
-    * per-vector (cell, sub, code) CODE TABLE). The code table is part
-    * of the stored index — a deployment encodes the corpus once at
-    * build time and serves lookups against the codes; recomputing the
-    * residual encode per query (the pre-round-12 shape) made every
-    * e19 serve re-run the corpus explode + two joins + a K-way argmin
-    * (~0.9 s/lookup at sf0.1 vs ~0.4 for plain PQ, whose codes were
-    * already cached). See [[pqResidualAdcCandidates]] for the shapes. */
-  private def residualModel(e: org.apache.spark.sql.DataFrame):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    residualModelCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    residualModelCache.computeIfAbsent(
-      (e.sparkSession, e.queryExecution.analyzed.canonicalized), _ => {
-        // the codebook literal (see localModel): cent feeds three
-        // branches and rcm two — as live subtrees they made driver
-        // planning the dominant per-action cost
-        val cent = localModel(pqCodebookDf(e))
-        val d2 = pqD2Df(e, cent)
-        // coarse cell per vector: argmin over the summed subspace
-        // distances (= the full-vector integer distance), ties →
-        // smaller label. localCheckpoint (the ConnectedComponents
-        // pattern): the cell map feeds BOTH the residual computation
-        // and the final candidate join — as a live subtree each
-        // reference re-plans and re-runs the d2 aggregation;
-        // checkpointed, it is computed once and the optimizer sees a
-        // leaf. Corpus-sized but narrow (two longs per vector).
-        val cells = d2.groupBy(col("vec_id"), col("label"))
-          .agg(sum(col("d2")).as("cd2"))
-          .groupBy(col("vec_id"))
-          .agg(min(struct(col("cd2"), col("label"))).as("best"))
-          .select(col("vec_id"), col("best").getField("label").as("cell"))
-          .localCheckpoint()
-        val mt = e.repartition(col("vec_id"))
-          .select(col("vec_id"), col("label").as("vlabel"),
-            posexplode(col("embedding")).as(Seq("pos", "vf")))
-          .filter(col("vf").isNotNull)
-          .select(col("vec_id"), col("vlabel"), col("pos"),
-            expr("pos DIV 8").as("sub"), microQ(col("vf")).as("m"))
-        val resT = mt.join(cells, Seq("vec_id"))
-          .join(broadcast(cent.select(col("label").as("cell"), col("pos"), col("cm"))),
-            Seq("cell", "pos"))
-          .select(col("vec_id"), col("vlabel"), col("cell"), col("pos"), col("sub"),
-            (col("m") - col("cm")).as("rm"))
-        // residual codebooks, trained per (label, pos) over the residuals
-        val rcm = localModel(resT.groupBy(col("vlabel"), col("pos"))
-          .agg(sum(col("rm")).as("sr"), count(lit(1)).as("n"))
-          .select(col("vlabel").as("label"), col("pos"),
-            halfAwayDiv(col("sr"), col("n")).as("rcm")))
-        // corpus ENCODE at train time: residual subspace distances vs
-        // rcm → argmin codes, tagged with the owner's cell — the code
-        // table the index stores (3 narrow longs + cell per (vector,
-        // subspace)), checkpointed so a serve consumes a leaf
-        val rd2 = resT.join(broadcast(rcm), Seq("pos"))
-          .groupBy(col("vec_id"), col("sub"), col("label"))
-          .agg(sum((col("rm") - col("rcm")) * (col("rm") - col("rcm"))).as("d2"))
-        val codes = pqCodesDf(rd2).join(cells, Seq("vec_id")).localCheckpoint()
-        // cells only feeds training; its blocks are dead once codes is
-        // materialized
-        releaseCheckpoint(cells)
-        (cent, rcm, codes)
-      })
-  }
-
   private[graft] def pqResidualAdcCandidates(e: org.apache.spark.sql.DataFrame,
       queryVecId: Long = 0L): org.apache.spark.sql.DataFrame = {
     val (cent, rcm, codes) = residualModel(e)
@@ -2390,8 +2349,7 @@ object Sim {
     // gates' shared bodies so the report is pinned to the same oracles.
     // The rankings are the heavy part and carry the gates' scale shapes
     // (broadcast anchors, cell/bucket-pruned scans); the report itself
-    // is two joins of 10-row frames. RecallProbe (tools) runs the same
-    // comparison interactively; THIS is the oracle-checked version.
+    // is two joins of 10-row frames.
     //
     // Plan shape: every top-k frame here is BOUNDED (k = 10 rows), so
     // each ranking chain is materialized ONCE into a literal

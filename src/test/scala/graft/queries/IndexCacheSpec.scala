@@ -48,13 +48,26 @@ class IndexCacheSpec extends SparkSpec {
     for (q <- Seq("e15_pq_ann", "e19_pq_residual_ann", "e20_pq4_ann", "e21_opq4_ann"))
       assert(topOf(q) === 13L,
         s"$q served a stale index after the documented invalidation sequence")
+  }
 
-    // the deprecated alias must clear everything too (doc contract)
-    writeCorpus(dir, twin = 4L)
-    Registry.invalidate(dir)
-    Sim.invalidateResidualModels()
-    for (q <- Seq("e15_pq_ann", "e19_pq_residual_ann", "e20_pq4_ann", "e21_opq4_ann"))
-      assert(topOf(q) === 4L, s"$q stale after invalidateResidualModels alias")
+  test("second build of every index-training query in one session trains nothing") {
+    val dir = Files.createTempDirectory("graft-idxbuild2").toString
+    writeCorpus(dir, twin = 7L)
+    Sim.invalidateIndexCaches()
+    def build(q: String): Unit = { Registry.queries(q)(spark, dir); () }
+    val size0 = Sim.indexCacheSize
+    build("e18_recall_report")
+    assert(Sim.indexCacheSize === size0 + 4,
+      "e18's first build must train the pq, residual, pq4 and opq4 indexes")
+    val trainers = Seq("e10_semdedup", "e15_pq_ann", "e18_recall_report",
+      "e19_pq_residual_ann", "e20_pq4_ann", "e21_opq4_ann")
+    trainers.filterNot(_ == "e18_recall_report").foreach(build)
+    val (size1, secs1) = (Sim.indexCacheSize, Sim.indexBuildSeconds)
+    for (q <- trainers) {
+      build(q)
+      assert(Sim.indexCacheSize === size1, s"$q's second build added a cache entry")
+      assert(Sim.indexBuildSeconds === secs1, s"$q's second build ran a training build")
+    }
   }
 
   test("semDedupIndex: one clustering per corpus snapshot; documented invalidation retrains") {

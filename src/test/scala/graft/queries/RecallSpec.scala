@@ -5,9 +5,9 @@ import graft.SparkSpec
 import graft.functions.VectorExprs.cosineFast
 
 /** Pins ANN recall@3 for the production bucketed-KNN paths at a fixed
-  * (corpus, planes, families) grid — RecallProbe's measurement promoted
-  * to CI, so a bucket-geometry regression (wrong bit-slicing, a dropped
-  * probe family, a planesFor clamp change) FAILS instead of silently
+  * (corpus, planes, families) grid, so a bucket-geometry regression
+  * (wrong bit-slicing, a dropped probe family, a planesFor clamp
+  * change) FAILS instead of silently
   * eroding neighbor quality. Everything here is deterministic: the query
   * sample is hash-ordered, the hyperplanes are seeded, ground truth is
   * brute force — so thresholds are pinned just under the measured value,
