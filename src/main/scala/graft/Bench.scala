@@ -1,8 +1,11 @@
 package graft
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, GraftShim, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, Observation}
 import org.apache.spark.sql.functions.{count, lit}
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Per-query failures are recorded in an `errors`
@@ -122,52 +125,90 @@ object Bench {
     * counted, and listed in full in the full line). */
   val FlagCap = 5
 
-  /** One flag list as JSON: `"name":<first cap entries>,"name_n":<count>`. */
-  private def flagList(name: String, entries: Iterable[String], cap: Int,
-      brackets: String = "[]"): String =
-    s""""$name":${entries.take(cap).mkString(brackets.take(1), ",", brackets.drop(1))},"${name}_n":${entries.size}"""
+  private def r2(x: Double): Double = math.round(x * 100.0) / 100.0
+
+  /** One flag list: `name` -> its first `cap` entries (a map stays a
+    * map), `name_n` -> the full count. */
+  private def flagList(name: String, entries: Iterable[Any], cap: Int): Seq[(String, Any)] =
+    Seq(name -> entries.take(cap), s"${name}_n" -> entries.size)
+
+  /** In-run per-wave dispatch floor: the cheapest observed stage wave —
+    * every query pays AT LEAST this much per stage at bench SF, so
+    * stages×floor_wave is a defensible lower bound on harness cost. */
+  def floorWave(exec: collection.Map[String, Double], stages: collection.Map[String, Long]): Double = {
+    val per = exec.toSeq.flatMap { case (k, e) => stages.get(k).filter(_ > 0).map(s => e / s) }
+    if (per.nonEmpty) math.round(per.min * 10000.0) / 10000.0 else 0.0
+  }
+
+  /** The matched-engine gate of one run: totals against the twins
+    * (`head`), per-query `ratios`, and the five flag lists. */
+  final case class Gate(head: Seq[(String, Any)], ratios: Seq[(String, Double)],
+      flags: Seq[(String, Iterable[Any])]) {
+    /** Full-line fields: the ratios and every flag entry. */
+    def full: Seq[(String, Any)] = head ++ Seq("ratios" -> ListMap(ratios: _*)) ++ capped(Int.MaxValue)
+    /** Compact-line fields: each flag list capped at [[FlagCap]]. */
+    def compact: Seq[(String, Any)] = head ++ capped(FlagCap)
+    private def capped(cap: Int) = flags.flatMap { case (n, es) => flagList(n, es, cap) }
+  }
+
+  /** The gate over per-query `totals` (construct + exec, in bench order)
+    * and the DuckDB twin seconds `duck`; None without twin timings.
+    * Materiality floor: a ratio enters the gate when the twin itself
+    * exceeds 0.2 s (below that it measures Spark's fixed per-query
+    * dispatch, BENCH_NOTES "per-query floor"), or when the ABSOLUTE gap
+    * spark−twin exceeds 1 s — a sub-floor twin must not hide a
+    * multi-second Spark regression (q03 at sf1 read 4.18 s against a
+    * 0.171 s twin for two rounds and never appeared in over2x);
+    * gap-admitted rows are listed in `gap_flagged` with their gap.
+    * Twin-classed rows that would flag go to `class_flagged`; the rest
+    * go to `over2x` unless their floor-adjusted ratio
+    * (construct + exec − stages×floor_wave)/twin is ≤ 2, which moves
+    * them to `floor_adjudicated` with their evidence. */
+  def gate(totals: Seq[(String, Double)], construct: collection.Map[String, Double],
+      exec: collection.Map[String, Double], stages: collection.Map[String, Long],
+      duck: Map[String, Double]): Option[Gate] = if (duck.isEmpty) None else {
+    val ratios = totals.collect { case (k, v) if duck.get(k).exists(_ > 0) => k -> r2(v / duck(k)) }
+    val totalOf = totals.toMap
+    def gap(k: String) = totalOf(k) - duck(k)
+    val (classed, candidates) = ratios
+      .filter { case (k, r) => r > 2.0 && (duck(k) > 0.2 || gap(k) > 1.0) }
+      .partition { case (k, _) => twinClasses.contains(k) }
+    val fw = floorWave(exec, stages)
+    val adjOf = candidates.map { case (k, r) =>
+      (k, r, r2(math.max(0.0, construct(k) + exec(k) - stages.getOrElse(k, 0L) * fw) / duck(k)))
+    }
+    val duckTotal = totals.flatMap { case (k, _) => duck.get(k) }.sum
+    // exec_ratio: plan quality alone — Spark execution time (construct,
+    // i.e. Catalyst analysis, excluded) vs the twin total.
+    def ofDuck(x: Double) = if (duckTotal > 0) r2(x / duckTotal) else -1.0
+    Some(Gate(
+      Seq("duck_total" -> duckTotal, "ratio_total" -> ofDuck(totals.map(_._2).sum),
+        "exec_ratio" -> ofDuck(exec.values.sum)),
+      ratios,
+      Seq(
+        "over2x" -> adjOf.collect { case (k, _, adj) if adj > 2.0 => k },
+        "gap_flagged" -> ListMap(candidates.collect { case (k, _) if duck(k) <= 0.2 => k -> r2(gap(k)) }: _*),
+        "class_flagged" -> ListMap(classed.map { case (k, r) =>
+          k -> ListMap("class" -> twinClasses(k), "raw" -> r, "gap" -> r2(gap(k))) }: _*),
+        "twin_class" -> ListMap(twinClasses.toSeq.filter { case (k, _) => ratios.exists(_._1 == k) }: _*),
+        "floor_adjudicated" -> ListMap(adjOf.collect { case (k, r, adj) if adj <= 2.0 =>
+          k -> ListMap("stages" -> stages.getOrElse(k, 0L), "raw" -> r, "adj" -> adj) }: _*))))
+  }
+
+  /** Per-query DuckDB seconds of a tools/duckbench.py artifact: its
+    * `queries` object (the per-rep `queries_all` arrays are not read),
+    * or the whole file when it is a flat {name: secs} map; empty when
+    * the file is missing or unreadable. */
+  def duckTimes(path: String): Map[String, Double] =
+    try {
+      val root = Json.mapper.readTree(new java.io.File(path))
+      Option(root.get("queries")).getOrElse(root).properties().asScala
+        .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap
+    } catch { case _: Exception => Map.empty }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitions pinned per scale factor (SURVEY 4.2): at the
-    // bench SFs every shuffle is a few MB, so fewer reducers cut task
-    // dispatch overhead; AQE coalescing handles the rest. Override with
-    // SPARK_GRAFT_SHUFFLE for larger SFs.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // BENCH-SF AQE floor — ONLY for the pinned-width default protocol
-    // (no SPARK_GRAFT_SHUFFLE set, i.e. the sf0.1 gate pair): there the
-    // testdata parquet is one row group per table, so every scan is one
-    // task and all width comes from exchanges — but at MB-scale shuffles
-    // AQE's default coalescing (1 MB min / parallelismFirst) collapses
-    // every post-exchange stage back to ONE task, serializing the
-    // compute the exchanges exist to spread (measured: jobs==stages==
-    // tasks across the battery). Lowering the coalesce floor restores
-    // intra-stage parallelism at bench SF. When the protocol sets an
-    // explicit width (the sf1/sf10 runs on multi-file fixtures), scans
-    // provide width and post-shuffle frames deserve PRODUCTION
-    // coalescing — keeping the tiny floor there measured +9 s on the
-    // sf1 battery (q31 1.24→0.63 s, q03 2.03→0.71 s at defaults, r16
-    // matched batteries). These values are SF-TUNED, not engine
-    // guidance — never copy them out of Bench.
-    val builder =
-      if (sys.env.contains("SPARK_GRAFT_SHUFFLE")) builder0
-      else builder0
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-    // extra session confs, semicolon-separated k=v (experiment knob, wins
-    // over the defaults above):
-    // SPARK_GRAFT_CONF="spark.sql.adaptive.coalescePartitions.minPartitionSize=1m;..."
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     // steady-state stage-wave counter (the floor-adjudication input):
     // reset before the LAST exec rep, read after a listener-bus drain
     val stageCount = new AtomicLong
@@ -285,107 +326,14 @@ object Bench {
         None
       }
     }
-    def jmap(m: scala.collection.Map[String, Double]) =
-      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val rs = rows.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val ss = stages.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val ea = execAll.map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => s"${Verify.jq(k)}:${Verify.jq(v)}" }
-      .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    // in-run per-wave dispatch floor: the cheapest observed stage wave —
-    // every query pays AT LEAST this much per stage at bench SF, so
-    // stages×floor_wave is a defensible lower bound on harness cost
-    val floorWave = {
-      val per = results.flatMap { case (k, _) =>
-        stages.get(k).filter(_ > 0).map(s => exec(k) / s) }
-      if (per.nonEmpty) math.round(per.min * 10000.0) / 10000.0 else 0.0
-    }
     // Matched-engine ratios: if a committed DuckDB timing artifact exists
     // for this SF (written by tools/duckbench.py --runs N on the same
     // tables), emit per-query spark/duckdb ratios and the >2x tail so
     // "no query >2x its twin" is a checkable gate in the artifact itself,
-    // not a narrative claim. Materiality floor: the DuckDB twin must
-    // itself exceed 0.2s — when the twin runs in ~10 ms, the ratio
-    // measures Spark's fixed ~0.2s/query dispatch cost (BENCH_NOTES
-    // "per-query floor", constant in data size), not the operator.
-    val duckPath = sys.env.getOrElse("SPARK_GRAFT_DUCK_TIMES",
-      s"tools/duck_times_${new java.io.File(sfDir).getName}.json")
-    val duckTimes: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(duckPath)), "UTF-8")
-        // flat {"name": secs, ...} artifact — trusted shape, regex parse;
-        // anchored to the "queries" object so the per-rep "queries_all"
-        // arrays a --runs>1 artifact carries can't shadow the minima
-        val obj = txt.indexOf("\"queries\"") match {
-          case -1 => txt
-          case i =>
-            val start = txt.indexOf('{', i)
-            txt.substring(start, txt.indexOf('}', start) + 1)
-        }
-        val re = """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r
-        re.findAllMatchIn(obj).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty }
-    val (ratioPart, ratioCompact) = if (duckTimes.isEmpty) ("", "") else {
-      val ratios = results.collect { case (k, v) if duckTimes.get(k).exists(_ > 0) =>
-        k -> math.round(v / duckTimes(k) * 100.0) / 100.0 }
-      val sparkTotalOf = results.toMap
-      // formal floor adjudication (see scaladoc): raw-over-2x queries
-      // whose floor-adjusted ratio clears the gate carry their evidence.
-      // Two admission routes close the materiality-floor blind spot:
-      // (a) the twin exceeds the 0.2 s floor (ratio is meaningful), OR
-      // (b) the ABSOLUTE gap spark−twin exceeds 1 s — a sub-floor twin
-      // must not hide a multi-second Spark regression (q03 at sf1 read
-      // 4.18 s against a 0.171 s twin for two rounds and never appeared
-      // in over2x). Gap-admitted rows are also listed in `gap_flagged`
-      // with their absolute gap so the new criterion is auditable.
-      val candidates = ratios.collect { case (k, r)
-        if r > 2.0 && !twinClasses.contains(k) &&
-          (duckTimes.getOrElse(k, 0.0) > 0.2 ||
-          sparkTotalOf.getOrElse(k, 0.0) - duckTimes.getOrElse(k, 0.0) > 1.0) => k -> r }
-      val gapFlagged = ratios.collect { case (k, r)
-        if r > 2.0 && !twinClasses.contains(k) &&
-          duckTimes.getOrElse(k, 0.0) <= 0.2 &&
-          sparkTotalOf.getOrElse(k, 0.0) - duckTimes.getOrElse(k, 0.0) > 1.0 =>
-        s"${Verify.jq(k)}:${math.round((sparkTotalOf(k) - duckTimes(k)) * 100.0) / 100.0}" }
-      // class-disclosed rows that would otherwise have flagged: same
-      // admission rules, routed to their own channel with the class
-      val classFlagged = ratios.collect { case (k, r)
-        if r > 2.0 && twinClasses.contains(k) &&
-          (duckTimes.getOrElse(k, 0.0) > 0.2 ||
-          sparkTotalOf.getOrElse(k, 0.0) - duckTimes.getOrElse(k, 0.0) > 1.0) =>
-        val gap = math.round((sparkTotalOf(k) - duckTimes(k)) * 100.0) / 100.0
-        s"${Verify.jq(k)}:{\"class\":${Verify.jq(twinClasses(k))},\"raw\":$r,\"gap\":$gap}" }
-      val adjOf = candidates.map { case (k, r) =>
-        val adj = math.round(math.max(0.0,
-          construct(k) + exec(k) - stages.getOrElse(k, 0L) * floorWave) /
-          duckTimes(k) * 100.0) / 100.0
-        (k, r, adj)
-      }
-      val over2x = adjOf.collect { case (k, _, adj) if adj > 2.0 => k }
-      val floorAdj = adjOf.collect { case (k, r, adj) if adj <= 2.0 =>
-        s"${Verify.jq(k)}:{\"stages\":${stages.getOrElse(k, 0L)},\"raw\":$r,\"adj\":$adj}" }
-      val duckTotal = results.flatMap { case (k, _) => duckTimes.get(k) }.sum
-      // exec_ratio: plan quality alone — Spark execution time (construct
-      // = driver-side Catalyst analysis excluded) vs the twin total.
-      val execRatio = if (duckTotal > 0)
-        math.round(exec.values.sum / duckTotal * 100.0) / 100.0 else -1
-      val classPart = twinClasses.collect { case (k, c) if ratios.toMap.contains(k) =>
-        s"${Verify.jq(k)}:${Verify.jq(c)}" }
-      def flags(cap: Int) = Seq(flagList("over2x", over2x.map(Verify.jq), cap),
-        flagList("gap_flagged", gapFlagged, cap, "{}"),
-        flagList("class_flagged", classFlagged, cap, "{}"),
-        flagList("twin_class", classPart, cap, "{}"),
-        flagList("floor_adjudicated", floorAdj, cap, "{}")).mkString(",")
-      val head = s""","duck_total":$duckTotal,"ratio_total":${if (duckTotal > 0) math.round(total / duckTotal * 100.0) / 100.0 else -1},"exec_ratio":$execRatio"""
-      (s"""$head,"ratios":${jmap(ratios.toMap)},${flags(Int.MaxValue)}""", s"$head,${flags(FlagCap)}")
-    }
+    // not a narrative claim.
+    val gated = gate(results, construct, exec, stages, duckTimes(sys.env.getOrElse(
+      "SPARK_GRAFT_DUCK_TIMES", s"tools/duck_times_${new java.io.File(sfDir).getName}.json")))
     // floor_est: the per-query harness constant the battery pays n times —
     // calibrated IN-RUN as the minimum warm exec across queries (the
     // lightest query's noop-sink job dispatch + single-task scan, which
@@ -396,10 +344,19 @@ object Bench {
     val floorEst = if (exec.nonEmpty)
       math.round(exec.values.min * exec.size * 100.0) / 100.0 else 0.0
     val trainTotal = math.round(train.values.sum * 1000.0) / 1000.0
-    val totalWithTrain = math.round((total + trainTotal) * 1000.0) / 1000.0
     val warmupTotal = math.round(warmup.values.sum * 1000.0) / 1000.0
-    val totalWithWarmup = math.round((total + warmupTotal) * 1000.0) / 1000.0
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","construct_total":${construct.values.sum},"exec_total":${exec.values.sum},"train_total":$trainTotal,"value_with_train":$totalWithTrain,"warmup_total":$warmupTotal,"value_with_warmup":$totalWithWarmup,"exec_reps":$execReps,"floor_est":$floorEst,"floor_wave":$floorWave,${flagList("cache_reset", cacheReset.map(Verify.jq), Int.MaxValue)},"queries":$qs,"construct":${jmap(construct)},"exec":${jmap(exec)},"exec_all":$ea,"warmup":${jmap(warmup)},"stages":$ss,"train":${jmap(train)},"rows":$rs,"errors":$errs$ratioPart,"sf":"$sfDir"}"""
+    val summary = Seq("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "construct_total" -> construct.values.sum, "exec_total" -> exec.values.sum,
+      "train_total" -> trainTotal,
+      "value_with_train" -> math.round((total + trainTotal) * 1000.0) / 1000.0,
+      "warmup_total" -> warmupTotal,
+      "value_with_warmup" -> math.round((total + warmupTotal) * 1000.0) / 1000.0,
+      "exec_reps" -> execReps, "floor_est" -> floorEst, "floor_wave" -> floorWave(exec, stages))
+    val line = Json.write(ListMap(summary ++ flagList("cache_reset", cacheReset, Int.MaxValue) ++
+      Seq("queries" -> ListMap(results: _*), "construct" -> construct, "exec" -> exec,
+        "exec_all" -> execAll, "warmup" -> warmup, "stages" -> stages, "train" -> train,
+        "rows" -> rows, "errors" -> errors) ++
+      gated.toSeq.flatMap(_.full) :+ ("sf" -> sfDir): _*))
     println(line)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
     try java.nio.file.Files.write(
@@ -414,8 +371,10 @@ object Bench {
     // the tail of the full line survived; this line is the parseable
     // record. Each flag list is capped at its first FlagCap entries plus
     // a `<name>_n` count, so an unhealthy run cannot overflow the tail.
-    val compactLine = s"""{"metric":"total","value":$total,"unit":"sec","construct_total":${construct.values.sum},"exec_total":${exec.values.sum},"train_total":$trainTotal,"value_with_train":$totalWithTrain,"warmup_total":$warmupTotal,"value_with_warmup":$totalWithWarmup,"exec_reps":$execReps,"floor_est":$floorEst,"floor_wave":$floorWave,"n_queries":${results.size},"n_errors":${errors.size},${flagList("cache_reset", cacheReset.map(Verify.jq), FlagCap)}$ratioCompact,"sf":"$sfDir","compact":true,"full":${Verify.jq(outPath)}}"""
-    println(compactLine)
+    println(Json.write(ListMap(summary ++
+      Seq("n_queries" -> results.size, "n_errors" -> errors.size) ++
+      flagList("cache_reset", cacheReset, FlagCap) ++ gated.toSeq.flatMap(_.compact) ++
+      Seq("sf" -> sfDir, "compact" -> true, "full" -> outPath): _*)))
     spark.stop()
   }
 }

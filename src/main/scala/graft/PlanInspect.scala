@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 
-/** Plan-introspection helpers shared by the ExecPlan dev tool and the
+/** Plan-introspection helpers shared by `Dev exec-plan` and the
   * PlanGuardSpec regression gates. AQE hides the final plan behind
   * `AdaptiveSparkPlanExec` / `QueryStageExec` wrappers whose `children`
   * are empty, so a plain `TreeNode.collect` never descends into

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExprs.cosineFast
 
@@ -84,13 +86,7 @@ object ScaleCheck {
     val outDir = args(1)
     val outJson = args(2)
     val sampleN = if (args.length > 3) args(3).toInt else 300
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val results = scala.collection.mutable.LinkedHashMap[String, (Boolean, String)]()
 
     // ---- e06: in-bucket exactness on a seeded sample + recall floor ----
@@ -372,11 +368,8 @@ object ScaleCheck {
         s"groups dumped=$nd bases=$ne matched=$nMatch distinct_bases=$distinctBases")
     }
 
-    val json = results.map { case (k, (ok, detail)) =>
-      s"""  "$k": {"pass": $ok, "detail": "${detail.replace("\"", "'")}"}"""
-    }.mkString("{\n", ",\n", "\n}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson), Json.write(
+      results.map { case (k, (ok, detail)) => k -> ListMap("pass" -> ok, "detail" -> detail) }))
     results.foreach { case (k, (ok, detail)) =>
       println(s"${if (ok) "PASS" else "FAIL"} $k — $detail")
     }

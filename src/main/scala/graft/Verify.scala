@@ -9,19 +9,6 @@ import java.nio.file.{Files, Paths}
   * crashes must fail the gate loudly, not vanish from the report.
   */
 object Verify {
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  def jq(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -32,14 +19,7 @@ object Verify {
     // when only the DuckDB side needs timing).
     val sqlOnly = args.contains("--sql-only")
     val only = args.drop(2).toSet - "--sql-only"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // wipe stale per-query outputs: a query that fails THIS run must not
     // leave a previous run's parquet behind to be compared as if current
     val outRoot = new java.io.File(outDir)
@@ -65,13 +45,9 @@ object Verify {
         System.err.println(s"[verify] FAILED $name: $msg")
       }
     }
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${jq(k)}: ${jq(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.write(SparkEntry.oracleSql.filter { case (k, _) => only.isEmpty || only(k) }))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), Json.write(errors))
     spark.stop()
     if (errors.nonEmpty)
       // Loud but non-fatal: the driver must still oracle-compare the

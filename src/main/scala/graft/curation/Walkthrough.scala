@@ -1,8 +1,5 @@
 package graft.curation
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** The user-facing front door of the curation library: ONE end-to-end
   * configuration that exercises every pipeline stage on the standard
   * `documents` table, documented line-by-line in WALKTHROUGH.md and
@@ -63,14 +60,7 @@ object WalkthroughMain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/curation-demo"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val t0 = System.nanoTime()
     val counts = CurationPipeline.run(spark, docs, outDir,

@@ -95,11 +95,6 @@ object ColFns {
       .cast("long")
   }
 
-  /** Number of occurrences of `pat` (plain string, no regex) in `text`,
-    * via length arithmetic — portable across engines. */
-  def countSubstr(text: Column, pat: String): Column =
-    ((length(text) - length(regexp_replace(text, java.util.regex.Pattern.quote(pat), ""))) / lit(pat.length)).cast("long")
-
   /** Distinct whitespace tokens of a text column. Order is unspecified —
     * only use order-insensitive consumers (sizes, mins, sums). */
   def tokenSet(text: Column): Column = array_distinct(split(normWs(text), " "))

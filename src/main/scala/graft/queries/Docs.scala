@@ -31,9 +31,6 @@ object Docs {
         concat_ws(" ", element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2))))
       .otherwise(array().cast("array<string>"))
 
-  /** Modulus for the Carter-Wegman hash families (prime, > 2^29). */
-  private val MhP = 1000000007L
-
   /** The signature definition: ONE md5 per shingle, split into two
     * 32-bit halves (h1, h2); family i is (h1 + i·h2) mod p — 8 families
     * for one digest instead of 8 digests per shingle (standard
