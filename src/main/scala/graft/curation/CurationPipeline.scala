@@ -56,9 +56,7 @@ import graft.queries.Docs
   * per-row maps for the gates, one window exchange for exact dedup, a
   * broadcast anti-join for decontamination, star edges + pointer
   * jumping for clustering. The md5 Carter–Wegman signature keeps
-  * cross-engine verifiability; swap in
-  * [[graft.queries.Docs.minhashSignaturesFast]] for the ~2× xxhash64
-  * production path when no DuckDB oracle is needed.
+  * cross-engine verifiability.
   */
 object CurationPipeline {
 
@@ -283,7 +281,7 @@ object CurationPipeline {
 
     val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     def complete(name: String): Boolean =
-      cfg.resume && new java.io.File(s"$outDir/$name/_SUCCESS").exists()
+      cfg.resume && graft.Fs.exists(spark, s"$outDir/$name/_SUCCESS")
     // by-name df: a resumed stage must not even construct its plan (its
     // inputs may reference upstream frames we deliberately never built)
     def stage(name: String, df: => DataFrame): DataFrame = {
@@ -470,14 +468,9 @@ object CurationPipeline {
 
     // stage 4: near-dup dedup, survivors written as the curated corpus
     if (!complete("04_corpus")) {
-      val sig = clean
-        .withColumn("sh", Docs.shingles(col("ws")))
-        .withColumn("mh", graft.functions.MinHashExprs.minHashSig(col("sh")))
-        .select(col("doc_id") +:
-          (0 until 8).map(i => element_at(col("mh"), i + 1).as(s"mh$i")): _*)
-      val (nBands, rowsPerBand) = Docs.lshBandingOf(cfg.lshBanding)
-      val comps = graft.operators.ConnectedComponents.components(
-        Docs.lshStarEdges(sig, nBands, rowsPerBand), dedupeEdges = false)
+      val comps = Docs.nearDupClusters(clean.select(col("doc_id"),
+        graft.functions.MinHashExprs.minHashSig(Docs.shingles(col("ws"))).as("mh")),
+        cfg.lshBanding)
       val survivors =
         if (cfg.keeperBySource) {
           // d43's provenance-priority rule: the cluster's
@@ -487,10 +480,7 @@ object CurationPipeline {
             .select(col("k.doc_id").as("doc_id"))
           clean.join(keeperIds, Seq("doc_id"), "left_semi")
             .drop("ws", "n_tokens")
-        } else clean
-          .join(comps, clean("doc_id") === comps("id"), "left")
-          .filter(col("rep").isNull || col("rep") === col("doc_id"))
-          .drop("id", "rep", "ws", "n_tokens")
+        } else Docs.clusterMinKeepers(clean, comps).drop("ws", "n_tokens")
       graft.sources.CorpusSink.write(survivors, s"$outDir/04_corpus",
         partitionCol = cfg.partitionCol, maxRecordsPerFile = cfg.maxRecordsPerFile)
     }

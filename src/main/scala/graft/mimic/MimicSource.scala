@@ -19,13 +19,10 @@ final case class MimicSource(spark: SparkSession, root: String) {
 
   private def path(rel: String) = s"$root/$rel"
 
-  /** Existence via Hadoop's FileSystem, not java.io.File — the root may
-    * be HDFS/S3 at deployment scale, where driver-local checks are
-    * always false (would silently re-read non-splittable csv.gz). */
-  private def exists(p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
+  /** Existence via [[graft.Fs]] — the root may be HDFS/S3 at deployment
+    * scale, where a driver-local check would silently re-read
+    * non-splittable csv.gz. */
+  private def exists(p: String): Boolean = graft.Fs.exists(spark, p)
 
   /** Parquet dir if present (ingested), else the reference's csv.gz. */
   def table(rel: String, schema: StructType, sep: String = ","): DataFrame = {

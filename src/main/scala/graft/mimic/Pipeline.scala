@@ -101,9 +101,7 @@ final case class Pipeline(
   def featureSelection(feats: Map[String, DataFrame]): Map[String, DataFrame] =
     feats.map { case (k, df) =>
       val p = s"$outDir/summary/${k}_features"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(hp))
+      if (graft.Fs.exists(spark, p))
         k -> write(Features.select(df, spark.read.parquet(p), codeCol(k)),
           s"features/v3/$k")
       else k -> df

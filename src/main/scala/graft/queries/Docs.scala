@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import graft.functions.ColFns._
+import graft.functions.MinHashExprs.minHashSig
 import graft.queries.Registry.t
 
 /** Text-analysis + deduplication battery over the `documents` table —
@@ -30,56 +31,6 @@ object Docs {
       transform(sequence(lit(1), size(ws) - 2), i =>
         concat_ws(" ", element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2))))
       .otherwise(array().cast("array<string>"))
-
-  /** The signature definition: ONE md5 per shingle, split into two
-    * 32-bit halves (h1, h2); family i is (h1 + i·h2) mod p — 8 families
-    * for one digest instead of 8 digests per shingle (standard
-    * Carter–Wegman / Broder minwise-family construction). The md5 and
-    * the hex→int split are identical in DuckDB, so the oracle (dHh /
-    * dMinhash below) computes the same signatures.
-    *
-    * Computed by the codegen'd [[graft.functions.MinHashSig]]
-    * expression: all 8 family minima in one pass over the array, no hex
-    * string round-trip, no interpreted higher-order-function lambdas
-    * (measured d06 1.36 s → 0.25 s at sf0.1 across the two steps).
-    *
-    * PERF (historical, still load-bearing for the remaining HOFs in
-    * this file): a free-variable expression tree inside a
-    * higher-order-function lambda is re-evaluated PER ELEMENT, which
-    * turned whole-document tokenization quadratic (199 s at sf0.1;
-    * 1.3 s once bound to a real column). See `withShingles`.
-    */
-  private def minhash(mh: Column, i: Int): Column =
-    element_at(mh, i + 1)
-
-  /** PRODUCTION minhash family i: xxhash64 seeded by the family index —
-    * measured 2.3× faster than the md5 families (BENCH_NOTES), kept OUT
-    * of the gate queries only because DuckDB has no xxhash64 twin to
-    * oracle against. The gate pipeline (d06/d07/d12) stays on md5 for
-    * cross-engine verifiability; a deployment that doesn't need a DuckDB
-    * oracle should prefer this path — same banding, bucketing, star-edge
-    * and clustering machinery downstream, verified hash-agnostically in
-    * MinHashFastSpec.
-    */
-  private def minhashFast(arr: Column, i: Int): Column =
-    array_min(transform(arr, x => xxhash64(lit(i), x)))
-
-  /** xxhash64-family signature table (doc_id, mh0..mh{k-1}: long). */
-  def minhashSignaturesFast(s: org.apache.spark.sql.SparkSession,
-      dir: String, k: Int = 8): org.apache.spark.sql.DataFrame =
-    withShingles(s, dir).select(
-      col("doc_id") +: (0 until k).map(i => minhashFast(col("sh"), i).as(s"mh$i")): _*)
-
-  /** Full production dedup clustering on the fast families: signatures →
-    * star edges → connected components → (doc_id, cluster_rep). */
-  def dedupClustersFast(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val sig = minhashSignaturesFast(s, dir)
-    val comps = graft.operators.ConnectedComponents.components(lshStarEdges(sig), dedupeEdges = false)
-    t(s, dir, "documents").select(col("doc_id"))
-      .join(comps, col("doc_id") === col("id"), "left")
-      .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("cluster_rep"))
-  }
 
   /** Seeded hash-Bernoulli rate sample (d23's shape): keep a doc iff
     * md5(seed‖doc_id) is below `thresholdHex` — lowercase-hex string
@@ -518,10 +469,7 @@ object Docs {
       .join(contamIds, Seq("doc_id"), "left_anti")
     // signature pass: each survivor reduced to its MinHash signature +
     // token count — the dedup INDEX, 10 longs per row
-    clean
-      .withColumn("sh", shingles(col("ws")))
-      .select(col("doc_id"), col("n_tokens"),
-        graft.functions.MinHashExprs.minHashSig(col("sh")).as("mh"))
+    clean.select(col("doc_id"), col("n_tokens"), minHashSig(shingles(col("ws"))).as("mh"))
   }
 
   /** d13 end-to-end (see [[corpusCleanSigDf]] for stages 1-3): the
@@ -536,14 +484,7 @@ object Docs {
     * fingerprint volume, not the corpus volume. */
   private[graft] def corpusCleanDf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val idx = corpusCleanSigDf(docs).localCheckpoint()
-    val sig = idx.select(
-      col("doc_id") +: (0 until 8).map(i => minhash(col("mh"), i).as(s"mh$i")): _*)
-    val comps = graft.operators.ConnectedComponents.components(
-      lshStarEdges(sig), dedupeEdges = false)
-    idx.select(col("doc_id"), col("n_tokens"))
-      .join(comps, col("doc_id") === col("id"), "left")
-      .filter(col("rep").isNull || col("rep") === col("doc_id"))
-      .select(col("doc_id"), col("n_tokens"))
+    clusterMinKeepers(idx.select(col("doc_id"), col("n_tokens")), nearDupClusters(idx))
   }
 
   /** DataFrame-in body of d35: the distributed primitive of BPE
@@ -931,15 +872,20 @@ object Docs {
     * on BOUND columns — the band-free special case of LSH: signature
     * equality ⇒ very-high-Jaccard near-duplicate. Shingle-less docs
     * (<3 tokens, null text) get a NULL signature so they can never
-    * collide. Shared by the batch reference-compile and the streaming
-    * cross-corpus filter so both sides hash identically. */
+    * collide. Shared by the batch reference-compile, the streaming
+    * filters and the d43 keeper snapshot so every side hashes
+    * identically. */
   private[graft] def sigStr(textCol: Column): Column = {
     // two nested aliased layers cannot be expressed inside one Column,
     // so callers bind ws first; here the input is the bound ws column
     val sh = shingles(textCol)
-    when(size(sh) >= 1,
-      concat_ws(":", graft.functions.MinHashExprs.minHashSig(sh).cast("array<string>")))
+    sigStr(sh, minHashSig(sh))
   }
+
+  /** [[sigStr]] over an already-bound shingle array `sh` and its
+    * signature `mh`, for callers that also use the signature itself. */
+  private[graft] def sigStr(sh: Column, mh: Column): Column =
+    when(size(sh) >= 1, concat_ws(":", mh.cast("array<string>")))
 
   /** Compile a REFERENCE corpus (the held-out/eval snapshot) into a
     * Bloom filter over its full MinHash signature strings, for
@@ -1152,16 +1098,11 @@ object Docs {
       .repartition(col("doc_id"))
       .withColumn("__ws", words(col("text")))
       .withColumn("__sh", shingles(col("__ws")))
-      .withColumn("__mh", graft.functions.MinHashExprs.minHashSig(col("__sh")))
-    val sig8 = sigd.select(
-      col("doc_id") +: (0 until 8).map(i => element_at(col("__mh"), i + 1).as(s"mh$i")): _*)
-    val comps = graft.operators.ConnectedComponents
-      .components(lshStarEdges(sig8), dedupeEdges = false)
+      .withColumn("__mh", minHashSig(col("__sh")))
+    val comps = nearDupClusters(sigd.select(col("doc_id"), col("__mh").as("mh")))
     val cl = clusteredBySource(docs.select(col("doc_id"), col("source")), comps)
     val keepers = sourceKeepers(cl).select(col("cluster"), col("k.source").as("__ksrc"))
-    val sigs = sigd.select(col("doc_id"),
-      when(size(col("__sh")) >= 1,
-        concat_ws(":", col("__mh").cast("array<string>"))).as("sig"))
+    val sigs = sigd.select(col("doc_id"), sigStr(col("__sh"), col("__mh")).as("sig"))
     val memberSigs = cl.join(keepers, Seq("cluster"))
       .join(sigs, Seq("doc_id"))
       .filter(col("sig").isNotNull)
@@ -1266,37 +1207,15 @@ object Docs {
     * target doc. Scale shape: the reference corpus is an eval suite
     * (tiny vs 100 TB), so the cross restriction prunes bucket pair
     * generation to |bucket∩ref|·|bucket∩tgt| — the decontamination
-    * regime, far below the in-corpus pair count.
-    *
-    * Verification joins, the d20 shape: join 1 shuffle-hashes BUILDING
-    * on the NARROW pair rows (no broadcast — the post-agg pair estimate
-    * is garbage-small and pairs grow with the corpus; no sort of the
-    * corpus-sized wide shingle arrays); join 2 stays MERGE because its
-    * smaller side carries a full shingle set per pair row and a
-    * ShuffledHashJoin build is NOT spillable (d20's sf10 2 GiB
-    * hash-relation failure), while merge sorts spill. */
+    * regime, far below the in-corpus pair count. */
   private[graft] def crossNeardupContaminatedIds(
       docs: org.apache.spark.sql.DataFrame,
       isRef: Column => Column): org.apache.spark.sql.DataFrame = {
-    // bound-column shingle sets (the withShingles shape; see d20)
-    val sets = docs
-      .filter(col("doc_id").isNotNull)
-      .repartition(col("doc_id"))
-      .select(col("doc_id"), words(col("text")).as("ws"))
-      .select(col("doc_id"), array_distinct(shingles(col("ws"))).as("ss"))
-    val sig = sets
-      .withColumn("mh", graft.functions.MinHashExprs.minHashSig(col("ss")))
-      .select(col("doc_id") +: (0 until 8).map(i => minhash(col("mh"), i).as(s"mh$i")): _*)
-    val pairs = lshCandidatePairs(sig)
+    val sets = shingleSets(docs)
+    val pairs = lshCandidatePairs(setSignatures(sets))
       .filter(isRef(col("doc_id_a")) =!= isRef(col("doc_id_b")))
-    val inter = size(array_intersect(col("sa"), col("sb"))).cast("double")
-    val uni = (size(col("sa")) + size(col("sb"))).cast("double") - inter
-    pairs.hint("shuffle_hash")
-      .join(sets.select(col("doc_id").as("doc_id_a"), col("ss").as("sa")),
-        Seq("doc_id_a"))
-      .join(sets.select(col("doc_id").as("doc_id_b"), col("ss").as("sb")).hint("merge"),
-        Seq("doc_id_b"))
-      .filter(inter / uni >= 0.5)
+    verifyJoin(pairs, sets)
+      .filter(pairJaccard >= 0.5)
       .select(when(isRef(col("doc_id_a")), col("doc_id_b"))
         .otherwise(col("doc_id_a")).as("doc_id"))
       .distinct()
@@ -1308,22 +1227,120 @@ object Docs {
     * DuckDB oracle cannot reach. */
   private[graft] def d12Edges(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    lshStarEdges(withShingles(s, dir).select(
-      col("doc_id") +: (0 until 8).map(i => minhash(col("mh"), i).as(s"mh$i")): _*))
+    lshStarEdges(withShingles(s, dir))
 
-  /** Documents with tokenization + 3-gram shingles materialized as bound
-    * columns (see PERF note on `minhash`), spread across the default
-    * shuffle parallelism — the testdata parquet is a single row-group, so
-    * without a repartition every downstream map runs on one core. At
-    * cluster scale the same repartition co-locates by doc_id, which the
-    * groupBy/band shuffle reuses.
+  /** Documents with tokenization, 3-gram shingles and their MinHash
+    * signature `mh` materialized as bound columns, spread across the
+    * default shuffle parallelism — the testdata parquet is a single
+    * row-group, so without a repartition every downstream map runs on
+    * one core. At cluster scale the same repartition co-locates by
+    * doc_id, which the groupBy/band shuffle reuses.
+    *
+    * The signature definition: ONE md5 per shingle, split into two
+    * 32-bit halves (h1, h2); family i is (h1 + i·h2) mod p — 8 families
+    * for one digest instead of 8 digests per shingle (standard
+    * Carter–Wegman / Broder minwise-family construction). The md5 and
+    * the hex→int split are identical in DuckDB, so the oracle (dHh /
+    * dMinhash below) computes the same signatures. Computed by the
+    * codegen'd [[graft.functions.MinHashSig]] expression: all 8 family
+    * minima in one pass over the array, no hex string round-trip, no
+    * interpreted higher-order-function lambdas (measured d06 1.36 s →
+    * 0.25 s at sf0.1 across the two steps).
+    *
+    * PERF (historical, still load-bearing for the remaining HOFs in
+    * this file): a free-variable expression tree inside a
+    * higher-order-function lambda is re-evaluated PER ELEMENT, which
+    * turned whole-document tokenization quadratic (199 s at sf0.1;
+    * 1.3 s once bound to a real column).
     */
   private def withShingles(s: org.apache.spark.sql.SparkSession, dir: String) =
     t(s, dir, "documents")
       .repartition(col("doc_id"))
       .withColumn("ws", words(col("text")))
       .withColumn("sh", shingles(col("ws")))
-      .withColumn("mh", graft.functions.MinHashExprs.minHashSig(col("sh")))
+      .withColumn("mh", minHashSig(col("sh")))
+
+  /** (doc_id, ss): each doc's DISTINCT shingle set on BOUND columns —
+    * two aliased projections (`ws` then `ss`) over ONE
+    * repartition(doc_id) spread, the shape shared by d20, d29, d42, d45
+    * and the NearDup decontamination engine. CollapseProject refuses to
+    * inline a multiply-referenced alias, so `words` tokenizes each doc
+    * exactly ONCE and the HOF lambdas inside `shingles` see a bound
+    * attribute, not a free expression. (The r9 inline composition
+    * shingles(words(text)) re-tokenized the doc inside every element_at
+    * — O(tokens²)/doc — and the intended "shared set stage" never
+    * materialized: the projection floated above the exchange, which
+    * shipped raw text, so the quadratic pass ran in all THREE consumer
+    * subtrees. Matched-pair 2.4→29 s. BENCH_NOTES documents both traps;
+    * PlanGuardSpec now enforces them.) The linear-per-doc shingle
+    * compute runs once per consumer subtree off the reused text
+    * exchange — deliberately NOT shared as a computed exchange, which
+    * would ship corpus-sized shingle arrays (several × the raw text)
+    * through a second wide-row shuffle. */
+  private[graft] def shingleSets(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    docs
+      .filter(col("doc_id").isNotNull)
+      .repartition(col("doc_id"))
+      .select(col("doc_id"), words(col("text")).as("ws"))
+      .select(col("doc_id"), array_distinct(shingles(col("ws"))).as("ss"))
+
+  /** (doc_id, mh) signatures of [[shingleSets]]: every minhash family
+    * value is a MIN over the shingles, so array_distinct cannot change
+    * it — bit-identical to the multiset signature the oracle computes. */
+  private def setSignatures(
+      sets: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    sets.select(col("doc_id"), minHashSig(col("ss")).as("mh"))
+
+  /** Candidate pairs (doc_id_a, doc_id_b, ...) joined to both docs'
+    * shingle sets as `sa`/`sb` — the verification joins of d20, d29,
+    * d42 and d45. NEVER broadcast: the pair side GROWS with the corpus
+    * and its static size estimate (post agg + double explode) is
+    * garbage-small, so the unhinted planner broadcast it: fine at sf0.1
+    * (35 pairs), a driver OOM at sf10 (31.5 M pairs, found by the r7
+    * full-battery sf10 gate). Join 1 shuffle-hashes BUILDING on the
+    * NARROW pair rows (16 B/row — hashing them beats sorting the
+    * corpus-sized wide shingle arrays). Join 2 must stay MERGE: its
+    * smaller side is the join-1 output (pairs + a full shingle set per
+    * row), and a ShuffledHashJoin build is NOT spillable — building
+    * that side at sf10 dies with "Can't acquire 2 GiB to build hash
+    * relation", while merge sorts spill. Plan-guarded: one SHJ, one
+    * SMJ, zero broadcasts. */
+  private def verifyJoin(pairs: org.apache.spark.sql.DataFrame,
+      sets: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    pairs.hint("shuffle_hash")
+      .join(sets.select(col("doc_id").as("doc_id_a"), col("ss").as("sa")),
+        Seq("doc_id_a"))
+      .join(sets.select(col("doc_id").as("doc_id_b"), col("ss").as("sb")).hint("merge"),
+        Seq("doc_id_b"))
+
+  /** |sa ∩ sb| of a [[verifyJoin]] row. */
+  private def pairInter: Column = size(array_intersect(col("sa"), col("sb"))).cast("double")
+
+  /** Exact shingle-set Jaccard of a [[verifyJoin]] row. */
+  private def pairJaccard: Column =
+    pairInter / ((size(col("sa")) + size(col("sb"))).cast("double") - pairInter)
+
+  /** Near-dup clusters of a signature frame (doc_id, mh, ...): star
+    * edges under the d42 `banding` label, then connected components —
+    * (id, rep) for every doc in a multi-member cluster; singletons have
+    * no row. The one clustering body of d12, d13, d43, the d43 keeper
+    * snapshot and the curation `04_corpus` stage. */
+  private[graft] def nearDupClusters(sig: org.apache.spark.sql.DataFrame,
+      banding: String = "b4r2"): org.apache.spark.sql.DataFrame = {
+    val (nBands, rowsPerBand) = lshBandingOf(banding)
+    graft.operators.ConnectedComponents.components(
+      lshStarEdges(sig, nBands, rowsPerBand), dedupeEdges = false)
+  }
+
+  /** The min-doc_id keeper rule over [[nearDupClusters]] output: keep a
+    * doc iff it is its cluster's rep or in no cluster. Shared by d13
+    * and the curation `04_corpus` stage. */
+  private[graft] def clusterMinKeepers(docs: org.apache.spark.sql.DataFrame,
+      comps: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    docs.join(comps, docs("doc_id") === comps("id"), "left")
+      .filter(col("rep").isNull || col("rep") === docs("doc_id"))
+      .drop("id", "rep")
 
   /** Docs tagged with their near-dup cluster id: left-join the CC
     * labels ((id, rep) from [[graft.operators.ConnectedComponents]]),
@@ -1351,19 +1368,8 @@ object Docs {
 
   private val hexHigh = Seq("8", "9", "a", "b", "c", "d", "e", "f")
 
-  /** LSH band→bucket core shared by d07/d12: explode each signature into
-    * `nBands` band keys (2 hash rows per band), shuffle once on the band
-    * key, and collect each bucket's sorted member set.
-    *
-    * Docs with no shingles (<3 tokens, or null text) have NULL minhashes
-    * → NULL band keys. groupBy treats NULLs as EQUAL — without the
-    * isNotNull filter every shingle-less doc lands in one giant bucket
-    * and generates spurious pairs (the SQL oracle's equi-join drops NULL
-    * keys, so this also diverges cross-engine). Found by edge-case
-    * battery, kept as a guard.
-    */
   /** Band-key expression for band `b` of an (nBands × rowsPerBand)
-    * banding over the mh0..mh7 signature columns: the band index plus
+    * banding over the 8-value `mh` signature array: the band index plus
     * its `rowsPerBand` minhash values, ':'-delimited. The delimiter is
     * load-bearing: minhashes are variable-width decimal longs, so bare
     * concatenation aliases distinct tuples — (1,23) and (12,3) both
@@ -1373,7 +1379,7 @@ object Docs {
     * from the report keys buckets identically in deployment. */
   private[graft] def bandKeyExpr(b: Int, rowsPerBand: Int): Column =
     concat((lit(s"$b:") +: (0 until rowsPerBand).flatMap(k =>
-      Seq(lit(":"), col(s"mh${b * rowsPerBand + k}"))).drop(1)): _*)
+      Seq(lit(":"), element_at(col("mh"), b * rowsPerBand + k + 1))).drop(1)): _*)
 
   /** Parse a d42 grid label ("b8r1" / "b4r2" / "b2r4") to
     * (nBands, rowsPerBand) — the deployment-facing banding parameter
@@ -1387,7 +1393,15 @@ object Docs {
           lshTuningConfigs.map(_._1).mkString(", "))
     }
 
-  /** (doc_id, band_key) rows — one per doc per band. */
+  /** (doc_id, band_key) rows — one per doc per band — of a signature
+    * frame (doc_id, mh, ...).
+    *
+    * Docs with no shingles (<3 tokens, or null text) have NULL minhashes
+    * → NULL band keys. groupBy treats NULLs as EQUAL — without the
+    * isNotNull filter every shingle-less doc lands in one giant bucket
+    * and generates spurious pairs (the SQL oracle's equi-join drops NULL
+    * keys, so this also diverges cross-engine). Found by edge-case
+    * battery, kept as a guard. */
   private def lshBanded(sig: org.apache.spark.sql.DataFrame,
       nBands: Int, rowsPerBand: Int = 2): org.apache.spark.sql.DataFrame =
     sig.select(col("doc_id"), explode(array(
@@ -1406,10 +1420,16 @@ object Docs {
   private[graft] def lshBuckets(sig: org.apache.spark.sql.DataFrame,
       nBands: Int = 4, maxBucket: Int = 2048,
       rowsPerBand: Int = 2): org.apache.spark.sql.DataFrame =
-    lshBanded(sig, nBands, rowsPerBand)
-      .groupBy(col("band_key"))
+    cappedBuckets(lshBanded(sig, nBands, rowsPerBand), Nil, maxBucket)
+
+  /** [[lshBuckets]] over a banded frame (keys..., band_key, doc_id):
+    * (keys..., band_key, ids, n) per multi-member bucket. */
+  private def cappedBuckets(banded: org.apache.spark.sql.DataFrame,
+      keys: Seq[Column], maxBucket: Int): org.apache.spark.sql.DataFrame =
+    banded
+      .groupBy(keys :+ col("band_key"): _*)
       .agg(graft.functions.SmallestKAgg.smallestK(maxBucket)(col("doc_id")).as("b"))
-      .select(col("band_key"), col("b.ids").as("ids"), col("b.n").as("n"))
+      .select(keys ++ Seq(col("band_key"), col("b.ids").as("ids"), col("b.n").as("n")): _*)
       .filter(col("n") > 1)
 
   /** All candidate pairs (a < b) within each bucket, with a hard cap on
@@ -1427,28 +1447,32 @@ object Docs {
     */
   private[graft] def lshCandidatePairs(sig: org.apache.spark.sql.DataFrame,
       nBands: Int = 4, maxBucket: Int = 2048,
-      rowsPerBand: Int = 2): org.apache.spark.sql.DataFrame = {
-    val buckets = lshBuckets(sig, nBands, maxBucket, rowsPerBand)
-      .observe("lsh_bucket_truncation",
+      rowsPerBand: Int = 2): org.apache.spark.sql.DataFrame =
+    bucketPairs(lshBuckets(sig, nBands, maxBucket, rowsPerBand), Nil, maxBucket,
+      "lsh_bucket_truncation")
+
+  /** Distinct (keys..., doc_id_a, doc_id_b) pairs of a [[cappedBuckets]]
+    * frame, with bucket truncation observed as `metric`. Pairs via
+    * DOUBLE INDEX explode (i < j over the capped ids array): the
+    * generators are cheap integer sequences and each pair is built once
+    * per output row. The previous flatten(transform(transform)) shape
+    * materialized the whole O(b²) struct array per bucket row (~32 MB
+    * at the 2048 cap) before exploding it — measured 5× slower on
+    * cap-sized buckets and a per-task allocation spike the index shape
+    * never pays. */
+  private def bucketPairs(buckets: org.apache.spark.sql.DataFrame, keys: Seq[Column],
+      maxBucket: Int, metric: String): org.apache.spark.sql.DataFrame =
+    buckets
+      .observe(metric,
         sum(when(col("n") > maxBucket, col("n") - maxBucket)
           .otherwise(0L)).as("truncated_docs"),
         max(col("n")).as("max_bucket"))
-      .select(col("ids"))
-    // Pairs via DOUBLE INDEX explode (i < j over the capped ids array):
-    // the generators are cheap integer sequences and each pair is built
-    // once per output row. The previous flatten(transform(transform))
-    // shape materialized the whole O(b²) struct array per bucket row
-    // (~32 MB at the 2048 cap) before exploding it — measured 5× slower
-    // on cap-sized buckets and a per-task allocation spike the index
-    // shape never pays.
-    buckets
-      .select(col("ids"), explode(sequence(lit(1), size(col("ids")) - 1)).as("i"))
-      .select(col("ids"), col("i"),
-        explode(sequence(col("i") + 1, size(col("ids")))).as("j"))
-      .select(element_at(col("ids"), col("i")).as("doc_id_a"),
-        element_at(col("ids"), col("j")).as("doc_id_b"))
+      .select(keys ++ Seq(col("ids"), explode(sequence(lit(1), size(col("ids")) - 1)).as("i")): _*)
+      .select(keys ++ Seq(col("ids"), col("i"),
+        explode(sequence(col("i") + 1, size(col("ids")))).as("j")): _*)
+      .select(keys ++ Seq(element_at(col("ids"), col("i")).as("doc_id_a"),
+        element_at(col("ids"), col("j")).as("doc_id_b")): _*)
       .distinct()
-  }
 
   /** DataFrame body of d42: the LSH banding TUNING report — the dedup
     * family's analogue of e18's ANN recall report. For three band
@@ -1485,18 +1509,11 @@ object Docs {
     * configs truncate later than b8r1). */
   private[graft] def lshTuningDf(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val sets = t(s, dir, "documents")
-      .filter(col("doc_id").isNotNull && col("doc_id") % 10 === 3)
-      .repartition(col("doc_id"))
-      .select(col("doc_id"), words(col("text")).as("ws"))
-      .select(col("doc_id"), array_distinct(shingles(col("ws"))).as("ss"))
-    val sig = sets
-      .withColumn("mh", graft.functions.MinHashExprs.minHashSig(col("ss")))
-      .select(col("doc_id") +: (0 until 8).map(i => minhash(col("mh"), i).as(s"mh$i")): _*)
+    val sets = shingleSets(t(s, dir, "documents").filter(col("doc_id") % 10 === 3))
     // ONE explode of all 14 (config, band_key) structs per doc — a
     // 3-branch union would re-evaluate the sig chain (scan → shingles →
     // minhash) once per config
-    val banded = sig.select(col("doc_id"), explode(array(
+    val banded = setSignatures(sets).select(col("doc_id"), explode(array(
       lshTuningConfigs.flatMap { case (cfg, r) =>
         (0 until 8 / r).map { b =>
           // the SHARED band-key constructor — the report measures the
@@ -1516,23 +1533,9 @@ object Docs {
     // The observed metric makes a capped tuning run auditable exactly
     // like a capped pair run — nonzero truncated_docs means the report
     // (and its oracle twin) must be re-read with that caveat.
-    val buckets = banded
-      .groupBy(col("config"), col("band_key"))
-      .agg(graft.functions.SmallestKAgg.smallestK(2048)(col("doc_id")).as("b"))
-      .select(col("config"), col("b.ids").as("ids"), col("b.n").as("n"))
-      .filter(col("n") > 1)
-      .observe("lsh_tuning_bucket_truncation",
-        sum(when(col("n") > 2048, col("n") - 2048).otherwise(0L)).as("truncated_docs"),
-        max(col("n")).as("max_bucket"))
-    val pairs = buckets
-      .select(col("config"), col("ids"),
-        explode(sequence(lit(1), size(col("ids")) - 1)).as("i"))
-      .select(col("config"), col("ids"), col("i"),
-        explode(sequence(col("i") + 1, size(col("ids")))).as("j"))
-      .select(col("config"),
-        element_at(col("ids"), col("i")).as("doc_id_a"),
-        element_at(col("ids"), col("j")).as("doc_id_b"))
-      .distinct()
+    val byConfig = Seq(col("config"))
+    val pairs = bucketPairs(cappedBuckets(banded, byConfig, 2048), byConfig, 2048,
+      "lsh_tuning_bucket_truncation")
     // verify per (config, pair) row directly — the config duplication
     // (≤3×) is trivial against re-deriving the whole shingle chain for
     // a distinct-pair branch, and it keeps the query ONE linear flow:
@@ -1540,15 +1543,8 @@ object Docs {
     // n_true needs no separate subtree: verified(cfg) ⊆ verified(b8r1)
     // (the subset argument above), so the reference count IS the max
     // n_verified across the report's own rows — a window over ≤3 rows.
-    val inter = size(array_intersect(col("sa"), col("sb"))).cast("double")
-    val uni = (size(col("sa")) + size(col("sb"))).cast("double") - inter
-    val ver = pairs.hint("shuffle_hash")
-      .join(sets.select(col("doc_id").as("doc_id_a"), col("ss").as("sa")),
-        Seq("doc_id_a"))
-      .join(sets.select(col("doc_id").as("doc_id_b"), col("ss").as("sb")).hint("merge"),
-        Seq("doc_id_b"))
-      .select(col("config"),
-        when(inter / uni >= 0.5, 1L).otherwise(0L).as("dup"))
+    val ver = verifyJoin(pairs, sets)
+      .select(col("config"), when(pairJaccard >= 0.5, 1L).otherwise(0L).as("dup"))
     // ONE conditional global aggregate (map-side combinable to a single
     // row) instead of groupBy(config) + an all-rows window: the config
     // grid is a 3-element literal, so per-config counts are 6 columns
@@ -1815,9 +1811,17 @@ object Docs {
     "{'h1': CAST('0x'||substring(md5(x),1,8) AS BIGINT), " +
     "'h2': CAST('0x'||substring(md5(x),9,8) AS BIGINT)})"
 
-  /** DuckDB twin of `minhash`: family i min over the hh column. */
+  /** DuckDB twin of MinHashSig family i: min over the hh column. */
   private def dMinhash(i: Int) =
     s"list_min(list_transform(hh, h -> (h.h1 + $i * h.h2) % 1000000007))"
+
+  /** The 8 signature columns `mh0..mh7` of the oracle's `sig` CTE. */
+  private val dSigCols = (0 until 8).map(i => s"  ${dMinhash(i)} AS mh$i").mkString(",\n")
+
+  /** The oracle's b4r2 `banded` CTE body over `sig`. */
+  private val dBands = (0 until 4)
+    .map(b => s"SELECT doc_id, '$b:' || mh${2 * b} || ':' || mh${2 * b + 1} AS band_key FROM sig")
+    .mkString("\n  UNION ALL ")
 
   /** DuckDB twin of [[surprisalDf]] as a CTE chain ending in `scored`
     * (shared by the d25 gate and d27's importance sampler). */
@@ -1943,18 +1947,17 @@ object Docs {
     // MinHash signature (8 hash families over word 3-gram shingles).
     Q("d06_minhash_sig",
       (s, dir) => {
-        val cols = col("doc_id") +: (0 until 8).map(i => minhash(col("mh"), i).as(s"mh$i"))
+        val cols = col("doc_id") +: (0 until 8).map(i => element_at(col("mh"), i + 1).as(s"mh$i"))
         withShingles(s, dir).select(cols: _*)
       },
       Some {
-        val mh = (0 until 8).map(i => s"  ${dMinhash(i)} AS mh$i").mkString(",\n")
         s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
            |s AS (SELECT doc_id,
            |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
            |  FROM w),
            |h AS (SELECT doc_id, $dHh hh FROM s)
            |SELECT doc_id,
-           |$mh
+           |$dSigCols
            |FROM h""".stripMargin
       },
       "MinHash signatures over 3-gram shingles (north-star: dedup)"),
@@ -1967,25 +1970,18 @@ object Docs {
     // standard minhash-LSH band→bucket→pairs layout). See
     // `lshCandidatePairs` for the degenerate-bucket cap.
     Q("d07_lsh_pairs",
-      (s, dir) => {
-        val sig = withShingles(s, dir).select(
-          col("doc_id") +: (0 until 8).map(i => minhash(col("mh"), i).as(s"mh$i")): _*)
-        lshCandidatePairs(sig)
-      },
+      (s, dir) => lshCandidatePairs(withShingles(s, dir)),
       Some {
-        val mh = (0 until 8).map(i => s"  ${dMinhash(i)} AS mh$i").mkString(",\n")
-        val bands = (0 until 4).map(b => s"SELECT doc_id, '$b:' || mh${2 * b} || ':' || mh${2 * b + 1} AS band_key FROM sig")
-          .mkString("\n  UNION ALL ")
         s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
            |s AS (SELECT doc_id,
            |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
            |  FROM w),
            |h AS (SELECT doc_id, $dHh hh FROM s),
            |sig AS (SELECT doc_id,
-           |$mh
+           |$dSigCols
            |FROM h),
            |banded AS (
-           |  $bands)
+           |  $dBands)
            |SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
            |FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id""".stripMargin
       },
@@ -2001,74 +1997,26 @@ object Docs {
     // ×duplication-rate, far below all-pairs — exactly why LSH
     // candidates + exact verify beats either extreme.
     Q("d20_neardup_verified",
+      // Shingle sets, signatures and verification joins are the shared
+      // bodies (see shingleSets and verifyJoin for the plan disciplines).
       (s, dir) => {
-        // Shingle SETS on BOUND columns — two aliased projections (`ws`
-        // then `ss`), the withShingles shape: CollapseProject refuses to
-        // inline a multiply-referenced alias, so `words` tokenizes each
-        // doc exactly ONCE and the HOF lambdas inside `shingles` see a
-        // bound attribute, not a free expression. (The r9 inline
-        // composition shingles(words(text)) re-tokenized the doc inside
-        // every element_at — O(tokens²)/doc — and the intended "shared
-        // set stage" never materialized: the projection floated above
-        // the exchange, which shipped raw text, so the quadratic pass
-        // ran in all THREE consumer subtrees. Matched-pair 2.4→29 s.
-        // BENCH_NOTES documents both traps; PlanGuardSpec now enforces
-        // them.) The signature is derived FROM the set: every minhash
-        // family value is a MIN over the shingles, so array_distinct
-        // cannot change it — bit-identical to the multiset signature
-        // the oracle computes. ONE repartition spreads the
-        // single-row-group testdata scan; the linear-per-doc shingle
-        // compute above it runs once per consumer subtree off the
-        // reused text exchange — deliberately NOT shared as a computed
-        // exchange, which would ship corpus-sized shingle arrays
-        // (several × the raw text) through a second wide-row shuffle.
-        val sets = t(s, dir, "documents")
-          .filter(col("doc_id").isNotNull)
-          .repartition(col("doc_id"))
-          .select(col("doc_id"), words(col("text")).as("ws"))
-          .select(col("doc_id"), array_distinct(shingles(col("ws"))).as("ss"))
-        val sig = sets
-          .withColumn("mh", graft.functions.MinHashExprs.minHashSig(col("ss")))
-          .select(col("doc_id") +: (0 until 8).map(i => minhash(col("mh"), i).as(s"mh$i")): _*)
-        val pairs = lshCandidatePairs(sig)
-        val inter = size(array_intersect(col("sa"), col("sb"))).cast("double")
-        val uni = (size(col("sa")) + size(col("sb"))).cast("double") - inter
-        // Verification joins: NEVER broadcast — the pair side GROWS with
-        // the corpus and its static size estimate (post agg + double
-        // explode) is garbage-small, so the unhinted planner broadcast
-        // it: fine at sf0.1 (35 pairs), a driver OOM at sf10 (31.5 M
-        // pairs, found by the r7 full-battery sf10 gate). Join 1
-        // shuffle-hashes BUILDING on the NARROW pair rows (16 B/row —
-        // hashing them beats sorting the corpus-sized wide shingle
-        // arrays). Join 2 must stay MERGE: its smaller side is the
-        // join-1 output (pairs + a full shingle set per row), and a
-        // ShuffledHashJoin build is NOT spillable — building that side
-        // at sf10 dies with "Can't acquire 2 GiB to build hash
-        // relation" (measured this round), while merge sorts spill.
-        // Plan-guarded: one SHJ, one SMJ, zero broadcasts.
-        pairs.hint("shuffle_hash")
-          .join(sets.select(col("doc_id").as("doc_id_a"), col("ss").as("sa")),
-            Seq("doc_id_a"))
-          .join(sets.select(col("doc_id").as("doc_id_b"), col("ss").as("sb")).hint("merge"),
-            Seq("doc_id_b"))
+        val sets = shingleSets(t(s, dir, "documents"))
+        verifyJoin(lshCandidatePairs(setSignatures(sets)), sets)
           .select(col("doc_id_a"), col("doc_id_b"),
-            round(inter / uni, 4).as("jaccard"),
-            (inter / uni >= 0.5).as("is_dup"))
+            round(pairJaccard, 4).as("jaccard"),
+            (pairJaccard >= 0.5).as("is_dup"))
       },
       Some {
-        val mh = (0 until 8).map(i => s"  ${dMinhash(i)} AS mh$i").mkString(",\n")
-        val bands = (0 until 4).map(b => s"SELECT doc_id, '$b:' || mh${2 * b} || ':' || mh${2 * b + 1} AS band_key FROM sig")
-          .mkString("\n  UNION ALL ")
         s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
            |s AS (SELECT doc_id,
            |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
            |  FROM w),
            |h AS (SELECT doc_id, sh, $dHh hh FROM s),
            |sig AS (SELECT doc_id,
-           |$mh
+           |$dSigCols
            |FROM h),
            |banded AS (
-           |  $bands),
+           |  $dBands),
            |pairs AS (
            |  SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
            |  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
@@ -2090,23 +2038,17 @@ object Docs {
     // rounds. Oracle: recursive-CTE transitive closure (small graphs).
     Q("d12_dedup_clusters",
       (s, dir) => {
-        val sig = withShingles(s, dir).select(
-          col("doc_id") +: (0 until 8).map(i => minhash(col("mh"), i).as(s"mh$i")): _*)
         // star edges, not all-pairs: components are identical (every
         // bucket member connects through the bucket min) and a
         // degenerate bucket costs O(n) edges instead of O(n²) — no cap
         // needed, no connectivity lost. See `lshStarEdges`.
-        val edges = lshStarEdges(sig)
-        val comps = graft.operators.ConnectedComponents.components(edges, dedupeEdges = false)
+        val comps = nearDupClusters(withShingles(s, dir))
         t(s, dir, "documents").select(col("doc_id"))
           .join(comps, col("doc_id") === col("id"), "left")
           .select(col("doc_id"),
             coalesce(col("rep"), col("doc_id")).as("cluster_rep"))
       },
       Some {
-        val mh = (0 until 8).map(i => s"  ${dMinhash(i)} AS mh$i").mkString(",\n")
-        val bands = (0 until 4).map(b => s"SELECT doc_id, '$b:' || mh${2 * b} || ':' || mh${2 * b + 1} AS band_key FROM sig")
-          .mkString("\n  UNION ALL ")
         // bounded-iteration CC twin (CcSql): the recursive-CTE closure
         // materialized O(Σ component²) reachable pairs and DNF'd the
         // sf10 oracle cap; the unrolled pointer-jumping levels are
@@ -2118,10 +2060,10 @@ object Docs {
            |  FROM w),
            |h AS (SELECT doc_id, $dHh hh FROM s),
            |sig AS (SELECT doc_id,
-           |$mh
+           |$dSigCols
            |FROM h),
            |banded AS (
-           |  $bands),
+           |  $dBands),
            |pairs AS MATERIALIZED (
            |  SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
            |  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
@@ -2145,9 +2087,6 @@ object Docs {
     Q("d13_corpus_clean",
       (s, dir) => corpusCleanDf(t(s, dir, "documents")),
       Some {
-        val mh = (0 until 8).map(i => s"  ${dMinhash(i)} AS mh$i").mkString(",\n")
-        val bands = (0 until 4).map(b => s"SELECT doc_id, '$b:' || mh${2 * b} || ':' || mh${2 * b + 1} AS band_key FROM sig")
-          .mkString("\n  UNION ALL ")
         // same bounded-iteration CC twin as d12 (CcSql) for the final
         // near-dup stage — the closure DNF'd sf10's cap on this family
         val (cc, lk) = CcSql.unrolled()
@@ -2178,10 +2117,10 @@ object Docs {
            |  FROM clean),
            |h AS (SELECT doc_id, n_tokens, $dHh hh FROM s),
            |sig AS (SELECT doc_id, n_tokens,
-           |$mh
+           |$dSigCols
            |FROM h),
            |banded AS (
-           |  $bands),
+           |  $dBands),
            |pairs AS MATERIALIZED (
            |  SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
            |  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
@@ -2845,19 +2784,16 @@ object Docs {
           .select(col("doc_id"), col("lang"), col("source"))
       },
       Some {
-        val mh = (0 until 8).map(i => s"  ${dMinhash(i)} AS mh$i").mkString(",\n")
-        val bands = (0 until 4).map(b => s"SELECT doc_id, '$b:' || mh${2 * b} || ':' || mh${2 * b + 1} AS band_key FROM sig")
-          .mkString("\n  UNION ALL ")
         s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
            |s AS (SELECT doc_id,
            |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
            |  FROM w),
            |h AS (SELECT doc_id, sh, $dHh hh FROM s),
            |sig AS (SELECT doc_id,
-           |$mh
+           |$dSigCols
            |FROM h),
            |banded AS (
-           |  $bands),
+           |  $dBands),
            |pairs AS (
            |  SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
            |  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
@@ -3342,7 +3278,6 @@ object Docs {
     Q("d42_lsh_tuning",
       (s, dir) => lshTuningDf(s, dir),
       Some {
-        val mh = (0 until 8).map(i => s"  ${dMinhash(i)} AS mh$i").mkString(",\n")
         val bandSel = lshTuningConfigs.flatMap { case (cfg, r) =>
           (0 until 8 / r).map { b =>
             val key = (0 until r).map(k => s"mh${b * r + k}")
@@ -3356,7 +3291,7 @@ object Docs {
            |  FROM w),
            |h AS (SELECT doc_id, sh, $dHh hh FROM s),
            |sig AS (SELECT doc_id,
-           |$mh
+           |$dSigCols
            |FROM h),
            |banded AS (
            |  $bandSel),
@@ -3404,10 +3339,7 @@ object Docs {
     // whole cluster in one task); both report aggs shuffle 2-3 columns.
     Q("d43_keeper_priority",
       (s, dir) => {
-        val sig = withShingles(s, dir).select(
-          col("doc_id") +: (0 until 8).map(i => minhash(col("mh"), i).as(s"mh$i")): _*)
-        val comps = graft.operators.ConnectedComponents
-          .components(lshStarEdges(sig), dedupeEdges = false)
+        val comps = nearDupClusters(withShingles(s, dir))
         val cl = clusteredBySource(
           t(s, dir, "documents").select(col("doc_id"), col("source")), comps)
         val keepers = sourceKeepers(cl)
@@ -3420,9 +3352,6 @@ object Docs {
             (col("n_docs") - coalesce(col("n_keepers"), lit(0L))).as("n_evicted"))
       },
       Some {
-        val mh = (0 until 8).map(i => s"  ${dMinhash(i)} AS mh$i").mkString(",\n")
-        val bands = (0 until 4).map(b => s"SELECT doc_id, '$b:' || mh${2 * b} || ':' || mh${2 * b + 1} AS band_key FROM sig")
-          .mkString("\n  UNION ALL ")
         val (cc, lk) = CcSql.unrolled()
         s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
            |s AS (SELECT doc_id,
@@ -3430,10 +3359,10 @@ object Docs {
            |  FROM w),
            |h AS (SELECT doc_id, $dHh hh FROM s),
            |sig AS (SELECT doc_id,
-           |$mh
+           |$dSigCols
            |FROM h),
            |banded AS (
-           |  $bands),
+           |  $dBands),
            |pairs AS MATERIALIZED (
            |  SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
            |  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
@@ -3508,22 +3437,9 @@ object Docs {
     // larger doc_id), mirroring d13's min-keeper rule.
     Q("d45_containment_dedup",
       (s, dir) => {
-        val sets = t(s, dir, "documents")
-          .filter(col("doc_id").isNotNull)
-          .repartition(col("doc_id"))
-          .select(col("doc_id"), words(col("text")).as("ws"))
-          .select(col("doc_id"), array_distinct(shingles(col("ws"))).as("ss"))
-        val sig = sets
-          .withColumn("mh", graft.functions.MinHashExprs.minHashSig(col("ss")))
-          .select(col("doc_id") +: (0 until 8).map(i => minhash(col("mh"), i).as(s"mh$i")): _*)
-        val inter = size(array_intersect(col("sa"), col("sb"))).cast("double")
-        val smaller = least(size(col("sa")), size(col("sb"))).cast("double")
-        val contain = inter / smaller
-        lshCandidatePairs(sig).hint("shuffle_hash")
-          .join(sets.select(col("doc_id").as("doc_id_a"), col("ss").as("sa")),
-            Seq("doc_id_a"))
-          .join(sets.select(col("doc_id").as("doc_id_b"), col("ss").as("sb")).hint("merge"),
-            Seq("doc_id_b"))
+        val sets = shingleSets(t(s, dir, "documents"))
+        val contain = pairInter / least(size(col("sa")), size(col("sb"))).cast("double")
+        verifyJoin(lshCandidatePairs(setSignatures(sets)), sets)
           .select(col("doc_id_a"), col("doc_id_b"),
             round(contain, 4).as("containment"),
             when(contain < 0.8, lit(null).cast("long"))
@@ -3533,19 +3449,16 @@ object Docs {
               .as("evict_id"))
       },
       Some {
-        val mh = (0 until 8).map(i => s"  ${dMinhash(i)} AS mh$i").mkString(",\n")
-        val bands = (0 until 4).map(b => s"SELECT doc_id, '$b:' || mh${2 * b} || ':' || mh${2 * b + 1} AS band_key FROM sig")
-          .mkString("\n  UNION ALL ")
         s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
            |s AS (SELECT doc_id,
            |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
            |  FROM w),
            |h AS (SELECT doc_id, sh, $dHh hh FROM s),
            |sig AS (SELECT doc_id,
-           |$mh
+           |$dSigCols
            |FROM h),
            |banded AS (
-           |  $bands),
+           |  $dBands),
            |pairs AS (
            |  SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
            |  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),

@@ -245,12 +245,11 @@ object StreamingBuckets {
     */
   def nearDedupStream(docs: DataFrame, watermark: String = "2 hours"): DataFrame =
     docs
-      .withColumn("ws", split(graft.functions.ColFns.normWs(col("text")), " "))
+      .withColumn("ws", graft.queries.Docs.words(col("text")))
       .withColumn("sh", graft.queries.Docs.shingles(col("ws")))
       .withColumn("mh", graft.functions.MinHashExprs.minHashSig(col("sh")))
-      .withColumn("sig",
-        when(size(col("sh")) >= 1, concat_ws(":", col("mh").cast("array<string>")))
-          .otherwise(concat(lit("uniq:"), col("doc_id").cast("string"))))
+      .withColumn("sig", coalesce(graft.queries.Docs.sigStr(col("sh"), col("mh")),
+        concat(lit("uniq:"), col("doc_id").cast("string"))))
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark(Seq("sig"))
       .drop("ws", "sh", "mh", "sig")

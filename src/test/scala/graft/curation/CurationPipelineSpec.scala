@@ -261,31 +261,36 @@ class CurationPipelineSpec extends SparkSpec {
   }
 
   test("resume recomputes only the stages past the last good dir") {
-    val out = Files.createTempDirectory("graft-curation-resume").toString
-    val docs = Registry.t(spark, sfDir, "documents")
-    val counts = CurationPipeline.run(spark, docs, out, customGate = langGate)
+    // a plain path and a file:// URI: resume must find the stage
+    // markers through Hadoop's FileSystem, not a driver-local File
+    for (asUri <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("graft-curation-resume").toString
+      val out = if (asUri) s"file://$dir" else dir
+      val docs = Registry.t(spark, sfDir, "documents")
+      val counts = CurationPipeline.run(spark, docs, out, customGate = langGate)
 
-    // simulate a crash after stage 3: later outputs gone, 01-03 intact
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles().foreach(rm)
-      p.delete(); ()
+      // simulate a crash after stage 3: later outputs gone, 01-03 intact
+      def rm(p: java.io.File): Unit = {
+        if (p.isDirectory) p.listFiles().foreach(rm)
+        p.delete(); ()
+      }
+      rm(new java.io.File(s"$dir/04_corpus"))
+      rm(new java.io.File(s"$dir/05_chunks"))
+      val markers = Seq("01_gated", "02_exact", "03_clean")
+        .map(n => n -> new java.io.File(s"$dir/$n/_SUCCESS").lastModified())
+
+      // poisoned raw input: same schema, garbage text. If ANY of stages
+      // 1-3 recomputed, every doc would fail the min-token gate and the
+      // resumed counts would cascade to zero.
+      val poisoned = docs.withColumn("text", lit("x"))
+      val resumed = CurationPipeline.run(spark, poisoned, out,
+        cfg = CurationPipeline.Config(resume = true), customGate = langGate)
+
+      assert(resumed === counts, s"resumed counts diverge from the original run ($out)")
+      markers.foreach { case (n, t) =>
+        assert(new java.io.File(s"$dir/$n/_SUCCESS").lastModified() === t,
+          s"stage $n was rewritten on resume ($out)") }
     }
-    rm(new java.io.File(s"$out/04_corpus"))
-    rm(new java.io.File(s"$out/05_chunks"))
-    val markers = Seq("01_gated", "02_exact", "03_clean")
-      .map(n => n -> new java.io.File(s"$out/$n/_SUCCESS").lastModified())
-
-    // poisoned raw input: same schema, garbage text. If ANY of stages
-    // 1-3 recomputed, every doc would fail the min-token gate and the
-    // resumed counts would cascade to zero.
-    val poisoned = docs.withColumn("text", lit("x"))
-    val resumed = CurationPipeline.run(spark, poisoned, out,
-      cfg = CurationPipeline.Config(resume = true), customGate = langGate)
-
-    assert(resumed === counts, "resumed counts diverge from the original run")
-    markers.foreach { case (n, t) =>
-      assert(new java.io.File(s"$out/$n/_SUCCESS").lastModified() === t,
-        s"stage $n was rewritten on resume") }
   }
 
   test("resume honors a completed 04a_spans dir without recomputing it") {

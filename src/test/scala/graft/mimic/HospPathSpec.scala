@@ -59,16 +59,4 @@ class HospPathSpec extends SparkSpec {
     // codes without a dictionary entry drop (inner join) — 9999 absent
     assert(!titled.contains("9999"))
   }
-
-  test("Tuning.apply builds a session with AQE + skew handling on") {
-    // verify on the config object (a second live session would collide
-    // with the shared one): builder → options land in the session conf
-    val s = Tuning(org.apache.spark.sql.SparkSession.builder()
-      .master("local[1]").appName("tuned"), 64)
-      .getOrCreate()
-    // getOrCreate returns the EXISTING session; runtime-settable confs
-    // are still applied to it
-    assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") === "true")
-    assert(s.conf.get("spark.sql.autoBroadcastJoinThreshold").contains("64"))
-  }
 }

@@ -11,14 +11,21 @@ import graft.operators.ConnectedComponents
   */
 class LshBoundedSpec extends SparkSpec {
 
-  /** Synthetic signature table: mh_i derived from doc_id so buckets have
-    * controlled collision structure without running the minhash pipeline.
+  /** Synthetic signature table (doc_id, mh): all 8 values of the `mh`
+    * array derived from doc_id so buckets have controlled collision
+    * structure without running the minhash pipeline.
     */
-  private def sig(n: Int, mod: Int) = {
-    val base = spark.range(n.toLong).select(col("id").as("doc_id"))
-    (0 until 8).foldLeft(base)((d, i) =>
-      d.withColumn(s"mh$i", (col("doc_id") % mod).cast("string")))
-  }
+  private def sig(n: Int, mod: Int) =
+    spark.range(n.toLong).select(col("id").as("doc_id"),
+      array_repeat((col("id") % mod).cast("string"), 8).as("mh"))
+
+  /** Like [[sig]], but each array slot hashes (doc_id, slot) on its own,
+    * so the three d42 bandings bucket differently: b8r1 pairs docs
+    * that agree on any one slot, b2r4 only docs that agree on all four
+    * slots of a band. */
+  private def mixedSig(n: Int, mod: Int) =
+    spark.range(n.toLong).select(col("id").as("doc_id"),
+      array((0 until 8).map(i => pmod(xxhash64(col("id"), lit(i)), lit(mod.toLong))): _*).as("mh"))
 
   test("100k-member degenerate bucket: bounded ids, capped pairs, complete star edges") {
     val n = 100000
@@ -45,7 +52,8 @@ class LshBoundedSpec extends SparkSpec {
     // reference pairs: plain banded self-join (the DuckDB oracle's shape)
     val banded = s.select(col("doc_id"), explode(array(
       (0 until 4).map(b =>
-        concat(lit(s"$b:"), col(s"mh${2 * b}"), lit(":"), col(s"mh${2 * b + 1}"))): _*)).as("band_key"))
+        concat(lit(s"$b:"), element_at(col("mh"), 2 * b + 1), lit(":"),
+          element_at(col("mh"), 2 * b + 2))): _*)).as("band_key"))
     val expected = banded.as("a")
       .join(banded.as("b"),
         col("a.band_key") === col("b.band_key") && col("a.doc_id") < col("b.doc_id"))
@@ -54,12 +62,17 @@ class LshBoundedSpec extends SparkSpec {
     val got = Docs.lshCandidatePairs(s, nBands = 4, maxBucket = 2048)
     assert(got.except(expected).count() === 0L)
     assert(expected.except(got).count() === 0L)
-    // components over star edges == components over all candidate pairs
-    val viaStar = ConnectedComponents.components(Docs.lshStarEdges(s, nBands = 4))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaPairs = ConnectedComponents.components(
-      got.toDF("u", "v")).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStar === viaPairs)
+    // components over star edges == components over all candidate
+    // pairs, under every d42 banding
+    for (input <- Seq(s, mixedSig(500, 23)); (label, _) <- Docs.lshTuningConfigs) {
+      val (nBands, rowsPerBand) = Docs.lshBandingOf(label)
+      val viaStar = Docs.nearDupClusters(input, label)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val pairs = Docs.lshCandidatePairs(input, nBands, 2048, rowsPerBand)
+      val viaPairs = ConnectedComponents.components(
+        pairs.toDF("u", "v")).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(viaStar === viaPairs, s"banding $label")
+    }
   }
 
   test("band keys delimit the two minhash values — no decimal aliasing") {
@@ -69,10 +82,8 @@ class LshBoundedSpec extends SparkSpec {
     val rows = Seq(
       (0L, "1", "23"),
       (1L, "12", "3"))
-    val base = rows.toDF("doc_id", "a", "b")
-    val s = (0 until 4).foldLeft(base)((d, i) =>
-      d.withColumn(s"mh${2 * i}", col("a")).withColumn(s"mh${2 * i + 1}", col("b")))
-      .drop("a", "b")
+    val s = rows.toDF("doc_id", "a", "b").select(col("doc_id"),
+      array((0 until 4).flatMap(_ => Seq(col("a"), col("b"))): _*).as("mh"))
     assert(Docs.lshCandidatePairs(s, nBands = 4).count() === 0L)
     assert(Docs.lshStarEdges(s, nBands = 4).count() === 0L)
   }
