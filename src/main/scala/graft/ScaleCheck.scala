@@ -31,7 +31,6 @@ import graft.functions.VectorExprs.cosineFast
 object ScaleCheck {
 
   private def labelPropagate(edges: DataFrame, maxIter: Int = 40): (DataFrame, Boolean) = {
-    val spark = edges.sparkSession
     val sym = edges.toDF("u", "v")
       .union(edges.toDF("u", "v").select(col("v").as("u"), col("u").as("v")))
       .localCheckpoint(true)

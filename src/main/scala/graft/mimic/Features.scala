@@ -1,7 +1,6 @@
 package graft.mimic
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.ColFns
 
@@ -85,26 +84,26 @@ object Features {
     * nondeterministic under parallel scan; ties break by (count desc,
     * uom asc) — SURVEY §7.4.2, decided once and tested.
     *
-    * One aggregation + one broadcast join: the stats side is |itemids|
-    * rows, so the event side never shuffles.
+    * q29_uom_clean's shape: ONE count per (itemid, UOM) — null UOM
+    * included — rolled up per itemid, where min(struct(-cnt, uom)) over
+    * the non-null UOMs IS the (count desc, uom asc) rank-1 row (struct
+    * order is lexicographic), count(uom) the distinct non-null UOMs and
+    * sum(cnt) every row; then one broadcast join. The stats side is
+    * |itemids| rows, so the event side never shuffles.
     */
   def dropWrongUom(df: DataFrame, cutOff: Double): DataFrame = {
-    val counts = df.filter(col("valueuom").isNotNull)
-      .groupBy(col("itemid"), col("valueuom")).agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy(col("itemid"))
-      .orderBy(col("cnt").desc, col("valueuom").asc)
-    val stats = counts
-      .withColumn("rn", row_number().over(w))
+    val stats = df.groupBy(col("itemid"), col("valueuom")).agg(count(lit(1)).as("cnt"))
       .groupBy(col("itemid"))
-      .agg(max(when(col("rn") === 1, col("valueuom"))).as("mode_uom"),
-        max(when(col("rn") === 1, col("cnt"))).as("mode_cnt"),
-        count(lit(1)).as("n_uoms"))
-    val tot = df.groupBy(col("itemid")).agg(count(lit(1)).as("n_obs"))
-    df.join(broadcast(stats.join(tot, Seq("itemid"))), Seq("itemid"), "left")
-      // n_uoms NULL = the itemid has no non-null UOM at all: the
-      // reference only drops rows when value_counts.size > 1, so an
-      // all-null-UOM itemid keeps every row (null-safe first disjunct —
-      // without it all three disjuncts are null and the rows vanish)
+      .agg(min(when(col("valueuom").isNotNull,
+          struct((-col("cnt")).as("neg"), col("valueuom").as("uom")))).as("m"),
+        count(col("valueuom")).as("n_uoms"), sum(col("cnt")).as("n_obs"))
+      .select(col("itemid"), col("m.uom").as("mode_uom"), (-col("m.neg")).as("mode_cnt"),
+        col("n_uoms"), col("n_obs"))
+    df.join(broadcast(stats), Seq("itemid"), "left")
+      // the reference only drops rows when value_counts.size > 1, so an
+      // all-null-UOM itemid (n_uoms = 0) keeps every row; n_uoms NULL =
+      // a null itemid, which no stats row matches (null-safe first
+      // disjunct — without it all disjuncts are null and the rows vanish)
       .filter(col("n_uoms").isNull || col("n_uoms") <= 1 ||
         col("mode_cnt").cast("double") / col("n_obs").cast("double") <= cutOff ||
         col("valueuom") === col("mode_uom"))
@@ -178,20 +177,27 @@ object Features {
     */
   def pivotCohort(df: DataFrame, indexCol: String, featureCol: String,
       valueCol: String, maxFeatures: Option[Int] = None,
-      oneHot: Boolean = false): DataFrame = {
+      oneHot: Boolean = false): DataFrame =
+    pivotTopK(df, Seq(indexCol), featureCol, maxFeatures,
+      if (oneHot) max(lit(1)) else avg(col(valueCol)))
+
+  /** The pivot tail of [[pivotCohort]] and [[pivotCohortMlb]]: rank
+    * `featureCol` values by row count (count desc, value asc), keep the
+    * top `maxFeatures`, pin the vocabulary (sorted by its string form,
+    * so the column set is deterministic), semi-join the rows to it when
+    * it is capped, then pivot per `indexCols` with `agg`, missing
+    * cells 0. */
+  private def pivotTopK(df: DataFrame, indexCols: Seq[String], featureCol: String,
+      maxFeatures: Option[Int], agg: Column): DataFrame = {
     val ranked = df.groupBy(col(featureCol)).agg(count(lit(1)).as("_cnt"))
       .orderBy(col("_cnt").desc, col(featureCol).asc)
     val kept = maxFeatures.map(k => ranked.limit(k)).getOrElse(ranked)
-    val vocab = kept.select(col(featureCol)).collect()
-      .map(_.get(0)).toSeq.sortBy(_.toString)
-    val scoped = maxFeatures match {
-      case Some(_) => df.join(broadcast(kept.select(col(featureCol))),
-        Seq(featureCol), "left_semi")
-      case None => df
-    }
-    val agg = if (oneHot) max(lit(1)) else avg(col(valueCol))
-    scoped.groupBy(col(indexCol))
-      .pivot(featureCol, vocab.map(_.toString))
+    val vocab = kept.select(col(featureCol)).collect().map(_.get(0).toString).toSeq.sorted
+    val scoped =
+      if (maxFeatures.isEmpty) df
+      else df.join(broadcast(kept.select(col(featureCol))), Seq(featureCol), "left_semi")
+    scoped.groupBy(indexCols.map(col): _*)
+      .pivot(featureCol, vocab)
       .agg(agg)
       .na.fill(0)
   }
@@ -230,18 +236,6 @@ object Features {
         x => trim(x)))))
       .filter(length(col("_label")) > 0)
       .select((indexCols.map(col) :+ col("_label")): _*)
-    val ranked = long.groupBy(col("_label")).agg(count(lit(1)).as("_cnt"))
-      .orderBy(col("_cnt").desc, col("_label").asc)
-    val kept = maxFeatures.map(k => ranked.limit(k)).getOrElse(ranked)
-    val vocab = kept.select(col("_label")).collect().map(_.getString(0)).toSeq.sorted
-    val scoped = maxFeatures match {
-      case Some(_) => long.join(broadcast(kept.select(col("_label"))),
-        Seq("_label"), "left_semi")
-      case None => long
-    }
-    scoped.groupBy(indexCols.map(col): _*)
-      .pivot("_label", vocab)
-      .agg(max(lit(1)))
-      .na.fill(0)
+    pivotTopK(long, indexCols, "_label", maxFeatures, max(lit(1)))
   }
 }

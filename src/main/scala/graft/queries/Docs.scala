@@ -1403,7 +1403,7 @@ object Docs {
     * keys, so this also diverges cross-engine). Found by edge-case
     * battery, kept as a guard. */
   private def lshBanded(sig: org.apache.spark.sql.DataFrame,
-      nBands: Int, rowsPerBand: Int = 2): org.apache.spark.sql.DataFrame =
+      nBands: Int, rowsPerBand: Int): org.apache.spark.sql.DataFrame =
     sig.select(col("doc_id"), explode(array(
       (0 until nBands).map(b => bandKeyExpr(b, rowsPerBand)): _*)).as("band_key"))
       .filter(col("band_key").isNotNull && col("doc_id").isNotNull)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.ColFns._
 import graft.functions.VectorExprs.{cosineFast, vecDot, vecNorm}
@@ -21,6 +21,19 @@ object Sim {
   private val dDot = (a: String, b: String) =>
     s"list_inner_product($a::DOUBLE[], $b::DOUBLE[])"
 
+  /** One row per vector component (vec_id, 1-based pos, v) — the first
+    * CTE of both bucket preludes. */
+  private def unnestedSql: String =
+    """unnested AS (
+      |  SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
+      |         unnest(embedding::DOUBLE[]) AS v
+      |  FROM embeddings)""".stripMargin
+
+  /** CTE `name`: every embedding row with its `bkt` code. */
+  private def bktJoinSql(name: String): String =
+    s"""$name AS (SELECT embeddings.vec_id, embedding, bkt
+       |      FROM embeddings JOIN bkt ON embeddings.vec_id = bkt.vec_id)""".stripMargin
+
   /** Bucket CTEs for the PRODUCTION density-scaled geometry twins
     * (e11/e12): the oracle SQL is a static string and can't know the
     * corpus size, so it recomputes [[planesFor]] itself —
@@ -31,10 +44,7 @@ object Sim {
     * `length(bin(m))` equals `64 − numberOfLeadingZeros(m)` for m ≥ 1,
     * so both engines pick the SAME plane count for the same corpus. */
   private val dynBkt =
-    """unnested AS (
-      |  SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-      |         unnest(embedding::DOUBLE[]) AS v
-      |  FROM embeddings),
+    s"""$unnestedSql,
       |par AS (SELECT LEAST(62, GREATEST(8,
       |          CASE WHEN cells <= 1 THEN 0 ELSE length(bin(cells - 1)) END)) AS p
       |        FROM (SELECT GREATEST(1, COUNT(*) // 64) AS cells FROM embeddings)),
@@ -46,8 +56,25 @@ object Sim {
       |bkt AS (SELECT vec_id,
       |          CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS bkt
       |        FROM psums GROUP BY vec_id),
-      |e AS (SELECT embeddings.vec_id, embedding, bkt
-      |      FROM embeddings JOIN bkt ON embeddings.vec_id = bkt.vec_id)""".stripMargin
+      |${bktJoinSql("e")}""".stripMargin
+
+  /** Bucket CTEs for the ORACLE-PINNED static geometry (e04/e05/e06/e10/
+    * e14/e18): the twin of [[graft.functions.PlaneBucketCode]] at 8
+    * planes — `unnested`, one `sums` row per vector with its s0..s7
+    * plane sums, and `bkt` (AS MATERIALIZED when `materialized`), then
+    * the [[bktJoinSql]] CTE named `join` unless it is empty. */
+  private def staticBkt(join: String = "", materialized: Boolean = false): String = {
+    val sums = (0 until 8).map(j =>
+      s"  SUM(v * ((((pos - 1) * 37 + $j * 101) % 19) - 9)) AS s$j").mkString(",\n")
+    val code = (0 until 8).map(j => s"(CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
+    val mat = if (materialized) "MATERIALIZED " else ""
+    s"""$unnestedSql,
+       |sums AS (SELECT vec_id,
+       |$sums
+       |FROM unnested GROUP BY vec_id),
+       |bkt AS ${mat}(SELECT vec_id, CAST($code AS BIGINT) AS bkt FROM sums)""".stripMargin +
+      (if (join.isEmpty) "" else ",\n" + bktJoinSql(join))
+  }
 
   /** Micro-unit (1e-6) quantization of a float-derived value:
     * round-half-away built from explicit IEEE primitives (double
@@ -113,7 +140,7 @@ object Sim {
 
   /** DataFrame-in variant of [[kmeansSeedModel]] (shared with
     * CurationPipeline's cluster-balanced selection). */
-  def kmeansSeedModelDf(e0: org.apache.spark.sql.DataFrame): Seq[(Int, Array[Float])] = {
+  def kmeansSeedModelDf(e0: DataFrame): Seq[(Int, Array[Float])] = {
     val centRows = e0.filter(col("embedding").isNotNull)
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "vf")))
       .filter(col("vf").isNotNull)
@@ -188,129 +215,73 @@ object Sim {
     math.min(62, math.max(8, (64 - java.lang.Long.numberOfLeadingZeros(cells - 1)).toInt))
   }
 
-  /** PRODUCTION KNN join: e06's shape with a density-chosen plane count
-    * (no DuckDB twin — the oracle pins 8 planes; bucket refinement vs
-    * the 8-plane code is exact and spec-checked, see PlaneBucketSpec).
-    * Recall note: finer buckets trade recall for bounded work exactly
-    * like coarser LSH bands; multi-probe (flipping low-margin bits)
-    * is the standard recall-recovery knob and composes here by
-    * unioning probe codes.
-    */
-  def knnJoinFast(s: org.apache.spark.sql.SparkSession, dir: String,
-      planes: Int, k: Int = 3): org.apache.spark.sql.DataFrame = {
-    // Norms once per ROW, before the self-join: the per-pair hot path
-    // pays ONE array dot instead of three (see [[VectorExprs.vecNorm]] —
-    // bit-identical cosine; pairs grow quadratically with bucket
-    // density, rows don't, and the norm is 8 bytes of shuffle payload).
-    val e = t(s, dir, "embeddings")
-      .withColumn("bkt",
-        graft.functions.PlaneBucketExpr.planeBucketCode(col("embedding"), planes))
+  /** The bucketed cosine self-join behind every hyperplane-bucket pair
+    * query (e05/e06/e10 at the oracle's 8 planes, e11/e12 at
+    * planesFor(n)): per-row bucket code and norm, a self-join on `bkt`,
+    * and the rounded cosine of every same-bucket pair (a, b) with
+    * `keep(a, b)` — never all-pairs. Norms are computed once per ROW,
+    * before the join: the per-pair hot path pays ONE array dot instead
+    * of three (bit-identical cosine — see [[VectorExprs.vecNorm]];
+    * pairs grow quadratically with bucket density, rows don't).
+    * `spread` repartitions the rows on `bkt` first, so both join sides
+    * share one exchange (a ReusedExchange, plan-guarded for e06/e11/e12
+    * in PlanPropertiesSpec) and the pair work runs bucket-parallel even
+    * when the scan is one task; e05 and the e10 index build join
+    * straight off the scan, which the sf0.1 Dev profile favours for
+    * them (BENCH_NOTES 2026-10-18). Output (a, b, cos_sim). */
+  private def bucketCosPairs(e: DataFrame, planes: Int, a: String, b: String,
+      keep: (Column, Column) => Column, spread: Boolean): DataFrame = {
+    val coded = e
+      .withColumn("bkt", graft.functions.PlaneBucketExpr.planeBucketCode(col("embedding"), planes))
       .withColumn("nrm", vecNorm(col("embedding")))
-      .repartition(col("bkt"))
-    val a = e.select(col("bkt"), col("vec_id"), col("embedding"), col("nrm"))
-    val b = e.select(col("bkt"), col("vec_id").as("nbr_id"),
-      col("embedding").as("ne"), col("nrm").as("nnrm"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("cos_sim").desc, col("nbr_id").asc)
-    a.join(b, Seq("bkt"))
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .withColumn("cos_sim",
-        round(vecDot(col("embedding"), col("ne")) / (col("nrm") * col("nnrm")), 4))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("vec_id"), col("nbr_id"), col("cos_sim"), col("rk"))
+    val x = if (spread) coded.repartition(col("bkt")) else coded
+    x.select(col("bkt"), col("vec_id").as(a), col("embedding").as("ea"), col("nrm").as("na"))
+      .join(x.select(col("bkt"), col("vec_id").as(b), col("embedding").as("eb"),
+        col("nrm").as("nb")), Seq("bkt"))
+      .filter(keep(col(a), col(b)))
+      .select(col(a), col(b),
+        round(vecDot(col("ea"), col("eb")) / (col("na") * col("nb")), 4).as("cos_sim"))
   }
 
-  /** OR-amplified KNN join — the recall knob. Single-probe bucketing
-    * (knnJoinFast) has gap-dependent recall: on organic uniform
-    * embeddings, measured recall@3 at sf0.1 is only ~7% with one
-    * 8-plane family (true neighbors are barely closer than random, so
-    * they rarely share all 8 sign bits). The standard LSH AND-OR
-    * construction fixes this: L independent 8-plane families (computed
-    * as ONE 8L-plane pass, bit-sliced — planes are independent by
-    * construction), candidates = union over families of same-bucket
-    * pairs, then exact-cosine rank. Measured recall@3 at sf0.1 (300
-    * query sample vs brute-force truth): 0.07/0.11/0.18/
-    * 0.23 for L=1/2/4/7 — families correlate through the shared
-    * embedding, so gains are sub-independent but monotone. Work stays
-    * linear in L (one explode + one (family, code) shuffle), never
-    * all-pairs.
-    */
-  def knnJoinOr(s: org.apache.spark.sql.SparkSession, dir: String,
-      families: Int = 4, planesPerFamily: Int = 8, k: Int = 3): org.apache.spark.sql.DataFrame = {
-    val total = families * planesPerFamily
-    require(total <= 62, s"families*planesPerFamily must be <= 62, got $total")
-    val mask = (1L << planesPerFamily) - 1
-    val e = t(s, dir, "embeddings").withColumn("code",
-      graft.functions.PlaneBucketExpr.planeBucketCode(col("embedding"), total))
-    // per-row norms before the self-join — see knnJoinFast
-    val withFam = e.select(col("vec_id"), col("embedding"),
-      vecNorm(col("embedding")).as("nrm"),
-      explode(array((0 until families).map(f =>
-        concat_ws(":", lit(f),
-          shiftrightunsigned(col("code"), f * planesPerFamily)
-            .bitwiseAND(lit(mask)))): _*)).as("fc"))
-      .repartition(col("fc"))
-    val a = withFam.select(col("fc"), col("vec_id"), col("embedding"), col("nrm"))
-    val b = withFam.select(col("fc"), col("vec_id").as("nbr_id"),
-      col("embedding").as("ne"), col("nrm").as("nnrm"))
+  /** PRODUCTION KNN join: top-`k` neighbors of every vector inside its
+    * `planes`-plane bucket, ranked by rounded cosine with an nbr_id
+    * tie-break. planes = 8 IS the oracle-pinned e06 gate; e12 runs the
+    * density-chosen planesFor(n) (bucket refinement vs the 8-plane
+    * code is exact and spec-checked, see PlaneBucketSpec). Recall
+    * note: finer buckets trade recall for bounded work exactly like
+    * coarser LSH bands. */
+  def knnJoinFast(s: org.apache.spark.sql.SparkSession, dir: String,
+      planes: Int, k: Int = 3): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id")).orderBy(col("cos_sim").desc, col("nbr_id").asc)
-    a.join(b, Seq("fc"))
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .select(col("vec_id"), col("nbr_id"), col("embedding"), col("ne"),
-        col("nrm"), col("nnrm"))
-      .dropDuplicates("vec_id", "nbr_id")
-      .withColumn("cos_sim",
-        round(vecDot(col("embedding"), col("ne")) / (col("nrm") * col("nnrm")), 4))
+    bucketCosPairs(t(s, dir, "embeddings"), planes, "vec_id", "nbr_id", _ =!= _, spread = true)
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
-      .select(col("vec_id"), col("nbr_id"), col("cos_sim"), col("rk"))
   }
 
-  /** PRODUCTION near-dup pairs: e05's shape with a density-chosen plane
-    * count — the same geometry rule as [[knnJoinFast]] (planes ≈
-    * log2(n/targetBucket) keeps the in-bucket pair work constant as the
-    * corpus grows; the oracle-pinned 8-plane gate query is the
-    * planes=8 special case, spec-asserted equal). Feed the pairs to
+  /** PRODUCTION near-dup pairs: every same-bucket pair at rounded
+    * cosine ≥ `threshold`. planes = 8 returns the oracle-pinned e05
+    * gate's rows (spec-asserted equal; the gate joins without the
+    * spread); the density rule of [[knnJoinFast]] (planes ≈
+    * log2(n/targetBucket)) keeps the in-bucket pair work constant as
+    * the corpus grows. Feed the pairs to
     * [[graft.operators.ConnectedComponents]] for SemDeDup clustering
     * (e10's shape) at any scale. */
   def nearDupPairs(s: org.apache.spark.sql.SparkSession, dir: String,
-      planes: Int, threshold: Double = 0.2): org.apache.spark.sql.DataFrame = {
-    // per-row norms before the self-join — see knnJoinFast
-    val e = t(s, dir, "embeddings")
-      .withColumn("bkt",
-        graft.functions.PlaneBucketExpr.planeBucketCode(col("embedding"), planes))
-      .withColumn("nrm", vecNorm(col("embedding")))
-      .repartition(col("bkt"))
-    val a = e.select(col("bkt"), col("vec_id").as("vec_id_a"),
-      col("embedding").as("ea"), col("nrm").as("na"))
-    val b = e.select(col("bkt"), col("vec_id").as("vec_id_b"),
-      col("embedding").as("eb"), col("nrm").as("nb"))
-    a.join(b, Seq("bkt"))
-      .filter(col("vec_id_a") < col("vec_id_b"))
-      .withColumn("cos_sim",
-        round(vecDot(col("ea"), col("eb")) / (col("na") * col("nb")), 4))
+      planes: Int, threshold: Double = 0.2): DataFrame =
+    bucketCosPairs(t(s, dir, "embeddings"), planes, "vec_id_a", "vec_id_b", _ < _, spread = true)
       .filter(col("cos_sim") >= threshold)
-      .select(col("vec_id_a"), col("vec_id_b"), col("cos_sim"))
-  }
 
-  /** IVF ANN with a TRAINED coarse quantizer: cells come from
-    * [[kmeansIterate]] (instead of e03/e07's label-seeded means), rows
-    * are assigned by the codegen'd [[graft.functions.KMeansArgMin]],
-    * and the query probes its `nprobe` nearest cells exactly like a
-    * production IVF index. The model is driver-resident (K×dim) at any
-    * corpus size; the scan stays scan-parallel; only the probed cells'
-    * rows pay the exact cosine. Spec (RecallSpec) pins equivalence to
-    * brute force restricted to the probed cells — the IVF contract —
-    * plus a recall floor vs global truth. */
-  def ivfSearchTrained(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queryVecId: Long = 0L,
-      k: Int = 5,
-      nprobe: Int = 2,
-      trainIters: Int = 3): org.apache.spark.sql.DataFrame = {
+  /** The trained-IVF probe shared by [[ivfSearchTrained]] and
+    * [[ivfPqSearch]]: cells come from [[kmeansIterate]] (instead of
+    * e03/e07's label-seeded means), every non-null row is tagged with
+    * its codegen'd [[graft.functions.KMeansArgMin]] cell, and the
+    * query's `nprobe` nearest cells are scored on the driver with the
+    * assignment expression's c·c − 2·q·c ordering and tie rule.
+    * Returns (non-null corpus, cell-tagged corpus, probed cells). */
+  private def trainedProbes(s: org.apache.spark.sql.SparkSession, dir: String,
+      queryVecId: Long, nprobe: Int, trainIters: Int,
+      caller: String): (DataFrame, DataFrame, Seq[Int]) = {
     val (model, _) = kmeansIterate(s, dir, trainIters)
     val e = t(s, dir, "embeddings").filter(col("embedding").isNotNull)
     val cells = e.withColumn("cell",
@@ -318,21 +289,48 @@ object Sim {
     val qRows = cells.filter(col("vec_id") === queryVecId)
       .select(col("embedding")).collect()
     require(qRows.nonEmpty,
-      s"ivfSearchTrained: query vec_id=$queryVecId not present (or null embedding) in $dir/embeddings")
+      s"$caller: query vec_id=$queryVecId not present (or null embedding) in $dir/embeddings")
     val qv = qRows.head.getSeq[Float](0).toArray
-    // nprobe nearest cells, scored on the driver: same c·c − 2·q·c
-    // ordering and tie rule as the assignment expression
     val probes = model.map { case (l, c) =>
       val cc = c.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)
       val dot = c.zip(qv).foldLeft(0.0) { case (a, (x, y)) => a + x.toDouble * y.toDouble }
       (l, cc - 2.0 * dot)
     }.sortBy { case (l, sc) => (sc, l) }.take(nprobe).map(_._1)
-    val q = cells.filter(col("vec_id") === queryVecId).select(col("embedding").as("qe"))
-    cells.filter(col("cell").isin(probes: _*))
-      .filter(col("vec_id") =!= queryVecId)
-      .crossJoin(broadcast(q))
+    (e, cells, probes)
+  }
+
+  /** The exact refine step of every ANN path: each row's rounded cosine
+    * to the one-row broadcast query `q` (its vector as `qe`, plus any
+    * other query columns a caller filters on). */
+  private def queryCos(rows: DataFrame, q: DataFrame): DataFrame =
+    rows.crossJoin(broadcast(q))
       .withColumn("cos_sim", round(cosineFast(col("embedding"), col("qe")), 4))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc).limit(k)
+
+  /** Top-`k` of [[queryCos]]'s rows: rounded cosine desc, vec_id asc
+    * (e02's rounded-rank discipline — sub-ulp drift between engines
+    * cannot flip membership). */
+  private def topByCos(scored: DataFrame, k: Int): DataFrame =
+    scored.orderBy(col("cos_sim").desc, col("vec_id").asc).limit(k)
+
+  /** IVF ANN with a TRAINED coarse quantizer ([[trainedProbes]]): the
+    * query probes its `nprobe` nearest cells exactly like a production
+    * IVF index. The model is driver-resident (K×dim) at any corpus
+    * size; the scan stays scan-parallel; only the probed cells' rows
+    * pay the exact cosine. Spec (RecallSpec) pins equivalence to brute
+    * force restricted to the probed cells — the IVF contract — plus a
+    * recall floor vs global truth. */
+  def ivfSearchTrained(
+      s: org.apache.spark.sql.SparkSession,
+      dir: String,
+      queryVecId: Long = 0L,
+      k: Int = 5,
+      nprobe: Int = 2,
+      trainIters: Int = 3): DataFrame = {
+    val (_, cells, probes) =
+      trainedProbes(s, dir, queryVecId, nprobe, trainIters, "ivfSearchTrained")
+    val q = cells.filter(col("vec_id") === queryVecId).select(col("embedding").as("qe"))
+    topByCos(queryCos(cells.filter(col("cell").isin(probes: _*))
+      .filter(col("vec_id") =!= queryVecId), q), k)
       .select(col("cell"), col("vec_id"), col("cos_sim"))
   }
 
@@ -340,7 +338,7 @@ object Sim {
     * BEFORE its /1e6 narrowing, so every downstream subspace distance
     * is pure long arithmetic. Shared by the e15 gate and
     * [[ivfPqSearch]]. */
-  private[queries] def pqCodebookDf(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private[queries] def pqCodebookDf(e: DataFrame): DataFrame =
     e.select(col("label"), posexplode(col("embedding")).as(Seq("pos", "vf")))
       .filter(col("vf").isNotNull)
       .select(col("label"), col("pos"), microQ(col("vf")).as("m"))
@@ -349,31 +347,39 @@ object Sim {
       .select(col("label"), col("pos"), halfAwayDiv(col("sm"), col("n")).as("cm"))
 
   /** Integer subspace distances (vec_id, sub, label, d2) of every
-    * vector in `vecs` to every codebook centroid: ONE vec_id spread
-    * (whole arrays, pre-explode), broadcast codebook join, map-side
+    * vector in `vecs` to every codebook centroid: the [[microSubs]]
+    * stream (ONE vec_id spread), broadcast codebook join, map-side
     * partial agg — every downstream aggregation is keyed on a vec_id
     * prefix, so nothing re-shuffles after the spread. */
-  private[queries] def pqD2Df(vecs: org.apache.spark.sql.DataFrame,
-      cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    vecs.repartition(col("vec_id"))
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "vf")))
-      .filter(col("vf").isNotNull)
-      .select(col("vec_id"), col("pos"), expr("pos DIV 8").as("sub"),
-        microQ(col("vf")).as("m"))
+  private[queries] def pqD2Df(vecs: DataFrame, cent: DataFrame): DataFrame =
+    microSubs(vecs)
       .join(broadcast(cent), Seq("pos"))
       .groupBy(col("vec_id"), col("sub"), col("label"))
       .agg(sum((col("m") - col("cm")) * (col("m") - col("cm"))).as("d2"))
 
-  /** PQ codes: argmin centroid per (vector, subspace), ties → smaller
-    * label; exact integer comparison, map-side-combinable min(struct). */
-  private[queries] def pqCodesDf(d2: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    d2.groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("d2"), col("label"))).as("best"))
-      .select(col("vec_id"), col("sub"), col("best").getField("label").as("code"))
+  /** The argmin step of every PQ encode: per `keys` group (default one
+    * (vector, subspace)), the `id` with the smallest `dist`, ties → the
+    * smaller id, emitted as `as`; exact integer comparison,
+    * map-side-combinable min(struct). */
+  private def argminCode(d: DataFrame, id: String, as: String,
+      keys: Seq[String] = Seq("vec_id", "sub"), dist: String = "d2"): DataFrame =
+    d.groupBy(keys.map(col): _*)
+      .agg(min(struct(col(dist), col(id))).as("best"))
+      .select(keys.map(col) :+ col("best").getField(id).as(as): _*)
+
+  /** The ADC tail every PQ variant shares: each corpus code row (the
+    * query's own excluded) joins the query's broadcast distance table
+    * `qdt` on `keys`, the per-subspace `qd2`s sum into an integer `adc`,
+    * and the 20 smallest survive (adc asc, vec_id asc). */
+  private def adcTop20(codes: DataFrame, qdt: DataFrame, keys: Seq[String],
+      queryVecId: Long): DataFrame =
+    codes.filter(col("vec_id") =!= queryVecId)
+      .join(broadcast(qdt), keys)
+      .groupBy(col("vec_id")).agg(sum(col("qd2")).as("adc"))
+      .orderBy(col("adc").asc, col("vec_id").asc).limit(20)
 
   /** PRODUCTION IVF-PQ search — the composition the e15 Scaladoc
-    * promises: a trained coarse quantizer ([[kmeansIterate]] cells,
-    * codegen'd [[graft.functions.KMeansArgMin]] assignment) prunes the
+    * promises: a trained coarse quantizer ([[trainedProbes]]) prunes the
     * scan to the query's `nprobe` nearest cells, and ONLY those cells'
     * vectors pay the PQ pipeline (integer subspace distances → codes →
     * additive distance-table ranking) before the exact-cosine re-rank
@@ -388,39 +394,17 @@ object Sim {
       queryVecId: Long = 0L,
       k: Int = 5,
       nprobe: Int = 2,
-      trainIters: Int = 3): org.apache.spark.sql.DataFrame = {
-    val (model, _) = kmeansIterate(s, dir, trainIters)
-    val e = t(s, dir, "embeddings").filter(col("embedding").isNotNull)
-    val cells = e.withColumn("cell",
-      graft.functions.KMeansExprs.assignCluster(col("embedding"), model))
-    val qRows = cells.filter(col("vec_id") === queryVecId)
-      .select(col("embedding")).collect()
-    require(qRows.nonEmpty,
-      s"ivfPqSearch: query vec_id=$queryVecId not present (or null embedding) in $dir/embeddings")
-    val qv = qRows.head.getSeq[Float](0).toArray
-    // nprobe nearest cells, scored on the driver: same c·c − 2·q·c
-    // ordering and tie rule as the assignment expression
-    val probes = model.map { case (l, c) =>
-      val cc = c.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)
-      val dot = c.zip(qv).foldLeft(0.0) { case (a, (x, y)) => a + x.toDouble * y.toDouble }
-      (l, cc - 2.0 * dot)
-    }.sortBy { case (l, sc) => (sc, l) }.take(nprobe).map(_._1)
+      trainIters: Int = 3): DataFrame = {
+    val (e, cells, probes) =
+      trainedProbes(s, dir, queryVecId, nprobe, trainIters, "ivfPqSearch")
     val probed = cells
       .filter(col("cell").isin(probes: _*) || col("vec_id") === queryVecId)
       .select(col("vec_id"), col("embedding"))
     val d2 = pqD2Df(probed, pqCodebookDf(e))
-    val codes = pqCodesDf(d2)
     val qdt = d2.filter(col("vec_id") === queryVecId)
       .select(col("sub"), col("label").as("code"), col("d2").as("qd2"))
-    val cand = codes.filter(col("vec_id") =!= queryVecId)
-      .join(broadcast(qdt), Seq("sub", "code"))
-      .groupBy(col("vec_id")).agg(sum(col("qd2")).as("adc"))
-      .orderBy(col("adc").asc, col("vec_id").asc).limit(20)
-    val q = e.filter(col("vec_id") === queryVecId).select(col("embedding").as("qe"))
-    cand.join(e, Seq("vec_id")).crossJoin(broadcast(q))
-      .withColumn("cos_sim", round(cosineFast(col("embedding"), col("qe")), 4))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc).limit(k)
-      .select(col("vec_id"), col("adc"), col("cos_sim"))
+    pqRerank(e, adcTop20(argminCode(d2, "label", "code"), qdt, Seq("sub", "code"), queryVecId),
+      queryVecId, k)
   }
 
   /** Shared batch≡stream body of e14 semantic decontamination: keep the
@@ -435,10 +419,10 @@ object Sim {
     * The equi-bucket conjunct keys the broadcast hash join; the cosine
     * test rides as the join filter, paid only on bucket collisions. */
   def semanticDecontamKeepDf(
-      tgt: org.apache.spark.sql.DataFrame,
-      ref: org.apache.spark.sql.DataFrame,
+      tgt: DataFrame,
+      ref: DataFrame,
       threshold: Double = 0.2,
-      planes: Int = 8): org.apache.spark.sql.DataFrame = {
+      planes: Int = 8): DataFrame = {
     // planes = 8 is the oracle-pinned gate geometry; a deployment scales
     // it with planesFor(n) (the e11 density rule) — more planes → fewer
     // bucket collisions → monotonically FEWER drops (kept-set refinement,
@@ -466,7 +450,7 @@ object Sim {
     * vector to its nearest seed centroid, keep each cluster's `quota`
     * most-central vectors. Output (cluster, vec_id, score, rk) — the
     * shape the e09 oracle pins. */
-  def clusterSampleDf(e0: org.apache.spark.sql.DataFrame, quota: Int = 20): org.apache.spark.sql.DataFrame = {
+  def clusterSampleDf(e0: DataFrame, quota: Int = 20): DataFrame = {
     val e = e0.filter(col("embedding").isNotNull)
     val model = kmeansSeedModelDf(e0)
     // ONE fused model loop emits (cluster, score) together
@@ -491,7 +475,7 @@ object Sim {
     * e13 gate's stats pass, collected (dim-sized, like a k-means model).
     * One map-side-combinable aggregation; a real deployment trains this
     * once on a sample and stores it beside the codes table. */
-  def sqStats(e0: org.apache.spark.sql.DataFrame): (Array[Long], Array[Long]) = {
+  def sqStats(e0: DataFrame): (Array[Long], Array[Long]) = {
     val rows = e0.filter(col("embedding").isNotNull)
       .select(posexplode(col("embedding")).as(Seq("pos", "vf")))
       .filter(col("vf").isNotNull)
@@ -506,8 +490,7 @@ object Sim {
     * smaller than float32, computed in one scan-parallel pass. This is
     * what an SQ deployment scans; the e13 gate keeps the long format
     * because the DuckDB oracle has no byte-array kernel. */
-  def sqCodesDf(e0: org.apache.spark.sql.DataFrame,
-      lo: Array[Long], hi: Array[Long]): org.apache.spark.sql.DataFrame =
+  def sqCodesDf(e0: DataFrame, lo: Array[Long], hi: Array[Long]): DataFrame =
     e0.filter(col("embedding").isNotNull)
       .select(col("vec_id"),
         graft.functions.SqExprs.sqEncode(col("embedding"), lo, hi).as("codes"))
@@ -520,7 +503,7 @@ object Sim {
     * gate. Only the dim-sized stats and the one query row ever reach
     * the driver. */
   def sqSearch(s: org.apache.spark.sql.SparkSession, dir: String,
-      queryVecId: Long = 0L, k: Int = 5, overfetch: Int = 20): org.apache.spark.sql.DataFrame = {
+      queryVecId: Long = 0L, k: Int = 5, overfetch: Int = 20): DataFrame = {
     val e = t(s, dir, "embeddings").filter(col("embedding").isNotNull)
     val (lo, hi) = sqStats(e)
     val codes = sqCodesDf(e, lo, hi)
@@ -532,19 +515,14 @@ object Sim {
       .select(col("vec_id"),
         graft.functions.SqExprs.sqAdc(col("codes"), qCodes).as("adc"))
       .orderBy(col("adc").desc, col("vec_id").asc).limit(overfetch)
-    val q = e.filter(col("vec_id") === queryVecId).select(col("embedding").as("qe"))
-    cand.join(e, Seq("vec_id")).crossJoin(broadcast(q))
-      .withColumn("cos_sim", round(cosineFast(col("embedding"), col("qe")), 4))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc).limit(k)
-      .select(col("vec_id"), col("adc"), col("cos_sim"))
+    pqRerank(e, cand, queryVecId, k)
   }
 
   /** e02's exact brute-force ranking: top-k by rounded cosine against
     * the vec_id-0 anchor, vec_id tie-break (the rounded-ordering
     * discipline — see the e02 gate note). Shared by e02 and the e18
     * recall report. */
-  private[graft] def exactTopKDf(e: org.apache.spark.sql.DataFrame,
-      k: Int): org.apache.spark.sql.DataFrame = {
+  private[graft] def exactTopKDf(e: DataFrame, k: Int): DataFrame = {
     // query self-norm once in the broadcast row, not once per scanned
     // row: 3 array dots/row → 2 (bit-identical — VectorExprs.vecNorm)
     val q = e.filter(col("vec_id") === 0)
@@ -561,8 +539,7 @@ object Sim {
   /** e04's hyperplane-LSH ranking: exact cosine top-k INSIDE the
     * anchor's bucket (8 static planes, codegen'd PlaneBucketCode).
     * Shared by e04 and the e18 recall report. */
-  private[graft] def lshTopKDf(e: org.apache.spark.sql.DataFrame,
-      k: Int): org.apache.spark.sql.DataFrame = {
+  private[graft] def lshTopKDf(e: DataFrame, k: Int): DataFrame = {
     val b = e.withColumn("bkt",
       graft.functions.PlaneBucketExpr.planeBucketCode(col("embedding")))
     // query self-norm once in the broadcast row — see exactTopKDf
@@ -578,25 +555,29 @@ object Sim {
       .select(col("vec_id"), col("cos_sim"))
   }
 
-  /** e03's IVF ranking: per-label centroid coarse quantizer, probe the
-    * best cell, exact cosine top-k inside it. Shared by e03 and the
-    * e18 recall report. */
-  private[graft] def ivfTopKDf(e: org.apache.spark.sql.DataFrame,
-      k: Int): org.apache.spark.sql.DataFrame = {
+  /** The label-centroid IVF ranking of e03/e07/e22 (and the e18
+    * report): per-label mean centroids as the coarse quantizer, the
+    * `nprobe` cells whose centroid best matches the vec_id-0 anchor
+    * (dot desc, label asc), exact cosine top-k across those cells'
+    * rows that pass `allowed` (e22's metadata pre-filter, a plain
+    * semi-join on vec_id). e03 probes one cell on the raw dot; the
+    * multi-probe gates rank on the 6-dp ROUNDED dot (`roundDot`) so
+    * the 2nd/3rd-cell boundary is cross-engine stable. */
+  private[graft] def ivfTopKDf(e: DataFrame, k: Int, nprobe: Int = 1,
+      roundDot: Boolean = false, allowed: Option[DataFrame] = None): DataFrame = {
     val qd = e.filter(col("vec_id") === 0)
       .select(posexplode(asDoubles(col("embedding")))).toDF("pos", "qv")
     val cent = e.select(col("label"), posexplode(asDoubles(col("embedding"))))
       .toDF("label", "pos", "v")
       .groupBy(col("label"), col("pos")).agg(avg(col("v")).as("c"))
+    val dot = sum(col("c") * col("qv"))
     val best = cent.join(broadcast(qd), Seq("pos"))
-      .groupBy(col("label")).agg(sum(col("c") * col("qv")).as("dot"))
-      .orderBy(col("dot").desc, col("label").asc).limit(1)
+      .groupBy(col("label")).agg((if (roundDot) round(dot, 6) else dot).as("dot"))
+      .orderBy(col("dot").desc, col("label").asc).limit(nprobe)
       .select(col("label"))
+    val probed = e.join(broadcast(best), Seq("label")).filter(col("vec_id") > 0)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-    e.join(broadcast(best), Seq("label")).filter(col("vec_id") > 0)
-      .crossJoin(broadcast(q))
-      .withColumn("cos_sim", round(cosineFast(col("embedding"), col("qe")), 4))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc).limit(k)
+    topByCos(queryCos(allowed.fold(probed)(probed.join(_, Seq("vec_id"), "left_semi")), q), k)
       .select(col("label"), col("vec_id"), col("cos_sim"))
   }
 
@@ -609,7 +590,7 @@ object Sim {
   // rewriting corpus files mid-session requires [[invalidateIndexCaches]],
   // which drops every kind at once and releases its checkpoint blocks.
   private type Plan = org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-  private type DfPair = (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)
+  private type DfPair = (DataFrame, DataFrame)
 
   /** PLAIN PQ (e15): codebook literal + checkpointed corpus code table. */
   private val pqModelCache = new graft.SessionCache[Plan, DfPair](m => releaseCheckpoint(m._2))
@@ -622,7 +603,7 @@ object Sim {
     * every consumer (dedup keep-lists, cluster stats, the e10 gate's
     * rep join) serves from the checkpointed narrow leaf. */
   private val semDedupCache =
-    new graft.SessionCache[Plan, org.apache.spark.sql.DataFrame](releaseCheckpoint)
+    new graft.SessionCache[Plan, DataFrame](releaseCheckpoint)
 
   /** 4-bit PQ (e20) and OPQ (e21, keyed by the ROTATED frame's plan, so
     * both indexes of one corpus coexist): codebook literal + packed,
@@ -631,16 +612,15 @@ object Sim {
 
   /** RESIDUAL PQ (e19): coarse codebook literal, residual codebook
     * literal, checkpointed per-vector (cell, sub, code) code table. */
-  private val residualModelCache = new graft.SessionCache[Plan,
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
-    m => releaseCheckpoint(m._3))
+  private val residualModelCache =
+    new graft.SessionCache[Plan, (DataFrame, DataFrame, DataFrame)](m => releaseCheckpoint(m._3))
 
   private val indexCaches: Seq[graft.SessionCache[Plan, _]] =
     Seq(pqModelCache, semDedupCache, pq4ModelCache, residualModelCache)
 
   /** `cache`'s entry for corpus `e` in `e`'s session, built on a miss. */
   private def trained[V](cache: graft.SessionCache[Plan, V],
-      e: org.apache.spark.sql.DataFrame)(build: => V): V =
+      e: DataFrame)(build: => V): V =
     cache.getOrBuild(e.sparkSession, e.queryExecution.analyzed.canonicalized)(build)
 
   /** Drop every cached trained index (all kinds, all sessions) and
@@ -662,20 +642,10 @@ object Sim {
     * afterwards — serving a dedup lookup must not re-cluster the
     * corpus, exactly as serving a PQ lookup must not retrain the
     * codebook. */
-  private[graft] def semDedupIndex(e0: org.apache.spark.sql.DataFrame):
-      org.apache.spark.sql.DataFrame =
+  private[graft] def semDedupIndex(e0: DataFrame): DataFrame =
     trained(semDedupCache, e0) {
-      // per-row norms before the self-join — see knnJoinFast
-      val e = e0.withColumn("bkt",
-        graft.functions.PlaneBucketExpr.planeBucketCode(col("embedding")))
-        .withColumn("nrm", vecNorm(col("embedding")))
-      val a = e.select(col("bkt"), col("vec_id").as("u"),
-        col("embedding").as("ea"), col("nrm").as("na"))
-      val b = e.select(col("bkt"), col("vec_id").as("v"),
-        col("embedding").as("eb"), col("nrm").as("nb"))
-      val edges = a.join(b, Seq("bkt"))
-        .filter(col("u") < col("v"))
-        .filter(round(vecDot(col("ea"), col("eb")) / (col("na") * col("nb")), 4) >= 0.2)
+      val edges = bucketCosPairs(e0, 8, "u", "v", _ < _, spread = false)
+        .filter(col("cos_sim") >= 0.2)
         .select(col("u"), col("v"))
       // components() returns a localCheckpoint-backed frame (both the
       // local-fast-path and distributed-loop branches) — cacheable
@@ -690,7 +660,7 @@ object Sim {
     * until the ContextCleaner's GC-driven sweep gets to them. The
     * checkpointed RDD sits behind the LogicalRDD leaf the checkpoint
     * returned. */
-  private def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+  private def releaseCheckpoint(df: DataFrame): Unit =
     try {
       df.queryExecution.analyzed.collectLeaves().foreach {
         case lr: org.apache.spark.sql.execution.LogicalRDD =>
@@ -706,14 +676,13 @@ object Sim {
       case scala.util.control.NonFatal(_) => ()
     }
 
-  private def pqModel(e: org.apache.spark.sql.DataFrame):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+  private def pqModel(e: DataFrame): DfPair =
     trained(pqModelCache, e) {
       val cent = localModel(pqCodebookDf(e))
       // the code table is THE index: corpus-sized but 3 narrow longs
       // per (vector, subspace); checkpointed so queries consume a
       // leaf instead of re-running the K-way distance fan-out
-      val codes = pqCodesDf(pqD2Df(e, cent)).localCheckpoint()
+      val codes = argminCode(pqD2Df(e, cent), "label", "code").localCheckpoint()
       (cent, codes)
     }
 
@@ -724,22 +693,20 @@ object Sim {
     * the query's own distance table (one vector × codebook — a
     * broadcast-sized row set) is computed per call, exactly how a
     * served PQ index answers a lookup. */
-  private[graft] def pqAdcCandidates(e: org.apache.spark.sql.DataFrame,
-      queryVecId: Long = 0L): org.apache.spark.sql.DataFrame = {
+  private[graft] def pqAdcCandidates(e: DataFrame,
+      queryVecId: Long = 0L): DataFrame = {
     val (cent, codes) = pqModel(e)
     // the query's distance table from its single row — integer-identical
     // to filtering the full d2 at vec_id = query (same per-row math)
     val qdt = pqD2Df(e.filter(col("vec_id") === queryVecId), cent)
       .select(col("sub"), col("label").as("code"), col("d2").as("qd2"))
-    codes.filter(col("vec_id") =!= queryVecId)
-      .join(broadcast(qdt), Seq("sub", "code"))
-      .groupBy(col("vec_id")).agg(sum(col("qd2")).as("adc"))
-      .orderBy(col("adc").asc, col("vec_id").asc).limit(20)
+    adcTop20(codes, qdt, Seq("sub", "code"), queryVecId)
   }
 
-  /** The corpus micro-unit subspace stream (vec_id, pos, sub, m) —
-    * shared by the 4-bit chain's train/encode/serve steps. */
-  private def microSubs(vecs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  /** The corpus micro-unit subspace stream (vec_id, pos, sub, m) after
+    * ONE vec_id spread of the whole arrays — the input of [[pqD2Df]] and
+    * of the 4-bit chain's train/encode/serve steps. */
+  private def microSubs(vecs: DataFrame): DataFrame =
     vecs.repartition(col("vec_id"))
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "vf")))
       .filter(col("vf").isNotNull)
@@ -771,25 +738,19 @@ object Sim {
     * (session, corpus plan) and serves many lookups; the packed code
     * table is checkpointed so a serve consumes a leaf. Bench reports
     * the one-off training cost in its `train` field. */
-  private[graft] def pq4Model(e: org.apache.spark.sql.DataFrame):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+  private[graft] def pq4Model(e: DataFrame): DfPair =
     trained(pq4ModelCache, e) {
-      val (cw, packed) = pq4Train(e)
+      val (cw, packed) = pq4TrainOn(microSubs(e), e)
       (cw, packed.localCheckpoint())
     }
-
-  private def pq4Train(e: org.apache.spark.sql.DataFrame):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    pq4TrainOn(microSubs(e), e)
 
   /** The 4-bit train body over an ARBITRARY micro-unit subspace stream
     * `m` (vec_id, pos, sub, m) — shared by e20 (raw components) and e21
     * (OPQ-rotated components); `eligible` supplies the seed id universe
     * (must match the stream's vector set, or the 16 lowest seeds could
     * name vectors the stream doesn't carry). */
-  private def pq4TrainOn(m: org.apache.spark.sql.DataFrame,
-      eligible: org.apache.spark.sql.DataFrame):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def pq4TrainOn(m: DataFrame,
+      eligible: DataFrame): DfPair = {
     // deterministic seeds: the 16 lowest eligible vec_ids, c = rank-1
     val seeds = localModel(eligible.select(col("vec_id")).orderBy(col("vec_id").asc).limit(16)
       .select(col("vec_id"),
@@ -799,99 +760,44 @@ object Sim {
       .select(col("c"), col("sub"), col("pos"), col("m").as("w")))
     // one refinement round: per-(vec, sub) argmin over the seed
     // codewords, then per-(c, sub, pos) rounded mean of the members
-    val a2 = m.join(broadcast(cw0), Seq("sub", "pos"))
-      .groupBy(col("vec_id"), col("sub"), col("c"))
-      .agg(sum((col("m") - col("w")) * (col("m") - col("w"))).as("d2"))
-    val asn = a2.groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("d2"), col("c"))).as("best"))
-      .select(col("vec_id"), col("sub"), col("best").getField("c").as("c"))
+    val asn = argminCode(pq4D2(m, cw0), "c", "c")
     val cw = localModel(m.join(asn, Seq("vec_id", "sub"))
       .groupBy(col("c"), col("sub"), col("pos"))
       .agg(sum(col("m")).as("sm"), count(lit(1)).as("n"))
       .select(col("c"), col("sub"), col("pos"), halfAwayDiv(col("sm"), col("n")).as("w")))
-    (cw, pq4EncodeOn(m, cw))
-  }
-
-  /** The 4-bit ENCODE body: per-(vec, sub) argmin over the codebook,
-    * nibble-packed with the validity mask — the train tail, and ALSO
-    * the index-APPEND path ([[pq4EncodeWith]]): new corpus vectors are
-    * encoded against a stored codebook without retraining. */
-  private def pq4EncodeOn(m: org.apache.spark.sql.DataFrame,
-      cw: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val d24 = m.join(broadcast(cw), Seq("sub", "pos"))
-      .groupBy(col("vec_id"), col("sub"), col("c"))
-      .agg(sum((col("m") - col("w")) * (col("m") - col("w"))).as("d2"))
-    val codes4 = d24.groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("d2"), col("c"))).as("best"))
-      .select(col("vec_id"), col("sub"), col("best").getField("c").as("code"))
-    codes4
+    // ENCODE: per-(vec, sub) argmin over the trained codebook,
+    // nibble-packed with the validity mask
+    val packed = argminCode(pq4D2(m, cw), "c", "code")
       .groupBy(col("vec_id"), expr("sub DIV 2").as("b"))
       .agg(sum(col("code") * when(col("sub") % 2 === 1, 16L).otherwise(1L)).as("packed"),
         sum(when(col("sub") % 2 === 1, 2L).otherwise(1L)).as("mask"))
+    (cw, packed)
   }
+
+  /** Integer subspace distances (vec_id, sub, c, d2) of a micro-unit
+    * subspace stream `m` to every codeword of a broadcast 4-bit
+    * codebook `cw` (c, sub, pos, w). */
+  private def pq4D2(m: DataFrame, cw: DataFrame): DataFrame =
+    m.join(broadcast(cw), Seq("sub", "pos"))
+      .groupBy(col("vec_id"), col("sub"), col("c"))
+      .agg(sum((col("m") - col("w")) * (col("m") - col("w"))).as("d2"))
 
   /** e20's ADC candidates: UNPACK the nibble code table (mask-guarded,
     * so missing subspaces never fabricate a code), join the query's
     * 8×16 distance table, additive rank, top-20. */
-  private[graft] def pq4AdcCandidates(e: org.apache.spark.sql.DataFrame,
-      queryVecId: Long = 0L): org.apache.spark.sql.DataFrame = {
+  private[graft] def pq4AdcCandidates(e: DataFrame,
+      queryVecId: Long = 0L): DataFrame = {
     val (cw, packed) = pq4Model(e)
     pq4Serve(cw, packed, microSubs(e.filter(col("vec_id") === queryVecId)), queryVecId)
-  }
-
-  // ---------- stored-index lifecycle: persist / reload / append ----------
-  // The session caches above model "train once, serve many WITHIN a
-  // session"; a real deployment also stores the trained index BESIDE the
-  // corpus and serves it across sessions/processes. The stored format is
-  // exactly the model pair the caches hold: the 16×sub×pos codebook and
-  // the packed nibble code table (4 bytes + mask per 64-dim vector).
-
-  /** Persist the trained 4-bit PQ index for corpus `e` under `indexDir`
-    * (training it first if this session hasn't): `codebook.parquet`
-    * (c, sub, pos, w) + `codes.parquet` (vec_id, b, packed, mask). */
-  def savePq4Index(e: org.apache.spark.sql.DataFrame, indexDir: String): Unit = {
-    val (cw, packed) = pq4Model(e)
-    cw.write.mode("overwrite").parquet(s"$indexDir/codebook.parquet")
-    packed.write.mode("overwrite").parquet(s"$indexDir/codes.parquet")
-  }
-
-  /** Load a stored 4-bit index as its (codebook, packed codes) pair —
-    * both plain parquet scans; nothing retrains or re-encodes. */
-  def loadPq4Index(spark: org.apache.spark.sql.SparkSession, indexDir: String):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    (spark.read.parquet(s"$indexDir/codebook.parquet"),
-     spark.read.parquet(s"$indexDir/codes.parquet"))
-
-  /** ADC candidates served from a STORED index: `query` carries the
-    * query vector(s) as (vec_id, embedding) rows; only the query side
-    * touches the codebook (an 8×16 distance-table broadcast), the code
-    * table is a parquet scan — the cross-session serve path. Emits the
-    * same (vec_id, adc) frame as [[pq4AdcCandidates]]. */
-  def pq4CandidatesFromIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, query: org.apache.spark.sql.DataFrame,
-      queryVecId: Long = 0L): org.apache.spark.sql.DataFrame = {
-    val (cw, packed) = loadPq4Index(spark, indexDir)
-    pq4Serve(cw, packed, microSubs(query.filter(col("vec_id") === queryVecId)), queryVecId)
-  }
-
-  /** Index APPEND: encode `newVecs` against the STORED codebook (no
-    * retrain — the standard PQ ingest path; codebook drift is handled
-    * by periodic retrains, not per-batch ones) and add their packed
-    * rows to `codes.parquet`. The caller owns id-uniqueness. */
-  def appendPq4Index(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      newVecs: org.apache.spark.sql.DataFrame): Unit = {
-    val cw = spark.read.parquet(s"$indexDir/codebook.parquet")
-    pq4EncodeOn(microSubs(newVecs), cw)
-      .write.mode("append").parquet(s"$indexDir/codes.parquet")
   }
 
   /** The 4-bit SERVE body over a trained (codebook, packed-code-table)
     * pair and the QUERY's own micro-unit subspace stream — shared by
     * e20 and e21 (whose query stream is OPQ-rotated like its index). */
-  private def pq4Serve(cw: org.apache.spark.sql.DataFrame,
-      packed: org.apache.spark.sql.DataFrame,
-      qsubs: org.apache.spark.sql.DataFrame,
-      queryVecId: Long): org.apache.spark.sql.DataFrame = {
+  private def pq4Serve(cw: DataFrame,
+      packed: DataFrame,
+      qsubs: DataFrame,
+      queryVecId: Long): DataFrame = {
     val unp = packed.select(col("vec_id"), explode(array(
         struct((col("b") * 2).as("sub"), (col("packed") % 16).as("code"),
           (col("mask") % 2 === 1).as("ok")),
@@ -899,15 +805,8 @@ object Sim {
           (col("mask") >= 2).as("ok")))).as("u"))
       .filter(col("u.ok"))
       .select(col("vec_id"), col("u.sub").as("sub"), col("u.code").as("code"))
-    val qdt = qsubs
-      .join(broadcast(cw), Seq("sub", "pos"))
-      .groupBy(col("sub"), col("c"))
-      .agg(sum((col("m") - col("w")) * (col("m") - col("w"))).as("qd2"))
-      .select(col("sub"), col("c").as("code"), col("qd2"))
-    unp.filter(col("vec_id") =!= queryVecId)
-      .join(broadcast(qdt), Seq("sub", "code"))
-      .groupBy(col("vec_id")).agg(sum(col("qd2")).as("adc"))
-      .orderBy(col("adc").asc, col("vec_id").asc).limit(20)
+    val qdt = pq4D2(qsubs, cw).select(col("sub"), col("c").as("code"), col("d2").as("qd2"))
+    adcTop20(unp, qdt, Seq("sub", "code"), queryVecId)
   }
 
   /** e21's rotation-eligible frame: (vec_id, rm) where rm is the
@@ -917,7 +816,7 @@ object Sim {
     * poisons the whole rotated vector — the null-vector gate's
     * "unscoreable vectors are excluded" rule). The vec_id spread is the
     * family's ONE corpus repartition. */
-  private def opq4Frame(vecs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private def opq4Frame(vecs: DataFrame): DataFrame =
     vecs.repartition(col("vec_id"))
       .select(col("vec_id"),
         graft.functions.OpqExprs.opqRotateMicro(col("embedding")).as("rm"))
@@ -926,7 +825,7 @@ object Sim {
   /** The rotated micro-unit subspace stream (vec_id, pos, sub, m) —
     * e21's analogue of [[microSubs]]; positions are 0-based like
     * posexplode's, matching the twin's 0-based rotated prelude. */
-  private def opq4Subs(rf: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private def opq4Subs(rf: DataFrame): DataFrame =
     rf.select(col("vec_id"), posexplode(col("rm")).as(Seq("pos", "m")))
       .select(col("vec_id"), col("pos"), expr("pos DIV 8").as("sub"), col("m"))
 
@@ -935,8 +834,7 @@ object Sim {
     * plan — structurally distinct from e20's raw-corpus key (it
     * contains the rotation expression), so the two indexes of the same
     * corpus coexist; [[invalidateIndexCaches]] drops both. */
-  private[graft] def opq4Model(e: org.apache.spark.sql.DataFrame):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private[graft] def opq4Model(e: DataFrame): DfPair = {
     val rf = opq4Frame(e)
     trained(pq4ModelCache, rf) {
       val (cw, packed) = pq4TrainOn(opq4Subs(rf), rf)
@@ -947,22 +845,19 @@ object Sim {
   /** e21's ADC candidates: the e20 serve body over the rotated index,
     * with the query's distance table built from its ROTATED subspace
     * stream (index and query must live in the same rotated space). */
-  private[graft] def opq4AdcCandidates(e: org.apache.spark.sql.DataFrame,
-      queryVecId: Long = 0L): org.apache.spark.sql.DataFrame = {
+  private[graft] def opq4AdcCandidates(e: DataFrame,
+      queryVecId: Long = 0L): DataFrame = {
     val (cw, packed) = opq4Model(e)
     pq4Serve(cw, packed,
       opq4Subs(opq4Frame(e.filter(col("vec_id") === queryVecId))), queryVecId)
   }
 
   /** Exact-cosine re-rank of a bounded (vec_id, adc) candidate set —
-    * the final stage every PQ variant shares. */
-  private[graft] def pqRerank(e: org.apache.spark.sql.DataFrame,
-      cand: org.apache.spark.sql.DataFrame, queryVecId: Long,
-      k: Int): org.apache.spark.sql.DataFrame = {
+    * the final stage every quantized variant (SQ and all PQs) shares. */
+  private[graft] def pqRerank(e: DataFrame, cand: DataFrame, queryVecId: Long,
+      k: Int): DataFrame = {
     val q = e.filter(col("vec_id") === queryVecId).select(col("embedding").as("qe"))
-    cand.join(e, Seq("vec_id")).crossJoin(broadcast(q))
-      .withColumn("cos_sim", round(cosineFast(col("embedding"), col("qe")), 4))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc).limit(k)
+    topByCos(queryCos(cand.join(e, Seq("vec_id")), q), k)
       .select(col("vec_id"), col("adc"), col("cos_sim"))
   }
 
@@ -976,7 +871,7 @@ object Sim {
     * planning per action at sf0.1. A literal cuts the lineage at the
     * model boundary; the collect is bounded by the model size at any
     * corpus scale. */
-  private def localModel(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private def localModel(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(df.collect(): _*), df.schema)
 
@@ -989,8 +884,8 @@ object Sim {
     * e19 serve re-run the corpus explode + two joins + a K-way argmin
     * (~0.9 s/lookup at sf0.1 vs ~0.4 for plain PQ, whose codes were
     * already cached). See [[pqResidualAdcCandidates]] for the shapes. */
-  private def residualModel(e: org.apache.spark.sql.DataFrame):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+  private def residualModel(e: DataFrame):
+      (DataFrame, DataFrame, DataFrame) =
     trained(residualModelCache, e) {
       // the codebook literal (see localModel): cent feeds three
       // branches and rcm two — as live subtrees they made driver
@@ -1005,11 +900,8 @@ object Sim {
       // reference re-plans and re-runs the d2 aggregation;
       // checkpointed, it is computed once and the optimizer sees a
       // leaf. Corpus-sized but narrow (two longs per vector).
-      val cells = d2.groupBy(col("vec_id"), col("label"))
-        .agg(sum(col("d2")).as("cd2"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("cd2"), col("label"))).as("best"))
-        .select(col("vec_id"), col("best").getField("label").as("cell"))
+      val cells = argminCode(d2.groupBy(col("vec_id"), col("label"))
+        .agg(sum(col("d2")).as("cd2")), "label", "cell", Seq("vec_id"), "cd2")
         .localCheckpoint()
       val mt = e.repartition(col("vec_id"))
         .select(col("vec_id"), col("label").as("vlabel"),
@@ -1034,7 +926,7 @@ object Sim {
       val rd2 = resT.join(broadcast(rcm), Seq("pos"))
         .groupBy(col("vec_id"), col("sub"), col("label"))
         .agg(sum((col("rm") - col("rcm")) * (col("rm") - col("rcm"))).as("d2"))
-      val codes = pqCodesDf(rd2).join(cells, Seq("vec_id")).localCheckpoint()
+      val codes = argminCode(rd2, "label", "code").join(cells, Seq("vec_id")).localCheckpoint()
       // cells only feeds training; its blocks are dead once codes is
       // materialized
       releaseCheckpoint(cells)
@@ -1059,8 +951,8 @@ object Sim {
     * gate scores all cells (oracle coverage); the production path
     * composes the same chain under an nprobe cell filter exactly as
     * [[ivfPqSearch]] does for plain PQ. */
-  private[graft] def pqResidualAdcCandidates(e: org.apache.spark.sql.DataFrame,
-      queryVecId: Long = 0L): org.apache.spark.sql.DataFrame = {
+  private[graft] def pqResidualAdcCandidates(e: DataFrame,
+      queryVecId: Long = 0L): DataFrame = {
     val (cent, rcm, codes) = residualModel(e)
     // SERVING path: only the query's own residual work happens per
     // lookup — one row explodes to its micro-units, gets a residual
@@ -1080,10 +972,7 @@ object Sim {
       .groupBy(col("cell"), col("sub"), col("label"))
       .agg(sum((col("qrm") - col("rcm")) * (col("qrm") - col("rcm"))).as("qd2"))
       .select(col("cell"), col("sub"), col("label").as("code"), col("qd2"))
-    codes.filter(col("vec_id") =!= queryVecId)
-      .join(broadcast(qdt), Seq("cell", "sub", "code"))
-      .groupBy(col("vec_id")).agg(sum(col("qd2")).as("adc"))
-      .orderBy(col("adc").asc, col("vec_id").asc).limit(20)
+    adcTop20(codes, qdt, Seq("cell", "sub", "code"), queryVecId)
   }
 
   /** Shared oracle-CTE text of the PQ family twins (e15/e18/e19): micro-
@@ -1318,24 +1207,7 @@ object Sim {
     // never with corpus size. Cell ranking uses the ROUNDED centroid
     // dot (6 dp) so the 2nd/3rd-cell boundary is cross-engine stable.
     Q("e07_ann_ivf_probe2",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val qd = e.filter(col("vec_id") === 0)
-          .select(posexplode(asDoubles(col("embedding")))).toDF("pos", "qv")
-        val cent = e.select(col("label"), posexplode(asDoubles(col("embedding"))))
-          .toDF("label", "pos", "v")
-          .groupBy(col("label"), col("pos")).agg(avg(col("v")).as("c"))
-        val best = cent.join(broadcast(qd), Seq("pos"))
-          .groupBy(col("label")).agg(round(sum(col("c") * col("qv")), 6).as("dot"))
-          .orderBy(col("dot").desc, col("label").asc).limit(2)
-          .select(col("label"))
-        val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-        e.join(broadcast(best), Seq("label")).filter(col("vec_id") > 0)
-          .crossJoin(broadcast(q))
-          .withColumn("cos_sim", round(cosineFast(col("embedding"), col("qe")), 4))
-          .orderBy(col("cos_sim").desc, col("vec_id").asc).limit(5)
-          .select(col("label"), col("vec_id"), col("cos_sim"))
-      },
+      (s, dir) => ivfTopKDf(t(s, dir, "embeddings"), 5, nprobe = 2, roundDot = true),
       Some(s"""WITH qd AS (
               |  SELECT generate_subscripts(embedding, 1) AS pos, unnest(embedding::DOUBLE[]) AS qv
               |  FROM embeddings WHERE vec_id = 0),
@@ -1371,18 +1243,7 @@ object Sim {
       // spec-checked bit-identical in PlaneBucketSpec. Shared
       // [[lshTopKDf]] body, reused by e18.
       (s, dir) => lshTopKDf(t(s, dir, "embeddings"), 5),
-      Some {
-        val sums = (0 until 8).map(j =>
-          s"  SUM(v * ((((pos - 1) * 37 + $j * 101) % 19) - 9)) AS s$j").mkString(",\n")
-        val code = (0 until 8).map(j => s"(CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
-        s"""WITH unnested AS (
-           |  SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-           |         unnest(embedding::DOUBLE[]) AS v
-           |  FROM embeddings),
-           |sums AS (SELECT vec_id,
-           |$sums
-           |FROM unnested GROUP BY vec_id),
-           |bkt AS (SELECT vec_id, CAST($code AS BIGINT) AS bkt FROM sums),
+      Some(s"""WITH ${staticBkt()},
            |q AS (SELECT bkt.bkt AS qbkt, embedding AS qe
            |      FROM embeddings JOIN bkt USING (vec_id) WHERE vec_id = 0)
            |SELECT e.vec_id,
@@ -1390,8 +1251,7 @@ object Sim {
            |    (sqrt(${dDot("e.embedding", "e.embedding")}) * sqrt(${dDot("q.qe", "q.qe")})), 4) AS cos_sim
            |FROM embeddings e JOIN bkt ON e.vec_id = bkt.vec_id, q
            |WHERE e.vec_id > 0 AND bkt.bkt = q.qbkt
-           |ORDER BY cos_sim DESC, e.vec_id ASC LIMIT 5""".stripMargin
-      },
+           |ORDER BY cos_sim DESC, e.vec_id ASC LIMIT 5""".stripMargin),
       "random-hyperplane LSH-bucketed ANN (north-star: similarity)"),
 
     // Embedding near-dup pairs (threshold form): hyperplane buckets from
@@ -1403,87 +1263,27 @@ object Sim {
     // planeBucketCode(embedding, planesFor(n)) to keep in-bucket work
     // constant (BENCH_NOTES sf10 section).
     Q("e05_embed_neardup",
-      (s, dir) => {
-        // per-row norms before the self-join (one array dot per pair
-        // instead of three, bit-identical — see VectorExprs.vecNorm)
-        val e = t(s, dir, "embeddings")
-          .withColumn("bkt", graft.functions.PlaneBucketExpr.planeBucketCode(col("embedding")))
-          .withColumn("nrm", vecNorm(col("embedding")))
-        val a = e.select(col("bkt"), col("vec_id").as("vec_id_a"),
-          col("embedding").as("ea"), col("nrm").as("na"))
-        val b = e.select(col("bkt"), col("vec_id").as("vec_id_b"),
-          col("embedding").as("eb"), col("nrm").as("nb"))
-        a.join(b, Seq("bkt"))
-          .filter(col("vec_id_a") < col("vec_id_b"))
-          .withColumn("cos_sim",
-            round(vecDot(col("ea"), col("eb")) / (col("na") * col("nb")), 4))
-          .filter(col("cos_sim") >= 0.2)
-          .select(col("vec_id_a"), col("vec_id_b"), col("cos_sim"))
-      },
-      Some {
-        val sums = (0 until 8).map(j =>
-          s"  SUM(v * ((((pos - 1) * 37 + $j * 101) % 19) - 9)) AS s$j").mkString(",\n")
-        val code = (0 until 8).map(j => s"(CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
-        s"""WITH unnested AS (
-           |  SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-           |         unnest(embedding::DOUBLE[]) AS v
-           |  FROM embeddings),
-           |sums AS (SELECT vec_id,
-           |$sums
-           |FROM unnested GROUP BY vec_id),
-           |bkt AS (SELECT vec_id, CAST($code AS BIGINT) AS bkt FROM sums),
-           |e AS (SELECT embeddings.vec_id, embedding, bkt
-           |      FROM embeddings JOIN bkt ON embeddings.vec_id = bkt.vec_id)
+      (s, dir) => bucketCosPairs(t(s, dir, "embeddings"), 8, "vec_id_a", "vec_id_b", _ < _,
+        spread = false).filter(col("cos_sim") >= 0.2),
+      Some(s"""WITH ${staticBkt("e")}
            |SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
            |  ROUND(${dDot("a.embedding", "b.embedding")} /
            |    (sqrt(${dDot("a.embedding", "a.embedding")}) * sqrt(${dDot("b.embedding", "b.embedding")})), 4) AS cos_sim
            |FROM e a JOIN e b ON a.bkt = b.bkt AND a.vec_id < b.vec_id
            |WHERE ROUND(${dDot("a.embedding", "b.embedding")} /
-           |    (sqrt(${dDot("a.embedding", "a.embedding")}) * sqrt(${dDot("b.embedding", "b.embedding")})), 4) >= 0.2""".stripMargin
-      },
+           |    (sqrt(${dDot("a.embedding", "a.embedding")}) * sqrt(${dDot("b.embedding", "b.embedding")})), 4) >= 0.2""".stripMargin),
       "embedding near-dup pairs via hyperplane buckets (north-star: dedup)"),
 
     // KNN JOIN: top-3 nearest neighbors for EVERY vector — the
     // batch-similarity workload behind "find near neighbors for the
     // whole corpus" (semantic dedup, retrieval eval). Candidates come
     // from the hyperplane bucket (e04's per-row map code), so the join
-    // is per-bucket, never all-pairs; one exchange on bkt feeds the
-    // self-join, one on vec_id feeds the rank. Ranking uses the ROUNDED
+    // is per-bucket, never all-pairs (the shared [[bucketCosPairs]]
+    // body, spec-pinned equal to knnJoinFast's). Ranking uses the ROUNDED
     // cosine (with nbr_id tiebreak) so ordering is cross-engine stable.
     Q("e06_knn_join",
-      (s, dir) => {
-        // per-row norms before the self-join — see knnJoinFast
-        val e = t(s, dir, "embeddings")
-          .withColumn("bkt", graft.functions.PlaneBucketExpr.planeBucketCode(col("embedding")))
-          .withColumn("nrm", vecNorm(col("embedding")))
-          .repartition(col("bkt"))
-        val a = e.select(col("bkt"), col("vec_id"), col("embedding"), col("nrm"))
-        val b = e.select(col("bkt"), col("vec_id").as("nbr_id"),
-          col("embedding").as("ne"), col("nrm").as("nnrm"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("cos_sim").desc, col("nbr_id").asc)
-        a.join(b, Seq("bkt"))
-          .filter(col("vec_id") =!= col("nbr_id"))
-          .withColumn("cos_sim",
-            round(vecDot(col("embedding"), col("ne")) / (col("nrm") * col("nnrm")), 4))
-          .withColumn("rk", row_number().over(w).cast("long"))
-          .filter(col("rk") <= 3)
-          .select(col("vec_id"), col("nbr_id"), col("cos_sim"), col("rk"))
-      },
-      Some {
-        val sums = (0 until 8).map(j =>
-          s"  SUM(v * ((((pos - 1) * 37 + $j * 101) % 19) - 9)) AS s$j").mkString(",\n")
-        val code = (0 until 8).map(j => s"(CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
-        s"""WITH unnested AS (
-           |  SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-           |         unnest(embedding::DOUBLE[]) AS v
-           |  FROM embeddings),
-           |sums AS (SELECT vec_id,
-           |$sums
-           |FROM unnested GROUP BY vec_id),
-           |bkt AS (SELECT vec_id, CAST($code AS BIGINT) AS bkt FROM sums),
-           |e AS (SELECT embeddings.vec_id, embedding, bkt
-           |      FROM embeddings JOIN bkt ON embeddings.vec_id = bkt.vec_id),
+      (s, dir) => knnJoinFast(s, dir, 8),
+      Some(s"""WITH ${staticBkt("e")},
            |pairs AS (
            |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
            |    ROUND(${dDot("a.embedding", "b.embedding")} /
@@ -1492,8 +1292,7 @@ object Sim {
            |SELECT vec_id, nbr_id, cos_sim, CAST(rk AS BIGINT) AS rk FROM (
            |  SELECT vec_id, nbr_id, cos_sim,
            |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos_sim DESC, nbr_id ASC) AS rk
-           |  FROM pairs) WHERE rk <= 3""".stripMargin
-      },
+           |  FROM pairs) WHERE rk <= 3""".stripMargin),
       "bucketed KNN join: top-3 neighbors per vector (north-star: similarity)"),
 
     // K-means Lloyd step (north-star: embedding clustering/curation).
@@ -1635,23 +1434,11 @@ object Sim {
             coalesce(col("rep"), col("vec_id")).as("cluster_rep"))
       },
       Some {
-        val sums = (0 until 8).map(j =>
-          s"  SUM(v * ((((pos - 1) * 37 + $j * 101) % 19) - 9)) AS s$j").mkString(",\n")
-        val code = (0 until 8).map(j => s"(CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
         // bounded-iteration CC twin (CcSql) — same replacement as d12:
         // the recursive closure DNF'd the sf10 oracle cap; the unrolled
         // pointer-jumping levels mirror the Spark operator round-for-round
         val (cc, lk) = CcSql.unrolled()
-        s"""WITH unnested AS (
-           |  SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-           |         unnest(embedding::DOUBLE[]) AS v
-           |  FROM embeddings),
-           |sums AS (SELECT vec_id,
-           |$sums
-           |FROM unnested GROUP BY vec_id),
-           |bkt AS (SELECT vec_id, CAST($code AS BIGINT) AS bkt FROM sums),
-           |ee AS (SELECT embeddings.vec_id, embedding, bkt
-           |      FROM embeddings JOIN bkt ON embeddings.vec_id = bkt.vec_id),
+        s"""WITH ${staticBkt("ee")},
            |pairs AS MATERIALIZED (
            |  SELECT a.vec_id AS u, b.vec_id AS v
            |  FROM ee a JOIN ee b ON a.bkt = b.bkt AND a.vec_id < b.vec_id
@@ -1738,11 +1525,7 @@ object Sim {
           .join(broadcast(qv), Seq("pos"))
           .groupBy(col("vec_id")).agg(sum(col("q") * col("qq")).as("adc"))
           .orderBy(col("adc").desc, col("vec_id").asc).limit(20)
-        val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-        cand.join(e, Seq("vec_id")).crossJoin(broadcast(q))
-          .withColumn("cos_sim", round(cosineFast(col("embedding"), col("qe")), 4))
-          .orderBy(col("cos_sim").desc, col("vec_id").asc).limit(5)
-          .select(col("vec_id"), col("adc"), col("cos_sim"))
+        pqRerank(e, cand, 0L, 5)
       },
       Some(s"""WITH u AS (
               |  SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
@@ -1917,27 +1700,9 @@ object Sim {
     // discipline: cell ranking on round(dot, 6) tie-break label; final
     // rank on round(cos, 4) tie-break vec_id (cross-engine stable).
     Q("e22_filtered_ann",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val qd = e.filter(col("vec_id") === 0)
-          .select(posexplode(asDoubles(col("embedding")))).toDF("pos", "qv")
-        val cent = e.select(col("label"), posexplode(asDoubles(col("embedding"))))
-          .toDF("label", "pos", "v")
-          .groupBy(col("label"), col("pos")).agg(avg(col("v")).as("c"))
-        val best = cent.join(broadcast(qd), Seq("pos"))
-          .groupBy(col("label")).agg(round(sum(col("c") * col("qv")), 6).as("dot"))
-          .orderBy(col("dot").desc, col("label").asc).limit(2)
-          .select(col("label"))
-        val allowed = t(s, dir, "documents")
-          .filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
-        val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-        e.join(broadcast(best), Seq("label")).filter(col("vec_id") > 0)
-          .join(allowed, Seq("vec_id"), "left_semi")
-          .crossJoin(broadcast(q))
-          .withColumn("cos_sim", round(cosineFast(col("embedding"), col("qe")), 4))
-          .orderBy(col("cos_sim").desc, col("vec_id").asc).limit(5)
-          .select(col("label"), col("vec_id"), col("cos_sim"))
-      },
+      (s, dir) => ivfTopKDf(t(s, dir, "embeddings"), 5, nprobe = 2, roundDot = true,
+        allowed = Some(t(s, dir, "documents")
+          .filter(col("lang") === "en").select(col("doc_id").as("vec_id")))),
       Some(s"""WITH qd AS (
               |  SELECT generate_subscripts(embedding, 1) AS pos, unnest(embedding::DOUBLE[]) AS qv
               |  FROM embeddings WHERE vec_id = 0),
@@ -1978,8 +1743,7 @@ object Sim {
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-        e.filter(col("vec_id") > 0).crossJoin(broadcast(q))
-          .withColumn("cos_sim", round(cosineFast(col("embedding"), col("qe")), 4))
+        queryCos(e.filter(col("vec_id") > 0), q)
           .filter(col("cos_sim") >= 0.25)
           .select(col("vec_id"), col("label"), col("cos_sim"))
       },
@@ -2019,20 +1783,7 @@ object Sim {
           e.filter(isRef(col("vec_id"))))
           .select(col("vec_id"), col("label").cast("long").as("label"))
       },
-      Some {
-        val sums = (0 until 8).map(j =>
-          s"  SUM(v * ((((pos - 1) * 37 + $j * 101) % 19) - 9)) AS s$j").mkString(",\n")
-        val code = (0 until 8).map(j => s"(CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
-        s"""WITH unnested AS (
-           |  SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-           |         unnest(embedding::DOUBLE[]) AS v
-           |  FROM embeddings),
-           |sums AS (SELECT vec_id,
-           |$sums
-           |FROM unnested GROUP BY vec_id),
-           |bkt AS (SELECT vec_id, CAST($code AS BIGINT) AS bkt FROM sums),
-           |e AS (SELECT embeddings.vec_id, embedding, bkt
-           |      FROM embeddings JOIN bkt ON embeddings.vec_id = bkt.vec_id),
+      Some(s"""WITH ${staticBkt("e")},
            |contaminated AS (
            |  SELECT DISTINCT tg.vec_id
            |  FROM e tg JOIN e r ON tg.bkt = r.bkt
@@ -2041,8 +1792,7 @@ object Sim {
            |    (sqrt(${dDot("tg.embedding", "tg.embedding")}) * sqrt(${dDot("r.embedding", "r.embedding")})), 4) >= 0.2)
            |SELECT vec_id, CAST(label AS BIGINT) AS label FROM embeddings
            |WHERE vec_id % 10 <> 0
-           |  AND vec_id NOT IN (SELECT vec_id FROM contaminated)""".stripMargin
-      },
+           |  AND vec_id NOT IN (SELECT vec_id FROM contaminated)""".stripMargin),
       "semantic decontamination: fuzzy-drop targets near the eval snapshot in embedding space (north-star: curation)"),
 
     // Multimodal-column metadata gate: opaque bytes + byte-level
@@ -2324,11 +2074,7 @@ object Sim {
           !exists(col("embedding"), _.isNull))
         val q = e.filter(col("vec_id") === 0)
           .select(col("embedding").as("qe"), col("label").as("ql"))
-        e.filter(col("vec_id") > 0).crossJoin(broadcast(q))
-          .filter(col("label") =!= col("ql"))
-          .withColumn("cos_sim", round(cosineFast(col("embedding"), col("qe")), 4))
-          .orderBy(col("cos_sim").desc, col("vec_id").asc)
-          .limit(10)
+        topByCos(queryCos(e.filter(col("vec_id") > 0), q).filter(col("label") =!= col("ql")), 10)
           .select(col("vec_id"), col("label").cast("long").as("label"), col("cos_sim"))
       },
       Some(s"""WITH sc AS (SELECT vec_id, label, embedding FROM embeddings
@@ -2367,7 +2113,7 @@ object Sim {
     Q("e18_recall_report",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        def lit10(top: org.apache.spark.sql.DataFrame) =
+        def lit10(top: DataFrame) =
           localModel(top.select(col("vec_id")))
         val e2 = e.filter(col("embedding").isNotNull)
         import scala.concurrent.{blocking, Await, Future}
@@ -2385,7 +2131,7 @@ object Sim {
           Future(blocking(lit10(pqRerank(e2, opq4AdcCandidates(e2), 0L, 10)))))),
           scala.concurrent.duration.Duration.Inf)
         val Seq(exact, ivf, lsh, pq, pqres, pq4, opq4) = collected
-        def row(method: String, top: org.apache.spark.sql.DataFrame) =
+        def row(method: String, top: DataFrame) =
           top.join(exact, Seq("vec_id"))
             .agg(count(lit(1)).as("hits"))
             .select(lit(method).as("method"), col("hits"),
@@ -2398,9 +2144,6 @@ object Sim {
           .unionByName(row("opq4", opq4))
       },
       Some {
-        val sums = (0 until 8).map(j =>
-          s"  SUM(v * ((((pos - 1) * 37 + $j * 101) % 19) - 9)) AS s$j").mkString(",\n")
-        val code = (0 until 8).map(j => s"(CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
         val cos = (a: String) => s"ROUND(${dDot(a, "q0.qe")} /" +
           s" (sqrt(${dDot(a, a)}) * sqrt(${dDot("q0.qe", "q0.qe")})), 4)"
         // Report tail shape matters for the sf10 capacity protocol: a
@@ -2417,14 +2160,7 @@ object Sim {
            |exact10 AS MATERIALIZED (
            |  SELECT vec_id FROM embeddings e, q0 WHERE vec_id > 0
            |  ORDER BY ${cos("e.embedding")} DESC, vec_id ASC LIMIT 10),
-           |unnested AS (
-           |  SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-           |         unnest(embedding::DOUBLE[]) AS v
-           |  FROM embeddings),
-           |sums AS (SELECT vec_id,
-           |$sums
-           |FROM unnested GROUP BY vec_id),
-           |bkt AS MATERIALIZED (SELECT vec_id, CAST($code AS BIGINT) AS bkt FROM sums),
+           |${staticBkt(materialized = true)},
            |qb AS (SELECT bkt FROM bkt WHERE vec_id = 0),
            |lsh10 AS (
            |  SELECT e.vec_id FROM embeddings e JOIN bkt ON e.vec_id = bkt.vec_id, qb, q0

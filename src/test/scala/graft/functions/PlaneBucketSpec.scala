@@ -84,22 +84,4 @@ class PlaneBucketSpec extends SparkSpec {
     val finer = pairs(graft.queries.Sim.nearDupPairs(spark, dir, planes = 12))
     assert(finer.subsetOf(fast), "finer buckets must never ADD pairs")
   }
-
-  test("knnJoinOr with one family == single-probe knnJoinFast") {
-    val dir = "/root/testdata/sf0.001"
-    def asSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    val one = asSet(graft.queries.Sim.knnJoinOr(spark, dir, families = 1))
-    val fast = asSet(graft.queries.Sim.knnJoinFast(spark, dir, planes = 8))
-    assert(one === fast)
-    // more families can only ADD candidates: top-1 cosine per vector
-    // is monotonically non-decreasing
-    import spark.implicits._
-    val best1 = graft.queries.Sim.knnJoinOr(spark, dir, families = 1)
-      .filter(col("rk") === 1).select(col("vec_id"), col("cos_sim").as("c1"))
-    val best4 = graft.queries.Sim.knnJoinOr(spark, dir, families = 4)
-      .filter(col("rk") === 1).select(col("vec_id"), col("cos_sim").as("c4"))
-    val joined = best1.join(best4, "vec_id")
-    assert(joined.filter(col("c4") < col("c1")).count() === 0)
-  }
 }

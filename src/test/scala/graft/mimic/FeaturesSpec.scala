@@ -40,6 +40,20 @@ class FeaturesSpec extends SparkSpec {
     // itemid 702: single UOM → untouched (null valuenum row already dropped)
     assert(cleaned.filter(col("itemid") === 702).count() ===
       chart.filter(col("itemid") === 702).count())
+
+    // null-UOM rules on in-memory (itemid, valueuom) rows
+    import spark.implicits._
+    def kept(rows: Seq[(Long, String)], cut: Double): Seq[Option[String]] =
+      Features.dropWrongUom(rows.toDF("itemid", "valueuom"), cut)
+        .collect().map(r => Option(r.getString(1))).toSeq.sorted
+    // 97/99 'mg' > 0.95 with two UOMs: the 'mL' row AND the null-UOM row drop
+    val above = Seq.fill(97)((1L, "mg")) ++ Seq((1L, "mL"), (1L, null: String))
+    assert(kept(above, 0.95) === Seq.fill(97)(Some("mg")))
+    // every UOM null: no majority to enforce, every row is kept
+    assert(kept(Seq.fill(3)((2L, null: String)), 0.95) === Seq.fill(3)(None))
+    // count tie (2 'b' vs 2 'a', share 0.5 > 0.4): the ascending UOM wins
+    val tie = Seq((3L, "b"), (3L, "b"), (3L, "a"), (3L, "a"))
+    assert(kept(tie, 0.4) === Seq(Some("a"), Some("a")))
   }
 
   test("outlierImputation impute=true clips to [p_low, p_high] band") {

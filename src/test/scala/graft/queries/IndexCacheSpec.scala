@@ -96,49 +96,4 @@ class IndexCacheSpec extends SparkSpec {
     assert(b(13L) === 0L, "retrained index must cluster the NEW twin with vec 0")
     assert(b(7L) !== 0L, "the old twin is far from vec 0 in the rewritten corpus")
   }
-
-  test("stored index: save → load → serve is bit-identical to the in-session serve") {
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-idxstore").toString
-    val idx = Files.createTempDirectory("graft-idxstore-idx").toString
-    writeCorpus(dir, twin = 7L)
-    Sim.invalidateIndexCaches()
-    val e = Registry.t(spark, dir, "embeddings")
-    Sim.savePq4Index(e, idx)
-    val inSession = Sim.pq4AdcCandidates(e).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fromStore = Sim.pq4CandidatesFromIndex(spark, idx,
-        e.select(col("vec_id"), col("embedding"))).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(fromStore === inSession,
-      "stored-index serve diverges from the session-cache serve")
-    // the stored format is the model pair itself
-    val (cw, codes) = Sim.loadPq4Index(spark, idx)
-    assert(cw.columns.sorted === Array("c", "pos", "sub", "w"))
-    assert(codes.columns.sorted === Array("b", "mask", "packed", "vec_id"))
-  }
-
-  test("index append: new vectors encode against the stored codebook, no retrain") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-idxapp").toString
-    val idx = Files.createTempDirectory("graft-idxapp-idx").toString
-    writeCorpus(dir, twin = 7L)
-    Sim.invalidateIndexCaches()
-    val e = Registry.t(spark, dir, "embeddings")
-    Sim.savePq4Index(e, idx)
-    // a NEW vector identical to the query arrives after the index is built
-    val twin2 = Seq((99L, Array.fill(16)(0.9f), 1L)).toDF("vec_id", "embedding", "label")
-    Sim.appendPq4Index(spark, idx, twin2)
-    val q = e.filter(col("vec_id") === 0L).select(col("vec_id"), col("embedding"))
-    val ranked = Sim.pq4CandidatesFromIndex(spark, idx, q).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    // the appended twin must carry the SAME ADC distance as the original
-    // twin (identical vector, same codebook, no retrain happened)
-    val byId = ranked.toMap
-    assert(byId.contains(99L), "appended vector missing from the served index")
-    assert(byId(99L) === byId(7L),
-      "appended twin's ADC distance diverges from the original twin's — " +
-        "the append must encode against the STORED codebook")
-  }
 }

@@ -5,9 +5,8 @@ import graft.SparkSpec
 import graft.functions.VectorExprs.cosineFast
 
 /** Pins ANN recall@3 for the production bucketed-KNN paths at a fixed
-  * (corpus, planes, families) grid, so a bucket-geometry regression
-  * (wrong bit-slicing, a dropped probe family, a planesFor clamp
-  * change) FAILS instead of silently
+  * (corpus, planes) grid, so a bucket-geometry regression (wrong
+  * bit-slicing, a planesFor clamp change) FAILS instead of silently
   * eroding neighbor quality. Everything here is deterministic: the query
   * sample is hash-ordered, the hyperplanes are seeded, ground truth is
   * brute force — so thresholds are pinned just under the measured value,
@@ -43,23 +42,14 @@ class RecallSpec extends SparkSpec {
 
   // Measured on this fixed grid (uniform random embeddings, so true
   // neighbors are barely closer than random — absolute recall is LOW by
-  // construction; the sf0.1 sweep in Sim.knnJoinOr's doc shows the same
-  // regime): knnJoinFast(8) = 0.050, knnJoinOr L=2 = 0.139, L=4 = 0.194.
-  // Thresholds sit just under those exact deterministic values — any
-  // drop means the bucket geometry changed, not the data.
+  // construction): knnJoinFast(8) = 0.050. The threshold sits just
+  // under that exact deterministic value — any drop means the bucket
+  // geometry changed, not the data.
 
   test("knnJoinFast single-probe recall@3 at the oracle geometry (8 planes)") {
     val r = recallOf(Sim.knnJoinFast(spark, sfDir, planes = 8))
     info(f"knnJoinFast(8) recall@3 = $r%.3f")
     assert(r >= 0.045, f"single-probe recall@3 regressed: $r%.3f")
-  }
-
-  test("knnJoinOr recall@3 rises monotonically with family count and clears its floor") {
-    val r2 = recallOf(Sim.knnJoinOr(spark, sfDir, families = 2))
-    val r4 = recallOf(Sim.knnJoinOr(spark, sfDir, families = 4))
-    info(f"knnJoinOr recall@3: L=2 $r2%.3f, L=4 $r4%.3f")
-    assert(r4 >= r2, f"OR-amplification not monotone: L=2 $r2%.3f vs L=4 $r4%.3f")
-    assert(r4 >= 0.18, f"L=4 recall@3 regressed: $r4%.3f")
   }
 
   test("ivfSearchTrained: exact top-5 within its probed cells, bounded probe count") {
