@@ -11,8 +11,9 @@ import graft.queries.Docs
   * from the last good stage instead of the raw corpus.
   *
   * Stages (mirroring the oracle-checked d13 flagship, which remains the
-  * cross-engine correctness twin of this code path — equivalence is
-  * spec-asserted in CurationPipelineSpec):
+  * cross-engine correctness twin of this code path: stages 1-3 run
+  * d13's own Docs bodies, and CurationPipelineSpec asserts equivalence
+  * at stage 3 and at the final corpus):
   *
   *   0. `00_stoplist` optional heavy-hitter stoplist of the raw corpus
   *                    (d24's shape, `Config.stopTopK`) — a (term, cnt)
@@ -291,12 +292,7 @@ object CurationPipeline {
       back
     }
 
-    val base = docs
-      .repartition(col("doc_id"))
-      .withColumn("ws", Docs.words(col("text")))
-    val nTok = size(col("ws")).cast("long")
-    val dupFrac = lit(1.0) -
-      size(array_distinct(col("ws"))).cast("double") / nTok.cast("double")
+    val base = Docs.spreadWords(docs)
 
     // stage 0 (optional): observability reports of the RAW corpus —
     // artifacts only, nothing downstream reads them
@@ -336,14 +332,13 @@ object CurationPipeline {
       }) finally release()
     }
 
-    // stage 1: repetition/length gates (+ optional stop-fraction and
-    // surprisal gates) + caller's gate. The surprisal cut is a
+    // stage 1: d13's length/repetition gate (+ optional stop-fraction
+    // and surprisal gates) + caller's gate. The surprisal cut is a
     // semi-join against the d25 scores of the RAW corpus: docs at or
     // under the threshold survive (zero-token docs have no score and
     // are already dead to minTokens).
     val gated = stage("01_gated", customGate {
-      val g0 = base.withColumn("n_tokens", nTok)
-        .filter(col("n_tokens") >= cfg.minTokens && dupFrac <= cfg.maxDupTokenFrac)
+      val g0 = Docs.lengthRepetitionGate(base, cfg.minTokens, cfg.maxDupTokenFrac)
       val g = (cfg.maxStopFrac, stopTerms) match {
         case (Some(maxFrac), Some(terms)) =>
           val stopLit = array(terms.map(lit(_)): _*)
@@ -396,22 +391,12 @@ object CurationPipeline {
       }
     })
 
-    // stage 2: exact dedup — groupBy(hash)→min(id) + doc_id semi-join
-    // back (same shape as d13): the hash exchange ships (md5, doc_id)
-    // fingerprints, never document text.
-    // keeperBySource applies HERE too: a byte-identical cross-source
-    // copy must resolve by the same priority rule as a near-dup one,
-    // or the exact stage would hand the doc to the lower-ranked source
-    // before the near-dup stage ever sees it
-    val keepIds =
-      if (cfg.keeperBySource) gated
-        .select(md5(col("text").cast("binary")).as("_h"),
-          col("source"), col("doc_id"))
-        .groupBy(col("_h"))
-        .agg(min(struct(col("source"), col("doc_id"))).as("k"))
-        .select(col("k.doc_id").as("doc_id"))
-      else Docs.exactKeepIds(gated)
-    val exact = stage("02_exact", gated.join(keepIds, Seq("doc_id"), "left_semi"))
+    // stage 2: d13's exact dedup — the hash exchange ships fingerprints,
+    // never document text. keeperBySource applies HERE too: a
+    // byte-identical cross-source copy must resolve by the same priority
+    // rule as a near-dup one, or the exact stage would hand the doc to
+    // the lower-ranked source before the near-dup stage ever sees it
+    val exact = stage("02_exact", Docs.exactDedup(gated, cfg.keeperBySource))
 
     // stage 3: benchmark decontamination — one stage dir, four engines
     // (Config.decontam); every engine first drops the benchmark docs
@@ -421,28 +406,18 @@ object CurationPipeline {
       else {
         val isBench = (c: Column) => c % cfg.benchMod === 0
         val targets = exact.filter(!isBench(col("doc_id")))
+        val bench = base.filter(isBench(col("doc_id")))
         cfg.decontam match {
           case BloomGrams(fpp) =>
-            val bloom = Docs.benchBloomBytes(
-              Docs.gram5(base.filter(isBench(col("doc_id"))))
-                .select(col("gram")).distinct(),
-              fpp = fpp)
-            Docs.decontamFilterDf(targets, bloom)
-          case ExactGrams =>
-            val benchGrams = Docs.gram5(base.filter(isBench(col("doc_id"))))
-              .select(col("gram")).distinct()
-            val contamIds = Docs.gram5(targets)
-              .join(broadcast(benchGrams), Seq("gram"))
-              .select(col("doc_id")).distinct()
-            targets.join(contamIds, Seq("doc_id"), "left_anti")
+            Docs.decontamFilterDf(targets, Docs.benchBloomBytes(Docs.benchGramSet(bench), fpp = fpp))
+          case ExactGrams => Docs.gramDecontam(targets, bench)
           case NearDup =>
             // one signature pass over survivors ∪ benchmark (the d29
             // union-corpus shape — the benchmark side joins the pass
             // even where gates dropped it, exactly like the gate's
             // full-table reference side)
             val union = targets.select(col("doc_id"), col("text"))
-              .unionByName(base.filter(isBench(col("doc_id")))
-                .select(col("doc_id"), col("text")))
+              .unionByName(bench.select(col("doc_id"), col("text")))
             targets.join(
               Docs.crossNeardupContaminatedIds(union, isBench),
               Seq("doc_id"), "left_anti")

@@ -117,17 +117,18 @@ object Datagen {
 
   /** Per-admission capacity stats (datagen.py:609-629, A6):
     * (max over stays of Σ per-(stay,item[,order]) group count,
-    *  max rows per stay). */
+    *  max rows per stay). q30's shape: the group counts roll up per stay
+    * into (n_groups, n_rows = Σ group counts), and both maxima come back
+    * in one action over one scan. `keys` must include `stay_id`. */
   def capacity(bucketed: DataFrame, keys: Seq[String]): (Long, Long) = {
-    val g = bucketed.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
-    val perStay = g.groupBy(col("stay_id")).agg(count(lit(1)).as("n_groups"))
-    val rowsPerStay = bucketed.groupBy(col("stay_id")).agg(count(lit(1)).as("n_rows"))
     // max() of zero rows is null — coalesce to 0 so an empty window
     // (e.g. a cohort whose every stay was clipped away) yields capacity
     // (0, 0) instead of an NPE at getLong
-    val a = perStay.agg(coalesce(max(col("n_groups")), lit(0L))).head.getLong(0)
-    val b = rowsPerStay.agg(coalesce(max(col("n_rows")), lit(0L))).head.getLong(0)
-    (a, b)
+    val r = bucketed.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
+      .groupBy(col("stay_id")).agg(count(lit(1)).as("n_groups"), sum(col("c")).as("n_rows"))
+      .agg(coalesce(max(col("n_groups")), lit(0L)), coalesce(max(col("n_rows")), lit(0L)))
+      .head
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Dense time grid 0..losBuckets-1 (datagen.py:651-656, J14/T5): grid

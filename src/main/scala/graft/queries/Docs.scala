@@ -1,7 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.types.BinaryType
 import graft.functions.ColFns._
 import graft.functions.MinHashExprs.minHashSig
 import graft.queries.Registry.t
@@ -27,10 +29,26 @@ object Docs {
     * an empty list for the same input, so short docs → empty shingle set.
     */
   private[graft] def shingles(ws: Column): Column =
-    when(size(ws) >= 3,
-      transform(sequence(lit(1), size(ws) - 2), i =>
-        concat_ws(" ", element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2))))
+    when(size(ws) >= 3, transform(sequence(lit(1), size(ws) - 2), i => ngramAt(ws, i, 3)))
       .otherwise(array().cast("array<string>"))
+
+  /** The word `n`-gram starting at 1-based index `i` of the token array
+    * `ws`, space-joined — the one builder behind the 3-gram shingles and
+    * every word 5-gram ([[gram5]], d15, d32, the Bloom probe of
+    * [[decontamFilterDf]]). */
+  private[graft] def ngramAt(ws: Column, i: Column, n: Int): Column =
+    concat_ws(" ", element_at(ws, i) +: (1 until n).map(k => element_at(ws, i + k)): _*)
+
+  /** The corpus spread every doc-level text operator starts from: one
+    * `repartition(doc_id)` and the bound `ws` token column. */
+  private[graft] def spreadWords(docs: DataFrame): DataFrame =
+    docs.repartition(col("doc_id")).withColumn("ws", words(col("text")))
+
+  /** Might-contain probe of the serialized Bloom filter `bytes` (see
+    * [[benchBloomBytes]]) for the long `v` — the one probe every
+    * stateless Bloom filter body runs. */
+  private[graft] def bloomProbe(bytes: Array[Byte], v: Column): Column =
+    GraftShim.column(BloomFilterMightContain(Literal(bytes, BinaryType), GraftShim.expression(v)))
 
   /** Seeded hash-Bernoulli rate sample (d23's shape): keep a doc iff
     * md5(seed‖doc_id) is below `thresholdHex` — lowercase-hex string
@@ -404,72 +422,88 @@ object Docs {
           .as("milli_bits_per_bigram"))
   }
 
-  /** Exact-dedup keep-ids of a gated (doc_id, text, ...) frame: the
-    * min doc_id per md5(text), as one `doc_id` column. Only (md5,
-    * doc_id) fingerprints cross the hash exchange, never text. */
-  private[graft] def exactKeepIds(gated: org.apache.spark.sql.DataFrame):
-      org.apache.spark.sql.DataFrame = gated
-    .select(md5(col("text").cast("binary")).as("_h"), col("doc_id"))
-    .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
-    .select(col("doc_id"))
+  /** Stage 1 of d13 and of the curation pipeline, after any language
+    * gate: min length + repetition gate (dup-token fraction, the cheap
+    * Gopher-style cut — d14's full stats) over a frame with a bound `ws`
+    * token column; adds `n_tokens`. */
+  private[graft] def lengthRepetitionGate(df: DataFrame, minTokens: Int,
+      maxDupTokenFrac: Double): DataFrame = {
+    val nTok = size(col("ws")).cast("long")
+    val dupFrac = lit(1.0) -
+      size(array_distinct(col("ws"))).cast("double") / nTok.cast("double")
+    df.withColumn("n_tokens", nTok)
+      .filter(col("n_tokens") >= minTokens && dupFrac <= maxDupTokenFrac)
+  }
+
+  /** Stage 2 of d13 and of the curation pipeline: exact dedup of a gated
+    * (doc_id, text, ...) frame. Per md5(text) the min doc_id survives, or
+    * with `bySource` d43's (source, doc_id)-minimum ([[sourceKeepers]]).
+    * Shaped as groupBy(hash)→keeper + a doc_id semi-join back, NOT a
+    * window over the full rows: the hash exchange then carries only
+    * (md5, [source,] doc_id) fingerprints — at 100 TB that's shuffling
+    * fingerprints, not the corpus — and the join-back reuses the doc_id
+    * partitioning the corpus already has (plan-guarded in
+    * PlanPropertiesSpec). */
+  private[graft] def exactDedup(gated: DataFrame, bySource: Boolean = false): DataFrame = {
+    val h = md5(col("text").cast("binary")).as("_h")
+    val keepIds =
+      if (bySource) sourceKeepers(gated.select(h, col("source"), col("doc_id")), "_h")
+        .select(col("k.doc_id").as("doc_id"))
+      else gated.select(h, col("doc_id"))
+        .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
+        .select(col("doc_id"))
+    gated.join(keepIds, Seq("doc_id"), "left_semi")
+  }
 
   /** Distinct-position word 5-grams (doc_id, gram) of a (doc_id, ws)
-    * frame, via index explode (the safe generator shape — BENCH_NOTES
-    * explode discipline). Docs with fewer than 5 words emit no row. */
-  private[graft] def gram5(df: org.apache.spark.sql.DataFrame):
-      org.apache.spark.sql.DataFrame = df
-    .select(col("doc_id"), col("ws"),
-      explode(when(size(col("ws")) >= 5,
-        sequence(lit(1), size(col("ws")) - 4))).as("i"))
-    .select(col("doc_id"), concat_ws(" ",
-      element_at(col("ws"), col("i")), element_at(col("ws"), col("i") + 1),
-      element_at(col("ws"), col("i") + 2), element_at(col("ws"), col("i") + 3),
-      element_at(col("ws"), col("i") + 4)).as("gram"))
+    * frame, via index explode: the generator is the cheap integer
+    * sequence and each gram string is built once per OUTPUT row
+    * (BENCH_NOTES explode discipline — exploding a computed string-array
+    * column re-evaluates the whole array per output row, 42 s vs 3 s at
+    * sf0.1 in r6). Docs with fewer than 5 words emit no row, or with
+    * `outer` one null-gram marker row. */
+  private[graft] def gram5(df: DataFrame, outer: Boolean = false): DataFrame = {
+    val idx = when(size(col("ws")) >= 5, sequence(lit(1), size(col("ws")) - 4))
+    val gram = ngramAt(col("ws"), col("i"), 5)
+    df.select(col("doc_id"), col("ws"), (if (outer) explode_outer(idx) else explode(idx)).as("i"))
+      .select(col("doc_id"), (if (outer) when(col("i").isNotNull, gram) else gram).as("gram"))
+  }
+
+  /** The distinct gram set of a (doc_id, ws) frame of benchmark docs. */
+  private[graft] def benchGramSet(bench: DataFrame): DataFrame =
+    gram5(bench).select(col("gram")).distinct()
+
+  /** Stage 3 of d13 and of the curation pipeline's default engine: drop
+    * every target sharing a word 5-gram with the benchmark docs (both
+    * (doc_id, ws) frames). The benchmark gram set broadcasts, so the
+    * exploded target side never shuffles for the join; the contaminated
+    * ids leave by a left_anti join. */
+  private[graft] def gramDecontam(targets: DataFrame, bench: DataFrame): DataFrame = {
+    val contamIds = gram5(targets)
+      .join(broadcast(benchGramSet(bench)), Seq("gram"))
+      .select(col("doc_id")).distinct()
+    targets.join(contamIds, Seq("doc_id"), "left_anti")
+  }
 
   /** Stages 1-3 of d13 plus the near-dup SIGNATURE pass, ending in the
     * narrow per-document dedup index `(doc_id, n_tokens, mh)`: language
-    * gate → min-length + repetition gate → exact dedup (fingerprint-only
-    * exchange: the groupBy(md5)→min(doc_id) + doc_id semi-join-back
-    * shape, so document text never shuffles — plan-guarded in
-    * PlanPropertiesSpec) → benchmark decontamination (broadcast gram
-    * set) → shingle + MinHash signature. Everything corpus-sized after
-    * this frame is 10 longs per row. */
-  private[graft] def corpusCleanSigDf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val base = docs
-      .repartition(col("doc_id"))
-      .withColumn("ws", words(col("text")))
+    * gate → [[lengthRepetitionGate]] → [[exactDedup]] → benchmark
+    * decontamination ([[gramDecontam]]; every 20th doc is the benchmark)
+    * → shingle + MinHash signature. These are the curation pipeline's
+    * stage bodies, so the pipeline is d13 with a custom language gate.
+    * Everything corpus-sized after this frame is 10 longs per row. */
+  private[graft] def corpusCleanSigDf(docs: DataFrame): DataFrame = {
+    val base = spreadWords(docs)
     def cnt(w: String*) = size(filter(col("ws"), x => x.isin(w: _*))).cast("long")
     val s1 = cnt("the", "a")
     val s2 = cnt("data", "spark", "stream")
     val s3 = cnt("join", "merge", "hash")
-    // stage 1: lang gate + min length + repetition gate (dup-token
-    // fraction, the cheap Gopher-style cut — d14's full stats)
-    val nTok = size(col("ws")).cast("long")
-    val dupFrac = lit(1.0) -
-      size(array_distinct(col("ws"))).cast("double") / nTok.cast("double")
-    val gated = base.withColumn("n_tokens", nTok)
-      .filter(s1 >= s2 && s1 >= s3 && col("n_tokens") >= 10 && dupFrac <= 0.6)
-    // stage 2: exact dedup (keep min doc_id per text hash). Shaped as
-    // groupBy(hash)→min(id) + a doc_id semi-join back, NOT a window
-    // over the full rows: the hash exchange then carries only
-    // (md5, doc_id) pairs — at 100 TB that's shuffling fingerprints,
-    // not the corpus — and the join-back reuses the doc_id
-    // partitioning the corpus already has (plan-guarded in
-    // PlanPropertiesSpec).
-    val exact = gated.join(exactKeepIds(gated), Seq("doc_id"), "left_semi")
-    // stage 3: benchmark decontamination (d15's semantics in-line):
-    // drop held-out benchmark docs and any survivor sharing a 5-gram
-    // with them. Benchmark gram set broadcast.
-    val benchGrams = gram5(base.filter(col("doc_id") % 20 === 0))
-      .select(col("gram")).distinct()
-    val contamIds = gram5(exact.filter(col("doc_id") % 20 =!= 0))
-      .join(broadcast(benchGrams), Seq("gram"))
-      .select(col("doc_id")).distinct()
-    val clean = exact.filter(col("doc_id") % 20 =!= 0)
-      .join(contamIds, Seq("doc_id"), "left_anti")
+    val isBench = col("doc_id") % 20 === 0
+    val exact = exactDedup(lengthRepetitionGate(base.filter(s1 >= s2 && s1 >= s3), 10, 0.6))
     // signature pass: each survivor reduced to its MinHash signature +
     // token count — the dedup INDEX, 10 longs per row
-    clean.select(col("doc_id"), col("n_tokens"), minHashSig(shingles(col("ws"))).as("mh"))
+    gramDecontam(exact.filter(!isBench), base.filter(isBench))
+      .select(col("doc_id"), col("n_tokens"), minHashSig(shingles(col("ws"))).as("mh"))
   }
 
   /** d13 end-to-end (see [[corpusCleanSigDf]] for stages 1-3): the
@@ -848,20 +882,11 @@ object Docs {
     * The gram is built INSIDE the exists lambda from the bound `__ws`
     * attribute — per-element work is O(1) (BENCH_NOTES bound-column
     * discipline; the array itself is never materialized). */
-  def decontamFilterDf(docs: org.apache.spark.sql.DataFrame,
-      bloomBytes: Array[Byte], textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.types.BinaryType
-    val bloom = Literal(bloomBytes, BinaryType)
-    def mightContain(v: Column): Column =
-      org.apache.spark.sql.GraftShim.column(
-        BloomFilterMightContain(bloom, org.apache.spark.sql.GraftShim.expression(v)))
+  def decontamFilterDf(docs: DataFrame,
+      bloomBytes: Array[Byte], textCol: String = "text"): DataFrame = {
     val ws = col("__ws")
     val hit = when(size(ws) >= 5,
-      exists(sequence(lit(1), size(ws) - 4), i =>
-        mightContain(xxhash64(concat_ws(" ",
-          element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2),
-          element_at(ws, i + 3), element_at(ws, i + 4))))))
+      exists(sequence(lit(1), size(ws) - 4), i => bloomProbe(bloomBytes, xxhash64(ngramAt(ws, i, 5)))))
       .otherwise(lit(false))
     docs.withColumn("__ws", words(col(textCol)))
       .filter(!hit)
@@ -912,17 +937,11 @@ object Docs {
     * path, exactly as nearDedupStream defers banding to the batch
     * compactor. Shingle-less docs always pass (their signature is NULL
     * and matches nothing). */
-  def crossNeardupFilterDf(docs: org.apache.spark.sql.DataFrame,
-      refSigBloom: Array[Byte], textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.types.BinaryType
-    val bloom = Literal(refSigBloom, BinaryType)
-    def mightContain(v: Column): Column =
-      org.apache.spark.sql.GraftShim.column(
-        BloomFilterMightContain(bloom, org.apache.spark.sql.GraftShim.expression(v)))
+  def crossNeardupFilterDf(docs: DataFrame,
+      refSigBloom: Array[Byte], textCol: String = "text"): DataFrame = {
     val sig = sigStr(col("__ws"))
     docs.withColumn("__ws", words(col(textCol)))
-      .filter(sig.isNull || !mightContain(xxhash64(sig)))
+      .filter(sig.isNull || !bloomProbe(refSigBloom, xxhash64(sig)))
       .drop("__ws")
   }
 
@@ -961,14 +980,8 @@ object Docs {
     *
     * Every HOF lambda reads only bound columns (__ws/__n) plus its own
     * index — the BENCH_NOTES bound-column discipline. */
-  def spanDedupFilterDf(docs: org.apache.spark.sql.DataFrame,
-      keeperBloom: Array[Byte], textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.types.BinaryType
-    val bloom = Literal(keeperBloom, BinaryType)
-    def mightContain(v: Column): Column =
-      org.apache.spark.sql.GraftShim.column(
-        BloomFilterMightContain(bloom, org.apache.spark.sql.GraftShim.expression(v)))
+  def spanDedupFilterDf(docs: DataFrame,
+      keeperBloom: Array[Byte], textCol: String = "text"): DataFrame = {
     def blockOf(k: Column): Column = {
       val bstart = lit(1L) + k * 16L
       array_join(slice(col("__ws"), bstart.cast("int"),
@@ -981,7 +994,7 @@ object Docs {
       .withColumn("__keep", filter(
         when(col("__n") >= 1, sequence(lit(0L), expr("(__n + 15) DIV 16 - 1")))
           .otherwise(array().cast("array<long>")),
-        k => !mightContain(xxhash64(blockOf(k)))))
+        k => !bloomProbe(keeperBloom, xxhash64(blockOf(k)))))
       .filter(size(col("__keep")) > 0)
       .withColumn(textCol, array_join(transform(col("__keep"), k => blockOf(k)), " "))
       .withColumn("n_chars", length(col(textCol)).cast("long"))
@@ -1127,21 +1140,14 @@ object Docs {
     * band-free LSH special case (the crossNeardupStream note); Bloom
     * error is one-sided — a REAL keeper-owned signature always drops.
     * Shingle-less docs (NULL signature) always pass. */
-  def keeperPriorityFilterDf(docs: org.apache.spark.sql.DataFrame,
-      ranked: Seq[(String, Array[Byte])]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.types.BinaryType
-    def mightContain(bytes: Array[Byte], v: Column): Column =
-      org.apache.spark.sql.GraftShim.column(
-        BloomFilterMightContain(Literal(bytes, BinaryType),
-          org.apache.spark.sql.GraftShim.expression(v)))
+  def keeperPriorityFilterDf(docs: DataFrame, ranked: Seq[(String, Array[Byte])]): DataFrame = {
     val sig = sigStr(col("__ws"))
     val h = xxhash64(sig)
     // ascending fold → the outermost branch is the LARGEST snapshot
     // source ≤ the stream source (the blooms are nested, so the
     // tightest applicable rank is the correct one to probe)
     val lost = ranked.sortBy(_._1).foldLeft(lit(false)) { case (acc, (s, bytes)) =>
-      when(col("source") >= lit(s), mightContain(bytes, h)).otherwise(acc)
+      when(col("source") >= lit(s), bloomProbe(bytes, h)).otherwise(acc)
     }
     docs.withColumn("__ws", words(col("text")))
       .filter(sig.isNull || !lost)
@@ -1179,17 +1185,11 @@ object Docs {
     * shuffle, no state. Docs with no shingles always pass. */
   def containmentFilterDf(docs: org.apache.spark.sql.DataFrame,
       snapshotBloom: Array[Byte], tauMilli: Long = 800L,
-      textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.types.BinaryType
-    val bloom = Literal(snapshotBloom, BinaryType)
-    def mightContain(v: Column): Column =
-      org.apache.spark.sql.GraftShim.column(
-        BloomFilterMightContain(bloom, org.apache.spark.sql.GraftShim.expression(v)))
+      textCol: String = "text"): DataFrame = {
     docs
       .withColumn("__ss", array_distinct(shingles(words(col(textCol)))))
       .withColumn("__hits",
-        size(filter(col("__ss"), sh => mightContain(xxhash64(sh)))).cast("long"))
+        size(filter(col("__ss"), sh => bloomProbe(snapshotBloom, xxhash64(sh)))).cast("long"))
       .filter(size(col("__ss")) === 0 ||
         col("__hits") * 1000L < lit(tauMilli) * size(col("__ss")).cast("long"))
       .drop("__ss", "__hits")
@@ -1254,9 +1254,7 @@ object Docs {
     * 1.3 s once bound to a real column).
     */
   private def withShingles(s: org.apache.spark.sql.SparkSession, dir: String) =
-    t(s, dir, "documents")
-      .repartition(col("doc_id"))
-      .withColumn("ws", words(col("text")))
+    spreadWords(t(s, dir, "documents"))
       .withColumn("sh", shingles(col("ws")))
       .withColumn("mh", minHashSig(col("sh")))
 
@@ -1359,12 +1357,11 @@ object Docs {
     * identical). ONE map-side-combinable min(struct) agg keyed by
     * cluster: skew-safe — a 10⁶-member cluster partial-aggregates to
     * one struct per map task where a per-cluster row_number window
-    * would sort the whole cluster in one task. Returns (cluster, k)
-    * with k = struct(source, doc_id) of the keeper. */
-  private[graft] def sourceKeepers(
-      cl: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    cl.groupBy(col("cluster"))
-      .agg(min(struct(col("source"), col("doc_id"))).as("k"))
+    * would sort the whole cluster in one task. Returns (`key`, k) with
+    * k = struct(source, doc_id) of the keeper; [[exactDedup]] keys the
+    * same rule by text hash. */
+  private[graft] def sourceKeepers(cl: DataFrame, key: String = "cluster"): DataFrame =
+    cl.groupBy(col(key)).agg(min(struct(col("source"), col("doc_id"))).as("k"))
 
   private val hexHigh = Seq("8", "9", "a", "b", "c", "d", "e", "f")
 
@@ -1696,11 +1693,8 @@ object Docs {
     chunkedDf(t(s, dir, "documents"))
 
   /** DataFrame-in variant of [[chunked]] (shared with CurationPipeline). */
-  private[graft] def chunkedDf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val base = docs
-      .filter(col("text").isNotNull)
-      .repartition(col("doc_id"))
-      .withColumn("ws", words(col("text")))
+  private[graft] def chunkedDf(docs: DataFrame): DataFrame = {
+    val base = spreadWords(docs.filter(col("text").isNotNull))
       .withColumn("n", size(col("ws")).cast("long"))
     base
       .select(col("doc_id"), col("ws"), col("n"),
@@ -1716,24 +1710,12 @@ object Docs {
           " ").cast("binary")).as("chunk_md5"))
   }
 
-  /** Non-overlapping 16-token blocks with corpus-wide keep flags — the
-    * d30 span-dedup body, shared with CurationPipeline's span stage so
-    * the pipeline is oracle-pinned by construction. Returns
-    * (doc_id, k, btok, content, kept): kept is true for exactly ONE
-    * corpus-wide occurrence of each block content (the min (doc_id, k)).
-    * See the d30 gate for the shuffle-budget commentary (narrow
-    * (md5, doc_id, k) tuples on one shared block-hash exchange,
-    * map-side-combinable min(struct) keeper, flags returned through one
-    * narrow doc_id exchange). */
   /** The corpus block stream of the d30 family: non-overlapping
     * 16-token blocks, (doc_id, k, btok, content). Shared by the batch
     * flagger and the streaming snapshot-Bloom compile so both sides
     * hash the IDENTICAL content strings. */
-  private[graft] def spanBlocks(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs
-      .filter(col("text").isNotNull && col("doc_id").isNotNull)
-      .repartition(col("doc_id"))
-      .withColumn("ws", words(col("text")))
+  private[graft] def spanBlocks(docs: DataFrame): DataFrame =
+    spreadWords(docs.filter(col("text").isNotNull && col("doc_id").isNotNull))
       .withColumn("n", size(col("ws")).cast("long"))
       .select(col("doc_id"), col("ws"), col("n"),
         explode(sequence(lit(0L), expr("(n + 15) DIV 16 - 1"))).as("k"))
@@ -1743,7 +1725,16 @@ object Docs {
         array_join(slice(col("ws"), col("bstart").cast("int"), col("btok").cast("int")), " ")
           .as("content"))
 
-  private[graft] def spanBlocksFlagged(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  /** Non-overlapping 16-token blocks with corpus-wide keep flags — the
+    * d30 span-dedup body, shared with CurationPipeline's span stage so
+    * the pipeline is oracle-pinned by construction. Returns
+    * (doc_id, k, btok, content, kept): kept is true for exactly ONE
+    * corpus-wide occurrence of each block content (the min (doc_id, k)).
+    * See the d30 gate for the shuffle-budget commentary (narrow
+    * (md5, doc_id, k) tuples on one shared block-hash exchange,
+    * map-side-combinable min(struct) keeper, flags returned through one
+    * narrow doc_id exchange). */
+  private[graft] def spanBlocksFlagged(docs: DataFrame): DataFrame = {
     // doc_id notnull is filtered EXPLICITLY inside spanBlocks (not left
     // to join-key constraint inference): the flags join infers
     // IsNotNull(doc_id) on its probe subtree only, which
@@ -1818,10 +1809,60 @@ object Docs {
   /** The 8 signature columns `mh0..mh7` of the oracle's `sig` CTE. */
   private val dSigCols = (0 until 8).map(i => s"  ${dMinhash(i)} AS mh$i").mkString(",\n")
 
-  /** The oracle's b4r2 `banded` CTE body over `sig`. */
-  private val dBands = (0 until 4)
+  /** DuckDB twin of [[shingles]]: the 3-gram list over `ws`. */
+  private val dShingles =
+    "list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])"
+
+  /** DuckDB twin of [[gram5]]'s grams: the word 5-gram list over `ws`,
+    * empty under 5 words. */
+  private val dGrams5 =
+    """CASE WHEN len(ws) >= 5
+      |    THEN list_transform(range(1, len(ws)-3), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||ws[i+4])
+      |    ELSE [] END""".stripMargin
+
+  /** The oracle's MinHash `w` CTE: the `ws` tokens of `documents`. */
+  private def dW(where: String = "") = s"w AS (SELECT doc_id, $dWords ws FROM documents$where)"
+
+  /** The oracle's `s` (3-gram shingles `sh` of the `ws` column of
+    * `from`) and `h` (per-shingle hashes `hh`, plus `sh` when `keepSh`)
+    * CTEs; both carry the `carry` columns. */
+  private def dShH(from: String, carry: String = "", keepSh: Boolean = false) =
+    s"""s AS (SELECT doc_id,$carry
+       |  $dShingles sh
+       |  FROM $from),
+       |h AS (SELECT doc_id,$carry${if (keepSh) " sh," else ""} $dHh hh FROM s)""".stripMargin
+
+  /** The select of the oracle's `sig` CTE: `mh0..mh7` over `h`. */
+  private def dSigSelect(carry: String = "") = s"SELECT doc_id,$carry\n$dSigCols\nFROM h"
+
+  /** The oracle's b4r2 `banded` CTE over `sig`. */
+  private val dBanded = (0 until 4)
     .map(b => s"SELECT doc_id, '$b:' || mh${2 * b} || ':' || mh${2 * b + 1} AS band_key FROM sig")
-    .mkString("\n  UNION ALL ")
+    .mkString("banded AS (\n  ", "\n  UNION ALL ", ")")
+
+  /** The MinHash-LSH prelude of the oracle over `documents` ([[dW]],
+    * [[dShH]], `sig`, and [[dBanded]] when `banded`). */
+  private def dMinhashWith(keepSh: Boolean, where: String = "", banded: Boolean = true) =
+    s"WITH ${dW(where)},\n${dShH("w", keepSh = keepSh)},\nsig AS (${dSigSelect()})" +
+      (if (banded) s",\n$dBanded" else "")
+
+  /** The band-bucket self-join of the oracle's candidate pairs. */
+  private val dBandJoin =
+    "FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id"
+
+  /** The oracle's candidate `pairs` CTE (`where` restricts the pairs). */
+  private def dPairs(where: String = "") =
+    s"pairs AS (\n  SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b\n  $dBandJoin$where)"
+
+  /** The oracle's `pairs` → undirected `edges` CTEs feeding [[CcSql]]. */
+  private val dCcEdges =
+    s"""pairs AS MATERIALIZED (
+       |  SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
+       |  $dBandJoin),
+       |edges AS MATERIALIZED (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs)""".stripMargin
+
+  /** The oracle's per-doc distinct shingle sets for exact verification. */
+  private val dSets = "sets AS (SELECT doc_id, list_distinct(sh) AS ss FROM h)"
 
   /** DuckDB twin of [[surprisalDf]] as a CTE chain ending in `scored`
     * (shared by the d25 gate and d27's importance sampler). */
@@ -1951,14 +1992,7 @@ object Docs {
         withShingles(s, dir).select(cols: _*)
       },
       Some {
-        s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
-           |s AS (SELECT doc_id,
-           |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
-           |  FROM w),
-           |h AS (SELECT doc_id, $dHh hh FROM s)
-           |SELECT doc_id,
-           |$dSigCols
-           |FROM h""".stripMargin
+        s"WITH ${dW()},\n${dShH("w")}\n${dSigSelect()}"
       },
       "MinHash signatures over 3-gram shingles (north-star: dedup)"),
 
@@ -1972,18 +2006,9 @@ object Docs {
     Q("d07_lsh_pairs",
       (s, dir) => lshCandidatePairs(withShingles(s, dir)),
       Some {
-        s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
-           |s AS (SELECT doc_id,
-           |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
-           |  FROM w),
-           |h AS (SELECT doc_id, $dHh hh FROM s),
-           |sig AS (SELECT doc_id,
-           |$dSigCols
-           |FROM h),
-           |banded AS (
-           |  $dBands)
+        s"""${dMinhashWith(keepSh = false)}
            |SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
-           |FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id""".stripMargin
+           |$dBandJoin""".stripMargin
       },
       "MinHash-LSH band-bucket candidate pairs (north-star: dedup)"),
 
@@ -2007,20 +2032,9 @@ object Docs {
             (pairJaccard >= 0.5).as("is_dup"))
       },
       Some {
-        s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
-           |s AS (SELECT doc_id,
-           |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
-           |  FROM w),
-           |h AS (SELECT doc_id, sh, $dHh hh FROM s),
-           |sig AS (SELECT doc_id,
-           |$dSigCols
-           |FROM h),
-           |banded AS (
-           |  $dBands),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
-           |  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |sets AS (SELECT doc_id, list_distinct(sh) AS ss FROM h)
+        s"""${dMinhashWith(keepSh = true)},
+           |${dPairs()},
+           |$dSets
            |SELECT p.doc_id_a, p.doc_id_b,
            |  ROUND(CAST(len(list_intersect(sa.ss, sb.ss)) AS DOUBLE) /
            |    (CAST(len(sa.ss) + len(sb.ss) AS DOUBLE) - CAST(len(list_intersect(sa.ss, sb.ss)) AS DOUBLE)), 4) AS jaccard,
@@ -2054,20 +2068,8 @@ object Docs {
         // sf10 oracle cap; the unrolled pointer-jumping levels are
         // linear per level and mirror the Spark operator round-for-round
         val (cc, lk) = CcSql.unrolled()
-        s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
-           |s AS (SELECT doc_id,
-           |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
-           |  FROM w),
-           |h AS (SELECT doc_id, $dHh hh FROM s),
-           |sig AS (SELECT doc_id,
-           |$dSigCols
-           |FROM h),
-           |banded AS (
-           |  $dBands),
-           |pairs AS MATERIALIZED (
-           |  SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-           |  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |edges AS MATERIALIZED (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
+        s"""${dMinhashWith(keepSh = false)},
+           |$dCcEdges,
            |$cc
            |SELECT d.doc_id, COALESCE($lk.rep, d.doc_id) AS cluster_rep
            |FROM documents d LEFT JOIN $lk ON d.doc_id = $lk.id""".stripMargin
@@ -2076,14 +2078,16 @@ object Docs {
 
     // FLAGSHIP COMPOSITE: the canonical LLM corpus-cleanup pipeline in
     // one query — language gate → minimum-length quality gate → exact
-    // dedup (keep min doc_id per byte-identical text) → near-dup dedup
-    // (MinHash-LSH star edges → connected components, keep each
-    // cluster's min id). Stage order is the 100 TB order: the narrow,
-    // codegen'd filters run first so every later shuffle moves only
-    // survivors; exact dedup is ONE exchange (window min over
-    // md5(text)); the LSH band shuffle and CC run on the doubly-deduped
-    // remainder. Docs with null text fall out of the gate naturally in
-    // both engines (null comparisons are never TRUE).
+    // dedup (keep min doc_id per byte-identical text) → benchmark
+    // decontamination → near-dup dedup (MinHash-LSH star edges →
+    // connected components, keep each cluster's min id). Stage order is
+    // the 100 TB order: the narrow, codegen'd filters run first so every
+    // later shuffle moves only survivors; exact dedup ships only
+    // (md5, doc_id) fingerprints (see [[exactDedup]]); the LSH band
+    // shuffle and CC run on the doubly-deduped remainder. Stages 1-3 are
+    // CurationPipeline's own bodies. Docs with null text fall out of
+    // the gate naturally in both engines (null comparisons are never
+    // TRUE).
     Q("d13_corpus_clean",
       (s, dir) => corpusCleanDf(t(s, dir, "documents")),
       Some {
@@ -2102,9 +2106,7 @@ object Docs {
            |    SELECT doc_id, ws, n_tokens,
            |      MIN(doc_id) OVER (PARTITION BY md5(text)) AS keep_id
            |    FROM gate) WHERE doc_id = keep_id),
-           |g AS (SELECT doc_id, CASE WHEN len(ws) >= 5
-           |    THEN list_transform(range(1, len(ws)-3), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||ws[i+4])
-           |    ELSE [] END AS g FROM w),
+           |g AS (SELECT doc_id, $dGrams5 AS g FROM w),
            |bench AS (SELECT DISTINCT unnest(g) AS gram FROM g WHERE doc_id % 20 = 0),
            |contam AS (SELECT DISTINCT t.doc_id FROM (
            |    SELECT e.doc_id, unnest(g.g) AS gram FROM exact e JOIN g USING (doc_id)
@@ -2112,19 +2114,10 @@ object Docs {
            |  JOIN bench b ON t.gram = b.gram),
            |clean AS (SELECT doc_id, ws, n_tokens FROM exact
            |  WHERE doc_id % 20 <> 0 AND doc_id NOT IN (SELECT doc_id FROM contam)),
-           |s AS (SELECT doc_id, n_tokens,
-           |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
-           |  FROM clean),
-           |h AS (SELECT doc_id, n_tokens, $dHh hh FROM s),
-           |sig AS (SELECT doc_id, n_tokens,
-           |$dSigCols
-           |FROM h),
-           |banded AS (
-           |  $dBands),
-           |pairs AS MATERIALIZED (
-           |  SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-           |  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |edges AS MATERIALIZED (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
+           |${dShH("clean", " n_tokens,")},
+           |sig AS (${dSigSelect(" n_tokens,")}),
+           |$dBanded,
+           |$dCcEdges,
            |$cc
            |SELECT sig.doc_id, sig.n_tokens
            |FROM sig LEFT JOIN $lk ON sig.doc_id = $lk.id
@@ -2216,9 +2209,7 @@ object Docs {
     // per-row mode scan is bounded by document length, not corpus size.
     Q("d14_repetition",
       (s, dir) => {
-        val base = t(s, dir, "documents")
-          .repartition(col("doc_id"))
-          .withColumn("ws", words(col("text")))
+        val base = spreadWords(t(s, dir, "documents"))
         val nTok = size(col("ws")).cast("long")
         // null/short ws → 0 bigrams (the when's otherwise catches null)
         val nBg = when(size(col("ws")) >= 2, size(col("ws")) - 1).otherwise(lit(0))
@@ -2262,24 +2253,10 @@ object Docs {
     // query costs ONE shuffle of the (small) benchmark side at any scale.
     Q("d15_decontam",
       (s, dir) => {
-        // 5-grams via INDEX explode: the generator is the cheap integer
-        // sequence, and each gram string is built exactly once per
-        // OUTPUT row. Exploding a computed string-array column instead
-        // re-evaluates the whole array expression per output row —
-        // measured 42 s vs 3 s at sf0.1 (BENCH_NOTES r6). explode_outer
-        // keeps short/null-text docs as a null-gram marker row so they
-        // surface with n_grams = 0.
-        val grams = t(s, dir, "documents")
-          .repartition(col("doc_id"))
-          .withColumn("ws", words(col("text")))
-          .select(col("doc_id"), col("ws"),
-            explode_outer(when(size(col("ws")) >= 5,
-              sequence(lit(1), size(col("ws")) - 4))).as("i"))
-          .select(col("doc_id"),
-            when(col("i").isNotNull, concat_ws(" ",
-              element_at(col("ws"), col("i")), element_at(col("ws"), col("i") + 1),
-              element_at(col("ws"), col("i") + 2), element_at(col("ws"), col("i") + 3),
-              element_at(col("ws"), col("i") + 4))).as("gram"))
+        // 5-grams via gram5's INDEX explode; `outer` keeps short/null-
+        // text docs as a null-gram marker row so they surface with
+        // n_grams = 0.
+        val grams = gram5(spreadWords(t(s, dir, "documents")), outer = true)
           // per-doc gram dedupe. HashPartitioning(doc_id) satisfies the
           // ClusteredDistribution of BOTH this distinct and the groupBys
           // below, so the big exploded side never shuffles again.
@@ -2305,9 +2282,7 @@ object Docs {
               .as("contam_frac"))
       },
       Some(s"""WITH w AS (SELECT doc_id, $dWords AS ws FROM documents),
-              |g AS (SELECT doc_id, list_distinct(CASE WHEN len(ws) >= 5
-              |    THEN list_transform(range(1, len(ws)-3), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||ws[i+4])
-              |    ELSE [] END) AS g FROM w),
+              |g AS (SELECT doc_id, list_distinct($dGrams5) AS g FROM w),
               |bench AS (SELECT DISTINCT unnest(g) AS gram FROM g WHERE doc_id % 20 = 0),
               |tgt AS (SELECT doc_id, CAST(len(g) AS BIGINT) AS n_grams FROM g WHERE doc_id % 20 <> 0),
               |hits AS (SELECT t.doc_id, COUNT(*) AS c
@@ -2784,21 +2759,9 @@ object Docs {
           .select(col("doc_id"), col("lang"), col("source"))
       },
       Some {
-        s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
-           |s AS (SELECT doc_id,
-           |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
-           |  FROM w),
-           |h AS (SELECT doc_id, sh, $dHh hh FROM s),
-           |sig AS (SELECT doc_id,
-           |$dSigCols
-           |FROM h),
-           |banded AS (
-           |  $dBands),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
-           |  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-           |  WHERE (a.doc_id % 10 = 0) <> (b.doc_id % 10 = 0)),
-           |sets AS (SELECT doc_id, list_distinct(sh) AS ss FROM h),
+        s"""${dMinhashWith(keepSh = true)},
+           |${dPairs("\n  WHERE (a.doc_id % 10 = 0) <> (b.doc_id % 10 = 0)")},
+           |$dSets,
            |contaminated AS (
            |  SELECT DISTINCT CASE WHEN p.doc_id_a % 10 = 0 THEN p.doc_id_b
            |    ELSE p.doc_id_a END AS doc_id
@@ -2968,19 +2931,7 @@ object Docs {
     // volume, not corpus volume).
     Q("d32_contam_attribution",
       (s, dir) => {
-        val grams = t(s, dir, "documents")
-          .repartition(col("doc_id"))
-          .withColumn("ws", words(col("text")))
-          .select(col("doc_id"), col("ws"),
-            explode_outer(when(size(col("ws")) >= 5,
-              sequence(lit(1), size(col("ws")) - 4))).as("i"))
-          .select(col("doc_id"),
-            when(col("i").isNotNull, concat_ws(" ",
-              element_at(col("ws"), col("i")), element_at(col("ws"), col("i") + 1),
-              element_at(col("ws"), col("i") + 2), element_at(col("ws"), col("i") + 3),
-              element_at(col("ws"), col("i") + 4))).as("gram"))
-          .distinct()
-          .filter(col("gram").isNotNull)
+        val grams = gram5(spreadWords(t(s, dir, "documents"))).distinct()
         val bench = grams.filter(col("doc_id") % 20 === 0)
           .select(col("doc_id").as("ref_id"), col("gram"))
         val hits = grams.filter(col("doc_id") % 20 =!= 0)
@@ -2996,9 +2947,7 @@ object Docs {
             coalesce(col("shared_grams"), lit(0L)).as("shared_grams"))
       },
       Some(s"""WITH w AS (SELECT doc_id, $dWords AS ws FROM documents),
-              |g AS (SELECT doc_id, list_distinct(CASE WHEN len(ws) >= 5
-              |    THEN list_transform(range(1, len(ws)-3), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||ws[i+4])
-              |    ELSE [] END) AS g FROM w),
+              |g AS (SELECT doc_id, list_distinct($dGrams5) AS g FROM w),
               |bench AS (SELECT doc_id AS ref_id, unnest(g) AS gram FROM g WHERE doc_id % 20 = 0),
               |tgt AS (SELECT doc_id, unnest(g) AS gram FROM g WHERE doc_id % 20 <> 0),
               |hits AS (SELECT b.ref_id,
@@ -3285,21 +3234,14 @@ object Docs {
             s"SELECT '$cfg' AS config, doc_id, $key AS band_key FROM sig"
           }
         }.mkString("\n  UNION ALL ")
-        s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents WHERE doc_id % 10 = 3),
-           |s AS (SELECT doc_id,
-           |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
-           |  FROM w),
-           |h AS (SELECT doc_id, sh, $dHh hh FROM s),
-           |sig AS (SELECT doc_id,
-           |$dSigCols
-           |FROM h),
+        s"""${dMinhashWith(keepSh = true, " WHERE doc_id % 10 = 3", banded = false)},
            |banded AS (
            |  $bandSel),
            |pairs AS (
            |  SELECT DISTINCT a.config, a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
            |  FROM banded a JOIN banded b
            |    ON a.config = b.config AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |sets AS (SELECT doc_id, list_distinct(sh) AS ss FROM h),
+           |$dSets,
            |ver AS (SELECT p.config,
            |    CASE WHEN CAST(len(list_intersect(sa.ss, sb.ss)) AS DOUBLE) /
            |      (CAST(len(sa.ss) + len(sb.ss) AS DOUBLE) - CAST(len(list_intersect(sa.ss, sb.ss)) AS DOUBLE)) >= 0.5
@@ -3353,20 +3295,8 @@ object Docs {
       },
       Some {
         val (cc, lk) = CcSql.unrolled()
-        s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
-           |s AS (SELECT doc_id,
-           |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
-           |  FROM w),
-           |h AS (SELECT doc_id, $dHh hh FROM s),
-           |sig AS (SELECT doc_id,
-           |$dSigCols
-           |FROM h),
-           |banded AS (
-           |  $dBands),
-           |pairs AS MATERIALIZED (
-           |  SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-           |  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |edges AS MATERIALIZED (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
+        s"""${dMinhashWith(keepSh = false)},
+           |$dCcEdges,
            |$cc,
            |cl AS (SELECT d.doc_id, d.source, COALESCE($lk.rep, d.doc_id) AS cluster
            |  FROM documents d LEFT JOIN $lk ON d.doc_id = $lk.id),
@@ -3449,20 +3379,9 @@ object Docs {
               .as("evict_id"))
       },
       Some {
-        s"""WITH w AS (SELECT doc_id, $dWords ws FROM documents),
-           |s AS (SELECT doc_id,
-           |  list_transform(range(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) sh
-           |  FROM w),
-           |h AS (SELECT doc_id, sh, $dHh hh FROM s),
-           |sig AS (SELECT doc_id,
-           |$dSigCols
-           |FROM h),
-           |banded AS (
-           |  $dBands),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
-           |  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |sets AS (SELECT doc_id, list_distinct(sh) AS ss FROM h),
+        s"""${dMinhashWith(keepSh = true)},
+           |${dPairs()},
+           |$dSets,
            |v AS (SELECT p.doc_id_a, p.doc_id_b,
            |    len(sa.ss) AS la, len(sb.ss) AS lb,
            |    CAST(len(list_intersect(sa.ss, sb.ss)) AS DOUBLE) /

@@ -53,6 +53,33 @@ class CurationPipelineSpec extends SparkSpec {
     assert(langDirs.nonEmpty)
   }
 
+  test("stages 1-3 equal d13's: 03_clean ids are corpusCleanSigDf's on sf0.001 and on sharp-edge docs") {
+    import spark.implicits._
+    val w = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    // ids % 20 == 0 are the benchmark: null, empty, 3-token and one
+    // 5-token doc (the only benchmark gram). Targets: contaminated (1),
+    // kept (2, 9: four of the five gram words), exact copy of 2 (3),
+    // null / empty / short / repetitive (4-7), lang-gated (8).
+    val fixture = Seq[(Long, String)](
+      (0L, null), (20L, ""), (40L, "quick brown fox"), (60L, "the quick brown fox jumps"),
+      (1L, s"$w the quick brown fox jumps"), (2L, s"$w one two"), (3L, s"$w one two"),
+      (4L, null), (5L, ""), (6L, "a b c d"), (7L, Seq.fill(12)("x").mkString(" ")),
+      (8L, s"$w data spark stream"), (9L, s"$w the quick brown fox"))
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), col("text"), lit("en").as("lang"), lit("web").as("source"),
+        length(col("text")).cast("long").as("n_chars"))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    for ((name, docs) <- Seq("sf0.001" -> Registry.t(spark, sfDir, "documents"), "fixture" -> fixture)) {
+      val out = Files.createTempDirectory("graft-curation-d13").toString
+      CurationPipeline.run(spark, docs, out, customGate = langGate)
+      val staged = ids(spark.read.parquet(s"$out/03_clean"))
+      assert(staged === ids(graft.queries.Docs.corpusCleanSigDf(docs)), name)
+      if (name == "fixture") assert(staged === Seq(2L, 9L))
+      else assert(staged.nonEmpty)
+    }
+  }
+
   test("bpeMerges stage: merge artifact + encoded corpus equal the d41 body over the selected corpus") {
     val out = Files.createTempDirectory("graft-curation-bpe").toString
     val docs = Registry.t(spark, sfDir, "documents")

@@ -1,21 +1,24 @@
 #!/usr/bin/env python3
 """Edge-case gate: rebuilds a testdata dir whose `documents` table is all
 sharp edges (empty/blank/1-2-3-token/unicode/punct-only/very-long/null
-text), then the normal Verify + check flow must still pass 55/55.
+text), then the normal Verify + check flow must still pass every query.
 
 This catches the "latent at 100 TB" class: semantics that diverge
 cross-engine only on inputs absent from the driver's clean synthetic
 data (found so far: NULL band-key bucketing in LSH, null-text rolling
 hash).
 
-Usage: python3 tools/edgecheck.py   # writes /tmp/edgedata, prints recipe
-Then:  sbt "runMain graft.Verify /tmp/edgedata /tmp/verify_edge"
-       python3 tools/check.py /tmp/edgedata /tmp/verify_edge
+Usage: python3 tools/edgecheck.py [ROOT]   # ROOT defaults to /tmp
+Writes ROOT/edgedata (this gate) and ROOT/edgenullvec (the null-vector
+gate below), then:
+       sbt "runMain graft.Verify ROOT/edgedata ROOT/verify_edge"
+       python3 tools/check.py ROOT/edgedata ROOT/verify_edge
 """
-import duckdb, os, shutil
+import duckdb, os, shutil, sys
 
 BASE = "/root/testdata/sf0.001"
-OUT = "/tmp/edgedata"
+ROOT = sys.argv[1] if len(sys.argv) > 1 else "/tmp"
+OUT = f"{ROOT}/edgedata"
 
 os.makedirs(OUT, exist_ok=True)
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
@@ -84,9 +87,9 @@ print(f"edge testdata written to {OUT}; run Verify + check against it")
 # changes semantics for the whole e-battery (SQL SUM() skips NULLs
 # where Spark's codegen'd bucket/cosine expressions null-propagate),
 # and only the kmeans family has the exclusion semantics pinned. Run:
-#   sbt "runMain graft.Verify /tmp/edgenullvec /tmp/verify_nullvec e08_kmeans_step e09_cluster_sample"
-#   python3 tools/check.py /tmp/edgenullvec /tmp/verify_nullvec
-OUT2 = "/tmp/edgenullvec"
+#   sbt "runMain graft.Verify ROOT/edgenullvec ROOT/verify_nullvec e08_kmeans_step e09_cluster_sample"
+#   python3 tools/check.py ROOT/edgenullvec ROOT/verify_nullvec
+OUT2 = f"{ROOT}/edgenullvec"
 os.makedirs(OUT2, exist_ok=True)
 null_elem_vec = ", ".join("NULL" if j == 0 else str((j % 7) * 0.25)
                           for j in range(64))
