@@ -1,12 +1,27 @@
 package graft.mm
 
+import java.awt.image.BufferedImage
+import java.io.ByteArrayInputStream
+import javax.imageio.ImageIO
+import javax.sound.sampled.{AudioFormat, AudioSystem}
+import scala.reflect.runtime.universe.TypeTag
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column processing (north-star): media payloads are opaque
-  * `binary` columns with typed metadata structs, decoded batch-wise via
-  * mapPartitions (one codec init per task, per-row error channel —
+  * `binary` columns with typed metadata structs, decoded batch-wise per
+  * partition (one codec init per task, per-row error channel —
   * malformed payloads degrade to a flagged row, never a task failure).
+  *
+  * Every payload decoder runs in one shell (`decodePayloads`), and each
+  * byte-level format has one reader, shared by every decoder that needs
+  * it: one RIFF chunk walk (`riffChunks`: AVI header and frame paths),
+  * one ISO-BMFF box walk (`isoBoxes`: every level of the MP4 tree), one
+  * int16 PCM sample reader (`forEachSample16`: audio levels and
+  * fingerprints) and one `getRGB` loop (`rgb888`: image pixels and MJPEG
+  * frames).
   *
   * The decoder matrix — what is REAL on a stock JDK:
   *  - image headers ([[decodeImage]]: PNG IHDR / JPEG SOF / GIF LSD /
@@ -29,8 +44,7 @@ import org.apache.spark.sql.functions._
   *
   * The remaining JDK-blocked gap: MODERN compressed codec decode (the
   * JRE ships no H.264/VP9/AV1 or MP3/AAC decoder). Such frames take
-  * [[decodeFrames]]'s per-frame error channel; [[frameSample]] keeps a
-  * codec-free byte-stride stand-in for them, and dropping a codec SPI
+  * [[decodeFrames]]'s per-frame error channel, and dropping a codec SPI
   * jar on the executor classpath lights the real decode up without
   * touching any plumbing (the seam is exercised by the test suite's
   * toy providers).
@@ -44,6 +58,48 @@ object Multimodal {
       .withColumn("n_bytes", octet_length(col(textCol)).cast("long"))
       .withColumn("content_sha", sha2(col("payload"), 256))
 
+  /** The payload-decoder shell every decoder runs in: selects
+    * `(doc_id, payload)`, sets the per-task codec state once (no
+    * disk-backed ImageIO cache inside executor tasks) and maps each row
+    * through `decode`, which sees a null payload as null. A `Left` from
+    * `decode`, or any exception it throws, becomes the one row
+    * `fail(doc_id, payload, error)`: a malformed payload is a flagged
+    * row, never a task failure. */
+  private def decodePayloads[T <: Product : TypeTag](df: DataFrame)(
+      fail: (Long, Array[Byte], String) => T)(
+      decode: (Long, Array[Byte]) => Either[String, Iterator[T]]): Dataset[T] =
+    df.select(col("doc_id"), col("payload"))
+      .mapPartitions { rows =>
+        ImageIO.setUseCache(false)
+        rows.flatMap { r =>
+          val id = r.getLong(0)
+          val b = r.getAs[Array[Byte]](1)
+          val out =
+            try decode(id, b)
+            catch {
+              case e: Exception =>
+                Left(s"decode: ${e.getClass.getSimpleName}: ${e.getMessage}")
+            }
+          out.fold(e => Iterator.single(fail(id, b, e)), identity)
+        }
+      }(Encoders.product[T])
+
+  /** A decoder's `n_bytes`: the payload length, 0 for a null payload. */
+  private def nBytes(b: Array[Byte]): Long = if (b == null) 0L else b.length
+
+  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
+  private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
+  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
+  private def be32(b: Array[Byte], i: Int): Int =
+    (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
+  private def be32L(b: Array[Byte], i: Int): Long = be32(b, i) & 0xffffffffL
+  private def be64(b: Array[Byte], i: Int): Long =
+    (be32L(b, i) << 32) | be32L(b, i + 4)
+  private def le32L(b: Array[Byte], i: Int): Long =
+    (le16(b, i) | (le16(b, i + 2) << 16)).toLong & 0xffffffffL
+  private def fourcc(b: Array[Byte], i: Int): String =
+    new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
+
   /** Typed result of a REAL image-header decode. */
   final case class ImageMeta(
       doc_id: Long, n_bytes: Long, format: String,
@@ -51,32 +107,18 @@ object Multimodal {
 
   /** REAL image-header decode (no codec library needed): parses the
     * PNG IHDR, JPEG SOF marker, and GIF logical-screen descriptor for
-    * pixel dimensions, straight off the binary payload. The shared
-    * mapPartitions batch shape — a pixel-level codec swap changes only
+    * pixel dimensions, straight off the binary payload. Runs in the
+    * shared payload shell — a pixel-level codec swap changes only
     * the per-row function, none of the plumbing. Malformed
     * or unknown payloads flow to the per-row error channel, never throw.
     */
-  def decodeImage(df: DataFrame): Dataset[ImageMeta] = {
-    val enc = Encoders.product[ImageMeta]
-    df.select(col("doc_id"), col("payload"), col("n_bytes"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          val n = r.getLong(2)
-          imageDims(b) match {
-            case Right((fmt, w, h)) => ImageMeta(id, n, fmt, w, h, ok = true, err = "")
-            case Left(e) => ImageMeta(id, n, "", 0, 0, ok = false, err = e)
-          }
-        }
-      }(enc)
-  }
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def be32(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
+  def decodeImage(df: DataFrame): Dataset[ImageMeta] =
+    decodePayloads(df)((id, b, e) =>
+      ImageMeta(id, nBytes(b), "", 0, 0, ok = false, err = e)) { (id, b) =>
+      imageDims(b).map { case (fmt, w, h) =>
+        Iterator(ImageMeta(id, nBytes(b), fmt, w, h, ok = true, err = ""))
+      }
+    }
 
   /** (format, width, height) from the container header, or an error. */
   private[mm] def imageDims(b: Array[Byte]): Either[String, (String, Int, Int)] = {
@@ -118,65 +160,44 @@ object Multimodal {
     * retires the "media libs absent" premise for these formats — see
     * the object doc for the full decoder matrix). Emits row-major
     * RGB888 so downstream feature extraction is format-independent.
-    * The shared mapPartitions batch shape: one ImageIO configuration
-    * per partition, every
+    * Runs in the shared payload shell: one ImageIO configuration
+    * per task, every
     * malformed payload flows to the per-row error channel, and
     * `maxPixels` bounds the per-row allocation (a 100 TB corpus WILL
     * contain a decompression bomb; reject it in-row, don't OOM the
     * task). */
   def decodePixels(df: DataFrame, maxPixels: Long = 1L << 24): Dataset[DecodedImage] = {
-    val enc = Encoders.product[DecodedImage]
-    df.select(col("doc_id"), col("payload"))
-      .mapPartitions { rows =>
-        // per-partition codec setup (the one-init-per-task slot the
-        // batch shape exists for): no disk-backed ImageIO cache inside
-        // executor tasks
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.map { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          if (b == null || b.isEmpty)
-            DecodedImage(id, "", 0, 0, Array.emptyByteArray, ok = false, err = "empty payload")
-          else {
-            val fmt = imageDims(b).map(_._1).getOrElse("")
-            try {
-              val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b))
-              if (img == null)
-                DecodedImage(id, fmt, 0, 0, Array.emptyByteArray, ok = false,
-                  err = "no registered reader for payload")
-              else {
-                val w = img.getWidth
-                val h = img.getHeight
-                if (w.toLong * h.toLong > maxPixels)
-                  DecodedImage(id, fmt, w, h, Array.emptyByteArray, ok = false,
-                    err = s"${w}x$h exceeds maxPixels=$maxPixels")
-                else {
-                  val out = new Array[Byte](w * h * 3)
-                  var y = 0
-                  var k = 0
-                  while (y < h) {
-                    var x = 0
-                    while (x < w) {
-                      val rgb = img.getRGB(x, y)
-                      out(k) = ((rgb >> 16) & 0xff).toByte
-                      out(k + 1) = ((rgb >> 8) & 0xff).toByte
-                      out(k + 2) = (rgb & 0xff).toByte
-                      k += 3
-                      x += 1
-                    }
-                    y += 1
-                  }
-                  DecodedImage(id, fmt, w, h, out, ok = true, err = "")
-                }
-              }
-            } catch {
-              case e: Exception =>
-                DecodedImage(id, fmt, 0, 0, Array.emptyByteArray, ok = false,
-                  err = s"decode: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            }
-          }
+    // a function value, not a local def: the task closures capture it
+    val row = (id: Long, b: Array[Byte], w: Int, h: Int, px: Array[Byte], err: String) =>
+      DecodedImage(id, imageDims(b).map(_._1).getOrElse(""), w, h, px,
+        ok = err.isEmpty, err = err)
+    decodePayloads(df)((id, b, e) => row(id, b, 0, 0, Array.emptyByteArray, e)) { (id, b) =>
+      if (b == null || b.isEmpty) Left("empty payload")
+      else Option(ImageIO.read(new ByteArrayInputStream(b)))
+        .toRight("no registered reader for payload")
+        .map { img =>
+          val w = img.getWidth
+          val h = img.getHeight
+          Iterator(
+            if (w.toLong * h.toLong > maxPixels)
+              row(id, b, w, h, Array.emptyByteArray, s"${w}x$h exceeds maxPixels=$maxPixels")
+            else row(id, b, w, h, rgb888(img), ""))
         }
-      }(enc)
+    }
+  }
+
+  /** Row-major RGB888 bytes of a decoded image: the one `getRGB` loop. */
+  private def rgb888(img: BufferedImage): Array[Byte] = {
+    val w = img.getWidth
+    val out = new Array[Byte](w * img.getHeight * 3)
+    for (y <- 0 until img.getHeight; x <- 0 until w) {
+      val rgb = img.getRGB(x, y)
+      val k = (y * w + x) * 3
+      out(k) = (rgb >> 16).toByte
+      out(k + 1) = (rgb >> 8).toByte
+      out(k + 2) = rgb.toByte
+    }
+    out
   }
 
   /** Typed result of a REAL audio decode: stream params + level stats. */
@@ -195,121 +216,99 @@ object Multimodal {
     * with its container params intact. Emits the stream parameters
     * plus channel-folded peak/RMS level in [0,1] — the cheap
     * feature-extraction a corpus audit runs per clip. Same
-    * mapPartitions shape: per-row error channel, `maxFrames` bounds the
+    * payload shell: per-row error channel, `maxFrames` bounds the
     * per-row allocation on BOTH the header-claimed and the decoded
     * stream (reject the 100 TB corpus's inevitable malformed-length
     * bomb in-row, don't OOM the task). Only compressed-video frame
     * pixel decode remains JDK-blocked (no H.264/VP9 codec ships). */
-  def decodeAudio(df: DataFrame, maxFrames: Long = 1L << 24): Dataset[AudioMeta] = {
-    val enc = Encoders.product[AudioMeta]
-    df.select(col("doc_id"), col("payload"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          if (b == null || b.isEmpty)
-            AudioMeta(id, "", 0, 0.0, 0, 0L, 0.0, 0.0, 0.0, ok = false, err = "empty payload")
+  def decodeAudio(df: DataFrame, maxFrames: Long = 1L << 24): Dataset[AudioMeta] =
+    decodePayloads(df)((id, _, e) =>
+      AudioMeta(id, "", 0, 0.0, 0, 0L, 0.0, 0.0, 0.0, ok = false, err = e)) { (id, b) =>
+      if (b == null || b.isEmpty) Left("empty payload")
+      else Using.resource(AudioSystem.getAudioInputStream(new ByteArrayInputStream(b))) { in =>
+        val f = in.getFormat
+        val enc = f.getEncoding.toString
+        val frames = in.getFrameLength
+        val durMs = if (f.getFrameRate > 0) frames * 1000.0 / f.getFrameRate else 0.0
+        def meta(encoding: String, n: Long, dur: Double, level: (Double, Double), err: String) =
+          AudioMeta(id, encoding, f.getChannels, f.getSampleRate.toDouble,
+            f.getSampleSizeInBits, n, dur, level._1, level._2, ok = err.isEmpty, err = err)
+        val silent = (0.0, 0.0)
+        Right(Iterator(
+          if (frames > maxFrames)
+            meta(enc, frames, durMs, silent, s"$frames frames exceeds maxFrames=$maxFrames")
+          else if (linearPcm(f))
+            meta(enc, frames, durMs, levelStats(in.readAllBytes(), f), "")
           else {
-            try {
-              val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                new java.io.ByteArrayInputStream(b))
-              try {
-                val f = in.getFormat
-                val frames = in.getFrameLength
-                val durMs =
-                  if (f.getFrameRate > 0) frames * 1000.0 / f.getFrameRate else 0.0
-                val bits = f.getSampleSizeInBits
-                val pcmSigned =
-                  f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
-                val pcmUnsigned =
-                  f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED
-                if (frames > maxFrames)
-                  AudioMeta(id, f.getEncoding.toString, f.getChannels, f.getSampleRate.toDouble,
-                    bits, frames, durMs, 0.0, 0.0, ok = false,
-                    err = s"$frames frames exceeds maxFrames=$maxFrames")
-                else if (!pcmSigned && !pcmUnsigned || (bits != 8 && bits != 16)) {
-                  // COMPRESSED / non-linear encoding: probe the runtime
-                  // SPI registry for a PCM transcoder instead of giving
-                  // up. Stock JDK converts μ-law/a-law (so AU/WAV
-                  // telephony clips decode for real); an MP3/OGG
-                  // provider jar on the classpath lights this path up
-                  // with no code change — and with none registered the
-                  // row degrades to the error channel, params intact.
-                  val target = new javax.sound.sampled.AudioFormat(
-                    javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-                    f.getSampleRate, 16, f.getChannels, f.getChannels * 2,
-                    f.getSampleRate, false)
-                  if (!javax.sound.sampled.AudioSystem.isConversionSupported(target, f))
-                    AudioMeta(id, f.getEncoding.toString, f.getChannels, f.getSampleRate.toDouble,
-                      bits, frames, durMs, 0.0, 0.0, ok = false,
-                      err = s"no PCM transcoder SPI registered for ${f.getEncoding}/$bits-bit")
-                  else {
-                    val pcm = javax.sound.sampled.AudioSystem.getAudioInputStream(target, in)
-                    try {
-                      // bomb bound on the DECODED stream: a compressed
-                      // source may report NOT_SPECIFIED (-1) frames, so
-                      // cap the transcoded read instead of trusting the
-                      // header (maxFrames × frameSize stays < 2 GiB for
-                      // any sane channel count; clamp defensively)
-                      val capBytes = math.min(
-                        maxFrames * target.getFrameSize, (Int.MaxValue - 8).toLong).toInt
-                      val data = pcm.readNBytes(capBytes)
-                      if (data.length == capBytes && pcm.read() != -1)
-                        AudioMeta(id, f.getEncoding.toString, f.getChannels,
-                          f.getSampleRate.toDouble, bits, frames, durMs, 0.0, 0.0,
-                          ok = false, err = s"decoded stream exceeds maxFrames=$maxFrames")
-                      else {
-                        val framesRead = data.length / target.getFrameSize
-                        val dur = if (durMs > 0) durMs
-                          else if (target.getFrameRate > 0)
-                            framesRead * 1000.0 / target.getFrameRate else 0.0
-                        val (peak, rms) = levelStats(data, 16, bigEndian = false, signed = true)
-                        AudioMeta(id, s"${f.getEncoding}->PCM_SIGNED", f.getChannels,
-                          f.getSampleRate.toDouble, bits, framesRead.toLong, dur,
-                          peak, rms, ok = true, err = "")
-                      }
-                    } finally pcm.close()
-                  }
-                } else {
-                  val data = in.readAllBytes()
-                  val (peak, rms) = levelStats(data, bits, f.isBigEndian, pcmSigned)
-                  AudioMeta(id, f.getEncoding.toString, f.getChannels, f.getSampleRate.toDouble,
-                    bits, frames, durMs, peak, rms, ok = true, err = "")
-                }
-              } finally in.close()
-            } catch {
-              case e: Exception =>
-                AudioMeta(id, "", 0, 0.0, 0, 0L, 0.0, 0.0, 0.0, ok = false,
-                  err = s"decode: ${e.getClass.getSimpleName}: ${e.getMessage}")
+            // COMPRESSED / non-linear encoding: probe the runtime SPI
+            // registry for a PCM transcoder instead of giving up. Stock
+            // JDK converts μ-law/a-law (so AU/WAV telephony clips decode
+            // for real); an MP3/OGG provider jar on the classpath lights
+            // this path up with no code change — and with none registered
+            // the row degrades to the error channel, params intact.
+            val target = new AudioFormat(AudioFormat.Encoding.PCM_SIGNED,
+              f.getSampleRate, 16, f.getChannels, f.getChannels * 2, f.getSampleRate, false)
+            if (!AudioSystem.isConversionSupported(target, f))
+              meta(enc, frames, durMs, silent,
+                s"no PCM transcoder SPI registered for $enc/${f.getSampleSizeInBits}-bit")
+            else Using.resource(AudioSystem.getAudioInputStream(target, in)) { pcm =>
+              // bomb bound on the DECODED stream: a compressed source may
+              // report NOT_SPECIFIED (-1) frames, so cap the transcoded
+              // read instead of trusting the header (maxFrames × frameSize
+              // stays < 2 GiB for any sane channel count; clamp defensively)
+              val capBytes = math.min(
+                maxFrames * target.getFrameSize, (Int.MaxValue - 8).toLong).toInt
+              val data = pcm.readNBytes(capBytes)
+              if (data.length == capBytes && pcm.read() != -1)
+                meta(enc, frames, durMs, silent, s"decoded stream exceeds maxFrames=$maxFrames")
+              else {
+                val framesRead = data.length / target.getFrameSize
+                val dur = if (durMs > 0) durMs
+                  else if (target.getFrameRate > 0) framesRead * 1000.0 / target.getFrameRate
+                  else 0.0
+                meta(s"$enc->PCM_SIGNED", framesRead.toLong, dur, levelStats(data, target), "")
+              }
             }
-          }
-        }
-      }(enc)
-  }
+          }))
+      }
+    }
 
-  /** Channel-folded peak/RMS over a raw PCM byte buffer in [0,1]. */
-  private def levelStats(data: Array[Byte], bits: Int, bigEndian: Boolean,
-      signed: Boolean): (Double, Double) = {
-    val bytesPer = bits / 8
-    val n = data.length / bytesPer
-    var peak = 0.0
-    var sumSq = 0.0
+  /** 8- or 16-bit linear PCM: what [[forEachSample16]] reads. */
+  private def linearPcm(f: AudioFormat): Boolean =
+    (f.getEncoding == AudioFormat.Encoding.PCM_SIGNED ||
+      f.getEncoding == AudioFormat.Encoding.PCM_UNSIGNED) &&
+      (f.getSampleSizeInBits == 8 || f.getSampleSizeInBits == 16)
+
+  /** Each sample of a linear-PCM buffer in int16 units, channels folded:
+    * 16-bit samples in the stream's byte order, 8-bit samples shifted
+    * left by 8 (unsigned ones re-centred on 0 first), so every bit depth
+    * shares one scale. */
+  private def forEachSample16(data: Array[Byte], f: AudioFormat)(visit: Int => Unit): Unit = {
+    val wide = f.getSampleSizeInBits == 16
+    val unsigned = f.getEncoding == AudioFormat.Encoding.PCM_UNSIGNED
+    val n = if (wide) data.length / 2 else data.length
     var i = 0
     while (i < n) {
-      val v =
-        if (bits == 16) {
-          val off = i * 2
-          val s = if (bigEndian)
-            ((data(off) << 8) | (data(off + 1) & 0xff)).toShort
-          else
-            ((data(off + 1) << 8) | (data(off) & 0xff)).toShort
-          s / 32768.0
-        } else if (signed) data(i) / 128.0
-        else ((data(i) & 0xff) - 128) / 128.0
+      visit(
+        if (!wide) (if (unsigned) u8(data, i) - 128 else data(i).toInt) << 8
+        else (if (f.isBigEndian) be16(data, 2 * i) else le16(data, 2 * i)).toShort)
+      i += 1
+    }
+  }
+
+  /** Channel-folded peak/RMS over a linear-PCM byte buffer in [0,1]
+    * (int16 units / 32768: both scalings are powers of two, so 8-bit
+    * levels are the exact `/128` values). */
+  private def levelStats(data: Array[Byte], f: AudioFormat): (Double, Double) = {
+    var peak = 0.0
+    var sumSq = 0.0
+    var n = 0
+    forEachSample16(data, f) { s =>
+      val v = s / 32768.0
       val a = math.abs(v)
       if (a > peak) peak = a
       sumSq += v * v
-      i += 1
+      n += 1
     }
     (peak, if (n > 0) math.sqrt(sumSq / n) else 0.0)
   }
@@ -324,43 +323,82 @@ object Multimodal {
     * tree (ftyp brand; moov/mvhd timescale+duration; per-trak tkhd
     * 16.16-fixed dimensions) and the AVI RIFF header (avih frame timing,
     * stream count, dimensions) straight off the payload bytes — no codec
-    * library involved, so this runs in any JVM. Frame PIXEL decode is
-    * the module's one JDK-blocked gap ([[frameSample]] keeps its
-    * plumbing real): the JDK ships no H.264/VP9/AV1 decoder, so that
-    * swap genuinely needs an external
-    * codec. Same mapPartitions shape + per-row error channel as every
-    * other decoder here; every multi-byte read is bounds-checked so a
-    * truncated or hostile payload errors instead of throwing. */
-  def decodeVideo(df: DataFrame): Dataset[VideoMeta] = {
-    val enc = Encoders.product[VideoMeta]
-    df.select(col("doc_id"), col("payload"), col("n_bytes"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          val n = r.getLong(2)
-          videoMeta(b) match {
-            case Right(v) =>
-              VideoMeta(id, n, v.container, v.brand, v.durationMs, v.nTracks,
-                v.width, v.height, ok = true, err = "")
-            case Left(e) =>
-              VideoMeta(id, n, "", "", 0.0, 0, 0, 0, ok = false, err = e)
-          }
-        }
-      }(enc)
-  }
+    * library involved, so this runs in any JVM. Same payload
+    * shell + per-row error channel as every other decoder here; every
+    * multi-byte read is bounds-checked so a truncated or hostile payload
+    * errors instead of throwing. */
+  def decodeVideo(df: DataFrame): Dataset[VideoMeta] =
+    decodePayloads(df)((id, b, e) =>
+      VideoMeta(id, nBytes(b), "", "", 0.0, 0, 0, 0, ok = false, err = e)) { (id, b) =>
+      videoMeta(b).map { v =>
+        Iterator(VideoMeta(id, nBytes(b), v.container, v.brand, v.durationMs, v.nTracks,
+          v.width, v.height, ok = true, err = ""))
+      }
+    }
 
   private[mm] final case class ParsedVideo(
       container: String, brand: String, durationMs: Double,
       nTracks: Int, width: Int, height: Int)
 
-  private def be32L(b: Array[Byte], i: Int): Long = be32(b, i) & 0xffffffffL
-  private def be64(b: Array[Byte], i: Int): Long =
-    (be32L(b, i) << 32) | be32L(b, i + 4)
-  private def le32L(b: Array[Byte], i: Int): Long =
-    (le16(b, i) | (le16(b, i + 2) << 16)).toLong & 0xffffffffL
-  private def fourcc(b: Array[Byte], i: Int): String =
-    new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
+  /** A walked RIFF chunk or ISO-BMFF box: its fourcc and its payload
+    * span `[off, end)`. */
+  private final case class Part(typ: String, off: Int, end: Int) {
+    def size: Int = end - off
+  }
+
+  /** RIFF chunks are word-aligned: a pad byte follows an odd size. */
+  private def riffPad(size: Long): Long = size & 1
+
+  /** The RIFF chunk walk over `[from, end)`: fourcc, little-endian u32
+    * payload size, payload, pad. Lazy, so a caller that stops at the
+    * chunk it wants reads nothing past it; a chunk whose size runs past
+    * `end` ends the walk with `avi: truncated <scope>chunk`. */
+  private def riffChunks(b: Array[Byte], from: Int, end: Int,
+      scope: String): Iterator[Either[String, Part]] =
+    Iterator.unfold(Option(from.toLong)) {
+      case Some(i) if i + 8 <= end =>
+        val typ = fourcc(b, i.toInt)
+        val sz = le32L(b, i.toInt + 4)
+        val part =
+          if (i + 8 + sz > end) Left(s"avi: truncated ${scope}chunk '$typ'")
+          else Right(Part(typ, (i + 8).toInt, (i + 8 + sz).toInt))
+        Some((part, part.toOption.map(_ => i + 8 + sz + riffPad(sz))))
+      case _ => None
+    }
+
+  /** The ISO-BMFF box walk over `[from, end)`: big-endian u32 box size
+    * (header included), then the fourcc; `size == 1` means a 64-bit
+    * largesize follows the type, `size == 0` means "to `end`". Sizes are
+    * unsigned and compared against `end - i`, so no hostile size can
+    * wrap the Long cursor. Lazy like [[riffChunks]]; a bad size ends the
+    * walk with `mp4: bad <what> size`, a cut largesize with
+    * `mp4: truncated <truncated>`. */
+  private def isoBoxes(b: Array[Byte], from: Int, end: Int, what: String,
+      truncated: String): Iterator[Either[String, Part]] =
+    Iterator.unfold(Option(from.toLong)) {
+      case Some(i) if i + 8 <= end =>
+        val sz0 = be32L(b, i.toInt)
+        val typ = fourcc(b, i.toInt + 4)
+        val large = sz0 == 1L
+        val hdr = if (large) 16 else 8
+        val sz =
+          if (large && hdr <= end - i) be64(b, i.toInt + 8)
+          else if (sz0 == 0L) end - i
+          else sz0
+        val part =
+          if (hdr > end - i) Left(s"mp4: truncated $truncated")
+          else if (sz < hdr || sz > end - i) Left(s"mp4: bad $what size $sz for '$typ'")
+          else Right(Part(typ, (i + hdr).toInt, (i + sz).toInt))
+        Some((part, part.toOption.map(_ => i + sz)))
+      case _ => None
+    }
+
+  /** Visit each walked part in order; the first walk or visit error ends
+    * the walk and is the result. */
+  private def eachPart(parts: Iterator[Either[String, Part]])(
+      visit: Part => Either[String, Unit]): Either[String, Unit] =
+    parts.map(_.flatMap(visit)).collectFirst { case Left(e) => Left(e) }
+      .getOrElse(Right(()))
 
   /** Container metadata from MP4/ISO-BMFF or AVI/RIFF bytes. */
   private[mm] def videoMeta(b: Array[Byte]): Either[String, ParsedVideo] = {
@@ -370,10 +408,7 @@ object Multimodal {
     Left("unknown container")
   }
 
-  /** MP4: top-level box walk. `size==1` means a 64-bit largesize followed
-    * by the type; `size==0` means "to end of file". Box sizes are
-    * unsigned 32-bit — kept in Long so a >2 GiB box can't overflow the
-    * cursor into an infinite loop. */
+  /** MP4: ftyp brand, moov → mvhd duration, moov → trak → tkhd dims. */
   private def mp4Meta(b: Array[Byte]): Either[String, ParsedVideo] = {
     var brand = ""
     var durationMs = 0.0
@@ -381,118 +416,72 @@ object Multimodal {
     var width = 0
     var height = 0
     var sawMoov = false
-    var i = 0L
-    while (i + 8 <= b.length) {
-      val sz0 = be32L(b, i.toInt)
-      val typ = fourcc(b, i.toInt + 4)
-      val (hdr, sz) =
-        if (sz0 == 1L) {
-          if (i + 16 > b.length) return Left("mp4: truncated largesize box")
-          (16L, be64(b, i.toInt + 8))
-        } else if (sz0 == 0L) (8L, b.length - i)
-        else (8L, sz0)
-      if (sz < hdr || i + sz > b.length) return Left(s"mp4: bad box size $sz for '$typ'")
-      val payload = (i + hdr).toInt
-      val payloadEnd = (i + sz).toInt
-      typ match {
+    eachPart(isoBoxes(b, 0, b.length, "box", "largesize box")) { top =>
+      top.typ match {
         case "ftyp" =>
-          if (payloadEnd - payload >= 4) brand = fourcc(b, payload).trim
+          if (top.size >= 4) brand = fourcc(b, top.off).trim
+          Right(())
         case "moov" =>
           sawMoov = true
-          // child box walk within moov
-          var j = payload.toLong
-          while (j + 8 <= payloadEnd) {
-            val csz0 = be32L(b, j.toInt)
-            val ctyp = fourcc(b, j.toInt + 4)
-            val (chdr, csz) =
-              if (csz0 == 1L) {
-                if (j + 16 > payloadEnd) return Left("mp4: truncated moov child")
-                (16L, be64(b, j.toInt + 8))
-              } else if (csz0 == 0L) (8L, payloadEnd - j)
-              else (8L, csz0)
-            if (csz < chdr || j + csz > payloadEnd)
-              return Left(s"mp4: bad moov child size $csz for '$ctyp'")
-            val cp = (j + chdr).toInt
-            ctyp match {
+          eachPart(isoBoxes(b, top.off, top.end, "moov child", "moov child")) { c =>
+            c.typ match {
               case "mvhd" =>
-                if (cp >= payloadEnd) return Left("mp4: empty mvhd")
-                val ver = u8(b, cp)
-                if (ver == 1) {
-                  if (cp + 28 + 4 > payloadEnd) return Left("mp4: truncated mvhd v1")
-                  val timescale = be32L(b, cp + 20)
-                  val duration = be64(b, cp + 24)
+                // the version-dependent fields are bounds-checked against
+                // the enclosing moov's end, not the mvhd box's
+                val v1 = c.off < top.end && u8(b, c.off) == 1
+                val (need, tsAt) = if (v1) (32, 20) else (20, 12)
+                if (c.off >= top.end) Left("mp4: empty mvhd")
+                else if (c.off + need > top.end)
+                  Left(s"mp4: truncated mvhd v${if (v1) 1 else 0}")
+                else {
+                  val timescale = be32L(b, c.off + tsAt)
+                  val duration =
+                    if (v1) be64(b, c.off + tsAt + 4) else be32L(b, c.off + tsAt + 4)
                   if (timescale > 0) durationMs = duration * 1000.0 / timescale
-                } else {
-                  if (cp + 20 > payloadEnd) return Left("mp4: truncated mvhd v0")
-                  val timescale = be32L(b, cp + 12)
-                  val duration = be32L(b, cp + 16)
-                  if (timescale > 0) durationMs = duration * 1000.0 / timescale
+                  Right(())
                 }
               case "trak" =>
                 nTracks += 1
-                // find tkhd inside trak: width/height are the final two
-                // 16.16 fixed-point words of the box
-                var k = j + chdr
-                while (k + 8 <= j + csz) {
-                  val tsz0 = be32L(b, k.toInt)
-                  val ttyp = fourcc(b, k.toInt + 4)
-                  val tsz = if (tsz0 == 0L) j + csz - k else tsz0
-                  if (tsz < 8 || k + tsz > j + csz)
-                    return Left(s"mp4: bad trak child size $tsz for '$ttyp'")
-                  if (ttyp == "tkhd" && tsz >= 16) {
-                    val wOff = (k + tsz - 8).toInt
-                    val w = (be32L(b, wOff) >> 16).toInt
-                    val h = (be32L(b, wOff + 4) >> 16).toInt
+                // tkhd ends with width/height as 16.16 fixed-point words
+                eachPart(isoBoxes(b, c.off, c.end, "trak child", "trak child")) { t =>
+                  if (t.typ == "tkhd" && t.size >= 8) {
+                    val w = (be32L(b, t.end - 8) >> 16).toInt
+                    val h = (be32L(b, t.end - 4) >> 16).toInt
                     if (w > 0 && h > 0) { width = w; height = h }
                   }
-                  k += tsz
+                  Right(())
                 }
-              case _ => ()
+              case _ => Right(())
             }
-            j += csz
           }
-        case _ => ()
+        case _ => Right(())
       }
-      i += sz
+    }.flatMap { _ =>
+      if (!sawMoov && brand.isEmpty) Left("mp4: no ftyp/moov box")
+      else Right(ParsedVideo("mp4", brand, durationMs, nTracks, width, height))
     }
-    if (!sawMoov && brand.isEmpty) Left("mp4: no ftyp/moov box")
-    else Right(ParsedVideo("mp4", brand, durationMs, nTracks, width, height))
   }
 
+  /** A `LIST` chunk whose list type (first payload fourcc) is `ltyp`. */
+  private def isList(b: Array[Byte], c: Part, ltyp: String): Boolean =
+    c.typ == "LIST" && c.size >= 4 && fourcc(b, c.off) == ltyp
+
   /** AVI: RIFF → LIST hdrl → avih main header (frame timing at +0/+16,
-    * stream count +24, dims +32/+36; all little-endian). */
-  private def aviMeta(b: Array[Byte]): Either[String, ParsedVideo] = {
-    var i = 12L // past RIFF size 'AVI '
-    while (i + 8 <= b.length) {
-      val typ = fourcc(b, i.toInt)
-      val sz = le32L(b, i.toInt + 4)
-      if (i + 8 + sz > b.length) return Left(s"avi: truncated chunk '$typ'")
-      if (typ == "LIST" && sz >= 4 && fourcc(b, i.toInt + 8) == "hdrl") {
-        var j = i + 12
-        val end = i + 8 + sz
-        while (j + 8 <= end) {
-          val ctyp = fourcc(b, j.toInt)
-          val csz = le32L(b, j.toInt + 4)
-          if (j + 8 + csz > end) return Left(s"avi: truncated hdrl chunk '$ctyp'")
-          if (ctyp == "avih") {
-            if (csz < 40) return Left("avi: avih too short")
-            val p = (j + 8).toInt
-            val usPerFrame = le32L(b, p)
-            val totalFrames = le32L(b, p + 16)
-            val streams = le32L(b, p + 24).toInt
-            val w = le32L(b, p + 32).toInt
-            val h = le32L(b, p + 36).toInt
-            return Right(ParsedVideo("avi", "", usPerFrame * totalFrames / 1000.0,
-              streams, w, h))
-          }
-          j += 8 + csz + (csz & 1) // RIFF chunks are word-aligned
-        }
-        return Left("avi: no avih in hdrl")
-      }
-      i += 8 + sz + (sz & 1)
-    }
-    Left("avi: no hdrl LIST")
-  }
+    * stream count +24, dims +32/+36; all little-endian). The walk stops
+    * at the first hdrl. */
+  private def aviMeta(b: Array[Byte]): Either[String, ParsedVideo] =
+    riffChunks(b, 12, b.length, "").collectFirst {
+      case Left(e) => Left(e)
+      case Right(l) if isList(b, l, "hdrl") =>
+        riffChunks(b, l.off + 4, l.end, "hdrl ").collectFirst {
+          case Left(e) => Left(e)
+          case Right(c) if c.typ == "avih" =>
+            if (c.size < 40) Left("avi: avih too short")
+            else Right(ParsedVideo("avi", "", le32L(b, c.off) * le32L(b, c.off + 16) / 1000.0,
+              le32L(b, c.off + 24).toInt, le32L(b, c.off + 32).toInt,
+              le32L(b, c.off + 36).toInt))
+        }.getOrElse(Left("avi: no avih in hdrl"))
+    }.getOrElse(Left("avi: no hdrl LIST"))
 
   /** Typed result of the resize stage: payload out, dims as metadata. */
   final case class ResizedMedia(
@@ -505,7 +494,7 @@ object Multimodal {
     * OpenCV/PIL convention: source coordinate = (dst + 0.5)·scale −
     * 0.5, edge-clamped), channels interpolated independently,
     * half-up rounding — deterministic bytes for a given input, which is
-    * what downstream fingerprinting needs. Same mapPartitions batch
+    * what downstream fingerprinting needs. Same per-partition batch
     * shape as the decoders: per-row degrade to `ok = false` (short or
     * empty pixel buffers), never a task failure. */
   def resizePixels(df: DataFrame, w: Int, h: Int): Dataset[ResizedMedia] = {
@@ -569,13 +558,6 @@ object Multimodal {
     out
   }
 
-  /** Byte-stride frame sampler: take every k-th payload byte as a
-    * "frame" row. The explode-to-(doc_id, frame_no) plumbing is the
-    * production shape for video frame sampling; the byte standing in
-    * for a decoded frame is the ONE remaining fake in this module —
-    * compressed-video frame pixel decode is JDK-blocked (no
-    * H.264/VP9/AV1 decoder ships with the JRE; a codec SPI jar on the
-    * executor classpath swaps it in without touching the plumbing). */
   /** Typed result of a REAL video frame-pixel decode: one row per
     * SAMPLED frame, with the per-frame channel means a frame-features
     * pipeline emits. */
@@ -608,34 +590,24 @@ object Multimodal {
     * every input doc is accounted for in the output. Bomb bounds:
     * `maxFrames` caps emitted rows per video, `maxPixels` caps one
     * frame's decode, every chunk read is bounds-checked. Same
-    * mapPartitions batch shape as the other decoders (ImageIO disk
-    * cache off once per task). */
+    * payload shell as the other decoders (ImageIO disk cache off once
+    * per task). */
   def decodeFrames(df: DataFrame, everyK: Int = 1, maxFrames: Int = 1024,
       maxPixels: Long = 1L << 24): Dataset[VideoFrame] = {
     require(everyK >= 1, s"everyK must be >= 1, got $everyK")
-    val enc = Encoders.product[VideoFrame]
-    df.select(col("doc_id"), col("payload"))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          aviVideoChunks(b) match {
-            case Left(e) =>
-              Iterator.single(VideoFrame(id, -1, "", 0, 0, 0.0, 0.0, 0.0,
-                ok = false, err = e))
-            case Right((fmt, chunks)) =>
-              val prefix = f"${fmt.streamId}%02d"
-              chunks.iterator.filter(_._1.startsWith(prefix))
-                .zipWithIndex
-                .filter { case (_, idx) => idx % everyK == 0 }
-                .take(maxFrames)
-                .map { case ((ctyp, off, len), idx) =>
-                  decodeOneFrame(id, idx, ctyp, b, off, len, fmt, maxPixels)
-                }
+    decodePayloads(df)((id, _, e) =>
+      VideoFrame(id, -1, "", 0, 0, 0.0, 0.0, 0.0, ok = false, err = e)) { (id, b) =>
+      aviVideoChunks(b).map { case (fmt, chunks) =>
+        val prefix = f"${fmt.streamId}%02d"
+        chunks.iterator.filter(_._1.startsWith(prefix))
+          .zipWithIndex
+          .filter { case (_, idx) => idx % everyK == 0 }
+          .take(maxFrames)
+          .map { case ((ctyp, off, len), idx) =>
+            decodeOneFrame(id, idx, ctyp, b, off, len, fmt, maxPixels)
           }
-        }
-      }(enc)
+      }
+    }
   }
 
   /** Deterministic synthetic raw-RGB AVI for doc `docId`: container
@@ -656,7 +628,7 @@ object Multimodal {
     val le = java.nio.ByteOrder.LITTLE_ENDIAN
     def chunk(id: String, payload: Array[Byte]): Array[Byte] = {
       val bb = java.nio.ByteBuffer
-        .allocate(8 + payload.length + (payload.length & 1)).order(le)
+        .allocate(8 + payload.length + riffPad(payload.length).toInt).order(le)
       bb.put(id.getBytes).putInt(payload.length).put(payload)
       bb.array()
     }
@@ -716,6 +688,15 @@ object Multimodal {
       maxPixels: Long): VideoFrame = {
     def fail(codec: String, e: String) =
       VideoFrame(id, frameNo, codec, 0, 0, 0.0, 0.0, 0.0, ok = false, err = e)
+    def tooBig(w: Int, h: Int) = w.toLong * h.toLong > maxPixels
+    // per-channel means of row-major RGB888 pixels
+    def means(codec: String, w: Int, h: Int, px: Array[Byte]) = {
+      val sum = new Array[Long](3)
+      for (k <- px.indices) sum(k % 3) += px(k) & 0xff
+      val n = w.toLong * h
+      VideoFrame(id, frameNo, codec, w, h,
+        sum(0).toDouble / n, sum(1).toDouble / n, sum(2).toDouble / n, ok = true, err = "")
+    }
     try {
       if (ctyp.endsWith("db")) {
         // uncompressed DIB: validate against the strf header
@@ -725,50 +706,28 @@ object Multimodal {
         val w = fmt.width
         val h = math.abs(fmt.height)
         if (w <= 0 || h <= 0) return fail("rgb24", s"bad dims ${w}x$h")
-        if (w.toLong * h.toLong > maxPixels)
-          return fail("rgb24", s"${w}x$h exceeds maxPixels=$maxPixels")
+        if (tooBig(w, h)) return fail("rgb24", s"${w}x$h exceeds maxPixels=$maxPixels")
         val stride = ((w * 3 + 3) / 4) * 4
         if (stride.toLong * h > len)
           return fail("rgb24", s"chunk $len bytes < ${stride.toLong * h} for ${w}x$h rgb24")
-        var sr = 0L; var sg = 0L; var sb = 0L
-        var y = 0
-        while (y < h) {
-          // positive biHeight = bottom-up row order (the DIB default)
-          val row = off + (if (fmt.height > 0) (h - 1 - y) else y) * stride
-          var x = 0
-          while (x < w) {
-            sb += b(row + x * 3) & 0xff
-            sg += b(row + x * 3 + 1) & 0xff
-            sr += b(row + x * 3 + 2) & 0xff
-            x += 1
-          }
-          y += 1
+        // BGR rows; positive biHeight = bottom-up row order (the DIB default)
+        val px = new Array[Byte](w * h * 3)
+        for (y <- 0 until h; x <- 0 until w) {
+          val p = off + (if (fmt.height > 0) h - 1 - y else y) * stride + x * 3
+          val k = (y * w + x) * 3
+          px(k) = b(p + 2)
+          px(k + 1) = b(p + 1)
+          px(k + 2) = b(p)
         }
-        val n = w.toLong * h
-        VideoFrame(id, frameNo, "rgb24", w, h,
-          sr.toDouble / n, sg.toDouble / n, sb.toDouble / n, ok = true, err = "")
-      } else if (len >= 2 && (b(off) & 0xff) == 0xff && (b(off + 1) & 0xff) == 0xd8) {
+        means("rgb24", w, h, px)
+      } else if (len >= 2 && u8(b, off) == 0xff && u8(b, off + 1) == 0xd8) {
         // MJPEG: the chunk is a standalone JPEG
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(b, off, len))
+        val img = ImageIO.read(new ByteArrayInputStream(b, off, len))
         if (img == null) return fail("mjpeg", "JPEG reader returned null")
-        val w = img.getWidth; val h = img.getHeight
-        if (w.toLong * h.toLong > maxPixels)
-          return fail("mjpeg", s"${w}x$h exceeds maxPixels=$maxPixels")
-        var sr = 0L; var sg = 0L; var sb = 0L
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val rgb = img.getRGB(x, y)
-            sr += (rgb >> 16) & 0xff; sg += (rgb >> 8) & 0xff; sb += rgb & 0xff
-            x += 1
-          }
-          y += 1
-        }
-        val n = w.toLong * h
-        VideoFrame(id, frameNo, "mjpeg", w, h,
-          sr.toDouble / n, sg.toDouble / n, sb.toDouble / n, ok = true, err = "")
+        val w = img.getWidth
+        val h = img.getHeight
+        if (tooBig(w, h)) return fail("mjpeg", s"${w}x$h exceeds maxPixels=$maxPixels")
+        means("mjpeg", w, h, rgb888(img))
       } else
         fail("", s"compressed '$ctyp' frame is not MJPEG — decoding it " +
           "needs an external codec SPI on the executor classpath")
@@ -788,81 +747,42 @@ object Multimodal {
       return Left("not an AVI payload")
     var fmt: Option[AviVideoFormat] = None
     val chunks = Vector.newBuilder[(String, Int, Int)]
-    var i = 12L
-    while (i + 8 <= b.length) {
-      val typ = fourcc(b, i.toInt)
-      val sz = le32L(b, i.toInt + 4)
-      if (i + 8 + sz > b.length) return Left(s"avi: truncated chunk '$typ'")
-      if (typ == "LIST" && sz >= 4) {
-        val ltyp = fourcc(b, i.toInt + 8)
-        if (ltyp == "hdrl") {
-          // walk strl LISTs; the Nth strl is stream N
-          var streamIdx = -1
-          var j = i + 12
-          val end = i + 8 + sz
-          while (j + 8 <= end) {
-            val ctyp = fourcc(b, j.toInt)
-            val csz = le32L(b, j.toInt + 4)
-            if (j + 8 + csz > end) return Left(s"avi: truncated hdrl chunk '$ctyp'")
-            if (ctyp == "LIST" && csz >= 4 && fourcc(b, j.toInt + 8) == "strl") {
-              streamIdx += 1
-              if (fmt.isEmpty) {
-                var k = j + 12
-                val lend = j + 8 + csz
-                var isVids = false
-                while (k + 8 <= lend) {
-                  val styp = fourcc(b, k.toInt)
-                  val ssz = le32L(b, k.toInt + 4)
-                  if (k + 8 + ssz > lend) return Left(s"avi: truncated strl chunk '$styp'")
-                  val p = (k + 8).toInt
-                  if (styp == "strh" && ssz >= 4 && fourcc(b, p) == "vids")
-                    isVids = true
-                  if (styp == "strf" && isVids) {
-                    if (ssz < 20) return Left("avi: strf too short for BITMAPINFOHEADER")
-                    fmt = Some(AviVideoFormat(streamIdx,
-                      le32L(b, p + 4).toInt, le32L(b, p + 8).toInt,
-                      le16(b, p + 14), le32L(b, p + 16)))
-                  }
-                  k += 8 + ssz + (ssz & 1)
-                }
-              }
-            }
-            j += 8 + csz + (csz & 1)
-          }
-        } else if (ltyp == "movi") {
-          var j = i + 12
-          val end = i + 8 + sz
-          while (j + 8 <= end) {
-            val ctyp = fourcc(b, j.toInt)
-            val csz = le32L(b, j.toInt + 4)
-            if (j + 8 + csz > end) return Left(s"avi: truncated movi chunk '$ctyp'")
-            if (ctyp.endsWith("dc") || ctyp.endsWith("db"))
-              chunks += ((ctyp, (j + 8).toInt, csz.toInt))
-            j += 8 + csz + (csz & 1)
-          }
+    // a 'vids' strh makes the strl's strf the video format
+    def strl(s: Part, streamIdx: Int): Either[String, Unit] = {
+      var isVids = false
+      eachPart(riffChunks(b, s.off + 4, s.end, "strl ")) { c =>
+        if (c.typ == "strh" && c.size >= 4 && fourcc(b, c.off) == "vids") isVids = true
+        if (c.typ != "strf" || !isVids) Right(())
+        else if (c.size < 20) Left("avi: strf too short for BITMAPINFOHEADER")
+        else {
+          fmt = Some(AviVideoFormat(streamIdx, le32L(b, c.off + 4).toInt,
+            le32L(b, c.off + 8).toInt, le16(b, c.off + 14), le32L(b, c.off + 16)))
+          Right(())
         }
       }
-      i += 8 + sz + (sz & 1)
     }
-    fmt match {
-      case Some(f) => Right((f, chunks.result()))
-      case None => Left("avi: no video stream ('vids' strh + strf) in hdrl")
+    eachPart(riffChunks(b, 12, b.length, "")) {
+      case l if isList(b, l, "hdrl") =>
+        // the Nth strl is stream N; the first video stream sets the format
+        var streamIdx = -1
+        eachPart(riffChunks(b, l.off + 4, l.end, "hdrl ")) { s =>
+          if (!isList(b, s, "strl")) Right(())
+          else {
+            streamIdx += 1
+            if (fmt.isEmpty) strl(s, streamIdx) else Right(())
+          }
+        }
+      case l if isList(b, l, "movi") =>
+        eachPart(riffChunks(b, l.off + 4, l.end, "movi ")) { c =>
+          if (c.typ.endsWith("dc") || c.typ.endsWith("db")) chunks += ((c.typ, c.off, c.size))
+          Right(())
+        }
+      case _ => Right(())
+    }.flatMap { _ =>
+      fmt.toRight("avi: no video stream ('vids' strh + strf) in hdrl")
+        .map((_, chunks.result()))
     }
   }
-
-  def frameSample(df: DataFrame, everyK: Int): DataFrame =
-    df.select(col("doc_id"), col("payload"))
-      // guard empty payloads: sequence(0, -1) is a DESCENDING range in
-      // Spark (two bogus frames), not empty — same edge class as the
-      // shingle guard in queries/Docs.scala
-      .withColumn("frame_no",
-        explode(when(octet_length(col("payload")) > 0,
-          sequence(lit(0),
-            floor((octet_length(col("payload")) - 1) / everyK).cast("int")))
-          .otherwise(array().cast("array<int>"))))
-      .withColumn("frame_byte",
-        expr(s"substring(payload, frame_no * $everyK + 1, 1)"))
-      .drop("payload")
 
   /** Typed result of a REAL perceptual-hash pass: the canonical 64-bit
     * dHash split into two non-negative 32-bit halves (`phash_hi` bits
@@ -948,69 +868,33 @@ object Multimodal {
   def audioFingerprint(df: DataFrame, window: Int = 16,
       maxFrames: Long = 1L << 24): Dataset[AudioWindow] = {
     require(window >= 1, s"window must be >= 1, got $window")
-    val enc = Encoders.product[AudioWindow]
-    df.select(col("doc_id"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          def fail(e: String) =
-            Iterator.single(AudioWindow(id, -1L, 0L, 0L, ok = false, err = e))
-          if (b == null || b.isEmpty) fail("empty payload")
-          else {
-            try {
-              val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                new java.io.ByteArrayInputStream(b))
-              try {
-                val f = in.getFormat
-                val bits = f.getSampleSizeInBits
-                val signed =
-                  f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
-                val unsigned =
-                  f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED
-                if (in.getFrameLength > maxFrames)
-                  fail(s"${in.getFrameLength} frames exceeds maxFrames=$maxFrames")
-                else if (!signed && !unsigned || (bits != 8 && bits != 16))
-                  fail(s"not linear PCM: ${f.getEncoding}/$bits-bit")
-                else {
-                  val data = in.readAllBytes()
-                  val bytesPer = bits / 8
-                  val n = data.length / bytesPer
-                  val out = Vector.newBuilder[AudioWindow]
-                  var i = 0
-                  var win = 0L
-                  var cnt = 0L
-                  var energy = 0L
-                  while (i < n) {
-                    val s =
-                      if (bits == 16) {
-                        val off = i * 2
-                        if (f.isBigEndian)
-                          ((data(off) << 8) | (data(off + 1) & 0xff)).toShort.toLong
-                        else
-                          ((data(off + 1) << 8) | (data(off) & 0xff)).toShort.toLong
-                      } else if (signed) data(i).toLong << 8
-                      else ((data(i) & 0xff) - 128).toLong << 8
-                    energy += math.abs(s)
-                    cnt += 1
-                    if (cnt == window) {
-                      out += AudioWindow(id, win, cnt, energy, ok = true, err = "")
-                      win += 1; cnt = 0L; energy = 0L
-                    }
-                    i += 1
-                  }
-                  if (cnt > 0)
-                    out += AudioWindow(id, win, cnt, energy, ok = true, err = "")
-                  out.result().iterator
-                }
-              } finally in.close()
-            } catch {
-              case e: Exception =>
-                fail(s"decode: ${e.getClass.getSimpleName}: ${e.getMessage}")
+    decodePayloads(df)((id, _, e) =>
+      AudioWindow(id, -1L, 0L, 0L, ok = false, err = e)) { (id, b) =>
+      if (b == null || b.isEmpty) Left("empty payload")
+      else Using.resource(AudioSystem.getAudioInputStream(new ByteArrayInputStream(b))) { in =>
+        val f = in.getFormat
+        if (in.getFrameLength > maxFrames)
+          Left(s"${in.getFrameLength} frames exceeds maxFrames=$maxFrames")
+        else if (!linearPcm(f))
+          Left(s"not linear PCM: ${f.getEncoding}/${f.getSampleSizeInBits}-bit")
+        else {
+          val out = Vector.newBuilder[AudioWindow]
+          var win = 0L
+          var cnt = 0L
+          var energy = 0L
+          forEachSample16(in.readAllBytes(), f) { s =>
+            energy += math.abs(s)
+            cnt += 1
+            if (cnt == window) {
+              out += AudioWindow(id, win, cnt, energy, ok = true, err = "")
+              win += 1; cnt = 0L; energy = 0L
             }
           }
+          if (cnt > 0) out += AudioWindow(id, win, cnt, energy, ok = true, err = "")
+          Right(out.result().iterator)
         }
-      }(enc)
+      }
+    }
   }
 
   /** Deterministic synthetic 16-bit mono PCM WAV for doc `docId`: REAL
@@ -1065,8 +949,8 @@ object Multimodal {
       y += 1
     }
     val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.setUseCache(false)
-    javax.imageio.ImageIO.write(img, "png", bos)
+    ImageIO.setUseCache(false)
+    ImageIO.write(img, "png", bos)
     bos.toByteArray
   }
 }

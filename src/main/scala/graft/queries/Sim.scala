@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.ColFns._
 import graft.functions.VectorExprs.{cosineFast, vecDot, vecNorm}
+import graft.mm.Multimodal
 import graft.queries.Registry.t
 
 /** Similarity search over the `embeddings` table (64-dim float vectors)
@@ -271,6 +272,18 @@ object Sim {
       planes: Int, threshold: Double = 0.2): DataFrame =
     bucketCosPairs(t(s, dir, "embeddings"), planes, "vec_id_a", "vec_id_b", _ < _, spread = true)
       .filter(col("cos_sim") >= threshold)
+
+  /** `(doc_id, payload)`: one synthetic media file per non-null
+    * document id, built in the scan's own tasks (m02–m05). */
+  private def syntheticPayloads(s: org.apache.spark.sql.SparkSession, dir: String,
+      media: Long => Array[Byte]): DataFrame = {
+    import s.implicits._
+    t(s, dir, "documents")
+      .filter(col("doc_id").isNotNull)
+      .select(col("doc_id")).as[Long]
+      .mapPartitions(_.map(id => (id, media(id))))
+      .toDF("doc_id", "payload")
+  }
 
   /** The trained-IVF probe shared by [[ivfSearchTrained]] and
     * [[ivfPqSearch]]: cells come from [[kmeansIterate]] (instead of
@@ -1803,15 +1816,11 @@ object Sim {
     // golden-byte specs; this gate pins the columnar metadata path
     // cross-engine.
     Q("m01_multimodal_meta",
-      (s, dir) => {
-        val bytes = col("text").cast("binary")
-        t(s, dir, "documents").select(
-          col("doc_id"),
-          octet_length(col("text")).cast("long").as("n_bytes"),
-          sha2(bytes, 256).as("content_sha"),
-          (octet_length(col("text")) % 320 + 32).cast("long").as("fake_width"),
-          (octet_length(col("text")) % 240 + 32).cast("long").as("fake_height"))
-      },
+      (s, dir) =>
+        Multimodal.withPayload(t(s, dir, "documents")).select(
+          col("doc_id"), col("n_bytes"), col("content_sha"),
+          (col("n_bytes") % 320 + 32).as("fake_width"),
+          (col("n_bytes") % 240 + 32).as("fake_height")),
       Some("""SELECT doc_id,
              |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
              |  sha256(text) AS content_sha,
@@ -1831,21 +1840,14 @@ object Sim {
     // hash. Scale shape: scan-parallel map (payload synthesis) +
     // per-row decode — ZERO exchanges at any corpus size.
     Q("m02_video_frames",
-      (s, dir) => {
-        import s.implicits._
-        val payloads = t(s, dir, "documents")
-          .filter(col("doc_id").isNotNull)
-          .select(col("doc_id")).as[Long]
-          .mapPartitions(_.map(id => (id, graft.mm.Multimodal.syntheticRgbAvi(id))))
-          .toDF("doc_id", "payload")
-        graft.mm.Multimodal.decodeFrames(payloads)
+      (s, dir) =>
+        Multimodal.decodeFrames(syntheticPayloads(s, dir, Multimodal.syntheticRgbAvi))
           .select(col("doc_id"),
             col("frame_no").cast("long").as("frame_no"),
             col("codec"),
             col("width").cast("long").as("width"),
             col("height").cast("long").as("height"),
-            col("mean_r"), col("mean_g"), col("mean_b"))
-      },
+            col("mean_r"), col("mean_g"), col("mean_b")),
       Some("""SELECT doc_id, CAST(f AS BIGINT) AS frame_no, 'rgb24' AS codec,
              |  CAST(4 AS BIGINT) AS width, CAST(2 AS BIGINT) AS height,
              |  CAST((doc_id * 7 + f * 13) % 256 AS DOUBLE) AS mean_r,
@@ -1870,18 +1872,11 @@ object Sim {
     // exchanges), then ONE exchange of 2 longs per image for the group
     // — pixels never shuffle at any corpus size.
     Q("m03_image_phash",
-      (s, dir) => {
-        import s.implicits._
-        val payloads = t(s, dir, "documents")
-          .filter(col("doc_id").isNotNull)
-          .select(col("doc_id")).as[Long]
-          .mapPartitions(_.map(id => (id, graft.mm.Multimodal.syntheticGrayPng(id))))
-          .toDF("doc_id", "payload")
-        graft.mm.Multimodal.perceptualHash(payloads)
+      (s, dir) =>
+        Multimodal.perceptualHash(syntheticPayloads(s, dir, Multimodal.syntheticGrayPng))
           .filter(col("ok"))
           .groupBy(col("phash_hi"), col("phash_lo"))
-          .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keeper_id"))
-      },
+          .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keeper_id")),
       Some {
         def bit(x: Int, y: Int) = s"(base * 31 + ${x * 29 + y * 13}) % 256 < 227"
         def half(lo: Int, hi: Int) = (for {
@@ -1914,17 +1909,10 @@ object Sim {
     // exchanges at any corpus size — the dump's exchange is the
     // driver's coalesce(1), not the operator's).
     Q("m04_audio_fp",
-      (s, dir) => {
-        import s.implicits._
-        val payloads = t(s, dir, "documents")
-          .filter(col("doc_id").isNotNull)
-          .select(col("doc_id")).as[Long]
-          .mapPartitions(_.map(id => (id, graft.mm.Multimodal.syntheticPcmWav(id))))
-          .toDF("doc_id", "payload")
-        graft.mm.Multimodal.audioFingerprint(payloads, window = 16)
+      (s, dir) =>
+        Multimodal.audioFingerprint(syntheticPayloads(s, dir, Multimodal.syntheticPcmWav), window = 16)
           .filter(col("ok"))
-          .select(col("doc_id"), col("win_no"), col("n_samples"), col("energy"))
-      },
+          .select(col("doc_id"), col("win_no"), col("n_samples"), col("energy")),
       Some("""SELECT doc_id, CAST(i // 16 AS BIGINT) AS win_no,
              |  CAST(COUNT(*) AS BIGINT) AS n_samples,
              |  CAST(SUM(ABS(((doc_id % 8) * 37 + i * 11) % 256 - 128) * 256) AS BIGINT) AS energy
@@ -1951,14 +1939,8 @@ object Sim {
     // the dup grouping.
     Q("m05_video_fp_dedup",
       (s, dir) => {
-        import s.implicits._
-        val payloads = t(s, dir, "documents")
-          .filter(col("doc_id").isNotNull)
-          .select(col("doc_id")).as[Long]
-          .mapPartitions(_.map(id =>
-            (id, graft.mm.Multimodal.syntheticRgbAvi(id % 24))))
-          .toDF("doc_id", "payload")
-        val frames = graft.mm.Multimodal.decodeFrames(payloads)
+        val frames = Multimodal.decodeFrames(
+          syntheticPayloads(s, dir, id => Multimodal.syntheticRgbAvi(id % 24)))
           .filter(col("ok"))
           .select(col("doc_id"), col("frame_no"),
             concat_ws(":", col("mean_r").cast("long"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Multimodal processing: payload column, partition-parallel decoders,
-  * bilinear resize, frame sampling — schema, batch shape, and the
+  * bilinear resize, video frame decode — schema, batch shape, and the
   * per-row error channel are the contract. The m01 gate's fake-decode
   * metadata formula lives on in [[fakeDecode]] below as a test-local
   * template of the mapPartitions plumbing (the library surface itself
@@ -232,20 +232,25 @@ class MultimodalSpec extends SparkSpec {
   }
 
   /** Minimal-but-valid MP4: ftyp(isom) + moov{ mvhd v0(timescale,
-    * duration), trak{ tkhd with 16.16-fixed dims in its last 8 bytes } }. */
-  private def mp4(timescale: Int, duration: Int, w: Int, h: Int): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(16 + 8 + 28 + 8 + 24 + 8)
+    * duration), trak{ tkhd with 16.16-fixed dims in its last 8 bytes } }.
+    * `largeTkhd` writes the tkhd header as `size == 1` + a 64-bit
+    * largesize, which ISO/IEC 14496-12 allows on any box. */
+  private def mp4(timescale: Int, duration: Int, w: Int, h: Int,
+      largeTkhd: Boolean = false): Array[Byte] = {
+    val tkhd = if (largeTkhd) 32 else 24
+    val bb = java.nio.ByteBuffer.allocate(16 + 8 + 28 + 8 + tkhd + 8)
       .order(java.nio.ByteOrder.BIG_ENDIAN)
     bb.putInt(16).put("ftyp".getBytes).put("isom".getBytes).putInt(0)
-    bb.putInt(8 + 28 + 8 + 24 + 8).put("moov".getBytes)
+    bb.putInt(8 + 28 + 8 + tkhd + 8).put("moov".getBytes)
     // mvhd v0: ver+flags, creation, modification, timescale, duration (+pad)
     bb.putInt(8 + 28).put("mvhd".getBytes)
       .putInt(0).putInt(0).putInt(0).putInt(timescale).putInt(duration)
       .putInt(0).putInt(0)
     // trak { tkhd: 16-byte payload whose last 8 bytes are w/h in 16.16 }
-    bb.putInt(8 + 24).put("trak".getBytes)
-    bb.putInt(24).put("tkhd".getBytes).putInt(0).putInt(0)
-      .putInt(w << 16).putInt(h << 16)
+    bb.putInt(8 + tkhd).put("trak".getBytes)
+    if (largeTkhd) bb.putInt(1).put("tkhd".getBytes).putLong(tkhd)
+    else bb.putInt(tkhd).put("tkhd".getBytes)
+    bb.putInt(0).putInt(0).putInt(w << 16).putInt(h << 16)
     bb.array()
   }
 
@@ -412,7 +417,8 @@ class MultimodalSpec extends SparkSpec {
     val df = Seq(
       (1L, mp4(timescale = 1000, duration = 5000, w = 640, h = 360)),
       (2L, avi(usPerFrame = 40000, totalFrames = 250, streams = 2, w = 320, h = 240)),
-      (3L, "definitely not a video".getBytes("UTF-8")))
+      (3L, "definitely not a video".getBytes("UTF-8")),
+      (4L, mp4(timescale = 600, duration = 1200, w = 1920, h = 1080, largeTkhd = true)))
       .toDF("doc_id", "payload")
       .withColumn("n_bytes", octet_length(col("payload")).cast("long"))
     val m = Multimodal.decodeVideo(df).collect().map(v => v.doc_id -> v).toMap
@@ -423,6 +429,9 @@ class MultimodalSpec extends SparkSpec {
     assert(m(2L).duration_ms === 10000.0 && m(2L).n_tracks === 2)
     assert(m(2L).width === 320 && m(2L).height === 240)
     assert(!m(3L).ok && m(3L).err === "unknown container")
+    assert(m(4L).ok, m(4L).err)
+    assert(m(4L).duration_ms === 2000.0 && m(4L).n_tracks === 1)
+    assert(m(4L).width === 1920 && m(4L).height === 1080)
   }
 
   test("decodeVideo: truncated/hostile boxes use the error channel, never throw") {
@@ -439,6 +448,49 @@ class MultimodalSpec extends SparkSpec {
     assert(!m(1L).ok && m(1L).err.startsWith("mp4:"))
     assert(!m(2L).ok && m(2L).err.startsWith("mp4:"))
     assert(!m(3L).ok && m(3L).err === "payload too short")
+  }
+
+  test("decodeVideo/decodeFrames: every AVI prefix and an oversized chunk use the avi: error channel") {
+    import spark.implicits._
+    val good = Multimodal.syntheticRgbAvi(5)
+    val le = java.nio.ByteOrder.LITTLE_ENDIAN
+    // the first movi frame chunk claims far more bytes than the payload has
+    val frameAt = new String(good, "US-ASCII").indexOf("00db")
+    val bigFrame = good.clone()
+    java.nio.ByteBuffer.wrap(bigFrame).order(le).putInt(frameAt + 4, 0x7ffffff0)
+    // a trailing top-level chunk whose size runs past the payload
+    val junk = java.nio.ByteBuffer.allocate(12).order(le)
+      .put("JUNK".getBytes).putInt(-16).putInt(0).array()
+    val inputs = (0 to good.length).map(n => good.take(n)) :+ bigFrame :+ (good ++ junk)
+    val df = inputs.zipWithIndex.map { case (b, i) => (i.toLong, b) }.toDF("doc_id", "payload")
+      .withColumn("n_bytes", octet_length(col("payload")).cast("long"))
+    def hostileErr(e: String) = e.startsWith("avi:") || e == "payload too short"
+
+    val video = Multimodal.decodeVideo(df).collect()
+    assert(video.length === inputs.length)
+    video.filterNot(_.ok).foreach(v => assert(hostileErr(v.err), s"doc ${v.doc_id}: ${v.err}"))
+    assert(video.find(_.doc_id == good.length).exists(v => v.ok && v.width == 4))
+
+    val frames = Multimodal.decodeFrames(df).collect()
+    frames.filterNot(_.ok).foreach(f => assert(hostileErr(f.err), s"doc ${f.doc_id}: ${f.err}"))
+    assert(frames.count(f => f.doc_id == good.length && f.ok) === 3)
+    val bad = frames.filter(_.doc_id == inputs.length - 2)
+    assert(bad.length === 1 && bad(0).err === "avi: truncated movi chunk '00db'")
+    val tail = frames.filter(_.doc_id == inputs.length - 1)
+    assert(tail.length === 1 && tail(0).err === "avi: truncated chunk 'JUNK'")
+  }
+
+  test("a null payload is an error row in every decoder, never a task failure") {
+    import spark.implicits._
+    val df = Multimodal.withPayload(Seq((1L, null: String)).toDF("doc_id", "text"))
+    val img = Multimodal.decodeImage(df).collect().head
+    assert(!img.ok && img.n_bytes === 0L && img.err === "payload too short")
+    val vid = Multimodal.decodeVideo(df).collect().head
+    assert(!vid.ok && vid.n_bytes === 0L && vid.err === "payload too short")
+    assert(Multimodal.decodeFrames(df).collect().map(_.err).toSeq === Seq("payload too short"))
+    assert(Multimodal.decodePixels(df).collect().map(_.err).toSeq === Seq("empty payload"))
+    assert(Multimodal.decodeAudio(df).collect().map(_.err).toSeq === Seq("empty payload"))
+    assert(Multimodal.audioFingerprint(df).collect().map(_.err).toSeq === Seq("empty payload"))
   }
 
   test("resizePixels: huge-but-valid dims are rejected up front (Int overflow guard)") {
@@ -601,20 +653,6 @@ class MultimodalSpec extends SparkSpec {
     assert(w.ok && w.win_no === 0L && w.n_samples === vals.length.toLong)
     assert(w.energy === vals.map(v => math.abs(v) * 256L).sum)
     assert(rows(2L).forall(r => !r.ok && r.err.nonEmpty))
-  }
-
-  test("frameSample explodes one row per sampled byte") {
-    val frames = Multimodal.frameSample(Multimodal.withPayload(docs.filter(col("doc_id") === 1)), 4)
-    // 11 bytes, every 4th → frames at 0,4,8 → (11-1)/4 = 2 → 0..2 = 3 rows
-    assert(frames.count() === 3)
-    assert(frames.columns.toSet === Set("doc_id", "frame_no", "frame_byte"))
-  }
-
-  test("frameSample yields ZERO frames for an empty payload") {
-    // sequence(0, -1) would be a descending range — guard must produce
-    // no rows, not two bogus frames
-    val frames = Multimodal.frameSample(Multimodal.withPayload(docs.filter(col("doc_id") === 2)), 4)
-    assert(frames.count() === 0)
   }
 
   // ── SPI routing: "a codec jar swaps in with no plumbing change" ────
