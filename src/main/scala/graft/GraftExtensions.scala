@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{MinHashSig, PlaneBucketCode, SimHash16, TopAdjacentPairCount, VecDot}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import graft.functions.{MinHashSig, PlaneBucketCode, SimHash16, TopAdjacentPairCount, UnaryKernel, VecDot}
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * expressions for SQL-text users —
@@ -23,10 +23,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def unary(name: String, f: Expression => Expression):
-      Seq[Expression] => Expression = children => {
-    require(children.length == 1, s"$name takes exactly 1 argument")
-    f(children.head)
+  /** A one-argument builder registered under the kernel's own `prettyName`. */
+  private def unary(kernel: Expression => UnaryKernel[_, _]):
+      (String, ExpressionInfo, Seq[Expression] => Expression) = {
+    val probe = kernel(Literal(null))
+    (probe.prettyName, new ExpressionInfo(probe.getClass.getName, probe.prettyName),
+      (children: Seq[Expression]) => {
+        require(children.length == 1, s"${probe.prettyName} takes exactly 1 argument")
+        kernel(children.head): Expression
+      })
   }
 
   private[graft] val all: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
@@ -35,15 +40,10 @@ object GraftExtensions {
         require(children.length == 2, "vec_dot takes exactly 2 arguments")
         VecDot(children.head, children(1))
       }),
-    ("minhash_sig", new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      unary("minhash_sig", MinHashSig(_))),
-    ("simhash16", new ExpressionInfo(classOf[SimHash16].getName, "simhash16"),
-      unary("simhash16", SimHash16(_))),
-    ("plane_bucket_code", new ExpressionInfo(classOf[PlaneBucketCode].getName, "plane_bucket_code"),
-      unary("plane_bucket_code", PlaneBucketCode(_))),
-    ("top_adjacent_pair_count",
-      new ExpressionInfo(classOf[TopAdjacentPairCount].getName, "top_adjacent_pair_count"),
-      unary("top_adjacent_pair_count", TopAdjacentPairCount(_))))
+    unary(MinHashSig(_)),
+    unary(SimHash16(_)),
+    unary(PlaneBucketCode(_)),
+    unary(TopAdjacentPairCount(_)))
 
   /** Same registration for a session the library didn't construct. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,10 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * per-(doc, term) tf frame.
   *
   * Tokenization is bit-identical to `words`/`tokenCount`
-  * (ColFns.scala:84-96): Java-regex `\s` whitespace is exactly the six
-  * ASCII bytes {0x09..0x0D, 0x20} (no Unicode classes), all < 0x80, so
-  * a UTF-8 byte scan splits on precisely the same boundaries — tokens
-  * are maximal runs of non-`\s` bytes, `ndl` is the run count (0 for
+  * (ColFns.scala): tokens are maximal runs of non-`\s` bytes
+  * ([[UnaryKernel.isWs]]), `ndl` is the run count (0 for
   * blank text, matching tokenCount's empty-string special case), and
   * term matching compares exact UTF-8 bytes via zero-copy UTF8String
   * views (no String materialization, no per-token allocation).
@@ -35,17 +31,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Pinned to the builtin formulation on adversarial inputs by
   * Bm25ExprsSpec.
   */
-case class Bm25DocStats(child: Expression, terms: Seq[String]) extends UnaryExpression {
+case class Bm25DocStats(child: Expression, terms: Seq[String])
+    extends UnaryKernel[UTF8String, InternalRow](StringType, "bm25_doc_stats") {
 
   override def dataType: DataType = Bm25DocStats.schema
-  override def prettyName: String = "bm25_doc_stats"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bm25_doc_stats requires string input, got ${t.sql}")
-  }
 
   /** Term → tfs index; built once per (serialized) expression instance,
     * shared across rows on the executor. */
@@ -55,18 +44,23 @@ case class Bm25DocStats(child: Expression, terms: Seq[String]) extends UnaryExpr
     m
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    Bm25DocStats.compute(input.asInstanceOf[UTF8String], lookup, terms.size)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bm25Lookup", lookup, "java.util.HashMap")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) " +
-        s"graft.functions.Bm25DocStats.compute($c, $ref, ${terms.size});")
+  /** One byte pass: count whitespace-token runs and per-term matches.
+    * Token views are zero-copy (UTF8String.fromAddress over the input's
+    * buffer); the map probe hashes the view's bytes directly. */
+  def compute(text: UTF8String): InternalRow = {
+    val tfs = new Array[Long](terms.size)
+    var ndl = 0L
+    var i = UnaryKernel.tokenStart(text, 0)
+    while (i < text.numBytes) {
+      val end = UnaryKernel.tokenEnd(text, i)
+      ndl += 1
+      val idx = lookup.get(
+        UTF8String.fromAddress(text.getBaseObject, text.getBaseOffset + i, end - i))
+      if (idx != null) tfs(idx.intValue()) += 1L
+      i = UnaryKernel.tokenStart(text, end)
+    }
+    new GenericInternalRow(Array[Any](ndl, new GenericArrayData(tfs)))
   }
-
-  override protected def withNewChildInternal(newChild: Expression): Bm25DocStats =
-    copy(child = newChild)
 }
 
 object Bm25DocStats {
@@ -74,38 +68,11 @@ object Bm25DocStats {
   val schema: StructType = StructType(Seq(
     StructField("ndl", LongType, nullable = false),
     StructField("tfs", ArrayType(LongType, containsNull = false), nullable = false)))
-
-  @inline private def isWs(b: Byte): Boolean =
-    b == 0x20 || (b >= 0x09 && b <= 0x0d)
-
-  /** One byte pass: count whitespace-token runs and per-term matches.
-    * Token views are zero-copy (UTF8String.fromAddress over the input's
-    * buffer); the map probe hashes the view's bytes directly. */
-  def compute(text: UTF8String,
-      lookup: java.util.HashMap[UTF8String, Integer], nTerms: Int): InternalRow = {
-    val base = text.getBaseObject
-    val offset = text.getBaseOffset
-    val n = text.numBytes()
-    val tfs = new Array[Long](nTerms)
-    var ndl = 0L
-    var i = 0
-    while (i < n) {
-      while (i < n && isWs(text.getByte(i))) i += 1
-      if (i < n) {
-        val start = i
-        while (i < n && !isWs(text.getByte(i))) i += 1
-        ndl += 1
-        val idx = lookup.get(UTF8String.fromAddress(base, offset + start, i - start))
-        if (idx != null) tfs(idx.intValue()) += 1L
-      }
-    }
-    new GenericInternalRow(Array[Any](ndl, new GenericArrayData(tfs)))
-  }
 }
 
 object Bm25Exprs {
   /** text → struct(ndl long, tfs array<long> aligned to `terms`), one
     * compiled byte pass (see [[Bm25DocStats]]). */
   def bm25DocStats(text: Column, terms: Seq[String]): Column =
-    GraftShim.column(Bm25DocStats(GraftShim.expression(text), terms))
+    UnaryKernel.column(text)(Bm25DocStats(_, terms))
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -38,32 +35,89 @@ import org.apache.spark.unsafe.types.UTF8String
   * md5(enc) via the codegen'd builtin outside.
   */
 case class BpeEncodeStats(child: Expression, merges: Seq[String], passes: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, InternalRow](ArrayType(StringType), "bpe_encode_stats") {
 
   override def dataType: DataType = BpeEncodeStats.schema
-  override def prettyName: String = "bpe_encode_stats"
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bpe_encode_stats requires array<string> input, got ${t.sql}")
+  // the merge table: k two-char ASCII pairs, literal-model sized
+  @transient private lazy val mA: Array[Byte] = merges.map(_.charAt(0).toByte).toArray
+  @transient private lazy val mB: Array[Byte] = merges.map(_.charAt(1).toByte).toArray
+
+  def compute(arr: ArrayData): InternalRow = {
+    val n = arr.numElements()
+    // base = " " + per-char spacing of concat_ws(" / ", elig): every
+    // char (word chars, the joint spaces, '/') gets a trailing space
+    var joinLen = if (n == 0) 0 else 3 * (n - 1)
+    val wordBytes = new Array[Array[Byte]](n)
+    var chars = 0L
+    var i = 0
+    while (i < n) {
+      val w = arr.getUTF8String(i).getBytes
+      wordBytes(i) = w
+      chars += w.length
+      joinLen += w.length
+      i += 1
+    }
+    val baseLen = 1 + 2 * joinLen
+    var src = new Array[Byte](baseLen)
+    var dst = new Array[Byte](baseLen)
+    var o = 0
+    src(o) = ' '; o += 1
+    i = 0
+    while (i < n) {
+      if (i > 0) { // " / " joint, spaced: ' ',' ','/',' ',' ',' '
+        src(o) = ' '; src(o + 1) = ' '; src(o + 2) = '/'
+        src(o + 3) = ' '; src(o + 4) = ' '; src(o + 5) = ' '
+        o += 6
+      }
+      val w = wordBytes(i)
+      var j = 0
+      while (j < w.length) { src(o) = w(j); src(o + 1) = ' '; o += 2; j += 1 }
+      i += 1
+    }
+    var len = o
+    // merge passes: exact replace(" a b ", " ab ") semantics — scan
+    // left to right, on a match emit the merged form and resume AFTER
+    // the consumed window (the trailing space is consumed, so an
+    // immediately following pair waits for the next pass — the
+    // documented separator-consumed-middle behavior)
+    var m = 0
+    while (m < mA.length) {
+      val a = mA(m); val b = mB(m)
+      var p = 0
+      var changed = true
+      while (p < passes && changed) {
+        changed = false
+        var ii = 0
+        var oo = 0
+        val lim = len - 4
+        while (ii < lim) {
+          if (src(ii) == ' ' && src(ii + 1) == a && src(ii + 2) == ' ' &&
+              src(ii + 3) == b && src(ii + 4) == ' ') {
+            dst(oo) = ' '; dst(oo + 1) = a; dst(oo + 2) = b; dst(oo + 3) = ' '
+            oo += 4; ii += 5; changed = true
+          } else { dst(oo) = src(ii); oo += 1; ii += 1 }
+        }
+        while (ii < len) { dst(oo) = src(ii); oo += 1; ii += 1 }
+        if (changed) { val t = src; src = dst; dst = t; len = oo }
+        p += 1
+      }
+      m += 1
+    }
+    // symbol count: maximal [a-z0-9]+ runs of the final bytes
+    var syms = 0L
+    var inRun = false
+    var k = 0
+    while (k < len) {
+      val c = src(k)
+      val al = (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
+      if (al && !inRun) syms += 1
+      inRun = al
+      k += 1
+    }
+    new GenericInternalRow(Array[Any](
+      n.toLong, chars, syms, UTF8String.fromBytes(src, 0, len)))
   }
-
-  @transient private lazy val encoder = new BpeEncodeStats.Encoder(merges, passes)
-
-  override protected def nullSafeEval(input: Any): Any =
-    encoder.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val enc = ctx.addReferenceObj("bpeEncoder", encoder,
-      classOf[BpeEncodeStats.Encoder].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $enc.compute($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeEncodeStats =
-    copy(child = newChild)
 }
 
 object BpeEncodeStats {
@@ -73,95 +127,11 @@ object BpeEncodeStats {
     StructField("chars_total", LongType, nullable = false),
     StructField("syms_total", LongType, nullable = false),
     StructField("enc", StringType, nullable = false)))
-
-  /** Merge-table holder, shipped into generated code as a codegen
-    * reference object (one instance per expression, shared by tasks).
-    * The table is k two-char ASCII pairs — literal-model sized. */
-  final class Encoder(merges: Seq[String], passes: Int) extends Serializable {
-    private val mA: Array[Byte] = merges.map(_.charAt(0).toByte).toArray
-    private val mB: Array[Byte] = merges.map(_.charAt(1).toByte).toArray
-
-    def compute(arr: ArrayData): InternalRow = {
-      val n = arr.numElements()
-      // base = " " + per-char spacing of concat_ws(" / ", elig): every
-      // char (word chars, the joint spaces, '/') gets a trailing space
-      var joinLen = if (n == 0) 0 else 3 * (n - 1)
-      val wordBytes = new Array[Array[Byte]](n)
-      var chars = 0L
-      var i = 0
-      while (i < n) {
-        val w = arr.getUTF8String(i).getBytes
-        wordBytes(i) = w
-        chars += w.length
-        joinLen += w.length
-        i += 1
-      }
-      val baseLen = 1 + 2 * joinLen
-      var src = new Array[Byte](baseLen)
-      var dst = new Array[Byte](baseLen)
-      var o = 0
-      src(o) = ' '; o += 1
-      i = 0
-      while (i < n) {
-        if (i > 0) { // " / " joint, spaced: ' ',' ','/',' ',' ',' '
-          src(o) = ' '; src(o + 1) = ' '; src(o + 2) = '/'
-          src(o + 3) = ' '; src(o + 4) = ' '; src(o + 5) = ' '
-          o += 6
-        }
-        val w = wordBytes(i)
-        var j = 0
-        while (j < w.length) { src(o) = w(j); src(o + 1) = ' '; o += 2; j += 1 }
-        i += 1
-      }
-      var len = o
-      // merge passes: exact replace(" a b ", " ab ") semantics — scan
-      // left to right, on a match emit the merged form and resume AFTER
-      // the consumed window (the trailing space is consumed, so an
-      // immediately following pair waits for the next pass — the
-      // documented separator-consumed-middle behavior)
-      var m = 0
-      while (m < mA.length) {
-        val a = mA(m); val b = mB(m)
-        var p = 0
-        var changed = true
-        while (p < passes && changed) {
-          changed = false
-          var ii = 0
-          var oo = 0
-          val lim = len - 4
-          while (ii < lim) {
-            if (src(ii) == ' ' && src(ii + 1) == a && src(ii + 2) == ' ' &&
-                src(ii + 3) == b && src(ii + 4) == ' ') {
-              dst(oo) = ' '; dst(oo + 1) = a; dst(oo + 2) = b; dst(oo + 3) = ' '
-              oo += 4; ii += 5; changed = true
-            } else { dst(oo) = src(ii); oo += 1; ii += 1 }
-          }
-          while (ii < len) { dst(oo) = src(ii); oo += 1; ii += 1 }
-          if (changed) { val t = src; src = dst; dst = t; len = oo }
-          p += 1
-        }
-        m += 1
-      }
-      // symbol count: maximal [a-z0-9]+ runs of the final bytes
-      var syms = 0L
-      var inRun = false
-      var k = 0
-      while (k < len) {
-        val c = src(k)
-        val al = (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-        if (al && !inRun) syms += 1
-        inRun = al
-        k += 1
-      }
-      new GenericInternalRow(Array[Any](
-        n.toLong, chars, syms, UTF8String.fromBytes(src, 0, len)))
-    }
-  }
 }
 
 object BpeExprs {
   /** Column wrapper over [[BpeEncodeStats]]: array<string> →
     * struct(n_words, chars_total, syms_total, enc). */
   def bpeEncodeStats(elig: Column, merges: Seq[String], passes: Int): Column =
-    GraftShim.column(BpeEncodeStats(GraftShim.expression(elig), merges, passes))
+    UnaryKernel.column(elig)(BpeEncodeStats(_, merges, passes))
 }

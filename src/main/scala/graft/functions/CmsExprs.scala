@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,49 +19,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * the same bytes, but byte[] keeps it byte-for-byte the same path).
   */
 case class CmsEstimate(child: Expression, sketchBytes: Array[Byte])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, Long](StringType, "cms_estimate") {
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "cms_estimate"
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"cms_estimate requires string input, got ${t.sql}")
-  }
+  // deserialized once per (serialized) expression instance: the bytes
+  // ship with the plan, the sketch materializes on the executor
+  @transient private lazy val cms =
+    org.apache.spark.util.sketch.CountMinSketch.readFrom(sketchBytes)
 
-  @transient private lazy val reader = new CmsEstimate.Reader(sketchBytes)
-
-  override protected def nullSafeEval(input: Any): Any =
-    reader.estimate(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val rd = ctx.addReferenceObj("cmsReader", reader,
-      classOf[CmsEstimate.Reader].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $rd.estimate($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CmsEstimate =
-    copy(child = newChild)
-}
-
-object CmsEstimate {
-  /** Lazily-deserialized sketch holder, shipped as a codegen reference
-    * object (bytes serialize with the plan; the sketch materializes once
-    * per executor). */
-  final class Reader(bytes: Array[Byte]) extends Serializable {
-    @transient private lazy val cms =
-      org.apache.spark.util.sketch.CountMinSketch.readFrom(bytes)
-    def estimate(item: UTF8String): Long = cms.estimateCount(item.getBytes)
-  }
+  def compute(item: UTF8String): Long = cms.estimateCount(item.getBytes)
 }
 
 object CmsExprs {
   /** Column wrapper over [[CmsEstimate]]: string term → estimated count
     * from the serialized count-min sketch. */
   def cmsEstimate(term: Column, sketchBytes: Array[Byte]): Column =
-    GraftShim.column(CmsEstimate(GraftShim.expression(term), sketchBytes))
+    UnaryKernel.column(term)(CmsEstimate(_, sketchBytes))
 
   /** Aggregate Column over [[CmsWeightedAgg]]: build a count-min sketch
     * from pre-aggregated (term, count) rows — byte-identical to the

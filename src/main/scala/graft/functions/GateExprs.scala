@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,49 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * gate path filters ""/null elements before the call, but hand-built
   * arrays are handled deterministically — see each expression's note.
   */
-case class GopherStats(child: Expression) extends UnaryExpression {
+case class GopherStats(child: Expression)
+    extends UnaryKernel[ArrayData, InternalRow](ArrayType(StringType), "gopher_stats") {
 
   override def dataType: DataType = GopherStats.schema
-  override def prettyName: String = "gopher_stats"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"gopher_stats requires array<string> input, got ${t.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GopherStats.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) " +
-        s"graft.functions.GopherStats.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): GopherStats =
-    copy(child = newChild)
-}
-
-object GopherStats {
-
-  val schema: StructType = StructType(Seq(
-    StructField("n_words", LongType, nullable = false),
-    StructField("sum_len", LongType, nullable = false),
-    StructField("stop_hits", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("top_cnt", LongType, nullable = false)))
-
-  /** The d37 stopword list (Gopher's "must contain ≥ 2 of a small
-    * English stopword set" rule) — single source for the Spark gate,
-    * the oracle twin, and this expression. */
-  val stops: Seq[String] = Seq("the", "a", "of", "and", "be", "to", "in", "it")
-
-  private val stopSet: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String]()
-    stops.foreach(t => s.add(UTF8String.fromString(t)))
-    s
-  }
 
   /** One pass: per-token counts in an open hash map (UTF8String keys —
     * no String materialization), character totals via numChars (the
@@ -96,10 +55,31 @@ object GopherStats {
       i += 1
     }
     var stopHits = 0L
-    val it = stopSet.iterator()
+    val it = GopherStats.stopSet.iterator()
     while (it.hasNext) if (counts.containsKey(it.next())) stopHits += 1
     new GenericInternalRow(Array[Any](
       nWords, sumLen, stopHits, counts.size().toLong, topCnt.toLong))
+  }
+}
+
+object GopherStats {
+
+  val schema: StructType = StructType(Seq(
+    StructField("n_words", LongType, nullable = false),
+    StructField("sum_len", LongType, nullable = false),
+    StructField("stop_hits", LongType, nullable = false),
+    StructField("n_distinct", LongType, nullable = false),
+    StructField("top_cnt", LongType, nullable = false)))
+
+  /** The d37 stopword list (Gopher's "must contain ≥ 2 of a small
+    * English stopword set" rule) — single source for the Spark gate,
+    * the oracle twin, and this expression. */
+  val stops: Seq[String] = Seq("the", "a", "of", "and", "be", "to", "in", "it")
+
+  private val stopSet: java.util.HashSet[UTF8String] = {
+    val s = new java.util.HashSet[UTF8String]()
+    stops.foreach(t => s.add(UTF8String.fromString(t)))
+    s
   }
 }
 
@@ -109,54 +89,20 @@ object GopherStats {
   * in one compiled pass. A null ELEMENT nulls the whole sum, exactly
   * like the builtin fold (`acc + weight(null)` is null); the gate path
   * filters nulls out before the call. */
-case class HashedTokenScore(child: Expression) extends UnaryExpression {
+case class HashedTokenScore(child: Expression)
+    extends UnaryKernel[ArrayData, java.lang.Long](ArrayType(StringType), "hashed_token_score") {
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "hashed_token_score"
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hashed_token_score requires array<string> input, got ${t.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashedTokenScore.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |Object r = graft.functions.HashedTokenScore.compute($c);
-      |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Long) r).longValue(); }
-      |""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): HashedTokenScore =
-    copy(child = newChild)
-}
-
-object HashedTokenScore {
-
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** Returns java.lang.Long (null on a null element, mirroring the
-    * builtin fold). The weight reads the digest's first 4 bytes as an
-    * unsigned 32-bit value — exactly the hex-prefix parse
-    * `conv(substring(md5(x), 1, 8), 16, 10)`. */
+  /** Null on a null element, mirroring the builtin fold. The weight
+    * reads the digest's first 4 bytes as an unsigned 32-bit value —
+    * exactly the hex-prefix parse `conv(substring(md5(x), 1, 8), 16, 10)`. */
   def compute(arr: ArrayData): java.lang.Long = {
-    val n = arr.numElements()
-    val d = md5.get()
     var sum = 0L
     var i = 0
-    while (i < n) {
+    while (i < arr.numElements()) {
       if (arr.isNullAt(i)) return null
-      d.reset()
-      val h = d.digest(arr.getUTF8String(i).getBytes)
-      val u = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
-        ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
-      sum += u % 2001L - 1000L
+      sum += UnaryKernel.word32(UnaryKernel.md5(arr.getUTF8String(i).getBytes), 0) % 2001L - 1000L
       i += 1
     }
     sum
@@ -166,10 +112,8 @@ object HashedTokenScore {
 object GateExprs {
   /** array<string> → struct(n_words, sum_len, stop_hits, n_distinct,
     * top_cnt), one compiled pass. */
-  def gopherStats(ws: Column): Column =
-    GraftShim.column(GopherStats(GraftShim.expression(ws)))
+  def gopherStats(ws: Column): Column = UnaryKernel.column(ws)(GopherStats(_))
 
   /** array<string> → hashed-linear score_sum, one compiled pass. */
-  def hashedTokenScore(ws: Column): Column =
-    GraftShim.column(HashedTokenScore(GraftShim.expression(ws)))
+  def hashedTokenScore(ws: Column): Column = UnaryKernel.column(ws)(HashedTokenScore(_))
 }

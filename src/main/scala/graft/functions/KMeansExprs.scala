@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, StructField, StructType}
 
 /** Codegen'd k-means assignment: argmin over a tiny broadcast model,
   * fused into ONE expression so assignment — the hot scan at 100 TB —
@@ -32,7 +31,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   *     downstream aggregates.
   *
   * The model rides along as constructor constants (labels, centroid
-  * matrix, precomputed c·c), registered as codegen reference objects —
+  * matrix, precomputed c·c), shipped with the kernel itself —
   * at any corpus scale the model is K×dim floats, far below broadcast
   * thresholds.
   */
@@ -40,82 +39,59 @@ case class KMeansArgMin(
     child: Expression,
     labels: Array[Int],
     cents: Array[Array[Float]],
-    ccs: Array[Double]) extends UnaryExpression {
+    ccs: Array[Double])
+    extends UnaryKernel[ArrayData, Integer](ArrayType(FloatType), "kmeans_argmin") {
 
   require(labels.length == cents.length && labels.length == ccs.length,
     "model arrays must be parallel")
 
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "kmeans_argmin"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"kmeans_argmin requires array<float> input, got ${t.sql}")
+  def compute(arr: ArrayData): Integer = {
+    val k = KMeansArgMin.nearest(arr, cents, ccs)
+    if (k < 0) null else labels(k)
+  }
+}
+
+object KMeansArgMin {
+
+  /** Model arrays of a driver-resident model: entries sorted by label (so
+    * the first-wins tie rule is "smaller label"), and c·c with the same
+    * left-to-right fold the assignment (and the DuckDB twin's
+    * list_inner_product(cvec, cvec)) uses. */
+  def prep(model: Seq[(Int, Array[Float])]): (Array[Int], Array[Array[Float]], Array[Double]) = {
+    val sorted = model.sortBy(_._1)
+    val cents = sorted.map(_._2).toArray
+    (sorted.map(_._1).toArray, cents,
+      cents.map(_.foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble)))
   }
 
-  override protected def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
+  /** cc − 2·(e·c), the dot accumulated left to right in double. */
+  def score(arr: ArrayData, c: Array[Float], cc: Double): Double = {
+    var acc = 0.0
+    var j = 0
+    while (j < c.length) { acc += arr.getFloat(j).toDouble * c(j).toDouble; j += 1 }
+    cc - 2.0 * acc
+  }
+
+  /** Index of the strictly lowest-scoring centroid of matching dimension,
+    * or −1 when the vector has a null element or no centroid scores. */
+  def nearest(arr: ArrayData, cents: Array[Array[Float]], ccs: Array[Double]): Int = {
     val n = arr.numElements()
-    var hasNull = false
     var i = 0
-    while (i < n && !hasNull) { hasNull = arr.isNullAt(i); i += 1 }
+    while (i < n) { if (arr.isNullAt(i)) return -1; i += 1 }
     var bestS = Double.PositiveInfinity
-    var bestL = Int.MaxValue
+    var best = -1
     var k = 0
     while (k < cents.length) {
-      val c = cents(k)
-      if (!hasNull && c.length == n) {
-        var acc = 0.0
-        var j = 0
-        while (j < n) { acc += arr.getFloat(j).toDouble * c(j).toDouble; j += 1 }
-        val s = ccs(k) - 2.0 * acc
-        if (s < bestS) { bestS = s; bestL = labels(k) }
+      if (cents(k).length == n) {
+        val s = score(arr, cents(k), ccs(k))
+        if (s < bestS) { bestS = s; best = k }
       }
       k += 1
     }
-    if (bestL == Int.MaxValue) null else bestL
+    best
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val labelsRef = ctx.addReferenceObj("labels", labels, "int[]")
-      val centsRef = ctx.addReferenceObj("cents", cents, "float[][]")
-      val ccsRef = ctx.addReferenceObj("ccs", ccs, "double[]")
-      val n = ctx.freshName("n")
-      val hasNull = ctx.freshName("hasNull")
-      val bestS = ctx.freshName("bestS")
-      val bestL = ctx.freshName("bestL")
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val acc = ctx.freshName("acc")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = $a.numElements();
-         |boolean $hasNull = false;
-         |for (int $i = 0; $i < $n && !$hasNull; $i++) { $hasNull = $a.isNullAt($i); }
-         |double $bestS = Double.POSITIVE_INFINITY;
-         |int $bestL = Integer.MAX_VALUE;
-         |for (int $k = 0; $k < $centsRef.length; $k++) {
-         |  float[] $c = $centsRef[$k];
-         |  if ($hasNull || $c.length != $n) continue;
-         |  double $acc = 0.0;
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    $acc += (double) $a.getFloat($j) * (double) $c[$j];
-         |  }
-         |  double $s = $ccsRef[$k] - 2.0 * $acc;
-         |  if ($s < $bestS) { $bestS = $s; $bestL = $labelsRef[$k]; }
-         |}
-         |${ev.isNull} = ($bestL == Integer.MAX_VALUE);
-         |${ev.value} = $bestL;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): KMeansArgMin =
-    copy(child = newChild)
 }
 
 /** [[KMeansArgMin]]'s fused sibling: ONE model loop emits BOTH the
@@ -123,114 +99,50 @@ case class KMeansArgMin(
   * for consumers that need the distance of the assignment (e09's
   * quota sample), where running argmin and then re-deriving the score
   * via a per-label conditional would pay a second dot product per row.
-  * The score is the loop's own bestS = cc(k*) − 2·(e·c(k*)), the exact
-  * double the argmin compared — bit-identical to the oracle's `s` by
-  * construction. Null/unscoreable semantics match [[KMeansArgMin]]:
+  * The score is cc(k*) − 2·(e·c(k*)) through the same [[KMeansArgMin.score]]
+  * the argmin compared with, so it is the exact double it compared —
+  * bit-identical to the oracle's `s` by construction. Null/unscoreable semantics match [[KMeansArgMin]]:
   * no scoreable centroid → null struct.
   */
 case class KMeansAssign(
     child: Expression,
     labels: Array[Int],
     cents: Array[Array[Float]],
-    ccs: Array[Double]) extends UnaryExpression {
+    ccs: Array[Double])
+    extends UnaryKernel[ArrayData, InternalRow](ArrayType(FloatType), "kmeans_assign") {
 
   require(labels.length == cents.length && labels.length == ccs.length,
     "model arrays must be parallel")
 
   override def dataType: DataType = KMeansAssign.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "kmeans_assign"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"kmeans_assign requires array<float> input, got ${t.sql}")
+  def compute(arr: ArrayData): InternalRow = {
+    val k = KMeansArgMin.nearest(arr, cents, ccs)
+    if (k < 0) null
+    else new GenericInternalRow(Array[Any](labels(k), KMeansArgMin.score(arr, cents(k), ccs(k))))
   }
-
-  @transient private lazy val scorer = new KMeansAssign.Scorer(labels, cents, ccs)
-
-  override protected def nullSafeEval(a: Any): Any =
-    scorer.compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sc = ctx.addReferenceObj("scorer", scorer,
-      classOf[KMeansAssign.Scorer].getName)
-    // freshName, NOT a raw local: a fixed `r` redefines itself when the
-    // expression appears twice in one codegen context — Janino failed
-    // with "Redefinition of local variable r" and the WHOLE stage fell
-    // back to interpreted eval, re-paying the failed compile on every
-    // materialization (found via the bench stderr in r17).
-    nullSafeCodeGen(ctx, ev, a => {
-      val r = ctx.freshName("r")
-      s"""
-      |Object $r = $sc.compute($a);
-      |if ($r == null) { ${ev.isNull} = true; }
-      |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-     """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): KMeansAssign =
-    copy(child = newChild)
 }
 
 object KMeansAssign {
-  import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
   val schema: StructType = StructType(Seq(
     StructField("cluster", IntegerType, nullable = false),
     StructField("score", DoubleType, nullable = false)))
-
-  final class Scorer(labels: Array[Int], cents: Array[Array[Float]],
-      ccs: Array[Double]) extends Serializable {
-    def compute(arr: ArrayData): Any = {
-      val n = arr.numElements()
-      var hasNull = false
-      var i = 0
-      while (i < n && !hasNull) { hasNull = arr.isNullAt(i); i += 1 }
-      var bestS = Double.PositiveInfinity
-      var bestL = Int.MaxValue
-      var k = 0
-      while (k < cents.length) {
-        val c = cents(k)
-        if (!hasNull && c.length == n) {
-          var acc = 0.0
-          var j = 0
-          while (j < n) { acc += arr.getFloat(j).toDouble * c(j).toDouble; j += 1 }
-          val s = ccs(k) - 2.0 * acc
-          if (s < bestS) { bestS = s; bestL = labels(k) }
-        }
-        k += 1
-      }
-      if (bestL == Int.MaxValue) null
-      else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](bestL, bestS))
-    }
-  }
 }
 
 object KMeansExprs {
   /** Column wrapper over [[KMeansArgMin]]: assign `embedding` to the
     * nearest centroid of a driver-resident model. `model` pairs each
-    * label with its centroid; entries are sorted by label so the
-    * first-wins tie rule is "smaller label". */
+    * label with its centroid. */
   def assignCluster(embedding: Column, model: Seq[(Int, Array[Float])]): Column = {
-    val sorted = model.sortBy(_._1)
-    val labels = sorted.map(_._1).toArray
-    val cents = sorted.map(_._2).toArray
-    // c·c on the driver with the same left-to-right fold the assignment
-    // (and the DuckDB twin's list_inner_product(cvec, cvec)) uses.
-    val ccs = cents.map(_.foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble))
-    GraftShim.column(KMeansArgMin(GraftShim.expression(embedding), labels, cents, ccs))
+    val (labels, cents, ccs) = KMeansArgMin.prep(model)
+    UnaryKernel.column(embedding)(KMeansArgMin(_, labels, cents, ccs))
   }
 
   /** Column wrapper over [[KMeansAssign]]: struct(cluster, score) of the
     * nearest centroid in one fused pass. */
   def assignWithScore(embedding: Column, model: Seq[(Int, Array[Float])]): Column = {
-    val sorted = model.sortBy(_._1)
-    val labels = sorted.map(_._1).toArray
-    val cents = sorted.map(_._2).toArray
-    val ccs = cents.map(_.foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble))
-    GraftShim.column(KMeansAssign(GraftShim.expression(embedding), labels, cents, ccs))
+    val (labels, cents, ccs) = KMeansArgMin.prep(model)
+    UnaryKernel.column(embedding)(KMeansAssign(_, labels, cents, ccs))
   }
 }

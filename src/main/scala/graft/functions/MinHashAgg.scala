@@ -26,12 +26,8 @@ object MinHashAgg {
   /** (h1, h2) = first/second 8 hex chars of md5(shingle) as ints —
     * byte-identical to Docs.cwHashes (md5 of the UTF-8 bytes, hex split). */
   private def baseHashes(s: String): (Long, Long) = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-    val h = d.digest(s.getBytes("UTF-8"))
-    def word(off: Int): Long =
-      ((h(off) & 0xffL) << 24) | ((h(off + 1) & 0xffL) << 16) |
-        ((h(off + 2) & 0xffL) << 8) | (h(off + 3) & 0xffL)
-    (word(0), word(4))
+    val h = UnaryKernel.md5(s.getBytes("UTF-8"))
+    (UnaryKernel.word32(h, 0), UnaryKernel.word32(h, 4))
   }
 
   /** Aggregator over shingle strings → k-min signature. Empty-input

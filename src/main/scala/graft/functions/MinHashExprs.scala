@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -28,85 +26,47 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * per-row, grouped-aggregation, and streaming paths stay
   * signature-compatible.
   */
-case class MinHashSig(child: Expression) extends UnaryExpression {
+case class MinHashSig(child: Expression)
+    extends UnaryKernel[ArrayData, ArrayData](ArrayType(StringType), "minhash_sig") {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "minhash_sig"
   override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig requires array<string> input, got ${t.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashSig.compute(input.asInstanceOf[ArrayData])
-
-  // The per-row work is a data-dependent digest loop — emit one static
-  // call so the expression stays inside the whole-stage-codegen span
-  // (no interpreted-projection fallback) and the loop itself runs as
-  // plain JVM code the JIT compiles once.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashSig.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-object MinHashSig {
-
-  val K = 8
-  val P = 1000000007L
-
-  private val mdPool = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   /** One pass over the shingle array → boxed-long signature array
     * (null slots when no non-null shingle exists). */
   def compute(arr: ArrayData): ArrayData = {
-    val md = mdPool.get()
-    val mins = new Array[Long](K)
+    val mins = new Array[Long](MinHashSig.K)
     java.util.Arrays.fill(mins, Long.MaxValue)
     var found = false
-    val n = arr.numElements()
     var i = 0
-    while (i < n) {
+    while (i < arr.numElements()) {
       if (!arr.isNullAt(i)) {
         found = true
-        md.reset()
-        val d = md.digest(arr.getUTF8String(i).getBytes)
-        // Same two words the hex formulation parses: digest bytes 0-3
-        // and 4-7, big-endian, as unsigned 32-bit values.
-        val h1 = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-        val h2 = ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-          ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
+        // the two words the hex formulation parses: digest bytes 0-3 and 4-7
+        val d = UnaryKernel.md5(arr.getUTF8String(i).getBytes)
+        val h1 = UnaryKernel.word32(d, 0)
+        val h2 = UnaryKernel.word32(d, 4)
         var k = 0
-        while (k < K) {
-          val v = (h1 + k * h2) % P
+        while (k < MinHashSig.K) {
+          val v = (h1 + k * h2) % MinHashSig.P
           if (v < mins(k)) mins(k) = v
           k += 1
         }
       }
       i += 1
     }
-    if (!found) new GenericArrayData(new Array[Any](K))
-    else {
-      val out = new Array[Any](K)
-      var k = 0
-      while (k < K) { out(k) = mins(k); k += 1 }
-      new GenericArrayData(out)
-    }
+    new GenericArrayData(if (found) mins.map(v => v: Any) else new Array[Any](MinHashSig.K))
   }
+}
+
+object MinHashSig {
+
+  val K = 8
+  val P = 1000000007L
 }
 
 object MinHashExprs {
   /** Column wrapper over [[MinHashSig]] (array<string> shingles →
     * array<long> K-family signature). */
-  def minHashSig(shingles: Column): Column =
-    GraftShim.column(MinHashSig(GraftShim.expression(shingles)))
+  def minHashSig(shingles: Column): Column = UnaryKernel.column(shingles)(MinHashSig(_))
 }

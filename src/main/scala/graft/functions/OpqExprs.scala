@@ -1,16 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** e21's OPQ-lite rotation in exact integer micro-units: micro-quantize
-  * each component (the [[graft.queries.Sim]] microQ discipline —
-  * round-half-away via explicit IEEE floor, so both engines produce the
-  * same long), flip signs by a seeded per-dimension pattern, then apply
+  * each component ([[UnaryKernel.microQ]], the [[graft.queries.Sim]]
+  * microQ discipline, so both engines produce the same long), flip
+  * signs by a seeded per-dimension pattern, then apply
   * the unnormalized Walsh–Hadamard mix
   * `r_i = Σ_j (-1)^popcount(i AND j) · s_j · m_j` — the randomized-
   * Hadamard rotation OPQ-lite uses to spread correlated energy across
@@ -34,42 +32,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * "unscoreable vectors are excluded" rule; the SQL twin excludes them
   * with a list_filter null-count guard).
   */
-case class OpqRotateMicro(child: Expression) extends UnaryExpression {
+case class OpqRotateMicro(child: Expression)
+    extends UnaryKernel[ArrayData, ArrayData](ArrayType(FloatType), "opq_rotate_micro") {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "opq_rotate_micro"
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"opq_rotate_micro requires array<float> input, got ${t.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    OpqRotateMicro.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val compute = OpqRotateMicro.getClass.getName.stripSuffix("$")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-         |  $compute.compute($c);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): OpqRotateMicro =
-    copy(child = newChild)
-}
-
-object OpqRotateMicro {
-
-  /** Java-side body shared by eval and codegen. Returns null when any
-    * element is null (see class scaladoc). O(d²) popcount loop — 4096
-    * long ops for 64 dims, microseconds per row, and VERBATIM the
-    * oracle's SQL formula so parity needs no proof about butterfly
+  /** Null when any element is null (see class scaladoc). O(d²) popcount
+    * loop — 4096 long ops for 64 dims, microseconds per row, and VERBATIM
+    * the oracle's SQL formula so parity needs no proof about butterfly
     * associativity on non-power-of-two lengths. */
   def compute(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
@@ -77,8 +47,7 @@ object OpqRotateMicro {
     var j = 0
     while (j < n) {
       if (arr.isNullAt(j)) return null
-      val d = arr.getFloat(j).toDouble * 1000000.0
-      val m = (if (d >= 0) math.floor(d + 0.5) else -math.floor(-d + 0.5)).toLong
+      val m = UnaryKernel.microQ(arr.getFloat(j))
       x(j) = if (java.lang.Long.bitCount((j + 1L) * 2654435769L) % 2 == 0) m else -m
       j += 1
     }
@@ -102,6 +71,5 @@ object OpqExprs {
   /** array<float> → array<long>: seeded-sign Walsh–Hadamard rotation of
     * the micro-quantized vector; null on null array or any null element
     * (see [[OpqRotateMicro]]). */
-  def opqRotateMicro(v: Column): Column =
-    GraftShim.column(OpqRotateMicro(GraftShim.expression(v)))
+  def opqRotateMicro(v: Column): Column = UnaryKernel.column(v)(OpqRotateMicro(_))
 }

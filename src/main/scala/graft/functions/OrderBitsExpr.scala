@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Order-preserving double → long bit map (the radix-sort trick):
@@ -18,37 +16,21 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * guided exact percentile needs (ColFns.histPercentilesByKey). Pure
   * bit arithmetic, codegen'd, null-propagating.
   */
-case class DoubleOrderBits(child: Expression) extends UnaryExpression {
+case class DoubleOrderBits(child: Expression)
+    extends UnaryKernel[Double, Long](DoubleType, "double_order_bits") {
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "double_order_bits"
+  override def nullable: Boolean = child.nullable
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case DoubleType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"double_order_bits requires double input, got ${t.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    DoubleOrderBits.compute(input.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.DoubleOrderBits.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): DoubleOrderBits =
-    copy(child = newChild)
-}
-
-object DoubleOrderBits {
   /** b ⊕ ((b >> 63) & 0x7fff…): identity on non-negative bit patterns
     * (positives / +0.0 / NaN), order-reversing flip of the low 63 bits
     * on negatives — signed-long order == IEEE-754 total order. */
-  @inline def compute(d: Double): Long = {
+  def compute(d: Double): Long = {
     val b = java.lang.Double.doubleToLongBits(d)
     b ^ ((b >> 63) & 0x7fffffffffffffffL)
   }
+}
 
-  def orderBits(c: Column): Column =
-    GraftShim.column(DoubleOrderBits(GraftShim.expression(c)))
+object DoubleOrderBits {
+  def orderBits(c: Column): Column = UnaryKernel.column(c)(DoubleOrderBits(_))
 }

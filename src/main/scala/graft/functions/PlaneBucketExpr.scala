@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
@@ -33,47 +30,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   *        code_p == code_q & ((1<<p)-1) for p <= q (spec-checked).
   */
 case class PlaneBucketCode(child: Expression, planes: Int = PlaneBucketCode.Planes)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, Long](ArrayType(FloatType), "plane_bucket_code", 0L) {
 
   require(planes >= 1 && planes <= 62, s"planes must be in [1, 62], got $planes")
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "plane_bucket_code"
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"plane_bucket_code requires array<float> input, got ${t.sql}")
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) 0L else PlaneBucketCode.compute(v.asInstanceOf[ArrayData], planes)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        long ${ev.value} = ${c.isNull} ? 0L :
-          graft.functions.PlaneBucketCode.compute(${c.value}, $planes);
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PlaneBucketCode =
-    copy(child = newChild)
-}
-
-object PlaneBucketCode {
-
-  val Planes = 8
 
   /** One pass: s_j += x_i * (((i*37 + j*101) % 19) - 9), then bit j iff
     * s_j > 0. Returns 0 on any null element (see class doc). */
-  def compute(arr: ArrayData, planes: Int): Long = {
+  def compute(arr: ArrayData): Long = {
     val n = arr.numElements()
     val sums = new Array[Double](planes)
     var i = 0
@@ -99,14 +64,19 @@ object PlaneBucketCode {
   }
 }
 
+object PlaneBucketCode {
+
+  val Planes = 8
+}
+
 object PlaneBucketExpr {
   /** Column wrapper over [[PlaneBucketCode]] (array<float> embedding →
     * long bucket code). */
   def planeBucketCode(embedding: Column): Column =
-    GraftShim.column(PlaneBucketCode(GraftShim.expression(embedding)))
+    UnaryKernel.column(embedding)(PlaneBucketCode(_))
 
   /** Scale variant: explicit plane count (more planes → finer buckets →
     * less in-bucket quadratic work as corpus density grows). */
   def planeBucketCode(embedding: Column, planes: Int): Column =
-    GraftShim.column(PlaneBucketCode(GraftShim.expression(embedding), planes))
+    UnaryKernel.column(embedding)(PlaneBucketCode(_, planes))
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,32 +22,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * text nulls every derived column).
   */
 case class RedactStats(child: Expression, emailRe: String, phoneRe: String)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, InternalRow](StringType, "redact_stats") {
 
   override def dataType: DataType = RedactStats.schema
-  override def prettyName: String = "redact_stats"
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"redact_stats requires string input, got ${t.sql}")
+  @transient private lazy val email = java.util.regex.Pattern.compile(emailRe)
+  @transient private lazy val phone = java.util.regex.Pattern.compile(phoneRe)
+
+  def compute(text: UTF8String): InternalRow = {
+    val (noEmail, nEmails) = RedactStats.replaceCount(email, text.toString, "<EMAIL>")
+    val (redacted, nPhones) = RedactStats.replaceCount(phone, noEmail, "<PHONE>")
+    new GenericInternalRow(Array[Any](UTF8String.fromString(redacted), nEmails, nPhones))
   }
-
-  @transient private lazy val redactor = new RedactStats.Redactor(emailRe, phoneRe)
-
-  override protected def nullSafeEval(input: Any): Any =
-    redactor.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val red = ctx.addReferenceObj("redactor", redactor,
-      classOf[RedactStats.Redactor].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $red.compute($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RedactStats =
-    copy(child = newChild)
 }
 
 object RedactStats {
@@ -60,40 +43,25 @@ object RedactStats {
     StructField("n_emails", LongType, nullable = false),
     StructField("n_phones", LongType, nullable = false)))
 
-  /** Compiled-pattern holder, shipped into generated code as a codegen
-    * reference object (one instance per expression, shared by tasks). */
-  final class Redactor(emailRe: String, phoneRe: String) extends Serializable {
-    @transient private lazy val email = java.util.regex.Pattern.compile(emailRe)
-    @transient private lazy val phone = java.util.regex.Pattern.compile(phoneRe)
-
-    /** One find-loop per pattern: count while substituting — exactly
-      * `Matcher.replaceAll`'s traversal, so the redacted text and the
-      * counts agree with the separate-pass builtins by construction.
-      * The replacement literals contain no `$`/`\`, so raw append (not
-      * `appendReplacement`'s escape processing) is sound. */
-    private def replaceCount(p: java.util.regex.Pattern, s: String,
-        sub: String): (String, Long) = {
-      val m = p.matcher(s)
-      if (!m.find()) return (s, 0L)
-      val sb = new java.lang.StringBuilder(s.length)
-      var n = 0L
-      var last = 0
-      do {
-        sb.append(s, last, m.start()).append(sub)
-        last = m.end()
-        n += 1
-      } while (m.find())
-      sb.append(s, last, s.length)
-      (sb.toString, n)
-    }
-
-    def compute(text: UTF8String): InternalRow = {
-      val s = text.toString
-      val (noEmail, nEmails) = replaceCount(email, s, "<EMAIL>")
-      val (redacted, nPhones) = replaceCount(phone, noEmail, "<PHONE>")
-      new GenericInternalRow(Array[Any](
-        UTF8String.fromString(redacted), nEmails, nPhones))
-    }
+  /** One find-loop per pattern: count while substituting — exactly
+    * `Matcher.replaceAll`'s traversal, so the redacted text and the
+    * counts agree with the separate-pass builtins by construction.
+    * The replacement literals contain no `$`/`\`, so raw append (not
+    * `appendReplacement`'s escape processing) is sound. */
+  private def replaceCount(p: java.util.regex.Pattern, s: String,
+      sub: String): (String, Long) = {
+    val m = p.matcher(s)
+    if (!m.find()) return (s, 0L)
+    val sb = new java.lang.StringBuilder(s.length)
+    var n = 0L
+    var last = 0
+    do {
+      sb.append(s, last, m.start()).append(sub)
+      last = m.end()
+      n += 1
+    } while (m.find())
+    sb.append(s, last, s.length)
+    (sb.toString, n)
   }
 }
 
@@ -101,5 +69,5 @@ object RedactExprs {
   /** Column wrapper over [[RedactStats]]: string →
     * struct(redacted, n_emails, n_phones). */
   def redactStats(text: Column, emailRe: String, phoneRe: String): Column =
-    GraftShim.column(RedactStats(GraftShim.expression(text), emailRe, phoneRe))
+    UnaryKernel.column(text)(RedactStats(_, emailRe, phoneRe))
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -28,34 +26,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * `concat_ws(" ", tokᵢ, tokᵢ₊₁)`, so the expression is bit-identical
   * to the HOF formulation on arbitrary arrays (spec-checked).
   */
-case class TopAdjacentPairCount(child: Expression) extends UnaryExpression {
+case class TopAdjacentPairCount(child: Expression)
+    extends UnaryKernel[ArrayData, Long](ArrayType(StringType), "top_adjacent_pair_count") {
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "top_adjacent_pair_count"
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"top_adjacent_pair_count requires array<string> input, got ${t.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TopAdjacentPairCount.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TopAdjacentPairCount.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): TopAdjacentPairCount =
-    copy(child = newChild)
+  def compute(arr: ArrayData): Long = TopAdjacentPairCount.compute(arr)
 }
 
 object TopAdjacentPairCount {
 
-  /** One pass: count adjacent bigram keys (null members skipped inside
-    * the key, as concat_ws does), return the max count — 0 if fewer
-    * than 2 tokens. */
+  /** The kernel body, callable without an expression. One pass: count
+    * adjacent bigram keys (null members skipped inside the key, as
+    * concat_ws does), return the max count — 0 if fewer than 2 tokens. */
   def compute(arr: ArrayData): Long = {
     val n = arr.numElements()
     if (n < 2) return 0L
@@ -82,5 +65,5 @@ object TopAdjacentPairCount {
 object RepetitionExprs {
   /** Column wrapper over [[TopAdjacentPairCount]] (array<string> → long). */
   def topAdjacentPairCount(tokens: Column): Column =
-    GraftShim.column(TopAdjacentPairCount(GraftShim.expression(tokens)))
+    UnaryKernel.column(tokens)(TopAdjacentPairCount(_))
 }

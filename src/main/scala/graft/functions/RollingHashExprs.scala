@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -31,81 +28,46 @@ import org.apache.spark.unsafe.types.UTF8String
   * code is 0 and folding 0 leaves the accumulator at 0. Pinned to the
   * builtin formulation on adversarial inputs (multibyte, astral-plane,
   * blank, null) by RollingHashExprsSpec. */
-case class RollingHash(child: Expression) extends UnaryExpression {
+case class RollingHash(child: Expression)
+    extends UnaryKernel[UTF8String, Long](StringType, "rolling_hash", 0L) {
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "rolling_hash"
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash requires string input, got ${t.sql}")
-  }
-
-  // null text hashes to 0, so eval handles null itself (nullable=false)
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) 0L else RollingHash.compute(v.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        long ${ev.value} = ${c.isNull} ? 0L :
-          graft.functions.RollingHash.compute(${c.value});
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHash =
-    copy(child = newChild)
-}
-
-object RollingHash {
-
-  @inline private def isWs(b: Byte): Boolean =
-    b == 0x20 || (b >= 0x09 && b <= 0x0d)
 
   /** One byte pass: per whitespace token, decode the first and last
     * code points and count chars inline, fold the token code into the
     * rolling product. Zero allocation. */
   def compute(text: UTF8String): Long = {
-    val n = text.numBytes()
     var acc = 0L
-    var i = 0
-    while (i < n) {
-      while (i < n && isWs(text.getByte(i))) i += 1
-      if (i < n) {
-        var first = -1L
-        var last = 0L
-        var chars = 0L
-        while (i < n && !isWs(text.getByte(i))) {
-          val b0 = text.getByte(i) & 0xff
-          var cp = 0
-          var len = 1
-          if (b0 < 0x80) cp = b0
-          else if ((b0 & 0xe0) == 0xc0) {
-            len = 2
-            cp = ((b0 & 0x1f) << 6) | (text.getByte(i + 1) & 0x3f)
-          } else if ((b0 & 0xf0) == 0xe0) {
-            len = 3
-            cp = ((b0 & 0x0f) << 12) | ((text.getByte(i + 1) & 0x3f) << 6) |
-              (text.getByte(i + 2) & 0x3f)
-          } else {
-            len = 4
-            cp = ((b0 & 0x07) << 18) | ((text.getByte(i + 1) & 0x3f) << 12) |
-              ((text.getByte(i + 2) & 0x3f) << 6) | (text.getByte(i + 3) & 0x3f)
-          }
-          if (first < 0) first = cp.toLong
-          last = cp.toLong
-          chars += 1
-          i += len
+    var i = UnaryKernel.tokenStart(text, 0)
+    while (i < text.numBytes) {
+      var first = -1L
+      var last = 0L
+      var chars = 0L
+      // decoded as it scans: a char start is never a continuation byte
+      while (i < text.numBytes && !UnaryKernel.isWs(text.getByte(i))) {
+        val b0 = text.getByte(i) & 0xff
+        var cp = 0
+        var len = 1
+        if (b0 < 0x80) cp = b0
+        else if ((b0 & 0xe0) == 0xc0) {
+          len = 2
+          cp = ((b0 & 0x1f) << 6) | (text.getByte(i + 1) & 0x3f)
+        } else if ((b0 & 0xf0) == 0xe0) {
+          len = 3
+          cp = ((b0 & 0x0f) << 12) | ((text.getByte(i + 1) & 0x3f) << 6) |
+            (text.getByte(i + 2) & 0x3f)
+        } else {
+          len = 4
+          cp = ((b0 & 0x07) << 18) | ((text.getByte(i + 1) & 0x3f) << 12) |
+            ((text.getByte(i + 2) & 0x3f) << 6) | (text.getByte(i + 3) & 0x3f)
         }
-        acc = (acc * 31L + (first * 256L + last * 16L + chars)) % 1000000007L
+        if (first < 0) first = cp.toLong
+        last = cp.toLong
+        chars += 1
+        i += len
       }
+      acc = (acc * 31L + (first * 256L + last * 16L + chars)) % 1000000007L
+      i = UnaryKernel.tokenStart(text, i)
     }
     acc
   }
@@ -114,6 +76,5 @@ object RollingHash {
 object RollingHashExprs {
   /** text → rolling polynomial fingerprint (long; null/blank text → 0),
     * one compiled byte pass (see [[RollingHash]]). */
-  def rollingHash(text: Column): Column =
-    GraftShim.column(RollingHash(GraftShim.expression(text)))
+  def rollingHash(text: Column): Column = UnaryKernel.column(text)(RollingHash(_))
 }

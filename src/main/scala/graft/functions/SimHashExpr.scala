@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -26,56 +24,23 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * (callers filter nulls to match); a doc whose every vote ties or goes
   * negative yields 0, which stays distinguishable from absent.
   */
-case class SimHash16(child: Expression) extends UnaryExpression {
+case class SimHash16(child: Expression)
+    extends UnaryKernel[ArrayData, java.lang.Long](ArrayType(StringType), "simhash16") {
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "simhash16"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"simhash16 requires array<string> input, got ${t.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    SimHash16.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |java.lang.Long r = graft.functions.SimHash16.compute($c);
-         |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r.longValue(); }
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash16 =
-    copy(child = newChild)
-}
-
-object SimHash16 {
-
-  val Bits = 16
-
-  private val mdPool = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   /** One pass over the token array → signature, or null if no non-null
     * token exists (the builtin explode emits no row for that doc). */
   def compute(arr: ArrayData): java.lang.Long = {
-    val md = mdPool.get()
-    val sums = new Array[Int](Bits)
+    val sums = new Array[Int](SimHash16.Bits)
     var found = false
-    val n = arr.numElements()
     var i = 0
-    while (i < n) {
+    while (i < arr.numElements()) {
       if (!arr.isNullAt(i)) {
         found = true
-        md.reset()
-        val d = md.digest(arr.getUTF8String(i).getBytes)
+        val d = UnaryKernel.md5(arr.getUTF8String(i).getBytes)
         var j = 0
-        while (j < Bits) {
+        while (j < SimHash16.Bits) {
           val b = d(j >> 1)
           val nib = if ((j & 1) == 0) (b >> 4) & 0xf else b & 0xf
           sums(j) += (if (nib >= 8) 1 else -1)
@@ -87,16 +52,20 @@ object SimHash16 {
     if (!found) return null
     var code = 0L
     var j = 0
-    while (j < Bits) {
+    while (j < SimHash16.Bits) {
       if (sums(j) > 0) code |= (1L << j)
       j += 1
     }
-    java.lang.Long.valueOf(code)
+    code
   }
+}
+
+object SimHash16 {
+
+  val Bits = 16
 }
 
 object SimHashExpr {
   /** Column wrapper over [[SimHash16]] (array<string> tokens → long). */
-  def simHash16(tokens: Column): Column =
-    GraftShim.column(SimHash16(GraftShim.expression(tokens)))
+  def simHash16(tokens: Column): Column = UnaryKernel.column(tokens)(SimHash16(_))
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, FloatType, LongType}
 
@@ -17,26 +15,19 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, FloatType, L
   * half-away code → integer dot), so the production path is spec-pinned
   * equal to the oracle-checked formulation (SqSpec).
   *
-  * Per-dim stats ride along as constructor constants (codegen reference
-  * objects) — dim-sized, trivially driver-resident at any corpus scale,
+  * Per-dim stats ride along as constructor constants — dim-sized,
+  * trivially driver-resident at any corpus scale,
   * exactly like [[KMeansArgMin]]'s model.
   */
 case class SqEncode(
     child: Expression,
     lo: Array[Long],
-    hi: Array[Long]) extends UnaryExpression {
+    hi: Array[Long])
+    extends UnaryKernel[ArrayData, Array[Byte]](ArrayType(FloatType), "sq_encode") {
 
   require(lo.length == hi.length, "per-dim stats arrays must be parallel")
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "sq_encode"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"sq_encode requires array<float> input, got ${t.sql}")
-  }
 
   // Gate semantics, byte for byte: component i maps to
   //   m  = microQ(v_i)                      (explicit IEEE round-half-away)
@@ -49,84 +40,32 @@ case class SqEncode(
   // fires when stats were trained on a sample that didn't cover the
   // full range — the standard production trade; with corpus-global
   // stats (the gate) it is provably inert.
-  override protected def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val n = math.min(arr.numElements(), lo.length)
-    val out = new Array[Byte](n)
+  def compute(arr: ArrayData): Array[Byte] = {
+    val out = new Array[Byte](math.min(arr.numElements(), lo.length))
     var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val d = arr.getFloat(i).toDouble * 1000000.0
-        var m = (if (d >= 0) math.floor(d + 0.5) else -math.floor(-d + 0.5)).toLong
-        val l = lo(i); val h = hi(i)
-        if (h != l) {
-          if (m < l) m = l else if (m > h) m = h
-          val num = (m - l) * 255L
-          val den = h - l
-          out(i) = ((2L * num + den) / (2L * den)).toByte
-        }
+    while (i < out.length) {
+      val l = lo(i); val h = hi(i)
+      if (!arr.isNullAt(i) && h != l) {
+        val q = UnaryKernel.microQ(arr.getFloat(i))
+        val m = if (q < l) l else if (q > h) h else q
+        out(i) = ((2L * (m - l) * 255L + (h - l)) / (2L * (h - l))).toByte
       }
       i += 1
     }
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val loRef = ctx.addReferenceObj("lo", lo, "long[]")
-      val hiRef = ctx.addReferenceObj("hi", hi, "long[]")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val m = ctx.freshName("m")
-      val l = ctx.freshName("l")
-      val h = ctx.freshName("h")
-      val num = ctx.freshName("num")
-      val den = ctx.freshName("den")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $loRef.length);
-         |byte[] $out = new byte[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    double $d = (double) $a.getFloat($i) * 1000000.0;
-         |    long $m = (long) ($d >= 0 ? java.lang.Math.floor($d + 0.5)
-         |                              : -java.lang.Math.floor(-$d + 0.5));
-         |    long $l = $loRef[$i]; long $h = $hiRef[$i];
-         |    if ($h != $l) {
-         |      if ($m < $l) { $m = $l; } else if ($m > $h) { $m = $h; }
-         |      long $num = ($m - $l) * 255L;
-         |      long $den = $h - $l;
-         |      $out[$i] = (byte) ((2L * $num + $den) / (2L * $den));
-         |    }
-         |  }
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SqEncode =
-    copy(child = newChild)
 }
 
 /** Integer asymmetric-distance kernel: Σ codes[i]·query[i] over the
   * common prefix (unsigned bytes) — the inner loop of an SQ ANN scan.
   * Pure integer math: bit-identical to the gate's join-based SUM(q·qq)
   * in any engine, any partition layout. */
-case class SqAdc(child: Expression, query: Array[Byte]) extends UnaryExpression {
+case class SqAdc(child: Expression, query: Array[Byte])
+    extends UnaryKernel[Array[Byte], Long](BinaryType, "sq_adc") {
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "sq_adc"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"sq_adc requires binary input, got ${t.sql}")
-  }
-
-  override protected def nullSafeEval(a: Any): Any = {
-    val codes = a.asInstanceOf[Array[Byte]]
+  def compute(codes: Array[Byte]): Long = {
     val n = math.min(codes.length, query.length)
     var acc = 0L
     var i = 0
@@ -136,34 +75,15 @@ case class SqAdc(child: Expression, query: Array[Byte]) extends UnaryExpression 
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val qRef = ctx.addReferenceObj("query", query, "byte[]")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = java.lang.Math.min($a.length, $qRef.length);
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += (long) ($a[$i] & 0xff) * (long) ($qRef[$i] & 0xff);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SqAdc =
-    copy(child = newChild)
 }
 
 object SqExprs {
   /** Pack `embedding` into one byte per dimension under per-dim micro
     * stats (see [[graft.queries.Sim.sqStats]]). */
   def sqEncode(embedding: Column, lo: Array[Long], hi: Array[Long]): Column =
-    GraftShim.column(SqEncode(GraftShim.expression(embedding), lo, hi))
+    UnaryKernel.column(embedding)(SqEncode(_, lo, hi))
 
   /** Integer ADC dot of a packed codes column against a packed query. */
   def sqAdc(codes: Column, query: Array[Byte]): Column =
-    GraftShim.column(SqAdc(GraftShim.expression(codes), query))
+    UnaryKernel.column(codes)(SqAdc(_, query))
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -81,24 +79,14 @@ final class SurprisalModel(val terms: Array[String], val counts: Array[Long],
   * StreamingSpec.
   *
   * Tokenization is bit-identical to `words`/`tokenCount`
-  * (ColFns.scala): Java-regex `\s` is exactly the six ASCII bytes
-  * {0x09..0x0D, 0x20}, so a UTF-8 byte scan splits on the same
-  * boundaries; tokens are maximal non-ws runs, compared as zero-copy
-  * UTF8String views (no String materialization). Null text → null
-  * struct. Pinned batch≡stream by StreamingSpec's d44 twin test.
+  * (ColFns.scala): tokens are maximal non-ws runs
+  * ([[UnaryKernel.isWs]]), compared as zero-copy UTF8String views (no
+  * String materialization). Null text → null struct. Pinned batch≡stream by StreamingSpec's d44 twin test.
   */
 case class SnapshotSurprisal(child: Expression, model: SurprisalModel)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, InternalRow](StringType, "snapshot_surprisal") {
 
   override def dataType: DataType = SnapshotSurprisal.schema
-  override def prettyName: String = "snapshot_surprisal"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"snapshot_surprisal requires string input, got ${t.sql}")
-  }
 
   /** Term → bits(count); built once per (serialized) expression
     * instance, shared across rows on the executor. Values are the
@@ -118,18 +106,20 @@ case class SnapshotSurprisal(child: Expression, model: SurprisalModel)
   private lazy val nTotalBits: Int =
     64 - java.lang.Long.numberOfLeadingZeros(model.nTotal)
 
-  override protected def nullSafeEval(input: Any): Any =
-    SnapshotSurprisal.compute(input.asInstanceOf[UTF8String], lookup, nTotalBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("surprisalLookup", lookup, "java.util.HashMap")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) " +
-        s"graft.functions.SnapshotSurprisal.compute($c, $ref, $nTotalBits);")
+  def compute(text: UTF8String): InternalRow = {
+    var nTok = 0L
+    var bitsSum = 0L
+    var i = UnaryKernel.tokenStart(text, 0)
+    while (i < text.numBytes) {
+      val end = UnaryKernel.tokenEnd(text, i)
+      nTok += 1
+      val cb = lookup.get(
+        UTF8String.fromAddress(text.getBaseObject, text.getBaseOffset + i, end - i))
+      bitsSum += nTotalBits - (if (cb != null) cb.intValue() else 1)
+      i = UnaryKernel.tokenStart(text, end)
+    }
+    new GenericInternalRow(Array[Any](nTok, bitsSum))
   }
-
-  override protected def withNewChildInternal(newChild: Expression): SnapshotSurprisal =
-    copy(child = newChild)
 }
 
 object SnapshotSurprisal {
@@ -137,30 +127,6 @@ object SnapshotSurprisal {
   val schema: StructType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
     StructField("surprisal_bits", LongType, nullable = false)))
-
-  @inline private def isWs(b: Byte): Boolean =
-    b == 0x20 || (b >= 0x09 && b <= 0x0d)
-
-  def compute(text: UTF8String,
-      lookup: java.util.HashMap[UTF8String, Integer], nTotalBits: Int): InternalRow = {
-    val base = text.getBaseObject
-    val offset = text.getBaseOffset
-    val n = text.numBytes()
-    var nTok = 0L
-    var bitsSum = 0L
-    var i = 0
-    while (i < n) {
-      while (i < n && isWs(text.getByte(i))) i += 1
-      if (i < n) {
-        val start = i
-        while (i < n && !isWs(text.getByte(i))) i += 1
-        nTok += 1
-        val cb = lookup.get(UTF8String.fromAddress(base, offset + start, i - start))
-        bitsSum += nTotalBits - (if (cb != null) cb.intValue() else 1)
-      }
-    }
-    new GenericInternalRow(Array[Any](nTok, bitsSum))
-  }
 }
 
 object SurprisalExprs {
@@ -174,5 +140,5 @@ object SurprisalExprs {
   /** Overload taking a prebuilt [[SurprisalModel]] (reuse one holder —
     * and its one digest computation — across expressions). */
   def snapshotSurprisal(text: Column, model: SurprisalModel): Column =
-    GraftShim.column(SnapshotSurprisal(GraftShim.expression(text), model))
+    UnaryKernel.column(text)(SnapshotSurprisal(_, model))
 }

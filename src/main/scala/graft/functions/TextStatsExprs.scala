@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,32 +33,50 @@ import org.apache.spark.unsafe.types.UTF8String
   * TextStatsExprsSpec.
   */
 case class MarkerStats(child: Expression, groups: Seq[Seq[String]])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, InternalRow](StringType, "marker_stats") {
 
   override def dataType: DataType = MarkerStats.schemaFor(groups.size)
-  override def prettyName: String = "marker_stats"
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"marker_stats requires string input, got ${t.sql}")
+  // Marker tables precompiled to UTF-8 byte arrays. Matching compares a
+  // token's byte range against each marker of the same length — the
+  // marker lists are tiny (≤ a handful of short words), so a linear
+  // probe beats hashing a fresh UTF8String slice per token.
+  @transient private lazy val markerBytes: Array[Array[Byte]] =
+    groups.flatMap(_.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))).toArray
+  @transient private lazy val markerGroup: Array[Int] =
+    groups.zipWithIndex.flatMap { case (g, i) => g.map(_ => i) }.toArray
+
+  def compute(text: UTF8String): InternalRow = {
+    var nTokens = 0L
+    var nChars = 0L // non-continuation bytes inside tokens
+    val hits = new Array[Long](groups.size)
+    var i = UnaryKernel.tokenStart(text, 0)
+    while (i < text.numBytes) {
+      val end = UnaryKernel.tokenEnd(text, i)
+      nTokens += 1
+      var j = i
+      while (j < end) { if ((text.getByte(j) & 0xC0) != 0x80) nChars += 1; j += 1 }
+      // marker probe: byte-exact equality against each marker
+      var m = 0
+      while (m < markerBytes.length) {
+        val mb = markerBytes(m)
+        if (mb.length == end - i) {
+          var k = 0
+          while (k < mb.length && mb(k) == text.getByte(i + k)) k += 1
+          if (k == mb.length) hits(markerGroup(m)) += 1
+        }
+        m += 1
+      }
+      i = UnaryKernel.tokenStart(text, end)
+    }
+    // normWs = "" splits to [""]: one empty token, zero chars
+    val out = new Array[Any](2 + groups.size)
+    out(0) = math.max(nTokens, 1L)
+    out(1) = if (nTokens == 0L) 0L else nChars + (nTokens - 1L)
+    var g = 0
+    while (g < groups.size) { out(2 + g) = hits(g); g += 1 }
+    new GenericInternalRow(out)
   }
-
-  @transient private lazy val scanner = new MarkerStats.Scanner(groups)
-
-  override protected def nullSafeEval(input: Any): Any =
-    scanner.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sc = ctx.addReferenceObj("scanner", scanner,
-      classOf[MarkerStats.Scanner].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $sc.compute($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MarkerStats =
-    copy(child = newChild)
 }
 
 object MarkerStats {
@@ -71,70 +86,8 @@ object MarkerStats {
     StructField("n_chars_norm", LongType, nullable = false) +:
     (0 until nGroups).map(i => StructField(s"g$i", LongType, nullable = false)))
 
-  /** Marker tables precompiled to UTF-8 byte arrays, shipped into
-    * generated code as a codegen reference object. Matching compares a
-    * token's byte range against each marker of the same length — the
-    * marker lists are tiny (≤ a handful of short words), so a linear
-    * probe beats hashing a fresh UTF8String slice per token. */
-  final class Scanner(groups: Seq[Seq[String]]) extends Serializable {
-    private val nGroups = groups.size
-    // flat arrays: marker bytes, owning group index
-    private val markerBytes: Array[Array[Byte]] =
-      groups.zipWithIndex.flatMap { case (g, _) =>
-        g.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)) }.toArray
-    private val markerGroup: Array[Int] =
-      groups.zipWithIndex.flatMap { case (g, i) => g.map(_ => i) }.toArray
-
-    private def isWs(b: Byte): Boolean =
-      b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
-
-    def compute(text: UTF8String): InternalRow = {
-      val bytes = text.getBytes
-      val len = bytes.length
-      var nTokens = 0L
-      var nChars = 0L // non-continuation bytes inside tokens
-      val hits = new Array[Long](nGroups)
-      var i = 0
-      while (i < len) {
-        // skip whitespace run
-        while (i < len && isWs(bytes(i))) i += 1
-        if (i < len) {
-          val start = i
-          while (i < len && !isWs(bytes(i))) {
-            if ((bytes(i) & 0xC0) != 0x80) nChars += 1
-            i += 1
-          }
-          nTokens += 1
-          // marker probe: byte-exact equality against each marker
-          val tlen = i - start
-          var m = 0
-          while (m < markerBytes.length) {
-            val mb = markerBytes(m)
-            if (mb.length == tlen) {
-              var j = 0
-              while (j < tlen && mb(j) == bytes(start + j)) j += 1
-              if (j == tlen) hits(markerGroup(m)) += 1
-            }
-            m += 1
-          }
-        }
-      }
-      val out = new Array[Any](2 + nGroups)
-      if (nTokens == 0L) {
-        // normWs = "" splits to [""]: one empty token, zero chars
-        out(0) = 1L; out(1) = 0L
-        var g = 0; while (g < nGroups) { out(2 + g) = 0L; g += 1 }
-      } else {
-        out(0) = nTokens
-        out(1) = nChars + (nTokens - 1L)
-        var g = 0; while (g < nGroups) { out(2 + g) = hits(g); g += 1 }
-      }
-      new GenericInternalRow(out)
-    }
-  }
-
   def markerStats(text: Column, groups: Seq[Seq[String]]): Column =
-    GraftShim.column(MarkerStats(GraftShim.expression(text), groups))
+    UnaryKernel.column(text)(MarkerStats(_, groups))
 }
 
 /** Native Catalyst expression for d10's BPE-ish token counting
@@ -154,28 +107,26 @@ object MarkerStats {
   * a null text is null). Bit-equivalence with the builtin formulation
   * is pinned by TextStatsExprsSpec.
   */
-case class BpeRunStats(child: Expression) extends UnaryExpression {
+case class BpeRunStats(child: Expression)
+    extends UnaryKernel[UTF8String, InternalRow](StringType, "bpe_run_stats") {
 
   override def dataType: DataType = BpeRunStats.schema
-  override def prettyName: String = "bpe_run_stats"
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bpe_run_stats requires string input, got ${t.sql}")
+  def compute(text: UTF8String): InternalRow = {
+    var nBpe = 0L; var nAlpha = 0L; var nNum = 0L
+    var prev = 0 // separator: any class change from it starts a run
+    var i = 0
+    while (i < text.numBytes) {
+      val c = BpeRunStats.clazz(text.getByte(i))
+      if (c != 0 && c != prev) {
+        nBpe += 1
+        if (c == 1) nAlpha += 1 else if (c == 2) nNum += 1
+      }
+      prev = c
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](nBpe, nAlpha, nNum))
   }
-
-  override protected def nullSafeEval(input: Any): Any =
-    BpeRunStats.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) " +
-        s"graft.functions.BpeRunStats.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): BpeRunStats =
-    copy(child = newChild)
 }
 
 object BpeRunStats {
@@ -192,24 +143,6 @@ object BpeRunStats {
     else if (b >= '0' && b <= '9') 2
     else 3
 
-  def compute(text: UTF8String): InternalRow = {
-    val bytes = text.getBytes
-    val len = bytes.length
-    var nBpe = 0L; var nAlpha = 0L; var nNum = 0L
-    var prev = 0 // separator: any class change from it starts a run
-    var i = 0
-    while (i < len) {
-      val c = clazz(bytes(i))
-      if (c != 0 && c != prev) {
-        nBpe += 1
-        if (c == 1) nAlpha += 1 else if (c == 2) nNum += 1
-      }
-      prev = c
-      i += 1
-    }
-    new GenericInternalRow(Array[Any](nBpe, nAlpha, nNum))
-  }
-
   def bpeRunStats(text: Column): Column =
-    GraftShim.column(BpeRunStats(GraftShim.expression(text)))
+    UnaryKernel.column(text)(BpeRunStats(_))
 }

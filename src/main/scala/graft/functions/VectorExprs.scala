@@ -84,7 +84,7 @@ object VectorExprs {
   /** Aggregate Column over [[VecMicroSumAgg]]: per-position micro-unit
     * sums + non-null counts of a float-vector column. */
   def vecMicroSum(v: Column): Column =
-    GraftShim.column(VecMicroSumAgg(GraftShim.expression(v)).toAggregateExpression())
+    UnaryKernel.column(v)(VecMicroSumAgg(_).toAggregateExpression())
 
   /** Column wrapper over [[VecDot]] (float-array inputs). */
   def vecDot(a: Column, b: Column): Column =
@@ -158,8 +158,7 @@ case class VecMicroSumAgg(
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val d = arr.getFloat(i).toDouble * 1000000.0
-        b.sm(i) += (if (d >= 0) math.floor(d + 0.5) else -math.floor(-d + 0.5)).toLong
+        b.sm(i) += UnaryKernel.microQ(arr.getFloat(i))
         b.cnt(i) += 1L
       }
       i += 1

@@ -3,7 +3,7 @@ package graft.mm
 import java.awt.image.BufferedImage
 import java.io.ByteArrayInputStream
 import javax.imageio.ImageIO
-import javax.sound.sampled.{AudioFormat, AudioSystem}
+import javax.sound.sampled.{AudioFormat, AudioInputStream, AudioSystem}
 import scala.reflect.runtime.universe.TypeTag
 import scala.util.Using
 
@@ -172,17 +172,22 @@ object Multimodal {
       DecodedImage(id, imageDims(b).map(_._1).getOrElse(""), w, h, px,
         ok = err.isEmpty, err = err)
     decodePayloads(df)((id, b, e) => row(id, b, 0, 0, Array.emptyByteArray, e)) { (id, b) =>
+      def rejected(w: Int, h: Int) =
+        row(id, b, w, h, Array.emptyByteArray, s"${w}x$h exceeds maxPixels=$maxPixels")
       if (b == null || b.isEmpty) Left("empty payload")
-      else Option(ImageIO.read(new ByteArrayInputStream(b)))
-        .toRight("no registered reader for payload")
-        .map { img =>
-          val w = img.getWidth
-          val h = img.getHeight
-          Iterator(
-            if (w.toLong * h.toLong > maxPixels)
-              row(id, b, w, h, Array.emptyByteArray, s"${w}x$h exceeds maxPixels=$maxPixels")
-            else row(id, b, w, h, rgb888(img), ""))
-        }
+      else imageDims(b) match {
+        // the header's size is checked before ImageIO allocates a raster
+        case Right((_, w, h)) if w.toLong * h.toLong > maxPixels => Right(Iterator(rejected(w, h)))
+        case _ => Option(ImageIO.read(new ByteArrayInputStream(b)))
+          .toRight("no registered reader for payload")
+          .map { img =>
+            val w = img.getWidth
+            val h = img.getHeight
+            Iterator(
+              if (w.toLong * h.toLong > maxPixels) rejected(w, h)
+              else row(id, b, w, h, rgb888(img), ""))
+          }
+      }
     }
   }
 
@@ -238,7 +243,7 @@ object Multimodal {
           if (frames > maxFrames)
             meta(enc, frames, durMs, silent, s"$frames frames exceeds maxFrames=$maxFrames")
           else if (linearPcm(f))
-            meta(enc, frames, durMs, levelStats(in.readAllBytes(), f), "")
+            meta(enc, frames, durMs, levelStats(readFrames(in), f), "")
           else {
             // COMPRESSED / non-linear encoding: probe the runtime SPI
             // registry for a PCM transcoder instead of giving up. Stock
@@ -272,6 +277,19 @@ object Multimodal {
           }))
       }
     }
+
+  /** The rest of `in`, read in whole-frame chunks. `readAllBytes` asks
+    * for 8192 bytes at a time, and `AudioInputStream.read` returns 0 for
+    * a request shorter than one frame, so a stream whose frames exceed
+    * 8192 bytes would never reach its end. */
+  private def readFrames(in: AudioInputStream): Array[Byte] = {
+    val frame = math.max(1, in.getFormat.getFrameSize)
+    val buf = new Array[Byte](frame * math.max(1, 8192 / frame))
+    val out = new java.io.ByteArrayOutputStream()
+    var n = in.read(buf)
+    while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
+    out.toByteArray
+  }
 
   /** 8- or 16-bit linear PCM: what [[forEachSample16]] reads. */
   private def linearPcm(f: AudioFormat): Boolean =
@@ -721,7 +739,13 @@ object Multimodal {
         }
         means("rgb24", w, h, px)
       } else if (len >= 2 && u8(b, off) == 0xff && u8(b, off + 1) == 0xd8) {
-        // MJPEG: the chunk is a standalone JPEG
+        // MJPEG: the chunk is a standalone JPEG, its SOF size checked
+        // before ImageIO allocates a raster
+        imageDims(java.util.Arrays.copyOfRange(b, off, off + len)) match {
+          case Right((_, w, h)) if tooBig(w, h) =>
+            return fail("mjpeg", s"${w}x$h exceeds maxPixels=$maxPixels")
+          case _ =>
+        }
         val img = ImageIO.read(new ByteArrayInputStream(b, off, len))
         if (img == null) return fail("mjpeg", "JPEG reader returned null")
         val w = img.getWidth
@@ -882,7 +906,7 @@ object Multimodal {
           var win = 0L
           var cnt = 0L
           var energy = 0L
-          forEachSample16(in.readAllBytes(), f) { s =>
+          forEachSample16(readFrames(in), f) { s =>
             energy += math.abs(s)
             cnt += 1
             if (cnt == window) {

@@ -97,16 +97,10 @@ object Sim {
     * long arithmetic — the order-independent replacement for
     * `round(avg, k)` once values are micro-quantized: every operand is
     * exact, so the result is identical across engines and runs. */
-  private[queries] def halfAwayDiv(num: Column, den: Column): Column = {
-    import org.apache.spark.sql.catalyst.expressions.IntegralDivide
-    def ldiv(a: Column, b: Column): Column =
-      org.apache.spark.sql.GraftShim.column(new IntegralDivide(
-        org.apache.spark.sql.GraftShim.expression(a),
-        org.apache.spark.sql.GraftShim.expression(b)))
+  private[queries] def halfAwayDiv(num: Column, den: Column): Column =
     // both branches divide non-negative by positive, so truncation==floor
-    when(num >= 0, ldiv(num * 2 + den, den * 2))
-      .otherwise(-ldiv((-num) * 2 + den, den * 2))
-  }
+    when(num >= 0, floorDiv(num * 2 + den, den * 2))
+      .otherwise(-floorDiv((-num) * 2 + den, den * 2))
 
   /** DuckDB twin of [[halfAwayDiv]] (`//` truncates; operands kept
     * non-negative per branch so truncation==floor there too). */

@@ -115,6 +115,22 @@ class MultimodalSpec extends SparkSpec {
     assert(!m(2L).ok && m(2L).err.nonEmpty, "garbage must use the error channel")
   }
 
+  test("decodePixels: an IHDR claiming 100000x100000 is rejected before decoding, every run alike") {
+    import spark.implicits._
+    val img = new java.awt.image.BufferedImage(2, 2, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val baos = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(img, "png", baos))
+    val b = baos.toByteArray
+    java.nio.ByteBuffer.wrap(b).putInt(16, 100000).putInt(20, 100000) // IHDR width, height
+    val df = Seq((1L, b)).toDF("doc_id", "payload")
+    def run() = Multimodal.decodePixels(df).collect().toSeq
+      .map(d => (d.ok, d.format, d.width, d.height, d.pixels.toSeq, d.err))
+    val first = run()
+    assert(first === Seq((false, "png", 100000, 100000, Seq.empty[Byte],
+      "100000x100000 exceeds maxPixels=16777216")))
+    assert(run() === first)
+  }
+
   test("decodePixels: oversized images are rejected in-row, not allocated") {
     import spark.implicits._
     val img = new java.awt.image.BufferedImage(8, 8, java.awt.image.BufferedImage.TYPE_INT_RGB)
@@ -631,6 +647,21 @@ class MultimodalSpec extends SparkSpec {
       assert(rows.map(r => (r.win_no, r.n_samples, r.energy)).toSeq === expected(id))
       // frame counts are never window multiples: last window is partial
       assert(rows.last.n_samples < 16L, s"doc $id should end on a partial window")
+    }
+  }
+
+  test("decodeAudio/audioFingerprint: frames wider than 8192 bytes finish") {
+    import spark.implicits._
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    val wav = Multimodal.syntheticPcmWav(3)
+    wav(23) = 16 // high byte of the channel count: 4097 channels, 8194-byte frames
+    val df = Seq((1L, wav)).toDF("doc_id", "payload")
+    TimeLimits.failAfter(60.seconds) {
+      val a = Multimodal.decodeAudio(df).collect()
+      assert(a.length === 1 && a.head.ok && a.head.channels === 4097 && a.head.n_frames === 0L)
+      assert(Multimodal.audioFingerprint(df).collect().forall(_.ok))
     }
   }
 
