@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions.{count, lit}
   * caches accrue during build 1 (Sim.indexBuildSeconds; Registry's
   * table builds do not count). It is present exactly for queries
   * whose build 1 trained a model; builds that run concurrently inside
-  * one construct (e18 trains four indexes from parallel futures) add
+  * one construct (e18 trains four indexes in parallel branches) add
   * their durations, so `train` can exceed build 1's wall time. It and
   * `train_total` are reported SEPARATELY from `value` (and
   * additively as `value_with_train`), because the matched DuckDB

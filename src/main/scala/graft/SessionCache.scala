@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   *  - Each key builds once. The build runs under a per-key slot lock,
   *    OUTSIDE the map's bin lock, so only lookups of the SAME key wait
   *    for it; distinct keys build concurrently (e18 trains four indexes
-  *    from parallel futures).
+  *    in parallel branches).
   *  - A build that throws caches nothing; the next lookup retries.
   *  - Entries of a stopped session are purged on every lookup, without
   *    `release` (that session's block manager is gone). So a long-lived

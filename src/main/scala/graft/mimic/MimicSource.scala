@@ -70,7 +70,8 @@ final case class MimicSource(spark: SparkSession, root: String) {
 
   /** One-time ingest of every csv.gz to Parquet next to it — the scale
     * path (SURVEY §4.1): csv.gz is non-splittable, Parquet scans are
-    * parallel, pruned, and pushdown-friendly.
+    * parallel, pruned, and pushdown-friendly. The conversions are
+    * independent, so they run together ([[graft.Fanout]]).
     */
   def ingestToParquet(): Unit = {
     val tables: Seq[(String, StructType)] = Seq(
@@ -82,11 +83,11 @@ final case class MimicSource(spark: SparkSession, root: String) {
       "icu/procedureevents.csv.gz" -> MimicSchemas.procedureevents,
       "icu/inputevents.csv.gz" -> MimicSchemas.inputevents,
       "hosp/diagnoses_icd.csv.gz" -> MimicSchemas.diagnosesIcd)
-    tables.foreach { case (rel, schema) =>
-      if (exists(path(rel)))
-        spark.read.schema(schema).option("header", "true").csv(path(rel))
-          .write.mode("overwrite")
-          .parquet(path(rel).stripSuffix(".csv.gz") + ".parquet")
-    }
+    graft.Fanout.all(spark)(tables.filter { case (rel, _) => exists(path(rel)) }.map {
+      case (rel, schema) =>
+        val csv = spark.read.schema(schema).option("header", "true").csv(path(rel))
+        rel -> (() => csv.write.mode("overwrite")
+          .parquet(path(rel).stripSuffix(".csv.gz") + ".parquet"))
+    })
   }
 }

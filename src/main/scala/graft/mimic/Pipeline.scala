@@ -2,6 +2,7 @@ package graft.mimic
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Fanout
 
 /** End-to-end orchestration reproducing the reference's flag surface
   * (E1→E2→E3) with Parquet stage boundaries instead of csv.gz
@@ -10,6 +11,17 @@ import org.apache.spark.sql.functions._
   * illegal for a columnar store reading its own input (SURVEY §7.4.3);
   * each cleaning pass here writes a new stage dir, preserving the
   * "hand-edit the feature list between stages" workflow.
+  *
+  * Independent stage writes run together through [[graft.Fanout]]: the
+  * two cleaning writes, the feature lists, the selections, the five
+  * time-series grids, and then `dynamic`, the per-stay fan-out and the
+  * vocab sidecars (`featureIcu` still writes its modalities in turn). Every such write has its own
+  * directory, so the bytes on disk do not depend on the overlap. Each
+  * call builds (and so analyzes) all of its frames before the first
+  * write starts; a call whose writes fail waits for the rest to commit,
+  * then throws the first failure in stage order, later ones suppressed.
+  * Each stage is read back with the schema it was just written with, so
+  * no read-back pays a schema-inference job.
   */
 final case class Pipeline(
     spark: SparkSession,
@@ -20,8 +32,14 @@ final case class Pipeline(
   private def write(df: DataFrame, rel: String): DataFrame = {
     val p = s"$outDir/$rel"
     df.write.mode("overwrite").parquet(p)
-    spark.read.parquet(p)
+    spark.read.schema(df.schema).parquet(p)
   }
+
+  /** Writes every `(key, frame, rel)` stage together; key → read-back. */
+  private def writeAll(stages: Seq[(String, DataFrame, String)]): Map[String, DataFrame] =
+    stages.map(_._1).zip(Fanout.all(spark)(stages.map { case (_, df, rel) =>
+      rel -> (() => write(df, rel))
+    })).toMap
 
   /** Stage 1 — extract_data (cohort.py:444-685). */
   def cohort(useIcu: Boolean, label: String, time: Int = 30,
@@ -60,17 +78,13 @@ final case class Pipeline(
   def cleanFeatures(feats: Map[String, DataFrame], groupDiag: String = "convert",
       cleanChart: Boolean = true, imputeOutlier: Boolean = false,
       thresh: Int = 98, leftThresh: Int = 0): Map[String, DataFrame] = {
-    var m = feats
-    feats.get("diag").foreach { d =>
-      m += "diag" -> write(Features.groupDiag(d, groupDiag), "features/v2/diag")
-    }
-    if (cleanChart) feats.get("chart").foreach { c =>
-      m += "chart" -> write(
-        Features.outlierImputation(c, "itemid", "valuenum", thresh, leftThresh, imputeOutlier)
-          .na.drop(Seq("valuenum")),
-        "features/v2/chart")
-    }
-    m
+    val diag = feats.get("diag").map(d =>
+      ("diag", Features.groupDiag(d, groupDiag), "features/v2/diag"))
+    val chart = (if (cleanChart) feats.get("chart") else None).map(c => ("chart",
+      Features.outlierImputation(c, "itemid", "valuenum", thresh, leftThresh, imputeOutlier)
+        .na.drop(Seq("valuenum")),
+      "features/v2/chart"))
+    feats ++ writeAll(Seq(diag, chart).flatten)
   }
 
   private def codeCol(k: String) = if (k == "diag") "new_icd_code" else "itemid"
@@ -85,12 +99,15 @@ final case class Pipeline(
     * `writeFeatureLists` persists the current per-modality distinct code
     * list under `outDir/summary/<modality>_features`.
     */
-  def writeFeatureLists(feats: Map[String, DataFrame]): Map[String, String] =
-    feats.map { case (k, df) =>
-      val p = s"$outDir/summary/${k}_features"
-      df.select(col(codeCol(k))).distinct().write.mode("overwrite").parquet(p)
-      k -> p
+  def writeFeatureLists(feats: Map[String, DataFrame]): Map[String, String] = {
+    val lists = feats.toSeq.map { case (k, df) =>
+      (k, df.select(col(codeCol(k))).distinct(), s"$outDir/summary/${k}_features")
     }
+    Fanout.all(spark)(lists.map { case (_, list, p) =>
+      p -> (() => list.write.mode("overwrite").parquet(p))
+    })
+    lists.map { case (k, _, p) => k -> p }.toMap
+  }
 
   /** `featureSelection` re-reads whatever list is on disk NOW (it may
     * have been edited since `writeFeatureLists`) and filters each
@@ -99,13 +116,12 @@ final case class Pipeline(
     * same as the reference's per-flag `select_<mod>` switches.
     */
   def featureSelection(feats: Map[String, DataFrame]): Map[String, DataFrame] =
-    feats.map { case (k, df) =>
+    feats ++ writeAll(feats.toSeq.flatMap { case (k, df) =>
       val p = s"$outDir/summary/${k}_features"
-      if (graft.Fs.exists(spark, p))
-        k -> write(Features.select(df, spark.read.parquet(p), codeCol(k)),
-          s"features/v3/$k")
-      else k -> df
-    }
+      // the list may be hand-edited, so its schema is read, not assumed
+      Option.when(graft.Fs.exists(spark, p))(
+        (k, Features.select(df, spark.read.parquet(p), codeCol(k)), s"features/v3/$k"))
+    })
 
   /** generate_summary_icu (features.py:285-391). */
   def summaries(feats: Map[String, DataFrame]): Map[String, DataFrame] =
@@ -134,9 +150,9 @@ final case class Pipeline(
     }
 
     val losBuckets = includeTime / bucket
-    var outMap = Map("labels" -> Datagen.labels(adm), "demo" -> Datagen.demo(adm))
 
-    feats.get("med").foreach { f =>
+    // wave 1: the five per-modality grids
+    val med = feats.get("med").map { f =>
       val meds = windowed(Datagen.generateMeds(f, adm), isInterval = true)
       val bucketed = Datagen.bucketMeds(meds, bucket, includeTime)
       // grid keyed per ORDER: medSignal's ffill window partitions by
@@ -144,70 +160,70 @@ final case class Pipeline(
       // put filler rows in a NULL-orderid partition that never fills
       val grid = Datagen.denseGrid(bucketed, losBuckets,
         keys = Seq("stay_id", "itemid", "orderid"))
-      outMap += "med" -> write(
-        Datagen.medSignal(grid), "ts/med")
+      ("med", Datagen.medSignal(grid), "ts/med")
     }
-    feats.get("chart").foreach { f =>
+    val chart = feats.get("chart").map { f =>
       val ev = windowed(Datagen.generateEvents(f, adm), isInterval = false)
       val bucketed = Datagen.bucketEvents(ev, bucket, includeTime,
         Some(avg(col("valuenum")).as("valuenum")))
       val grid = Datagen.denseGrid(bucketed, losBuckets)
-      outMap += "chart" -> write(
-        Datagen.impute(grid, "valuenum", imputeHow), "ts/chart")
+      ("chart", Datagen.impute(grid, "valuenum", imputeHow), "ts/chart")
     }
-    Seq("proc", "out").foreach { k =>
-      feats.get(k).foreach { f =>
+    val presence = Seq("proc", "out").flatMap { k =>
+      feats.get(k).map { f =>
         val ev = windowed(Datagen.generateEvents(f, adm), isInterval = false)
         val bucketed = Datagen.bucketEvents(ev, bucket, includeTime, None)
           .withColumn("present", lit(1.0))
         val grid = Datagen.denseGrid(bucketed, losBuckets)
           .na.fill(0.0, Seq("present"))
-        outMap += k -> write(grid, s"ts/$k")
+        (k, grid, s"ts/$k")
       }
     }
-    feats.get("diag").foreach { f =>
+    val cond = feats.get("diag").map { f =>
       val scoped = f.join(adm.select(col("stay_id")), Seq("stay_id"), "left_semi")
-      outMap += "cond" -> write(Datagen.staticConditions(scoped), "ts/cond")
+      ("cond", Datagen.staticConditions(scoped), "ts/cond")
     }
+    val grids = writeAll(Seq(med, chart).flatten ++ presence ++ cond)
 
-    // wide dynamic matrix: one row per (stay, t), MapType per modality (U4).
-    // med rates collapse per itemid FIRST (avg over concurrently-active
-    // orders — pandas pivot_table's default mean over duplicate cells);
-    // two orders of one itemid at the same t would otherwise be duplicate
-    // map keys, which map_from_entries rejects at runtime.
-    val medPerItem = outMap.get("med").map(_
+    // wave 2, over wave 1's read-backs. Wide dynamic matrix: one row per
+    // (stay, t), MapType per modality (U4). Med rates collapse per itemid
+    // FIRST (avg over concurrently-active orders — pandas pivot_table's
+    // default mean over duplicate cells); two orders of one itemid at the
+    // same t would otherwise be duplicate map keys, which
+    // map_from_entries rejects at runtime.
+    val medPerItem = grids.get("med").map(_
       .groupBy(col("stay_id"), col("t"), col("itemid"))
       .agg(avg(col("rate")).as("rate")))
     val wideParts = Seq(
-      outMap.get("chart").map(Datagen.wideModality(_, "valuenum", "chart")),
-      outMap.get("proc").map(Datagen.wideModality(_, "present", "proc")),
-      outMap.get("out").map(Datagen.wideModality(_, "present", "out")),
+      grids.get("chart").map(Datagen.wideModality(_, "valuenum", "chart")),
+      grids.get("proc").map(Datagen.wideModality(_, "present", "proc")),
+      grids.get("out").map(Datagen.wideModality(_, "present", "out")),
       medPerItem.map(Datagen.wideModality(_, "rate", "med_rate"))).flatten
-    if (wideParts.nonEmpty)
-      outMap += "dynamic" -> write(Datagen.assemble(wideParts), "ts/dynamic")
+    val dynamic = Option.when(wideParts.nonEmpty)(Datagen.assemble(wideParts))
 
     // per-stay nested artifact (the reference's dataDic pickle, S10):
     // one row per stay with itemid → time-ordered series, written
     // partitioned for O(1) single-stay reads
-    outMap.get("chart").foreach { g =>
-      val nested = Datagen.perStayNested(g, "valuenum", "chart_series")
-      Sinks.writePerStay(nested, s"$outDir/ts/per_stay_chart")
-      outMap += "chart_nested" -> nested
-    }
+    val nested = grids.get("chart").map(Datagen.perStayNested(_, "valuenum", "chart_series"))
 
     // vocabulary sidecars (datagen.py:936-984): distinct code list per
     // modality, written next to the time-series outputs
-    Seq("med", "chart", "proc", "out").foreach { k =>
-      outMap.get(k).foreach { df =>
-        Sinks.writeVocab(Datagen.vocab(df, "itemid"), s"$outDir/ts/vocab_$k")
-      }
-    }
-    outMap.get("cond").foreach { df =>
-      Sinks.writeVocab(
-        Datagen.vocab(df.select(org.apache.spark.sql.functions.explode(
-          org.apache.spark.sql.functions.col("codes")).as("code")), "code"),
-        s"$outDir/ts/vocab_cond")
-    }
-    outMap
+    val vocabs = Seq("med", "chart", "proc", "out").flatMap(k =>
+      grids.get(k).map(k -> Datagen.vocab(_, "itemid"))) ++
+      grids.get("cond").map(df =>
+        "cond" -> Datagen.vocab(df.select(explode(col("codes")).as("code")), "code"))
+
+    val dynamicDir = s"$outDir/ts/dynamic"
+    val wave2 = dynamic.map(d =>
+      "ts/dynamic" -> (() => d.write.mode("overwrite").parquet(dynamicDir))) ++
+      nested.map(n => "ts/per_stay_chart" ->
+        (() => Sinks.writePerStay(n, s"$outDir/ts/per_stay_chart"))) ++
+      vocabs.map { case (k, v) => s"ts/vocab_$k" ->
+        (() => Sinks.writeVocab(v, s"$outDir/ts/vocab_$k")) }
+    Fanout.all(spark)(wave2.toSeq)
+
+    Map("labels" -> Datagen.labels(adm), "demo" -> Datagen.demo(adm)) ++ grids ++
+      dynamic.map(d => "dynamic" -> spark.read.schema(d.schema).parquet(dynamicDir)) ++
+      nested.map("chart_nested" -> _)
   }
 }

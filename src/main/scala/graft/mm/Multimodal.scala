@@ -444,12 +444,12 @@ object Multimodal {
           eachPart(isoBoxes(b, top.off, top.end, "moov child", "moov child")) { c =>
             c.typ match {
               case "mvhd" =>
-                // the version-dependent fields are bounds-checked against
-                // the enclosing moov's end, not the mvhd box's
-                val v1 = c.off < top.end && u8(b, c.off) == 1
+                // the version-dependent fields must lie inside the mvhd
+                // box itself, never in a following sibling's bytes
+                val v1 = c.off < c.end && u8(b, c.off) == 1
                 val (need, tsAt) = if (v1) (32, 20) else (20, 12)
-                if (c.off >= top.end) Left("mp4: empty mvhd")
-                else if (c.off + need > top.end)
+                if (c.off >= c.end) Left("mp4: empty mvhd")
+                else if (c.off + need > c.end)
                   Left(s"mp4: truncated mvhd v${if (v1) 1 else 0}")
                 else {
                   val timescale = be32L(b, c.off + tsAt)

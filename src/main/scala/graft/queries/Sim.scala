@@ -2080,11 +2080,11 @@ object Sim {
     // baseline was embedded in all four method branches — one action
     // re-executed the full brute-force scan 4x plus each ANN chain
     // (measured 3.3-4.6x the twin, which CTE-shares everything).
-    // The five rankings are INDEPENDENT actions, so they collect
-    // concurrently — multi-threaded job submission on one session is
-    // the standard Spark pattern for fan-out evaluation reports; the
+    // The seven rankings are INDEPENDENT actions, so they collect
+    // concurrently through graft.Fanout (each ranking trains its index
+    // inside its own branch, so the trainings overlap too); the
     // DAGScheduler interleaves the jobs' stages across the executors,
-    // so wall time is the slowest chain, not the sum of five. The
+    // so wall time is the slowest chain, not the sum of seven. The
     // collects are 10 rows each at any corpus scale.
     Q("e18_recall_report",
       (s, dir) => {
@@ -2092,21 +2092,14 @@ object Sim {
         def lit10(top: DataFrame) =
           localModel(top.select(col("vec_id")))
         val e2 = e.filter(col("embedding").isNotNull)
-        import scala.concurrent.{blocking, Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        // each collect is wrapped in blocking{} so the shared fork-join
-        // pool spawns compensation threads instead of degrading the
-        // six-way fan-out to near-sequential on a low-core driver
-        val collected = Await.result(Future.sequence(Seq(
-          Future(blocking(lit10(exactTopKDf(e, 10)))),
-          Future(blocking(lit10(ivfTopKDf(e, 10)))),
-          Future(blocking(lit10(lshTopKDf(e, 10)))),
-          Future(blocking(lit10(pqRerank(e2, pqAdcCandidates(e2), 0L, 10)))),
-          Future(blocking(lit10(pqRerank(e2, pqResidualAdcCandidates(e2), 0L, 10)))),
-          Future(blocking(lit10(pqRerank(e2, pq4AdcCandidates(e2), 0L, 10)))),
-          Future(blocking(lit10(pqRerank(e2, opq4AdcCandidates(e2), 0L, 10)))))),
-          scala.concurrent.duration.Duration.Inf)
-        val Seq(exact, ivf, lsh, pq, pqres, pq4, opq4) = collected
+        val Seq(exact, ivf, lsh, pq, pqres, pq4, opq4) = graft.Fanout.all(s)(Seq(
+          "exact" -> (() => lit10(exactTopKDf(e, 10))),
+          "ivf" -> (() => lit10(ivfTopKDf(e, 10))),
+          "lsh" -> (() => lit10(lshTopKDf(e, 10))),
+          "pq" -> (() => lit10(pqRerank(e2, pqAdcCandidates(e2), 0L, 10))),
+          "pq_res" -> (() => lit10(pqRerank(e2, pqResidualAdcCandidates(e2), 0L, 10))),
+          "pq4" -> (() => lit10(pqRerank(e2, pq4AdcCandidates(e2), 0L, 10))),
+          "opq4" -> (() => lit10(pqRerank(e2, opq4AdcCandidates(e2), 0L, 10)))))
         def row(method: String, top: DataFrame) =
           top.join(exact, Seq("vec_id"))
             .agg(count(lit(1)).as("hits"))

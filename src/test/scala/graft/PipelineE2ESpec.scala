@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.mimic._
 
 /** End-to-end pipeline run on the synthetic fixture tree — mirrors the
@@ -104,6 +105,42 @@ class PipelineE2ESpec extends SparkSpec {
       if (!maxT.isNullAt(0)) assert(maxT.getLong(0) < 24)
       // every chart row in the time series carries only the kept itemid
       assert(ts("chart").filter(col("itemid") =!= keptId).count() === 0)
+    }
+  }
+
+  test("every stage frame Pipeline returns carries its directory's own schema and rows") {
+    val out = java.nio.file.Files.createTempDirectory("graft_readback").toString
+    val pipe = Pipeline(spark, MimicSource(spark, tmpRoot), s"$tmpRoot/icd_mapping.txt", out)
+    val cohort = pipe.cohort(useIcu = true, label = "Mortality")
+    val feats = pipe.featureIcu(cohort)
+    val cleaned = pipe.cleanFeatures(feats, imputeOutlier = true)
+    pipe.writeFeatureLists(cleaned)
+    val selected = pipe.featureSelection(cleaned)
+    val ts = pipe.timeSeries(cohort, selected, task = "Mortality", imputeHow = "Mean")
+    val returned = Seq("cohort" -> cohort) ++
+      feats.toSeq.map { case (k, df) => s"features/preproc_${k}_icu" -> df } ++
+      Seq("diag", "chart").map(k => s"features/v2/$k" -> cleaned(k)) ++
+      selected.toSeq.map { case (k, df) => s"features/v3/$k" -> df } ++
+      Seq("med", "chart", "proc", "out", "cond", "dynamic").map(k => s"ts/$k" -> ts(k))
+
+    // every committed directory is a returned stage or a sink with no frame
+    val root = java.nio.file.Paths.get(out)
+    val written = {
+      val w = java.nio.file.Files.walk(root)
+      try w.iterator().asScala.filter(_.getFileName.toString == "_SUCCESS")
+        .map(p => root.relativize(p.getParent).toString).toSet
+      finally w.close()
+    }
+    val sinks = written.filter(r =>
+      r.startsWith("summary/") || r.startsWith("ts/vocab_") || r == "ts/per_stay_chart")
+    assert(sinks.size === 5 + 1 + 5)
+    assert(written -- sinks === returned.map(_._1).toSet)
+
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    returned.foreach { case (rel, df) =>
+      val disk = spark.read.parquet(s"$out/$rel")
+      assert(df.schema === disk.schema, rel)
+      assert(rows(df) === rows(disk), rel)
     }
   }
 

@@ -466,6 +466,21 @@ class MultimodalSpec extends SparkSpec {
     assert(!m(3L).ok && m(3L).err === "payload too short")
   }
 
+  test("decodeVideo: a truncated mvhd followed by a trak is an mp4: error, not the trak's bytes") {
+    import spark.implicits._
+    val bb = java.nio.ByteBuffer.allocate(16 + 8 + 16 + 8 + 24)
+      .order(java.nio.ByteOrder.BIG_ENDIAN)
+    bb.putInt(16).put("ftyp".getBytes).put("isom".getBytes).putInt(0)
+    bb.putInt(8 + 16 + 8 + 24).put("moov".getBytes)
+    // mvhd v0 cut after ver+flags and creation time: no timescale/duration
+    bb.putInt(16).put("mvhd".getBytes).putInt(0).putInt(0)
+    bb.putInt(8 + 24).put("trak".getBytes)
+    bb.putInt(24).put("tkhd".getBytes).putInt(0).putInt(0).putInt(640 << 16).putInt(360 << 16)
+    val df = Seq((1L, bb.array())).toDF("doc_id", "payload")
+    val v = Multimodal.decodeVideo(df).collect().head
+    assert(!v.ok && v.err === "mp4: truncated mvhd v0", v)
+  }
+
   test("decodeVideo/decodeFrames: every AVI prefix and an oversized chunk use the avi: error channel") {
     import spark.implicits._
     val good = Multimodal.syntheticRgbAvi(5)
