@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, RegExpReplace, StringSplit}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
@@ -41,14 +42,22 @@ object PlanInspect {
     * must always reach a lambda as a BOUND attribute (two aliased
     * projections — the withShingles shape). This is the exact defect
     * that made d20 12× slower in round 9; checked on the optimized
-    * logical plan, where the inlining happens, so no execution needed. */
+    * logical plan, where the inlining happens, so no execution needed.
+    * Binding the tokens in a projection does not protect a lambda under
+    * a Filter: the Filter is pushed below the projection with the alias
+    * substituted. */
   def freeTokenizationLambdas(df: DataFrame): Seq[String] =
-    df.queryExecution.optimizedPlan.collect { case plan =>
-      plan.expressions.flatMap(_.collect {
-        case lf: LambdaFunction if lf.function.exists {
-            case _: StringSplit | _: RegExpReplace => true
-            case _ => false
-          } => lf.function.toString.take(160)
-      })
-    }.flatten
+    tokenizationLambdas(df.queryExecution.optimizedPlan.collect { case p => p })
+
+  /** The same check over an executed plan, query stages included — for
+    * frames only a listener sees, such as a pipeline stage's write. */
+  def freeTokenizationLambdas(plan: SparkPlan): Seq[String] = tokenizationLambdas(walk(plan))
+
+  private def tokenizationLambdas(nodes: Seq[QueryPlan[_]]): Seq[String] =
+    nodes.flatMap(_.expressions.flatMap(_.collect {
+      case lf: LambdaFunction if lf.function.exists {
+          case _: StringSplit | _: RegExpReplace => true
+          case _ => false
+        } => lf.function.toString.take(160)
+    }))
 }

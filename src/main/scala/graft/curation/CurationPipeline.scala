@@ -1,6 +1,6 @@
 package graft.curation
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries.Docs
 
@@ -283,14 +283,28 @@ object CurationPipeline {
     val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     def complete(name: String): Boolean =
       cfg.resume && graft.Fs.exists(spark, s"$outDir/$name/_SUCCESS")
-    // by-name df: a resumed stage must not even construct its plan (its
-    // inputs may reference upstream frames we deliberately never built)
-    def stage(name: String, df: => DataFrame): DataFrame = {
-      if (!complete(name)) df.write.mode("overwrite").parquet(s"$outDir/$name")
+    // a resumed stage's rows: read back and count (no plan of it is built)
+    def resumed(name: String): DataFrame = {
       val back = spark.read.parquet(s"$outDir/$name")
       counts += name -> back.count()
       back
     }
+    // a fresh stage's rows: counted by an Observation on its own write,
+    // so no job re-reads the directory to count it
+    def written(name: String, df: DataFrame)(write: DataFrame => Unit): Unit = {
+      val obs = Observation()
+      write(df.observe(obs, count(lit(1)).as("rows")))
+      counts += name -> obs.get("rows").asInstanceOf[Number].longValue
+    }
+    // by-name df: a resumed stage must not even construct its plan (its
+    // inputs may reference upstream frames we deliberately never built)
+    def stage(name: String, df: => DataFrame): DataFrame =
+      if (complete(name)) resumed(name)
+      else {
+        val d = df
+        written(name, d)(_.write.mode("overwrite").parquet(s"$outDir/$name"))
+        spark.read.schema(d.schema).parquet(s"$outDir/$name")
+      }
 
     val base = Docs.spreadWords(docs)
 
@@ -441,8 +455,10 @@ object CurationPipeline {
         }
       })
 
-    // stage 4: near-dup dedup, survivors written as the curated corpus
-    if (!complete("04_corpus")) {
+    // stage 4: near-dup dedup, survivors written as the curated corpus.
+    // Read back with the inferred schema: the partition column moves to
+    // the end.
+    val corpus0 = if (complete("04_corpus")) resumed("04_corpus") else {
       val comps = Docs.nearDupClusters(clean.select(col("doc_id"),
         graft.functions.MinHashExprs.minHashSig(Docs.shingles(col("ws"))).as("mh")),
         cfg.lshBanding)
@@ -456,11 +472,10 @@ object CurationPipeline {
           clean.join(keeperIds, Seq("doc_id"), "left_semi")
             .drop("ws", "n_tokens")
         } else Docs.clusterMinKeepers(clean, comps).drop("ws", "n_tokens")
-      graft.sources.CorpusSink.write(survivors, s"$outDir/04_corpus",
-        partitionCol = cfg.partitionCol, maxRecordsPerFile = cfg.maxRecordsPerFile)
+      written("04_corpus", survivors)(graft.sources.CorpusSink.write(_, s"$outDir/04_corpus",
+        partitionCol = cfg.partitionCol, maxRecordsPerFile = cfg.maxRecordsPerFile))
+      spark.read.parquet(s"$outDir/04_corpus")
     }
-    val corpus0 = spark.read.parquet(s"$outDir/04_corpus")
-    counts += "04_corpus" -> corpus0.count()
 
     // stage 4a (optional): C4-style duplicate-span removal over the
     // near-dup survivors — rebuild each doc from the blocks that are

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.types.BinaryType
 import graft.functions.ColFns._
+import graft.functions.GramHashExprs.gramHashes
 import graft.functions.MinHashExprs.minHashSig
 import graft.queries.Registry.t
 
@@ -34,8 +35,9 @@ object Docs {
 
   /** The word `n`-gram starting at 1-based index `i` of the token array
     * `ws`, space-joined — the one builder behind the 3-gram shingles and
-    * every word 5-gram ([[gram5]], d15, d32, the Bloom probe of
-    * [[decontamFilterDf]]). */
+    * every word 5-gram ([[gram5]], d15, d32, the Bloom set of
+    * [[benchBloomBytes]]). [[graft.functions.GramHashes]] computes its
+    * xxhash64 directly from the text. */
   private[graft] def ngramAt(ws: Column, i: Column, n: Int): Column =
     concat_ws(" ", element_at(ws, i) +: (1 until n).map(k => element_at(ws, i + k)): _*)
 
@@ -879,19 +881,17 @@ object Docs {
     * contamination accounting stays on the batch path (d15, which this
     * filter mirrors: same `words`, same 5-gram window).
     *
-    * The gram is built INSIDE the exists lambda from the bound `__ws`
-    * attribute — per-element work is O(1) (BENCH_NOTES bound-column
-    * discipline; the array itself is never materialized). */
+    * The 5-gram hashes come from one compiled pass over the text
+    * ([[graft.functions.GramHashes]], bit-identical to
+    * `xxhash64(ngramAt(words(text), i, 5))`), so the lambda reads only its
+    * own element and a row costs O(tokens). Binding `words` in a
+    * projection first does not protect a lambda under a Filter: the
+    * Filter is pushed below the projection with the alias substituted
+    * (BENCH_NOTES). A null text is kept. */
   def decontamFilterDf(docs: DataFrame,
-      bloomBytes: Array[Byte], textCol: String = "text"): DataFrame = {
-    val ws = col("__ws")
-    val hit = when(size(ws) >= 5,
-      exists(sequence(lit(1), size(ws) - 4), i => bloomProbe(bloomBytes, xxhash64(ngramAt(ws, i, 5)))))
-      .otherwise(lit(false))
-    docs.withColumn("__ws", words(col(textCol)))
-      .filter(!hit)
-      .drop("__ws")
-  }
+      bloomBytes: Array[Byte], textCol: String = "text"): DataFrame =
+    docs.filter(!coalesce(
+      exists(gramHashes(col(textCol), 5), h => bloomProbe(bloomBytes, h)), lit(false)))
 
   /** Full-signature string per doc (all 8 MinHash families, ':'-joined)
     * on BOUND columns — the band-free special case of LSH: signature
@@ -978,8 +978,10 @@ object Docs {
     * election stays on the batch d30 compactor, which backfills
     * exactly.
     *
-    * Every HOF lambda reads only bound columns (__ws/__n) plus its own
-    * index — the BENCH_NOTES bound-column discipline. */
+    * Not O(tokens) per row: the `size(__keep) > 0` Filter is pushed
+    * below the `__ws` projection with the alias substituted, so its
+    * copy of the `__keep` lambda re-tokenizes the text per block
+    * (`PlanInspect.freeTokenizationLambdas` flags it once). */
   def spanDedupFilterDf(docs: DataFrame,
       keeperBloom: Array[Byte], textCol: String = "text"): DataFrame = {
     def blockOf(k: Column): Column = {
@@ -1180,16 +1182,21 @@ object Docs {
     * (for dedup-before-training that quotes-mosaic is usually exactly
     * what you want gone). Bloom fpp adds ~fpp per-shingle one-sided
     * error on top. Exact per-pair containment (and keeper election)
-    * stays on the batch d45 compactor. Per row this is one
-    * shingle-array walk with a Bloom probe per element — no join, no
-    * shuffle, no state. Docs with no shingles always pass. */
+    * stays on the batch d45 compactor. Per row this is one compiled
+    * shingle-hash pass ([[graft.functions.GramHashes]]) and a Bloom
+    * probe per distinct hash — no join, no shuffle, no state. Docs
+    * with no shingles (null text included) always pass. The distinct
+    * shingles are counted by hash, so the one possible difference from
+    * counting shingle strings is two distinct shingles of one doc that
+    * collide in 64-bit xxhash64. */
   def containmentFilterDf(docs: org.apache.spark.sql.DataFrame,
       snapshotBloom: Array[Byte], tauMilli: Long = 800L,
       textCol: String = "text"): DataFrame = {
     docs
-      .withColumn("__ss", array_distinct(shingles(words(col(textCol)))))
+      .withColumn("__ss", array_distinct(
+        coalesce(gramHashes(col(textCol), 3), array().cast("array<bigint>"))))
       .withColumn("__hits",
-        size(filter(col("__ss"), sh => bloomProbe(snapshotBloom, xxhash64(sh)))).cast("long"))
+        size(filter(col("__ss"), h => bloomProbe(snapshotBloom, h))).cast("long"))
       .filter(size(col("__ss")) === 0 ||
         col("__hits") * 1000L < lit(tauMilli) * size(col("__ss")).cast("long"))
       .drop("__ss", "__hits")

@@ -48,6 +48,18 @@ class PlanGuardSpec extends SparkSpec {
       s"free-variable tokenization lambdas (bind via two aliased projections):\n${offenders.mkString("\n")}")
   }
 
+  test("tripwire: the Bloom decontamination and containment filters re-evaluate no tokenization in a lambda") {
+    // their lambdas sit under a Filter, which is pushed below any
+    // projection that binds the tokens, with the alias substituted
+    val docs = Registry.t(spark, sfDir, "documents")
+    val bloom = graft.queries.Docs.containmentBloomBytes(docs.limit(20))
+    val offenders = Seq(
+      "decontamFilterDf" -> graft.queries.Docs.decontamFilterDf(docs, bloom),
+      "containmentFilterDf" -> graft.queries.Docs.containmentFilterDf(docs, bloom)
+    ).flatMap { case (name, df) => PlanInspect.freeTokenizationLambdas(df).map(b => s"$name: $b") }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("d20/d29: computed shingle sets ride the verification-join exchanges; text only rides the spread") {
     for (name <- Seq("d20_neardup_verified", "d29_cross_neardup")) {
       val df = Registry.queries(name)(spark, sfDir)

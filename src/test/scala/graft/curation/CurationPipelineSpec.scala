@@ -1,8 +1,14 @@
 package graft.curation
 
 import java.nio.file.Files
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.GraftShim
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.{PlanInspect, SparkSpec}
 import graft.queries.Registry
 
 /** End-to-end curation pipeline on sf0.001, asserted EQUIVALENT to the
@@ -657,5 +663,67 @@ class CurationPipelineSpec extends SparkSpec {
     val counts2 = CurationPipeline.run(spark, docs, out,
       cfg = Walkthrough.config, selection = Walkthrough.selection)
     assert(counts2 === counts)
+  }
+
+  // ---- what a fresh walkthrough run executes, seen by a
+  // QueryExecutionListener: every stage write runs no tokenization
+  // inside a lambda, and the returned rows come from the writes
+  // themselves (no `count` job reads a stage directory back)
+
+  /** One fresh walkthrough run: its output dir, returned counts and the
+    * (funcName, execution) of every action it ran. */
+  private lazy val walkRun: (String, Seq[(String, Long)], Seq[(String, QueryExecution)]) = {
+    val out = Files.createTempDirectory("graft-curation-stages").toString
+    val seen = ArrayBuffer.empty[(String, QueryExecution)]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.synchronized { seen += funcName -> qe; () }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val docs = Registry.t(spark, sfDir, "documents")
+    spark.listenerManager.register(listener)
+    val counts =
+      try CurationPipeline.run(spark, docs, out,
+        cfg = Walkthrough.config, selection = Walkthrough.selection)
+      finally {
+        GraftShim.waitListenerBus(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    (out, counts, seen.synchronized(seen.toSeq))
+  }
+
+  /** The stage-directory writes of the run, by stage name. */
+  private def stageWrites: Seq[(String, QueryExecution)] = {
+    val (out, _, seen) = walkRun
+    seen.flatMap { case (_, qe) =>
+      PlanInspect.walk(qe.executedPlan).collectFirst {
+        case w: DataWritingCommandExec if w.cmd.isInstanceOf[InsertIntoHadoopFsRelationCommand] =>
+          w.cmd.asInstanceOf[InsertIntoHadoopFsRelationCommand].outputPath.toString
+      }.filter(_.contains(out)).map(p => p.substring(p.indexOf(out) + out.length + 1) -> qe)
+    }
+  }
+
+  test("tripwire: no stage write of a walkthrough run re-evaluates tokenization in a lambda") {
+    val writes = stageWrites
+    assert(writes.map(_._1).sorted === walkRun._2.map(_._1).sorted,
+      "the listener must see exactly one write per returned stage")
+    val offenders = writes.flatMap { case (name, qe) =>
+      PlanInspect.freeTokenizationLambdas(qe.executedPlan).map(b => s"$name: $b")
+    }
+    assert(offenders.isEmpty,
+      s"free-variable tokenization lambdas in stage writes:\n${offenders.mkString("\n")}")
+  }
+
+  test("fresh stage rows come from their writes: equal to a recount, no count job re-reads a stage") {
+    val (out, counts, seen) = walkRun
+    counts.foreach { case (name, n) =>
+      assert(spark.read.parquet(s"$out/$name").count() === n, s"stage $name")
+    }
+    val rereads = seen.collect { case ("count", qe) => qe }.flatMap { qe =>
+      PlanInspect.walk(qe.executedPlan).collect {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+      }.flatten.filter(_.contains(out))
+    }
+    assert(rereads.isEmpty, s"count jobs read stage directories back: $rereads")
   }
 }

@@ -49,6 +49,7 @@ class KernelShellSpec extends SparkSpec {
     ("redact_stats", Text, RedactExprs.redactStats(_, "[a-z]+@[a-z]+\\.com", "[0-9]+")),
     ("top_adjacent_pair_count", Strs, RepetitionExprs.topAdjacentPairCount),
     ("rolling_hash", Text, RollingHashExprs.rollingHash),
+    ("gram_hashes", Text, GramHashExprs.gramHashes(_, 3)),
     ("simhash16", Strs, SimHashExpr.simHash16),
     ("sq_encode", Floats, SqExprs.sqEncode(_, Array(-1000000L, 0L, -2000000L),
       Array(1000000L, 3000000L, 2000000L))),

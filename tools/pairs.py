@@ -9,12 +9,18 @@ Checks BASE and CHANGE out with `git worktree add --detach` under
 checkout, for BENCHMARK.json's `run_seconds`, in ABBA order: the pair for seed S runs BASE then CHANGE, the
 pair for seed S+1 runs CHANGE then BASE, and so on. For every
 end-to-end metric in BENCHMARK.json it prints each side's median and
-interquartile range, the per-pair ratios CHANGE/BASE, their median, and
-a sign count (pairs where CHANGE is better / worse / equal, by the
-metric's own direction). With --trace it also makes one traced run per
-side and prints the counters only a code change moves (spark.jobs,
-spark.tasks). It gates nothing and exits 0 whenever every run produced
-a result.
+interquartile range, the per-pair ratios CHANGE/BASE, their median, a
+sign count (pairs where CHANGE is better / worse / equal, by the
+metric's own direction), a 95 % bootstrap confidence interval of the
+median ratio (pairs resampled with replacement, fixed seed) and a
+verdict: "faster" ("better" for a metric not in seconds) when the whole
+interval lies on the metric's better side of 1, "slower" ("worse") when
+it lies on the other side, "equal" when every ratio is 1, otherwise
+"unresolved". With --trace it also makes one traced run per side and
+prints the counters only a code change moves (spark.jobs, spark.tasks)
+and each side's per-stage seconds (the `*.s` metrics, e.g.
+curation.03_clean.s). It gates nothing and exits 0 whenever every run
+produced a result.
 
 Fresh worktrees, never a copy of a built tree: sbt's incremental
 compiler tracks absolute paths, and building a `cp -a` copy of an
@@ -24,12 +30,14 @@ target/. The worktrees are removed at the end.
 import argparse
 import json
 import os
+import random
 import statistics
 import subprocess
 import sys
 import tempfile
 
 COUNTERS = ("spark.jobs", "spark.tasks")
+BOOTSTRAP_REPS = 4000
 
 
 def git(*args, cwd=None):
@@ -70,9 +78,32 @@ def quartiles(xs):
     return q[0], q[2]
 
 
-def summarize(metric, better, base, change):
-    """Side statistics, paired ratios and the sign count of one metric."""
+def bootstrap_ci(ratios):
+    """95 % percentile-bootstrap interval of the median paired ratio."""
+    rng = random.Random(0)
+    meds = sorted(statistics.median(rng.choices(ratios, k=len(ratios)))
+                  for _ in range(BOOTSTRAP_REPS))
+    return meds[int(0.025 * BOOTSTRAP_REPS)], meds[int(0.975 * BOOTSTRAP_REPS) - 1]
+
+
+def verdict(better, unit, ratios, ci):
+    good, bad = ("faster", "slower") if unit == "s" else ("better", "worse")
+    if ci is None:
+        return "unresolved"
+    if all(r == 1 for r in ratios):
+        return "equal"
+    lo, hi = ci
+    if hi < 1 or lo > 1:
+        return good if (hi < 1) == (better == "lower") else bad
+    return "unresolved"
+
+
+def summarize(metric, better, unit, base, change):
+    """Side statistics, paired ratios, sign count, bootstrap interval and
+    verdict of one metric."""
     ratios = [c / b if b else float("nan") for b, c in zip(base, change)]
+    finite = [r for r in ratios if r == r]
+    ci = bootstrap_ci(finite) if finite else None
     sign = {"better": 0, "worse": 0, "equal": 0}
     for b, c in zip(base, change):
         if c == b:
@@ -85,7 +116,8 @@ def summarize(metric, better, base, change):
                        "runs": xs}
     return {"metric": metric, "better": better, "base": side(base),
             "change": side(change), "ratios": ratios,
-            "median_ratio": statistics.median(ratios), "sign": sign}
+            "median_ratio": statistics.median(ratios), "sign": sign,
+            "ci95": ci, "verdict": verdict(better, unit, ratios, ci)}
 
 
 def fmt(x):
@@ -129,7 +161,7 @@ def main():
                     print(f"pairs: {w} seed {seed} {side}: cold_run_s="
                           f"{value(r, 'cold_run_s')} failed={r['failed']}",
                           file=sys.stderr)
-            rows = [summarize(m["name"], m["better"],
+            rows = [summarize(m["name"], m["better"], m["unit"],
                               [value(r, m["name"]) for r in runs["base"]],
                               [value(r, m["name"]) for r in runs["change"]])
                     for m in e2e if all(m["name"] in r["metrics"]
@@ -139,7 +171,8 @@ def main():
                      "failed_ops": failed, "metrics": rows}
             if a.trace:
                 entry["traced"] = {
-                    side: {k: value(r, k) for k in COUNTERS if k in r["metrics"]}
+                    side: {k: value(r, k) for k in r["metrics"]
+                           if k in COUNTERS or k.endswith(".s")}
                     for side, r in ((s, bench(trees[s], w, a.seed_start, seconds, True))
                                     for s in ("base", "change"))}
             report["workloads"][w] = entry
@@ -148,17 +181,28 @@ def main():
                   f"{a.pairs} ABBA pairs, seeds {entry['seeds'][0]}-{entry['seeds'][1]}, "
                   f"failed ops {failed}")
             print(f"{'metric':<18}{'base median [IQR]':<30}{'change median [IQR]':<30}"
-                  f"{'median ratio':<14}better/worse/equal")
+                  f"{'median ratio':<14}{'95% CI':<18}{'verdict':<12}better/worse/equal")
             for r in rows:
                 b, c = r["base"], r["change"]
+                ci = (f"[{r['ci95'][0]:.3f}, {r['ci95'][1]:.3f}]" if r["ci95"] else "-")
                 print(f"{r['metric']:<18}"
                       f"{fmt(b['median']) + ' [' + fmt(b['iqr'][0]) + ', ' + fmt(b['iqr'][1]) + ']':<30}"
                       f"{fmt(c['median']) + ' [' + fmt(c['iqr'][0]) + ', ' + fmt(c['iqr'][1]) + ']':<30}"
                       f"{r['median_ratio']:<14.4f}"
+                      f"{ci:<18}{r['verdict']:<12}"
                       f"{r['sign']['better']}/{r['sign']['worse']}/{r['sign']['equal']}")
                 print(f"{'':<18}ratios " + " ".join(f"{x:.3f}" for x in r["ratios"]))
             if a.trace:
-                print("traced pass: " + json.dumps(entry["traced"]))
+                t = entry["traced"]
+                print("traced pass: " + json.dumps(
+                    {s: {k: t[s][k] for k in COUNTERS if k in t[s]} for s in t}))
+                # the other workloads' stages read 0 on both sides
+                stages = sorted(k for k in set(t["base"]) | set(t["change"])
+                                if k.endswith(".s") and (t["base"].get(k) or t["change"].get(k)))
+                print(f"{'stage seconds':<28}{'base':<10}change")
+                for k in stages:
+                    print(f"{k:<28}{fmt(t['base'].get(k, '-')):<10}"
+                          f"{fmt(t['change'].get(k, '-'))}")
         if a.json:
             with open(a.json, "w") as f:
                 json.dump(report, f, indent=1)
