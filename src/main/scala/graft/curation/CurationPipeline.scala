@@ -2,6 +2,7 @@ package graft.curation
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Fanout
 import graft.queries.Docs
 
 /** The corpus-curation operators composed into one user-facing,
@@ -52,6 +53,31 @@ import graft.queries.Docs
   *   7. `07_order`    deterministic train-order shuffle + shard
   *                    assignment (d28) of the selected corpus (when
   *                    `orderShards` is set)
+  *   8. `08_bpe`      merge-table artifact + BPE-encoded corpus (d41) of
+  *                    the selected corpus (when `bpeMerges` is set)
+  *
+  * Every stage goes through one body (resume check, observed write,
+  * read-back, one `(stage, rows)` record), and independent stages are
+  * written together on one session through [[graft.Fanout]], in two
+  * waves, each stage still in its own directory:
+  *
+  *  - the front wave: every artifact of the RAW corpus (the two
+  *    `00_report` reports, `00_stoplist` with its term collect,
+  *    `01_ppl`), and `01_gated` when neither `maxStopFrac` nor
+  *    `keepPplBuckets` is set: then stage 1 reads no artifact of the
+  *    wave and depends on `docs` alone. With either gate set it runs
+  *    right after the wave, over the stoplist and split this run wrote.
+  *    The Bloom decontamination engine's filter build (of the benchmark
+  *    docs, so of `docs` alone) joins the wave as well;
+  *  - the tail wave: `05_chunks`, `06_pack`, `07_order` and `08_bpe`
+  *    (merges, their collect, then the encoded corpus, as one chain),
+  *    all over the read-back of the selected corpus.
+  *
+  * Stages 2–4b each read the one before, so they run in turn. Every
+  * frame of a wave is built on the caller's thread before its first
+  * write; a wave whose writes fail waits for the rest to commit, then
+  * throws the first failure in stage order. The returned counts are in
+  * stage order whichever write finishes first.
   *
   * Scale notes: every stage is the same shape as its gate query —
   * per-row maps for the gates, one window exchange for exact dedup, a
@@ -259,6 +285,31 @@ object CurationPipeline {
         * default: a fresh run must never trust stale dirs. */
       resume: Boolean = false)
 
+  /** Stages of one dependency chain of a run. Each stage's plan is built
+    * when the chain is made (a stage that follows a collect of its chain
+    * is planned when the chain reaches it); `run` writes the stages in
+    * order and returns their `(stage, rows)` records, and `value`, the
+    * chain's last result, is there once `run` has returned. */
+  private final class Chain[T](val name: String, body: () => (T, Seq[(String, Long)])) {
+    @volatile private var result: Option[T] = None
+    def run(): Seq[(String, Long)] = {
+      val (t, rows) = body()
+      result = Some(t)
+      rows
+    }
+    def value: T = result.get
+    def map[U](f: T => U): Chain[U] = new Chain(name, () => {
+      val (t, rows) = body()
+      (f(t), rows)
+    })
+    def flatMap[U](f: T => Chain[U]): Chain[U] = new Chain(name, () => {
+      val (t, rows) = body()
+      val next = f(t)
+      val more = next.run()
+      (next.value, rows ++ more)
+    })
+  }
+
   /** Run the pipeline; returns per-stage row counts (stage name →
     * rows), in stage order. `customGate` runs INSIDE stage 1 after the
     * built-in gates (input: docs with a bound `ws` token column). */
@@ -283,75 +334,54 @@ object CurationPipeline {
     val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     def complete(name: String): Boolean =
       cfg.resume && graft.Fs.exists(spark, s"$outDir/$name/_SUCCESS")
-    // a resumed stage's rows: read back and count (no plan of it is built)
-    def resumed(name: String): DataFrame = {
-      val back = spark.read.parquet(s"$outDir/$name")
-      counts += name -> back.count()
-      back
-    }
-    // a fresh stage's rows: counted by an Observation on its own write,
-    // so no job re-reads the directory to count it
-    def written(name: String, df: DataFrame)(write: DataFrame => Unit): Unit = {
-      val obs = Observation()
-      write(df.observe(obs, count(lit(1)).as("rows")))
-      counts += name -> obs.get("rows").asInstanceOf[Number].longValue
-    }
-    // by-name df: a resumed stage must not even construct its plan (its
-    // inputs may reference upstream frames we deliberately never built)
-    def stage(name: String, df: => DataFrame): DataFrame =
-      if (complete(name)) resumed(name)
+    val parquet: (DataFrame, String) => Unit = (d, p) => d.write.mode("overwrite").parquet(p)
+
+    // The one stage body. `df` is by-name: it is forced here, on the
+    // caller's thread (so a bad column fails before any write of its
+    // wave), unless the stage is complete. A resumed stage builds no plan
+    // (its inputs may reference upstream frames we deliberately never
+    // built): it is read back and counted. A fresh stage's rows come from
+    // an Observation on its own write, and it is read back with the
+    // schema it wrote, unless `read` says otherwise.
+    def stage(name: String, df: => DataFrame,
+        write: (DataFrame, String) => Unit = parquet,
+        read: (DataFrame, String) => DataFrame = (d, p) => spark.read.schema(d.schema).parquet(p)
+    ): Chain[DataFrame] = {
+      val path = s"$outDir/$name"
+      if (complete(name))
+        new Chain(name, () => {
+          val back = spark.read.parquet(path)
+          (back, Seq(name -> back.count()))
+        })
       else {
         val d = df
-        written(name, d)(_.write.mode("overwrite").parquet(s"$outDir/$name"))
-        spark.read.schema(d.schema).parquet(s"$outDir/$name")
+        new Chain(name, () => {
+          val obs = Observation()
+          write(d.observe(obs, count(lit(1)).as("rows")), path)
+          (read(d, path), Seq(name -> obs.get("rows").asInstanceOf[Number].longValue))
+        })
       }
+    }
+
+    // The one wave helper: chains in stage order, already planned, are
+    // written together on this session; their records are appended in
+    // that order, whichever write finishes first. A wave of one runs on
+    // the caller's thread.
+    def wave(chains: Seq[Chain[_]]): Unit =
+      Fanout.all(spark)(chains.map(c => c.name -> (() => c.run()))).foreach(counts ++= _)
+    def one[T](chain: Chain[T]): T = { wave(Seq(chain)); chain.value }
 
     val base = Docs.spreadWords(docs)
-
-    // stage 0 (optional): observability reports of the RAW corpus —
-    // artifacts only, nothing downstream reads them
-    if (cfg.corpusReport) {
-      stage("00_report/source", Docs.sourceReportDf(docs))
-      stage("00_report/zipf", Docs.zipfReportDf(docs))
-    }
-
-    // stage 0 (optional): heavy-hitter stoplist of the RAW corpus
-    // (d24's exact-count shape) — an artifact downstream tooling reads,
-    // and the term source for the stop-fraction gate below. Read back
-    // from the stage dir so a resumed run never recomputes it.
-    val stopTerms: Option[Array[String]] = cfg.stopTopK.map { k =>
-      stage("00_stoplist", Docs.topTermsDf(docs, k))
-        .select(col("term")).collect().map(_.getString(0)).sorted
-    }
-
-    // CCNet tercile triage artifact (01_ppl, the per-doc split a
-    // downstream sampler reads): staged OUTSIDE the 01_gated thunk —
-    // the thunk is by-name and never forced when a resumed run finds
-    // 01_gated complete, so staging it inside would make the returned
-    // per-stage counts differ between fresh and resumed runs
-    // (00_stoplist sets the precedent: artifact stages of the RAW
-    // corpus are forced unconditionally). It depends only on `docs`.
-    val pplBuckets: Option[DataFrame] = cfg.keepPplBuckets.map { _ =>
-      // release the d44 scored-frame cache entry right after the stage's
-      // terminal action (the parquet write) — a long-lived pipeline
-      // session must not pin one corpus-sized entry per run (ADVICE r16);
-      // the stage is read back from disk, so nothing downstream re-runs
-      // the persisted subtree. Built INSIDE the by-name thunk: a resumed
-      // run neither constructs d44's plan nor registers its persist.
-      var release = () => ()
-      try stage("01_ppl", {
-        val (df, r) = Docs.ccnetBucketsDfWithRelease(docs)
-        release = r
-        df
-      }) finally release()
-    }
+    val isBench = (c: Column) => c % cfg.benchMod === 0
+    val bench = base.filter(isBench(col("doc_id")))
 
     // stage 1: d13's length/repetition gate (+ optional stop-fraction
     // and surprisal gates) + caller's gate. The surprisal cut is a
     // semi-join against the d25 scores of the RAW corpus: docs at or
     // under the threshold survive (zero-token docs have no score and
-    // are already dead to minTokens).
-    val gated = stage("01_gated", customGate {
+    // are already dead to minTokens). `stopTerms` and `pplBuckets` are
+    // read only when their gates are set.
+    def gatedDf(stopTerms: Option[Array[String]], pplBuckets: Option[DataFrame]) = customGate {
       val g0 = Docs.lengthRepetitionGate(base, cfg.minTokens, cfg.maxDupTokenFrac)
       val g = (cfg.maxStopFrac, stopTerms) match {
         case (Some(maxFrac), Some(terms)) =>
@@ -392,9 +422,9 @@ object CurationPipeline {
         case None => g1
       }
       // CCNet tercile triage: survivors semi-join on the configured
-      // bucket set, against the 01_ppl artifact staged above (read
-      // back from disk — the resume contract: a resumed run gates
-      // against the exact split it wrote).
+      // bucket set, against the 01_ppl artifact read back from disk —
+      // the resume contract: a resumed run gates against the exact
+      // split it wrote.
       (cfg.keepPplBuckets, pplBuckets) match {
         case (Some(keepSet), Some(buckets)) =>
           val keep = buckets
@@ -403,27 +433,77 @@ object CurationPipeline {
           g2.join(keep, Seq("doc_id"), "left_semi")
         case _ => g2
       }
-    })
+    }
+
+    // The front wave: every artifact of the RAW corpus. Artifact stages
+    // are staged unconditionally, outside any downstream thunk: a
+    // resumed run that finds 01_gated complete never forces its thunk,
+    // so an artifact staged inside it would make the returned counts
+    // differ between fresh and resumed runs.
+    //  - `00_report`: observability reports, nothing downstream reads
+    //    them;
+    //  - `00_stoplist`: d24's top-K terms, an artifact downstream tooling
+    //    reads and the term source of the stop-fraction gate, collected
+    //    in its own branch from the read-back, so a resumed run never
+    //    recomputes it;
+    //  - `01_ppl`: the CCNet tercile split a downstream sampler reads. Its
+    //    write releases the d44 scored-frame cache entry (a long-lived
+    //    pipeline session must not pin one corpus-sized entry per run,
+    //    ADVICE r16; nothing re-runs the persisted subtree, the stage is
+    //    read back from disk). Built inside the by-name thunk, so a
+    //    resumed run neither constructs d44's plan nor registers its
+    //    persist.
+    val reports =
+      if (!cfg.corpusReport) Nil
+      else Seq(stage("00_report/source", Docs.sourceReportDf(docs)),
+        stage("00_report/zipf", Docs.zipfReportDf(docs)))
+    val stoplist = cfg.stopTopK.map(k => stage("00_stoplist", Docs.topTermsDf(docs, k))
+      .map(_.select(col("term")).collect().map(_.getString(0)).sorted))
+    val ppl = cfg.keepPplBuckets.map { _ =>
+      var release = () => ()
+      stage("01_ppl", {
+        val (df, r) = Docs.ccnetBucketsDfWithRelease(docs)
+        release = r
+        df
+      }, write = (d, p) => try parquet(d, p) finally release())
+    }
+    // 01_gated joins the wave when it reads no artifact of it: with
+    // neither the stop-fraction nor the ppl gate set it depends on
+    // `docs` alone, like the artifacts. Otherwise it runs after the wave
+    // and gates on the stoplist and split this run wrote.
+    val independent = cfg.maxStopFrac.isEmpty && cfg.keepPplBuckets.isEmpty
+    val early = Option.when(independent)(stage("01_gated", gatedDf(None, None)))
+    // 03_clean's Bloom engine compiles the benchmark docs' 5-grams, which
+    // depend on `docs` alone, so its build job joins the wave too (not a
+    // stage: no directory, no record), unless 03_clean is complete
+    val bloom = cfg.decontam match {
+      case BloomGrams(fpp) if cfg.benchMod > 0 && !complete("03_clean") =>
+        val grams = Docs.benchGramSet(bench)
+        Some(new Chain("03_clean/bloom", () => (Docs.benchBloomBytes(grams, fpp = fpp), Nil)))
+      case _ => None
+    }
+    wave(reports ++ stoplist ++ ppl ++ early ++ bloom)
+    val gated = early match {
+      case Some(g) => g.value
+      case None => one(stage("01_gated", gatedDf(stoplist.map(_.value), ppl.map(_.value))))
+    }
 
     // stage 2: d13's exact dedup — the hash exchange ships fingerprints,
     // never document text. keeperBySource applies HERE too: a
     // byte-identical cross-source copy must resolve by the same priority
     // rule as a near-dup one, or the exact stage would hand the doc to
     // the lower-ranked source before the near-dup stage ever sees it
-    val exact = stage("02_exact", Docs.exactDedup(gated, cfg.keeperBySource))
+    val exact = one(stage("02_exact", Docs.exactDedup(gated, cfg.keeperBySource)))
 
     // stage 3: benchmark decontamination — one stage dir, four engines
     // (Config.decontam); every engine first drops the benchmark docs
     // themselves, then its own notion of "too close to a benchmark doc"
-    val clean = stage("03_clean",
+    val clean = one(stage("03_clean",
       if (cfg.benchMod <= 0) exact
       else {
-        val isBench = (c: Column) => c % cfg.benchMod === 0
         val targets = exact.filter(!isBench(col("doc_id")))
-        val bench = base.filter(isBench(col("doc_id")))
         cfg.decontam match {
-          case BloomGrams(fpp) =>
-            Docs.decontamFilterDf(targets, Docs.benchBloomBytes(Docs.benchGramSet(bench), fpp = fpp))
+          case BloomGrams(_) => Docs.decontamFilterDf(targets, bloom.get.value)
           case ExactGrams => Docs.gramDecontam(targets, bench)
           case NearDup =>
             // one signature pass over survivors ∪ benchmark (the d29
@@ -453,45 +533,43 @@ object CurationPipeline {
               .join(keptIds, Seq("doc_id"), "left_anti")
             targets.join(droppedIds, Seq("doc_id"), "left_anti")
         }
-      })
+      }))
 
-    // stage 4: near-dup dedup, survivors written as the curated corpus.
-    // Read back with the inferred schema: the partition column moves to
-    // the end.
-    val corpus0 = if (complete("04_corpus")) resumed("04_corpus") else {
+    // stage 4: near-dup dedup, survivors written as the curated corpus
+    // through CorpusSink. Read back with the inferred schema: the
+    // partition column moves to the end.
+    val corpus0 = one(stage("04_corpus", {
       val comps = Docs.nearDupClusters(clean.select(col("doc_id"),
         graft.functions.MinHashExprs.minHashSig(Docs.shingles(col("ws"))).as("mh")),
         cfg.lshBanding)
-      val survivors =
-        if (cfg.keeperBySource) {
-          // d43's provenance-priority rule: the cluster's
-          // (source, doc_id)-minimum wins, not the minimum doc_id
-          val keeperIds = Docs.sourceKeepers(Docs.clusteredBySource(
-              clean.select(col("doc_id"), col("source")), comps))
-            .select(col("k.doc_id").as("doc_id"))
-          clean.join(keeperIds, Seq("doc_id"), "left_semi")
-            .drop("ws", "n_tokens")
-        } else Docs.clusterMinKeepers(clean, comps).drop("ws", "n_tokens")
-      written("04_corpus", survivors)(graft.sources.CorpusSink.write(_, s"$outDir/04_corpus",
-        partitionCol = cfg.partitionCol, maxRecordsPerFile = cfg.maxRecordsPerFile))
-      spark.read.parquet(s"$outDir/04_corpus")
-    }
+      if (cfg.keeperBySource) {
+        // d43's provenance-priority rule: the cluster's
+        // (source, doc_id)-minimum wins, not the minimum doc_id
+        val keeperIds = Docs.sourceKeepers(Docs.clusteredBySource(
+            clean.select(col("doc_id"), col("source")), comps))
+          .select(col("k.doc_id").as("doc_id"))
+        clean.join(keeperIds, Seq("doc_id"), "left_semi")
+          .drop("ws", "n_tokens")
+      } else Docs.clusterMinKeepers(clean, comps).drop("ws", "n_tokens")
+    }, write = (d, p) => graft.sources.CorpusSink.write(d, p,
+      partitionCol = cfg.partitionCol, maxRecordsPerFile = cfg.maxRecordsPerFile),
+      read = (_, p) => spark.read.parquet(p)))
 
     // stage 4a (optional): C4-style duplicate-span removal over the
     // near-dup survivors — rebuild each doc from the blocks that are
     // the corpus-wide canonical copy of their content
     val corpus =
       if (!cfg.spanDedup) corpus0
-      else stage("04a_spans", Docs.spanDedupDf(corpus0))
+      else one(stage("04a_spans", Docs.spanDedupDf(corpus0)))
 
     // stage 4b: selection strategy over the dedup survivors
     val selected = selection match {
       case KeepAll => corpus
       case RateSample(rate, seed) =>
-        stage("04b_selected",
-          Docs.rateSampleDf(corpus, Docs.hexThreshold(rate), seed))
+        one(stage("04b_selected",
+          Docs.rateSampleDf(corpus, Docs.hexThreshold(rate), seed)))
       case ClusterBalanced(emb, quota) =>
-        stage("04b_selected", {
+        one(stage("04b_selected", {
           // sample among SURVIVORS only (vec_id = doc_id contract), and
           // keep the quota per cluster of the surviving population
           val surv = emb.join(corpus.select(col("doc_id").as("vec_id")),
@@ -499,51 +577,41 @@ object CurationPipeline {
           val picked = graft.queries.Sim.clusterSampleDf(surv, quota)
             .select(col("vec_id").as("doc_id"))
           corpus.join(picked, Seq("doc_id"), "left_semi")
-        })
+        }))
       case ImportanceSample(lo, hi, seed) =>
-        stage("04b_selected", {
+        one(stage("04b_selected", {
           // per-doc keep rate from the surviving corpus's own unigram
           // surprisal (d27's shape); the coin flip is a pure filter over
           // the score plan — zero exchanges beyond the scorer's
           val keep = Docs.importanceSampleDf(corpus, lo, hi, seed)
             .select(col("doc_id"))
           corpus.join(keep, Seq("doc_id"), "left_semi")
-        })
+        }))
     }
 
-    // stage 5: context-window chunks of the selected corpus
-    if (cfg.chunk) {
-      stage("05_chunks", Docs.chunkedDf(selected))
-      ()
-    }
-
-    // stage 6: context-length packing offsets of the selected corpus
-    cfg.packCtx.foreach { ctx =>
-      stage("06_pack", Docs.sequencePack(selected, ctx))
-      ()
-    }
-
-    // stage 7: deterministic train order + shard assignment of the
-    // selected corpus (d28's two-level shape — no shard-serial sort)
-    cfg.orderShards.foreach { n =>
-      stage("07_order", Docs.trainOrderDf(selected, n))
-      ()
-    }
-
-    // stage 8: BPE tokenizer handoff — merge-table artifact + encoded
-    // corpus (d41's shape over the selected corpus). The merge ranking
-    // is read BACK from its stage dir (resume-stable) and re-ordered
-    // before the bounded collect, so the encode literals always come
-    // from the artifact a resumed run would serve.
-    cfg.bpeMerges.foreach { k =>
-      val mergesBack = stage("08_bpe/merges", Docs.bpeMergesEligibleDf(selected, k))
-      val merges = mergesBack.orderBy(col("cnt").desc, col("pair").asc)
-        .collect().map(_.getString(0)).toSeq
-      stage("08_bpe/encoded", Docs.bpeEncodeFrom(selected
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), Docs.bpeEligWords.as("elig")), merges))
-      ()
-    }
+    // The tail wave: stages 5-8 each read only the selected corpus.
+    //  5. context-window chunks;
+    //  6. context-length packing offsets;
+    //  7. deterministic train order + shard assignment (d28's two-level
+    //     shape — no shard-serial sort);
+    //  8. BPE tokenizer handoff — merge-table artifact + encoded corpus
+    //     (d41's shape), one chain: the merge ranking is read BACK from
+    //     its stage dir (resume-stable) and re-ordered before the
+    //     bounded collect, so the encode literals always come from the
+    //     artifact a resumed run would serve.
+    wave(Seq(
+      Option.when(cfg.chunk)(stage("05_chunks", Docs.chunkedDf(selected))),
+      cfg.packCtx.map(ctx => stage("06_pack", Docs.sequencePack(selected, ctx))),
+      cfg.orderShards.map(n => stage("07_order", Docs.trainOrderDf(selected, n))),
+      cfg.bpeMerges.map { k =>
+        stage("08_bpe/merges", Docs.bpeMergesEligibleDf(selected, k)).flatMap { mergesBack =>
+          val merges = mergesBack.orderBy(col("cnt").desc, col("pair").asc)
+            .collect().map(_.getString(0)).toSeq
+          stage("08_bpe/encoded", Docs.bpeEncodeFrom(selected
+            .filter(col("text").isNotNull)
+            .select(col("doc_id"), Docs.bpeEligWords.as("elig")), merges))
+        }
+      }).flatten)
     counts.toSeq
   }
 }

@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * query with the same UTF-8 `byte[]` item (the String overload hashes
   * the same bytes, but byte[] keeps it byte-for-byte the same path).
   */
-case class CmsEstimate(child: Expression, sketchBytes: Array[Byte])
+case class CmsEstimate(child: Expression, sketch: KernelModel[Array[Byte]])
     extends UnaryKernel[UTF8String, Long](StringType, "cms_estimate") {
 
   override def dataType: DataType = LongType
@@ -26,7 +26,7 @@ case class CmsEstimate(child: Expression, sketchBytes: Array[Byte])
   // deserialized once per (serialized) expression instance: the bytes
   // ship with the plan, the sketch materializes on the executor
   @transient private lazy val cms =
-    org.apache.spark.util.sketch.CountMinSketch.readFrom(sketchBytes)
+    org.apache.spark.util.sketch.CountMinSketch.readFrom(sketch.value)
 
   def compute(item: UTF8String): Long = cms.estimateCount(item.getBytes)
 }
@@ -35,7 +35,7 @@ object CmsExprs {
   /** Column wrapper over [[CmsEstimate]]: string term → estimated count
     * from the serialized count-min sketch. */
   def cmsEstimate(term: Column, sketchBytes: Array[Byte]): Column =
-    UnaryKernel.column(term)(CmsEstimate(_, sketchBytes))
+    UnaryKernel.column(term)(CmsEstimate(_, new KernelModel(sketchBytes)))
 
   /** Aggregate Column over [[CmsWeightedAgg]]: build a count-min sketch
     * from pre-aggregated (term, count) rows — byte-identical to the

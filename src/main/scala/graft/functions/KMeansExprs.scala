@@ -35,13 +35,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * at any corpus scale the model is K×dim floats, far below broadcast
   * thresholds.
   */
-case class KMeansArgMin(
-    child: Expression,
-    labels: Array[Int],
-    cents: Array[Array[Float]],
-    ccs: Array[Double])
+case class KMeansArgMin(child: Expression, model: KMeansArgMin.Model)
     extends UnaryKernel[ArrayData, Integer](ArrayType(FloatType), "kmeans_argmin") {
 
+  private val (labels, cents, ccs) = model.value
   require(labels.length == cents.length && labels.length == ccs.length,
     "model arrays must be parallel")
 
@@ -55,15 +52,18 @@ case class KMeansArgMin(
 
 object KMeansArgMin {
 
+  /** Labels, centroid matrix and c·c, as one plan value. */
+  type Model = KernelModel[(Array[Int], Array[Array[Float]], Array[Double])]
+
   /** Model arrays of a driver-resident model: entries sorted by label (so
     * the first-wins tie rule is "smaller label"), and c·c with the same
     * left-to-right fold the assignment (and the DuckDB twin's
     * list_inner_product(cvec, cvec)) uses. */
-  def prep(model: Seq[(Int, Array[Float])]): (Array[Int], Array[Array[Float]], Array[Double]) = {
+  def prep(model: Seq[(Int, Array[Float])]): Model = {
     val sorted = model.sortBy(_._1)
     val cents = sorted.map(_._2).toArray
-    (sorted.map(_._1).toArray, cents,
-      cents.map(_.foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble)))
+    new KernelModel((sorted.map(_._1).toArray, cents,
+      cents.map(_.foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble))))
   }
 
   /** cc − 2·(e·c), the dot accumulated left to right in double. */
@@ -104,13 +104,10 @@ object KMeansArgMin {
   * bit-identical to the oracle's `s` by construction. Null/unscoreable semantics match [[KMeansArgMin]]:
   * no scoreable centroid → null struct.
   */
-case class KMeansAssign(
-    child: Expression,
-    labels: Array[Int],
-    cents: Array[Array[Float]],
-    ccs: Array[Double])
+case class KMeansAssign(child: Expression, model: KMeansArgMin.Model)
     extends UnaryKernel[ArrayData, InternalRow](ArrayType(FloatType), "kmeans_assign") {
 
+  private val (labels, cents, ccs) = model.value
   require(labels.length == cents.length && labels.length == ccs.length,
     "model arrays must be parallel")
 
@@ -134,15 +131,11 @@ object KMeansExprs {
   /** Column wrapper over [[KMeansArgMin]]: assign `embedding` to the
     * nearest centroid of a driver-resident model. `model` pairs each
     * label with its centroid. */
-  def assignCluster(embedding: Column, model: Seq[(Int, Array[Float])]): Column = {
-    val (labels, cents, ccs) = KMeansArgMin.prep(model)
-    UnaryKernel.column(embedding)(KMeansArgMin(_, labels, cents, ccs))
-  }
+  def assignCluster(embedding: Column, model: Seq[(Int, Array[Float])]): Column =
+    UnaryKernel.column(embedding)(KMeansArgMin(_, KMeansArgMin.prep(model)))
 
   /** Column wrapper over [[KMeansAssign]]: struct(cluster, score) of the
     * nearest centroid in one fused pass. */
-  def assignWithScore(embedding: Column, model: Seq[(Int, Array[Float])]): Column = {
-    val (labels, cents, ccs) = KMeansArgMin.prep(model)
-    UnaryKernel.column(embedding)(KMeansAssign(_, labels, cents, ccs))
-  }
+  def assignWithScore(embedding: Column, model: Seq[(Int, Array[Float])]): Column =
+    UnaryKernel.column(embedding)(KMeansAssign(_, KMeansArgMin.prep(model)))
 }

@@ -19,12 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, FloatType, L
   * trivially driver-resident at any corpus scale,
   * exactly like [[KMeansArgMin]]'s model.
   */
-case class SqEncode(
-    child: Expression,
-    lo: Array[Long],
-    hi: Array[Long])
+case class SqEncode(child: Expression, stats: KernelModel[(Array[Long], Array[Long])])
     extends UnaryKernel[ArrayData, Array[Byte]](ArrayType(FloatType), "sq_encode") {
 
+  private val (lo, hi) = stats.value
   require(lo.length == hi.length, "per-dim stats arrays must be parallel")
 
   override def dataType: DataType = BinaryType
@@ -60,8 +58,10 @@ case class SqEncode(
   * common prefix (unsigned bytes) — the inner loop of an SQ ANN scan.
   * Pure integer math: bit-identical to the gate's join-based SUM(q·qq)
   * in any engine, any partition layout. */
-case class SqAdc(child: Expression, query: Array[Byte])
+case class SqAdc(child: Expression, packed: KernelModel[Array[Byte]])
     extends UnaryKernel[Array[Byte], Long](BinaryType, "sq_adc") {
+
+  private val query = packed.value
 
   override def dataType: DataType = LongType
 
@@ -81,9 +81,9 @@ object SqExprs {
   /** Pack `embedding` into one byte per dimension under per-dim micro
     * stats (see [[graft.queries.Sim.sqStats]]). */
   def sqEncode(embedding: Column, lo: Array[Long], hi: Array[Long]): Column =
-    UnaryKernel.column(embedding)(SqEncode(_, lo, hi))
+    UnaryKernel.column(embedding)(SqEncode(_, new KernelModel((lo, hi))))
 
   /** Integer ADC dot of a packed codes column against a packed query. */
   def sqAdc(codes: Column, query: Array[Byte]): Column =
-    UnaryKernel.column(codes)(SqAdc(_, query))
+    UnaryKernel.column(codes)(SqAdc(_, new KernelModel(query)))
 }

@@ -83,6 +83,32 @@ abstract class UnaryKernel[I, O](inputType: DataType, name: String, nullInput: A
     makeCopy((newChild +: productIterator.drop(1).map(_.asInstanceOf[AnyRef]).toSeq).toArray)
 }
 
+/** A kernel's model constants (a sketch, centroids, per-dim stats, a
+  * query) as one plan value, after [[SurprisalModel]]: equality and hash
+  * on a content digest computed once, so two kernels built from equal
+  * models are `semanticEquals` (and may share a subexpression or an
+  * exchange), and plan text prints a short digest instead of a JVM
+  * identity hash. The digest is the MD5 of the value's Java
+  * serialization, which for arrays and tuples of arrays is their
+  * content. */
+final class KernelModel[A <: AnyRef](val value: A) extends Serializable {
+  val digest: String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val out = new java.io.ObjectOutputStream(
+      new java.security.DigestOutputStream(java.io.OutputStream.nullOutputStream(), md))
+    out.writeObject(value)
+    out.close()
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  override def equals(o: Any): Boolean = o match {
+    case m: KernelModel[_] => m.digest == digest
+    case _ => false
+  }
+  override def hashCode: Int = digest.hashCode
+  override def toString: String = s"model(md5=${digest.take(12)})"
+}
+
 object UnaryKernel {
 
   /** The DataFrame-side wrapper of a kernel: `column(c)(SimHash16(_))`. */

@@ -115,13 +115,16 @@ final case class Pipeline(
     * version. Modalities without a list on disk pass through unchanged —
     * same as the reference's per-flag `select_<mod>` switches.
     */
-  def featureSelection(feats: Map[String, DataFrame]): Map[String, DataFrame] =
-    feats ++ writeAll(feats.toSeq.flatMap { case (k, df) =>
-      val p = s"$outDir/summary/${k}_features"
-      // the list may be hand-edited, so its schema is read, not assumed
-      Option.when(graft.Fs.exists(spark, p))(
-        (k, Features.select(df, spark.read.parquet(p), codeCol(k)), s"features/v3/$k"))
+  def featureSelection(feats: Map[String, DataFrame]): Map[String, DataFrame] = {
+    val paths = feats.keys.toSeq.map(k => k -> s"$outDir/summary/${k}_features")
+      .filter { case (_, p) => graft.Fs.exists(spark, p) }
+    // a list may be hand-edited, so its schema is read, not assumed: one
+    // inference job per list, run together
+    val lists = Fanout.all(spark)(paths.map { case (_, p) => p -> (() => spark.read.parquet(p)) })
+    feats ++ writeAll(paths.zip(lists).map { case ((k, _), list) =>
+      (k, Features.select(feats(k), list, codeCol(k)), s"features/v3/$k")
     })
+  }
 
   /** generate_summary_icu (features.py:285-391). */
   def summaries(feats: Map[String, DataFrame]): Map[String, DataFrame] =

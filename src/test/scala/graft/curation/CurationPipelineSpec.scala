@@ -665,6 +665,87 @@ class CurationPipelineSpec extends SparkSpec {
     assert(counts2 === counts)
   }
 
+  // ---- the two waves: the front wave writes every raw-corpus artifact
+  // (and 01_gated when it reads none of them) together, the tail wave
+  // writes stages 5-8 together; see CurationPipeline's scaladoc
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
+  private def marker(out: String, name: String) = new java.io.File(s"$out/$name/_SUCCESS")
+
+  test("waves: a failing gate write throws its own error, the front wave's artifacts still commit, and a resume recomputes from 01_gated") {
+    val out = Files.createTempDirectory("graft-curation-wave-fail").toString
+    val docs = Registry.t(spark, sfDir, "documents")
+    // fails only when a row reaches it, i.e. inside 01_gated's write
+    val badGate = (df: org.apache.spark.sql.DataFrame) =>
+      df.filter(assert_true(lit(false), lit("gate exploded")).isNull)
+    val e = intercept[Exception] {
+      CurationPipeline.run(spark, docs, out, cfg = Walkthrough.config,
+        customGate = badGate, selection = Walkthrough.selection)
+    }
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException],
+      s"the wave must rethrow the write's own error, got $e")
+    assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("gate exploded")), e)
+
+    val front = Seq("00_report/source", "00_report/zipf", "00_stoplist")
+    front.foreach(n => assert(marker(out, n).isFile, s"$n did not commit beside the failed gate"))
+    assert(!marker(out, "01_gated").exists())
+    val mtimes = front.map(n => n -> marker(out, n).lastModified())
+
+    // the walkthrough config resumes: with a good gate only 01_gated
+    // onward is recomputed, and the counts equal a fresh run's
+    val resumed = CurationPipeline.run(spark, docs, out,
+      cfg = Walkthrough.config, selection = Walkthrough.selection)
+    assert(resumed === walkRun._2)
+    mtimes.foreach { case (n, t) =>
+      assert(marker(out, n).lastModified() === t, s"$n was rewritten on resume") }
+  }
+
+  test("waves: with the stop-fraction and ppl gates set, 01_gated gates on the artifacts this run wrote") {
+    import spark.implicits._
+    val docs = Registry.t(spark, sfDir, "documents")
+    val stops = graft.queries.Docs.topTermsDf(docs, 20)
+      .select("term").collect().map(_.getString(0)).sorted
+    val stopLit = array(stops.map(lit(_)): _*)
+    val ws = graft.queries.Docs.words(col("text"))
+    val fracs = docs.select(col("doc_id"),
+      (size(filter(ws, w => array_contains(stopLit, w))).cast("double") /
+        size(ws).cast("double")).as("f"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val thr = fracs.values.toSeq.sorted.apply(fracs.size / 2)
+    val d44 = Registry.queries("d44_ccnet_buckets")(spark, sfDir)
+      .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
+
+    // stale artifacts from an earlier run: a stoplist no doc uses and a
+    // split that drops every doc. A gate planned against them would keep
+    // every doc or none.
+    val out = Files.createTempDirectory("graft-curation-wave-gates").toString
+    Seq(("zzz", 1L)).toDF("term", "cnt").write.parquet(s"$out/00_stoplist")
+    docs.select(col("doc_id"), col("lang"), lit(0L).as("milli_bits_per_token"),
+      lit("tail").as("ppl_bucket")).write.parquet(s"$out/01_ppl")
+
+    val counts = CurationPipeline.run(spark, docs, out,
+      cfg = CurationPipeline.Config(stopTopK = Some(20), maxStopFrac = Some(thr),
+        keepPplBuckets = Some(Set("head", "middle"))),
+      customGate = langGate)
+    assert(counts.map(_._1).take(4) === Seq("00_stoplist", "01_ppl", "01_gated", "02_exact"))
+
+    val out2 = Files.createTempDirectory("graft-curation-wave-plain").toString
+    CurationPipeline.run(spark, docs, out2, customGate = langGate)
+    def ids(dir: String) = spark.read.parquet(s"$dir/01_gated")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val gated = ids(out)
+    assert(gated.nonEmpty)
+    assert(gated === ids(out2).filter(id => fracs(id) <= thr && d44(id) != "tail"))
+
+    // 01_gated's files are written after both artifacts committed
+    val firstPart = new java.io.File(s"$out/01_gated").listFiles()
+      .filter(_.getName.startsWith("part-")).map(_.lastModified()).min
+    Seq("00_stoplist", "01_ppl").foreach(n =>
+      assert(marker(out, n).lastModified() <= firstPart, s"01_gated was written before $n"))
+  }
+
   // ---- what a fresh walkthrough run executes, seen by a
   // QueryExecutionListener: every stage write runs no tokenization
   // inside a lambda, and the returned rows come from the writes

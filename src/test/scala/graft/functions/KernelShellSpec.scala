@@ -95,6 +95,32 @@ class KernelShellSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[Any] = df.collect().toSeq.map(norm)
 
+  test("array-field kernels compare by content: equal models are semanticEquals, plans print a digest") {
+    def expr(c: Column) = org.apache.spark.sql.GraftShim.expression(c)
+    def copy(m: Seq[(Int, Array[Float])]) = m.map { case (l, c) => l -> c.clone() }
+    val in = col("embedding")
+    val built: Seq[(String, () => Column)] = Seq(
+      "cms_estimate" -> (() => CmsExprs.cmsEstimate(in, sketch.clone())),
+      "kmeans_argmin" -> (() => KMeansExprs.assignCluster(in, copy(model))),
+      "kmeans_assign" -> (() => KMeansExprs.assignWithScore(in, copy(model))),
+      "sq_encode" -> (() => SqExprs.sqEncode(in, Array(-1L, 0L), Array(1L, 3L))),
+      "sq_adc" -> (() => SqExprs.sqAdc(in, Array[Byte](1, 2, -3))))
+    built.foreach { case (name, make) =>
+      val (a, b) = (expr(make()), expr(make()))
+      assert(a.semanticEquals(b), s"$name: kernels over equal models differ")
+      assert(a.semanticHash() === b.semanticHash(), name)
+      assert(a.toString === b.toString, name)
+      val args = a.toString.replace(a.children.head.toString, "")
+      assert(!args.contains("@") && args.contains("md5="), s"$name prints no digest: $args")
+    }
+    // a different model is a different kernel
+    val other = Seq(0 -> Array(0.5f, 0f, -1f), 1 -> Array(-0.5f, 2f, 2.5f))
+    assert(!expr(KMeansExprs.assignCluster(in, model))
+      .semanticEquals(expr(KMeansExprs.assignCluster(in, other))))
+    assert(!expr(SqExprs.sqAdc(in, Array[Byte](1, 2, -3)))
+      .semanticEquals(expr(SqExprs.sqAdc(in, Array[Byte](1, 2, -4)))))
+  }
+
   kernels.foreach { case (name, kind, f) =>
     test(s"$name: used twice in one projection, compiles with codegen fallback off") {
       val (a, b) = inputs(kind)
