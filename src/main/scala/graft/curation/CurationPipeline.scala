@@ -1,8 +1,8 @@
 package graft.curation
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Fanout
+import graft.Stage
 import graft.queries.Docs
 
 /** The corpus-curation operators composed into one user-facing,
@@ -56,10 +56,11 @@ import graft.queries.Docs
   *   8. `08_bpe`      merge-table artifact + BPE-encoded corpus (d41) of
   *                    the selected corpus (when `bpeMerges` is set)
   *
-  * Every stage goes through one body (resume check, observed write,
-  * read-back, one `(stage, rows)` record), and independent stages are
-  * written together on one session through [[graft.Fanout]], in two
-  * waves, each stage still in its own directory:
+  * Every stage goes through the one stage body, [[graft.Stage]] (resume
+  * check, observed write, read-back, one `(stage, rows)` record), and
+  * independent stages are written together on one session as a
+  * [[graft.Stage.wave]], in two waves, each stage still in its own
+  * directory:
   *
   *  - the front wave: every artifact of the RAW corpus (the two
   *    `00_report` reports, `00_stoplist` with its term collect,
@@ -285,31 +286,6 @@ object CurationPipeline {
         * default: a fresh run must never trust stale dirs. */
       resume: Boolean = false)
 
-  /** Stages of one dependency chain of a run. Each stage's plan is built
-    * when the chain is made (a stage that follows a collect of its chain
-    * is planned when the chain reaches it); `run` writes the stages in
-    * order and returns their `(stage, rows)` records, and `value`, the
-    * chain's last result, is there once `run` has returned. */
-  private final class Chain[T](val name: String, body: () => (T, Seq[(String, Long)])) {
-    @volatile private var result: Option[T] = None
-    def run(): Seq[(String, Long)] = {
-      val (t, rows) = body()
-      result = Some(t)
-      rows
-    }
-    def value: T = result.get
-    def map[U](f: T => U): Chain[U] = new Chain(name, () => {
-      val (t, rows) = body()
-      (f(t), rows)
-    })
-    def flatMap[U](f: T => Chain[U]): Chain[U] = new Chain(name, () => {
-      val (t, rows) = body()
-      val next = f(t)
-      val more = next.run()
-      (next.value, rows ++ more)
-    })
-  }
-
   /** Run the pipeline; returns per-stage row counts (stage name →
     * rows), in stage order. `customGate` runs INSIDE stage 1 after the
     * built-in gates (input: docs with a bound `ws` token column). */
@@ -331,45 +307,7 @@ object CurationPipeline {
         s"keepPplBuckets must be a non-empty subset of {head, middle, tail}, got $bad")
     }
 
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    def complete(name: String): Boolean =
-      cfg.resume && graft.Fs.exists(spark, s"$outDir/$name/_SUCCESS")
-    val parquet: (DataFrame, String) => Unit = (d, p) => d.write.mode("overwrite").parquet(p)
-
-    // The one stage body. `df` is by-name: it is forced here, on the
-    // caller's thread (so a bad column fails before any write of its
-    // wave), unless the stage is complete. A resumed stage builds no plan
-    // (its inputs may reference upstream frames we deliberately never
-    // built): it is read back and counted. A fresh stage's rows come from
-    // an Observation on its own write, and it is read back with the
-    // schema it wrote, unless `read` says otherwise.
-    def stage(name: String, df: => DataFrame,
-        write: (DataFrame, String) => Unit = parquet,
-        read: (DataFrame, String) => DataFrame = (d, p) => spark.read.schema(d.schema).parquet(p)
-    ): Chain[DataFrame] = {
-      val path = s"$outDir/$name"
-      if (complete(name))
-        new Chain(name, () => {
-          val back = spark.read.parquet(path)
-          (back, Seq(name -> back.count()))
-        })
-      else {
-        val d = df
-        new Chain(name, () => {
-          val obs = Observation()
-          write(d.observe(obs, count(lit(1)).as("rows")), path)
-          (read(d, path), Seq(name -> obs.get("rows").asInstanceOf[Number].longValue))
-        })
-      }
-    }
-
-    // The one wave helper: chains in stage order, already planned, are
-    // written together on this session; their records are appended in
-    // that order, whichever write finishes first. A wave of one runs on
-    // the caller's thread.
-    def wave(chains: Seq[Chain[_]]): Unit =
-      Fanout.all(spark)(chains.map(c => c.name -> (() => c.run()))).foreach(counts ++= _)
-    def one[T](chain: Chain[T]): T = { wave(Seq(chain)); chain.value }
+    val stage = new Stage(spark, outDir, cfg.resume)
 
     val base = Docs.spreadWords(docs)
     val isBench = (c: Column) => c % cfg.benchMod === 0
@@ -465,7 +403,7 @@ object CurationPipeline {
         val (df, r) = Docs.ccnetBucketsDfWithRelease(docs)
         release = r
         df
-      }, write = (d, p) => try parquet(d, p) finally release())
+      }, write = (d, p) => try Stage.parquet(d, p) finally release())
     }
     // 01_gated joins the wave when it reads no artifact of it: with
     // neither the stop-fraction nor the ppl gate set it depends on
@@ -477,15 +415,15 @@ object CurationPipeline {
     // depend on `docs` alone, so its build job joins the wave too (not a
     // stage: no directory, no record), unless 03_clean is complete
     val bloom = cfg.decontam match {
-      case BloomGrams(fpp) if cfg.benchMod > 0 && !complete("03_clean") =>
+      case BloomGrams(fpp) if cfg.benchMod > 0 && !stage.complete("03_clean") =>
         val grams = Docs.benchGramSet(bench)
-        Some(new Chain("03_clean/bloom", () => (Docs.benchBloomBytes(grams, fpp = fpp), Nil)))
+        Some(Stage.branch("03_clean/bloom")(Docs.benchBloomBytes(grams, fpp = fpp)))
       case _ => None
     }
-    wave(reports ++ stoplist ++ ppl ++ early ++ bloom)
+    stage.wave(reports ++ stoplist ++ ppl ++ early ++ bloom)
     val gated = early match {
       case Some(g) => g.value
-      case None => one(stage("01_gated", gatedDf(stoplist.map(_.value), ppl.map(_.value))))
+      case None => stage.one(stage("01_gated", gatedDf(stoplist.map(_.value), ppl.map(_.value))))
     }
 
     // stage 2: d13's exact dedup — the hash exchange ships fingerprints,
@@ -493,12 +431,12 @@ object CurationPipeline {
     // byte-identical cross-source copy must resolve by the same priority
     // rule as a near-dup one, or the exact stage would hand the doc to
     // the lower-ranked source before the near-dup stage ever sees it
-    val exact = one(stage("02_exact", Docs.exactDedup(gated, cfg.keeperBySource)))
+    val exact = stage.one(stage("02_exact", Docs.exactDedup(gated, cfg.keeperBySource)))
 
     // stage 3: benchmark decontamination — one stage dir, four engines
     // (Config.decontam); every engine first drops the benchmark docs
     // themselves, then its own notion of "too close to a benchmark doc"
-    val clean = one(stage("03_clean",
+    val clean = stage.one(stage("03_clean",
       if (cfg.benchMod <= 0) exact
       else {
         val targets = exact.filter(!isBench(col("doc_id")))
@@ -538,7 +476,7 @@ object CurationPipeline {
     // stage 4: near-dup dedup, survivors written as the curated corpus
     // through CorpusSink. Read back with the inferred schema: the
     // partition column moves to the end.
-    val corpus0 = one(stage("04_corpus", {
+    val corpus0 = stage.one(stage("04_corpus", {
       val comps = Docs.nearDupClusters(clean.select(col("doc_id"),
         graft.functions.MinHashExprs.minHashSig(Docs.shingles(col("ws"))).as("mh")),
         cfg.lshBanding)
@@ -560,16 +498,16 @@ object CurationPipeline {
     // the corpus-wide canonical copy of their content
     val corpus =
       if (!cfg.spanDedup) corpus0
-      else one(stage("04a_spans", Docs.spanDedupDf(corpus0)))
+      else stage.one(stage("04a_spans", Docs.spanDedupDf(corpus0)))
 
     // stage 4b: selection strategy over the dedup survivors
     val selected = selection match {
       case KeepAll => corpus
       case RateSample(rate, seed) =>
-        one(stage("04b_selected",
+        stage.one(stage("04b_selected",
           Docs.rateSampleDf(corpus, Docs.hexThreshold(rate), seed)))
       case ClusterBalanced(emb, quota) =>
-        one(stage("04b_selected", {
+        stage.one(stage("04b_selected", {
           // sample among SURVIVORS only (vec_id = doc_id contract), and
           // keep the quota per cluster of the surviving population
           val surv = emb.join(corpus.select(col("doc_id").as("vec_id")),
@@ -579,7 +517,7 @@ object CurationPipeline {
           corpus.join(picked, Seq("doc_id"), "left_semi")
         }))
       case ImportanceSample(lo, hi, seed) =>
-        one(stage("04b_selected", {
+        stage.one(stage("04b_selected", {
           // per-doc keep rate from the surviving corpus's own unigram
           // surprisal (d27's shape); the coin flip is a pure filter over
           // the score plan — zero exchanges beyond the scorer's
@@ -599,7 +537,7 @@ object CurationPipeline {
     //     its stage dir (resume-stable) and re-ordered before the
     //     bounded collect, so the encode literals always come from the
     //     artifact a resumed run would serve.
-    wave(Seq(
+    stage.wave(Seq(
       Option.when(cfg.chunk)(stage("05_chunks", Docs.chunkedDf(selected))),
       cfg.packCtx.map(ctx => stage("06_pack", Docs.sequencePack(selected, ctx))),
       cfg.orderShards.map(n => stage("07_order", Docs.trainOrderDf(selected, n))),
@@ -612,6 +550,6 @@ object CurationPipeline {
             .select(col("doc_id"), Docs.bpeEligWords.as("elig")), merges))
         }
       }).flatten)
-    counts.toSeq
+    stage.records
   }
 }

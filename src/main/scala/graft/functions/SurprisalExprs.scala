@@ -6,62 +6,20 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Opaque holder for a frozen unigram snapshot model (term → count,
-  * n_total). Expressions carry ONE reference to this object instead of
-  * raw `Seq` constructor args, so plan canonicalization / semantic
-  * equality / tree copies / (truncated) plan-string rendering never
-  * walk the vocabulary: equals/hashCode/toString go through a
-  * PRECOMPUTED md5 digest of the content (computed once, at driver
-  * construction). At production vocab sizes (millions of terms) the
-  * Seq spelling made every plan-tree operation O(vocab) — observed as
-  * a 3.5 MiB task-binary warning even on the tiny StreamingSpec
-  * fixture. The model still ships to executors via task serialization
-  * exactly once per stage (the literal-model posture, same as the d41
-  * merge table); only the driver-side plan bookkeeping stops paying.
-  */
-final class SurprisalModel(val terms: Array[String], val counts: Array[Long],
-    val nTotal: Long) extends Serializable {
-  require(terms.length == counts.length,
-    s"terms (${terms.length}) and counts (${counts.length}) must align")
-
-  /** Content digest: md5 over (nTotal, term, count)*; drives
-    * equals/hashCode so two independently-built but identical
-    * snapshots canonicalize equal. */
-  val digest: String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val buf = java.nio.ByteBuffer.allocate(8)
-    def putLong(v: Long): Unit = {
-      buf.clear(); buf.putLong(v); md.update(buf.array())
-    }
-    putLong(nTotal)
-    var i = 0
-    while (i < terms.length) {
-      md.update(terms(i).getBytes("UTF-8")); md.update(0.toByte)
-      putLong(counts(i))
-      i += 1
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  override def equals(o: Any): Boolean = o match {
-    case m: SurprisalModel => m.digest == digest
-    case _ => false
-  }
-  override def hashCode: Int = digest.hashCode
-  override def toString: String =
-    s"surprisal_model(${terms.length} terms, n_total=$nTotal, md5=$digest)"
-}
-
 /** Per-document unigram surprisal against a FROZEN snapshot model, in
   * ONE compiled byte pass: `struct(n_tokens, surprisal_bits)` where
   * surprisal_bits = Σ_tokens (bits(n_total) − bits(count(token))) with
   * bits(x) = ⌊log2 x⌋ + 1 — the d25 integer-exact formulation
   * (queries/Docs.scala `surprisalDf`), with the corpus-derived model
-  * (term → count) shipped as a [[SurprisalModel]] literal instead of
-  * computed by the plan. This is the SERVING path of the d25/d44
-  * family: LM "training" (the corpus frequency table) is a batch job;
-  * scoring an unbounded ingest against the snapshot is a stateless
-  * per-row expression — no join, no shuffle, no state.
+  * (terms, counts, n_total) shipped as one [[KernelModel]] literal
+  * instead of computed by the plan: plan canonicalization, tree copies
+  * and plan text go through its content digest and never walk the
+  * vocabulary (at production vocab sizes a `Seq` spelling made every
+  * plan-tree operation O(vocab)). The model still ships to executors
+  * once per stage, by task serialization. This is the SERVING path of
+  * the d25/d44 family: LM "training" (the corpus frequency table) is a
+  * batch job; scoring an unbounded ingest against the snapshot is a
+  * stateless per-row expression — no join, no shuffle, no state.
   *
   * The shipped model stores only terms with snapshot count ≥ 2: a
   * lookup miss scores bits(1) = 1, which is EXACTLY what a count-1
@@ -83,7 +41,8 @@ final class SurprisalModel(val terms: Array[String], val counts: Array[Long],
   * ([[UnaryKernel.isWs]]), compared as zero-copy UTF8String views (no
   * String materialization). Null text → null struct. Pinned batch≡stream by StreamingSpec's d44 twin test.
   */
-case class SnapshotSurprisal(child: Expression, model: SurprisalModel)
+case class SnapshotSurprisal(child: Expression,
+    model: KernelModel[(Array[String], Array[Long], Long)])
     extends UnaryKernel[UTF8String, InternalRow](StringType, "snapshot_surprisal") {
 
   override def dataType: DataType = SnapshotSurprisal.schema
@@ -93,18 +52,19 @@ case class SnapshotSurprisal(child: Expression, model: SurprisalModel)
     * PRE-COMPUTED bit lengths — the per-token work is one hash probe
     * and one subtraction. */
   @transient private lazy val lookup: java.util.HashMap[UTF8String, Integer] = {
-    val m = new java.util.HashMap[UTF8String, Integer](model.terms.length * 2)
+    val (terms, counts, _) = model.value
+    val m = new java.util.HashMap[UTF8String, Integer](terms.length * 2)
     var i = 0
-    while (i < model.terms.length) {
-      m.put(UTF8String.fromString(model.terms(i)),
-        64 - java.lang.Long.numberOfLeadingZeros(model.counts(i)))
+    while (i < terms.length) {
+      m.put(UTF8String.fromString(terms(i)),
+        64 - java.lang.Long.numberOfLeadingZeros(counts(i)))
       i += 1
     }
     m
   }
 
   private lazy val nTotalBits: Int =
-    64 - java.lang.Long.numberOfLeadingZeros(model.nTotal)
+    64 - java.lang.Long.numberOfLeadingZeros(model.value._3)
 
   def compute(text: UTF8String): InternalRow = {
     var nTok = 0L
@@ -133,12 +93,10 @@ object SurprisalExprs {
   /** text → struct(n_tokens long, surprisal_bits long) under a frozen
     * snapshot model (see [[SnapshotSurprisal]]). */
   def snapshotSurprisal(text: Column, terms: Seq[String], counts: Seq[Long],
-      nTotal: Long): Column =
-    snapshotSurprisal(text,
-      new SurprisalModel(terms.toArray, counts.toArray, nTotal))
-
-  /** Overload taking a prebuilt [[SurprisalModel]] (reuse one holder —
-    * and its one digest computation — across expressions). */
-  def snapshotSurprisal(text: Column, model: SurprisalModel): Column =
+      nTotal: Long): Column = {
+    require(terms.length == counts.length,
+      s"terms (${terms.length}) and counts (${counts.length}) must align")
+    val model = new KernelModel((terms.toArray, counts.toArray, nTotal))
     UnaryKernel.column(text)(SnapshotSurprisal(_, model))
+  }
 }

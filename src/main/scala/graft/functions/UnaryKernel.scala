@@ -84,7 +84,7 @@ abstract class UnaryKernel[I, O](inputType: DataType, name: String, nullInput: A
 }
 
 /** A kernel's model constants (a sketch, centroids, per-dim stats, a
-  * query) as one plan value, after [[SurprisalModel]]: equality and hash
+  * query, a unigram snapshot) as one plan value: equality and hash
   * on a content digest computed once, so two kernels built from equal
   * models are `semanticEquals` (and may share a subexpression or an
   * exchange), and plan text prints a short digest instead of a JVM

@@ -176,7 +176,8 @@ object Datagen {
     val residual: Column = how match {
       case "Mean" => avg(col(valueCol)).over(wAll)
       case "Median" => percentile(col(valueCol), lit(0.5)).over(wAll)
-      case _ => lit(null).cast("double")
+      case "" => lit(null).cast("double")
+      case other => throw new IllegalArgumentException(s"unknown imputeHow: $other")
     }
     grid
       .withColumn("_ff", last(col(valueCol), ignoreNulls = true).over(wPrev))

@@ -27,13 +27,9 @@ object Model {
       subject_id: Long, hadm_id: Long, stay_id: Long,
       intime: Timestamp, outtime: Timestamp, los: Option[Double])
 
-  /** Labeled cohort visit (stage-1 output core). */
-  final case class LabeledVisit(stay_id: Long, subject_id: Long, label: Int)
-
   implicit val chartEventEncoder: Encoder[ChartEvent] = Encoders.product[ChartEvent]
   implicit val medIntervalEncoder: Encoder[MedInterval] = Encoders.product[MedInterval]
   implicit val icuStayEncoder: Encoder[IcuStay] = Encoders.product[IcuStay]
-  implicit val labeledVisitEncoder: Encoder[LabeledVisit] = Encoders.product[LabeledVisit]
 
   implicit final class TypedSource(private val src: MimicSource) extends AnyVal {
     def chartEventsTyped: Dataset[ChartEvent] = src.chartevents.as[ChartEvent]

@@ -2,7 +2,7 @@ package graft.mimic
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Fanout
+import graft.{Fanout, Stage}
 
 /** End-to-end orchestration reproducing the reference's flag surface
   * (E1→E2→E3) with Parquet stage boundaries instead of csv.gz
@@ -12,16 +12,22 @@ import graft.Fanout
   * each cleaning pass here writes a new stage dir, preserving the
   * "hand-edit the feature list between stages" workflow.
   *
-  * Independent stage writes run together through [[graft.Fanout]]: the
-  * two cleaning writes, the feature lists, the selections, the five
+  * Every stage directory is written by the one stage body,
+  * [[graft.Stage]] (without resume): each gives one `(rel, rows)`
+  * record ([[records]]) from an observed write, and a stage is read
+  * back with the schema it was just written with, so no read-back pays
+  * a schema-inference job; the feature lists, the per-stay fan-out and
+  * the vocab sidecars are sinks with no read-back.
+  *
+  * Independent stages run together as one [[graft.Stage.wave]]: the two
+  * cleaning writes, the feature lists, the selections, the five
   * time-series grids, and then `dynamic`, the per-stay fan-out and the
-  * vocab sidecars (`featureIcu` still writes its modalities in turn). Every such write has its own
-  * directory, so the bytes on disk do not depend on the overlap. Each
-  * call builds (and so analyzes) all of its frames before the first
-  * write starts; a call whose writes fail waits for the rest to commit,
-  * then throws the first failure in stage order, later ones suppressed.
-  * Each stage is read back with the schema it was just written with, so
-  * no read-back pays a schema-inference job.
+  * vocab sidecars. `cohort` and `featureIcu`'s modalities are written in
+  * turn. Every stage has its own directory, so the bytes on disk do not
+  * depend on the overlap. Each call builds (and so analyzes) all of its
+  * frames before the first write starts; a call whose writes fail waits
+  * for the rest to commit, then throws the first failure in stage order,
+  * later ones suppressed.
   */
 final case class Pipeline(
     spark: SparkSession,
@@ -29,17 +35,11 @@ final case class Pipeline(
     mapPath: String,
     outDir: String) {
 
-  private def write(df: DataFrame, rel: String): DataFrame = {
-    val p = s"$outDir/$rel"
-    df.write.mode("overwrite").parquet(p)
-    spark.read.schema(df.schema).parquet(p)
-  }
+  private val stage = new Stage(spark, outDir, resume = false)
 
-  /** Writes every `(key, frame, rel)` stage together; key → read-back. */
-  private def writeAll(stages: Seq[(String, DataFrame, String)]): Map[String, DataFrame] =
-    stages.map(_._1).zip(Fanout.all(spark)(stages.map { case (_, df, rel) =>
-      rel -> (() => write(df, rel))
-    })).toMap
+  /** The `(rel, rows)` record of every stage directory written so far,
+    * in write order. */
+  def records: Seq[(String, Long)] = stage.records
 
   /** Stage 1 — extract_data (cohort.py:444-685). */
   def cohort(useIcu: Boolean, label: String, time: Int = 30,
@@ -47,29 +47,22 @@ final case class Pipeline(
       admitDisease: Option[String] = None): DataFrame = {
     val dis = diseaseLabel.map(c => Disease.extractDiagCohort(src, mapPath, c))
     val admitDis = admitDisease.map(c => Disease.extractDiagCohort(src, mapPath, c))
-    write(Cohort.extract(src, useIcu, label, time, dis, admitDis), "cohort")
+    stage.one(stage("cohort", Cohort.extract(src, useIcu, label, time, dis, admitDis)))
   }
 
   /** Stage 2 — feature_icu (features.py:26-183): per-modality extraction. */
   def featureIcu(cohort: DataFrame, diag: Boolean = true, out: Boolean = true,
       chart: Boolean = true, proc: Boolean = true, med: Boolean = true,
       uomCutoff: Double = 0.95): Map[String, DataFrame] = {
+    def one(k: String, df: => DataFrame) = k -> stage.one(stage(s"features/preproc_${k}_icu", df))
     var m = Map.empty[String, DataFrame]
-    if (diag) m += "diag" -> write(
-      Features.preprocDiag(src.diagnosesIcd, cohort, src.icdMapping(mapPath)),
-      "features/preproc_diag_icu")
-    if (out) m += "out" -> write(
-      Features.preprocEvents(src.outputevents, cohort, "charttime"),
-      "features/preproc_out_icu")
-    if (chart) m += "chart" -> write(
-      Features.dropWrongUom(Features.preprocChart(src.chartevents, cohort), uomCutoff),
-      "features/preproc_chart_icu")
-    if (proc) m += "proc" -> write(
-      Features.preprocEvents(src.procedureevents, cohort, "starttime"),
-      "features/preproc_proc_icu")
-    if (med) m += "med" -> write(
-      Features.preprocMeds(src.inputevents, cohort),
-      "features/preproc_med_icu")
+    if (diag) m += one("diag",
+      Features.preprocDiag(src.diagnosesIcd, cohort, src.icdMapping(mapPath)))
+    if (out) m += one("out", Features.preprocEvents(src.outputevents, cohort, "charttime"))
+    if (chart) m += one("chart",
+      Features.dropWrongUom(Features.preprocChart(src.chartevents, cohort), uomCutoff))
+    if (proc) m += one("proc", Features.preprocEvents(src.procedureevents, cohort, "starttime"))
+    if (med) m += one("med", Features.preprocMeds(src.inputevents, cohort))
     m
   }
 
@@ -79,12 +72,12 @@ final case class Pipeline(
       cleanChart: Boolean = true, imputeOutlier: Boolean = false,
       thresh: Int = 98, leftThresh: Int = 0): Map[String, DataFrame] = {
     val diag = feats.get("diag").map(d =>
-      ("diag", Features.groupDiag(d, groupDiag), "features/v2/diag"))
-    val chart = (if (cleanChart) feats.get("chart") else None).map(c => ("chart",
-      Features.outlierImputation(c, "itemid", "valuenum", thresh, leftThresh, imputeOutlier)
-        .na.drop(Seq("valuenum")),
-      "features/v2/chart"))
-    feats ++ writeAll(Seq(diag, chart).flatten)
+      stage("features/v2/diag", Features.groupDiag(d, groupDiag)).map("diag" -> _))
+    val chart = (if (cleanChart) feats.get("chart") else None).map(c =>
+      stage("features/v2/chart",
+        Features.outlierImputation(c, "itemid", "valuenum", thresh, leftThresh, imputeOutlier)
+          .na.drop(Seq("valuenum"))).map("chart" -> _))
+    feats ++ stage.wave(Seq(diag, chart).flatten)
   }
 
   private def codeCol(k: String) = if (k == "diag") "new_icd_code" else "itemid"
@@ -100,13 +93,10 @@ final case class Pipeline(
     * list under `outDir/summary/<modality>_features`.
     */
   def writeFeatureLists(feats: Map[String, DataFrame]): Map[String, String] = {
-    val lists = feats.toSeq.map { case (k, df) =>
-      (k, df.select(col(codeCol(k))).distinct(), s"$outDir/summary/${k}_features")
-    }
-    Fanout.all(spark)(lists.map { case (_, list, p) =>
-      p -> (() => list.write.mode("overwrite").parquet(p))
+    stage.wave(feats.toSeq.map { case (k, df) =>
+      stage(s"summary/${k}_features", df.select(col(codeCol(k))).distinct(), read = Stage.sink)
     })
-    lists.map { case (k, _, p) => k -> p }.toMap
+    feats.keys.map(k => k -> s"$outDir/summary/${k}_features").toMap
   }
 
   /** `featureSelection` re-reads whatever list is on disk NOW (it may
@@ -121,8 +111,8 @@ final case class Pipeline(
     // a list may be hand-edited, so its schema is read, not assumed: one
     // inference job per list, run together
     val lists = Fanout.all(spark)(paths.map { case (_, p) => p -> (() => spark.read.parquet(p)) })
-    feats ++ writeAll(paths.zip(lists).map { case ((k, _), list) =>
-      (k, Features.select(feats(k), list, codeCol(k)), s"features/v3/$k")
+    feats ++ stage.wave(paths.zip(lists).map { case ((k, _), list) =>
+      stage(s"features/v3/$k", Features.select(feats(k), list, codeCol(k))).map(k -> _)
     })
   }
 
@@ -141,9 +131,13 @@ final case class Pipeline(
       imputeHow: String = ""): Map[String, DataFrame] = {
     val adm0 = Datagen.generateAdm(cohortDf)
 
+    // a typo must fail before the first ts/ write, not run another
+    // window (an unknown imputeHow fails in Datagen.impute, which is also
+    // built before the first write)
     val minLos = task match {
       case "Mortality" => includeTime + predW
-      case _ => includeTime
+      case "Readmission" | "Length of Stay" | "LOS" => includeTime
+      case other => throw new IllegalArgumentException(s"unknown task: $other")
     }
     val adm = adm0.filter(col("los") >= minLos)
 
@@ -163,14 +157,14 @@ final case class Pipeline(
       // put filler rows in a NULL-orderid partition that never fills
       val grid = Datagen.denseGrid(bucketed, losBuckets,
         keys = Seq("stay_id", "itemid", "orderid"))
-      ("med", Datagen.medSignal(grid), "ts/med")
+      stage("ts/med", Datagen.medSignal(grid)).map("med" -> _)
     }
     val chart = feats.get("chart").map { f =>
       val ev = windowed(Datagen.generateEvents(f, adm), isInterval = false)
       val bucketed = Datagen.bucketEvents(ev, bucket, includeTime,
         Some(avg(col("valuenum")).as("valuenum")))
       val grid = Datagen.denseGrid(bucketed, losBuckets)
-      ("chart", Datagen.impute(grid, "valuenum", imputeHow), "ts/chart")
+      stage("ts/chart", Datagen.impute(grid, "valuenum", imputeHow)).map("chart" -> _)
     }
     val presence = Seq("proc", "out").flatMap { k =>
       feats.get(k).map { f =>
@@ -179,14 +173,14 @@ final case class Pipeline(
           .withColumn("present", lit(1.0))
         val grid = Datagen.denseGrid(bucketed, losBuckets)
           .na.fill(0.0, Seq("present"))
-        (k, grid, s"ts/$k")
+        stage(s"ts/$k", grid).map(k -> _)
       }
     }
     val cond = feats.get("diag").map { f =>
       val scoped = f.join(adm.select(col("stay_id")), Seq("stay_id"), "left_semi")
-      ("cond", Datagen.staticConditions(scoped), "ts/cond")
+      stage("ts/cond", Datagen.staticConditions(scoped)).map("cond" -> _)
     }
-    val grids = writeAll(Seq(med, chart).flatten ++ presence ++ cond)
+    val grids = stage.wave(Seq(med, chart).flatten ++ presence ++ cond).toMap
 
     // wave 2, over wave 1's read-backs. Wide dynamic matrix: one row per
     // (stay, t), MapType per modality (U4). Med rates collapse per itemid
@@ -202,31 +196,24 @@ final case class Pipeline(
       grids.get("proc").map(Datagen.wideModality(_, "present", "proc")),
       grids.get("out").map(Datagen.wideModality(_, "present", "out")),
       medPerItem.map(Datagen.wideModality(_, "rate", "med_rate"))).flatten
-    val dynamic = Option.when(wideParts.nonEmpty)(Datagen.assemble(wideParts))
+    val dynamic = Option.when(wideParts.nonEmpty)(stage("ts/dynamic", Datagen.assemble(wideParts)))
 
     // per-stay nested artifact (the reference's dataDic pickle, S10):
     // one row per stay with itemid → time-ordered series, written
     // partitioned for O(1) single-stay reads
-    val nested = grids.get("chart").map(Datagen.perStayNested(_, "valuenum", "chart_series"))
+    val nested = grids.get("chart").map(g => stage("ts/per_stay_chart",
+      Datagen.perStayNested(g, "valuenum", "chart_series"), Sinks.writePerStay, Stage.sink))
 
     // vocabulary sidecars (datagen.py:936-984): distinct code list per
     // modality, written next to the time-series outputs
-    val vocabs = Seq("med", "chart", "proc", "out").flatMap(k =>
+    val vocabs = (Seq("med", "chart", "proc", "out").flatMap(k =>
       grids.get(k).map(k -> Datagen.vocab(_, "itemid"))) ++
       grids.get("cond").map(df =>
-        "cond" -> Datagen.vocab(df.select(explode(col("codes")).as("code")), "code"))
+        "cond" -> Datagen.vocab(df.select(explode(col("codes")).as("code")), "code")))
+      .map { case (k, v) => stage(s"ts/vocab_$k", v, Sinks.writeVocab, Stage.sink) }
 
-    val dynamicDir = s"$outDir/ts/dynamic"
-    val wave2 = dynamic.map(d =>
-      "ts/dynamic" -> (() => d.write.mode("overwrite").parquet(dynamicDir))) ++
-      nested.map(n => "ts/per_stay_chart" ->
-        (() => Sinks.writePerStay(n, s"$outDir/ts/per_stay_chart"))) ++
-      vocabs.map { case (k, v) => s"ts/vocab_$k" ->
-        (() => Sinks.writeVocab(v, s"$outDir/ts/vocab_$k")) }
-    Fanout.all(spark)(wave2.toSeq)
-
+    stage.wave(dynamic.toSeq ++ nested ++ vocabs)
     Map("labels" -> Datagen.labels(adm), "demo" -> Datagen.demo(adm)) ++ grids ++
-      dynamic.map(d => "dynamic" -> spark.read.schema(d.schema).parquet(dynamicDir)) ++
-      nested.map("chart_nested" -> _)
+      dynamic.map("dynamic" -> _.value) ++ nested.map("chart_nested" -> _.value)
   }
 }

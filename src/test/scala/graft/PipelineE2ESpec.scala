@@ -142,6 +142,31 @@ class PipelineE2ESpec extends SparkSpec {
       assert(df.schema === disk.schema, rel)
       assert(rows(df) === rows(disk), rel)
     }
+
+    // every directory, sinks included, is written through graft.Stage:
+    // one record per directory, its rows those on disk
+    assert(written.size === 30)
+    assert(pipe.records.map(_._1).sorted === written.toSeq.sorted)
+    pipe.records.foreach { case (rel, n) =>
+      val disk =
+        if (rel.startsWith("ts/vocab_")) spark.read.option("header", "true").csv(s"$out/$rel")
+        else spark.read.parquet(s"$out/$rel")
+      assert(disk.count() === n, rel)
+    }
+  }
+
+  test("timeSeries rejects an unknown task or imputeHow before any ts/ directory exists") {
+    val out = java.nio.file.Files.createTempDirectory("graft_badts").toString
+    val pipe = Pipeline(spark, MimicSource(spark, tmpRoot), s"$tmpRoot/icd_mapping.txt", out)
+    val cohort = pipe.cohort(useIcu = true, label = "Mortality")
+    val feats = pipe.featureIcu(cohort)
+    Seq("mortality" -> "Mean", "Mortality" -> "mean", "LOS" -> "Mode").foreach {
+      case (task, how) =>
+        intercept[IllegalArgumentException] {
+          pipe.timeSeries(cohort, feats, task = task, imputeHow = how)
+        }
+        assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/ts")), s"$task/$how")
+    }
   }
 
   test("readmission task produces end-aligned windows") {

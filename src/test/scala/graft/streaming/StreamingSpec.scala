@@ -627,7 +627,7 @@ class StreamingSpec extends SparkSpec {
     assert(expr(e1).canonicalized === expr(e2).canonicalized)
     assert(expr(e1).canonicalized !== expr(e3).canonicalized)
     val rendered = expr(e1).toString
-    assert(rendered.contains("surprisal_model"))
+    assert(rendered.contains("model(md5="))
     assert(!rendered.contains("alpha"))
   }
 
